@@ -6,6 +6,17 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Local-store I/O settings of [[makeSession]]; neither changes what is
+    * written. `fs.file.impl` swaps in [[graft.sinks.LocalFs]] (no `chmod`
+    * fork per created file); it goes through the builder so it is in the
+    * Hadoop conf before the first `file:` FileSystem is created and cached.
+    * The discovery threshold keeps partition listing on the driver: under
+    * `local[N]` a listing job runs on driver threads anyway and only adds
+    * scheduling (the 144-directory p1 store would otherwise launch one). */
+  val localStoreConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sinks.LocalFs].getName,
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString)
+
   def makeSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -32,8 +43,15 @@ object Verify {
       // total 228.1 s -> 184.3 s, leg-min total 198.6 -> 155.1 s.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
+      .config(localStoreConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // WindowExec alone to ERROR: the bucket-histogram windows in
+    // core/Indexing.scala are global by design, and their per-plan
+    // `No Partition Defined` WARN otherwise floods the log tail.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 

@@ -1,6 +1,10 @@
 package graft.core
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
+import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided testdata tables (TESTDATA.md).
   *
@@ -13,26 +17,37 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred schema per parquet path, cached for the JVM's life (r14,
-    * guide §1.2 fixed per-query work): every `spark.read.parquet` call
-    * re-reads the file footer to infer the schema, and a bench round
-    * issues ~700 table loads — pure repeated driver I/O for a value that
-    * never changes (testdata under a path is immutable, the same
-    * contract the p1 store documents). The cached schema IS the inferred
-    * one, passed back via `read.schema(...)`, so plans and results are
-    * byte-identical; only the per-call footer read disappears. Keyed on
-    * (path, nanosAsLong conf) because the events table's inferred type
-    * depends on that session conf. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.types.StructType]()
+  /** Inferred schema per parquet path, cached for the JVM's life: every
+    * `spark.read.parquet` call re-reads the file footer to infer the
+    * schema, and a bench round issues ~700 table loads — pure repeated
+    * driver I/O. The cached schema IS the inferred one, passed back via
+    * `read.schema(...)`, so plans and results are byte-identical; only the
+    * per-call footer read disappears. The key holds everything that can
+    * change the inferred schema: the path, the parquet confs that alter
+    * type inference (the events table's depends on nanosAsLong), and the
+    * path's size and mtime, so a file regenerated in place re-infers. */
+  private val schemaConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  private final case class SchemaKey(path: String, confs: Seq[Option[String]],
+                                     size: Long, mtime: FileTime)
+
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val confKey = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      .getOrElse("")
-    val sch = schemaCache.computeIfAbsent((path, confKey),
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(sch).parquet(path)
+    // a path NIO cannot stat (missing, or a non-local URI) is read uncached
+    Try(Files.readAttributes(Paths.get(path), classOf[BasicFileAttributes])).toOption match {
+      case None => spark.read.parquet(path)
+      case Some(attrs) =>
+        val key = SchemaKey(path, schemaConfs.map(spark.conf.getOption),
+          attrs.size, attrs.lastModifiedTime)
+        val sch = schemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+        spark.read.schema(sch).parquet(path)
+    }
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")

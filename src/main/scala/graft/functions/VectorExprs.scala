@@ -527,6 +527,18 @@ case class NearestCells(child: Expression, ids: Array[Long],
     copy(child = newChild)
 }
 
+private[functions] object PqCodebook {
+  /** m subspaces × k codewords × sub dims: non-empty, and every codeword
+    * the same length, so a malformed codebook fails here rather than as an
+    * out-of-bounds index inside a task. */
+  def validate(codebooks: Array[Array[Array[Double]]]): Unit = {
+    require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty), "empty codebook")
+    val sub = codebooks(0)(0).length
+    require(codebooks.forall(_.forall(_.length == sub)),
+      s"ragged codebook: every codeword must have length $sub")
+  }
+}
+
 /** All m PQ codes in ONE expression node (r14, guide §1.2 per-task work +
   * §7.3 planning cost): the column form built, per subspace, an array of k
   * `aggregate(zip_with(slice(vec), lit(cw)))` trees — m·k interpreted
@@ -552,8 +564,7 @@ case class NearestCells(child: Expression, ids: Array[Long],
 case class PqEncodeCodes(child: Expression, codebooks: Array[Array[Array[Double]]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
-    "empty codebook")
+  PqCodebook.validate(codebooks)
   private val m = codebooks.length
   private val sub = codebooks(0)(0).length
   override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
@@ -626,8 +637,7 @@ case class PqEncodeCodes(child: Expression, codebooks: Array[Array[Array[Double]
 case class PqLutExpr(child: Expression, codebooks: Array[Array[Array[Double]]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
-    "empty codebook")
+  PqCodebook.validate(codebooks)
   private val m = codebooks.length
   private val sub = codebooks(0)(0).length
   override def dataType: DataType =

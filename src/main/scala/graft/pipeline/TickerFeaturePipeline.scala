@@ -15,7 +15,13 @@ import graft.features.{TickerFeatures, TickerStatics}
   *
   * Scale: the store is written `partitionBy("ticker")` so per-ticker readers
   * prune; the merge path unions store+new and keep-last dedups with one
-  * shuffle on (ticker, as_of).
+  * shuffle on (ticker, as_of). On a local master a small store's write and
+  * reopen cost is process and job overhead, not bytes: stock Hadoop forks
+  * `chmod` per created file and directory when native libhadoop is absent
+  * (four per ticker partition), and reopening more than 32 partition
+  * directories launches a Spark listing job. `Verify.makeSession` removes
+  * both ([[graft.sinks.LocalFs]], driver-side partition discovery); the
+  * store's layout and bytes stay the same.
   */
 object TickerFeaturePipeline {
 

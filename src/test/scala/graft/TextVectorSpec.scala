@@ -272,6 +272,22 @@ class TextVectorSpec extends SparkSpec {
     }
   }
 
+  test("a ragged PQ codebook fails at construction, not at eval") {
+    import graft.functions.{PqEncodeCodes, PqLutExpr}
+    val vec = org.apache.spark.sql.catalyst.expressions.Literal.create(
+      Seq(1.0, 2.0, 3.0, 4.0),
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
+    val ragged: Array[Array[Array[Double]]] = Array(
+      Array(Array(1.0, 2.0), Array(0.5)),
+      Array(Array(0.0, 0.0), Array(3.0, 4.0)))
+    val shortSubspace: Array[Array[Array[Double]]] = Array(
+      Array(Array(1.0, 2.0)), Array(Array(0.0, 0.0, 1.0)))
+    for (cb <- Seq(ragged, shortSubspace)) {
+      intercept[IllegalArgumentException] { PqEncodeCodes(vec, cb) }
+      intercept[IllegalArgumentException] { PqLutExpr(vec, cb) }
+    }
+  }
+
   test("DotProductLong and PqAdcSum reject unsupported element types at " +
     "ANALYSIS time (advisor r10: a float-backed lut would misread bytes " +
     "silently on the interpreted path, not error)") {
