@@ -2,7 +2,8 @@ package graft
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one compact JSON line. The full per-query timing map is written to
-  * `bench_detail.json` next to the repo root; the printed line carries the
+  * `bench_detail.json` next to the repo root, and a per-run copy to
+  * `bench_detail_<cpus>_<sf>.json`; the printed line carries the
   * total plus the slowest queries only — the r1/r2 full map (~2.9k chars)
   * exceeded the driver's log-tail capture and arrived truncated
   * (BENCH_r01/r02 "parsed": null). */
@@ -46,6 +47,32 @@ object Bench {
     val a = (1 to 3).map(_ => aggLeg()).min
     if (sink == 42L) System.err.println("[bench] calib sink") // defeat DCE
     (s, a)
+  }
+
+  /** Round isolation, shared by the bench rounds and [[QueryTrace]] reps:
+    * drops the session-materialized p1 and w4 frames, the cache, and
+    * every persisted / locally-checkpointed RDD block a previous round
+    * left behind. Without the unpersist, blocks accumulate across rounds
+    * and are freed only when the ContextCleaner notices the RDD was
+    * garbage-collected — GC-timing-dependent eviction pressure that made
+    * identical legs differ 2-6x (d11 legs 49/117/19 s at sf10). Safe
+    * between rounds: no frame from a previous round is referenced after
+    * clearMaterialized.
+    *
+    * SHUFFLE files (not just blocks) also accumulate: the ContextCleaner
+    * deletes a shuffle's spill files only after the ShuffleDependency is
+    * garbage-collected, and a round over shuffle-heavy queries (the
+    * suffix-array builds write several GB each at sf10) can fill the disk
+    * before any full GC happens naturally — a 3-query sf10 probe leaked
+    * 61 GB of blockmgr files and died on ENOSPC. One explicit GC per round
+    * bounds on-disk shuffle state to roughly one round's worth. */
+  private[graft] def resetRound(spark: org.apache.spark.sql.SparkSession): Unit = {
+    queries.Pipeline.clearMaterialized()
+    queries.DynamicRow.clearMaterialized()
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.valuesIterator
+      .foreach(_.unpersist(blocking = false))
+    System.gc()
   }
 
   def main(args: Array[String]): Unit = {
@@ -114,28 +141,8 @@ object Bench {
     val runMaps: Seq[Map[String, Double]] = (1 to nRuns).map { r =>
       // The warm-up (and any previous round) materialized p1 and the w4
       // validated frame; drop both so every measured round builds (and
-      // pays for) the sfDir intermediates. ALSO release every persisted /
-      // locally-checkpointed RDD block the previous round left behind:
-      // without this, blocks accumulate across rounds and are freed only
-      // when the ContextCleaner notices the RDD was garbage-collected —
-      // GC-timing-dependent eviction pressure that made identical legs
-      // differ 2-6x (d11 legs 49/117/19 s at sf10, the d55-style
-      // bimodality). Safe between rounds: no frame from a previous round
-      // is referenced after clearMaterialized.
-      queries.Pipeline.clearMaterialized()
-      queries.DynamicRow.clearMaterialized()
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-      // SHUFFLE files (not just blocks) also accumulate: the ContextCleaner
-      // deletes a shuffle's spill files only after the ShuffleDependency is
-      // garbage-collected, and a round over shuffle-heavy queries (the
-      // suffix-array builds write several GB each at sf10) can fill the
-      // disk before any full GC happens naturally — a 3-query sf10 probe
-      // leaked 61 GB of blockmgr files and died on ENOSPC. One explicit GC
-      // per round bounds on-disk shuffle state to roughly one round's
-      // worth.
-      System.gc()
+      // pays for) the sfDir intermediates.
+      resetRound(spark)
       // SPARK_GRAFT_BENCH_QUERY_HYGIENE=1: ALSO drop each query's
       // registered shuffles right after it finishes (r13 — the full
       // 235-query sf10 sweep accumulated ~90 GB of shuffle files across
@@ -206,8 +213,11 @@ object Bench {
       s""""n_runs":$nRuns,"run_totals":$runsJson,"leg_min_total":${s3(legMinTotal)},"leg_min_missing":$legMinMissing,""" +
       s""""calib":$calibJson,"errors":$errJson,"materialized":["p1_ticker_pipeline","w4_dynamic_row"],""" +
       s""""queries":${jmap(results)},"legs":$legsJson,"sf":"$sfDir"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
-      (detail + "\n").getBytes("UTF-8"))
+    // the same detail also goes to a per-run name (cores × scale), so the
+    // 8c run no longer overwrites the 32c legs
+    val runDetailPath = s"bench_detail_${cpus}_${new java.io.File(sfDir).getName}.json"
+    Seq(detailPath, runDetailPath).foreach(p => java.nio.file.Files.write(
+      java.nio.file.Paths.get(p), (detail + "\n").getBytes("UTF-8")))
     val slow = results.sortBy(-_._2).take(18).sortBy(_._1)
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
       s""""n_runs":$nRuns,"run_totals":$runsJson,"leg_min_total":${s3(legMinTotal)},"leg_min_missing":$legMinMissing,""" +

@@ -1,330 +1,49 @@
 package graft
 
-/** Stage profiler for the expensive composite queries (dev tool, like
-  * GenScale/ProbeDeep): times the pieces of a drive separately so a slow
-  * bench median can be attributed to a stage — or to VM load — instead of
-  * guessed at. Modes:
+/** Profiling tool (dev, like GenScale/ProbeDeep). Two modes:
   *
-  *   runMain graft.StageProfile w4  [sfDir]   # DynamicRow build stages
-  *   runMain graft.StageProfile d23 [sfDir]   # pair mining vs components
-  *   runMain graft.StageProfile p4  [sfDir]   # p1 assembly vs GBT fit vs score math
+  *   StageProfile qtrace <sfDir> <query> [reps]
+  *     prints a [[QueryTrace]] of one registered query: per rep the wall,
+  *     rows, job count, job sum, driver gap and Catalyst phase times, then
+  *     one line per job (duration, tasks, task time, shuffle read/write,
+  *     spill, GC, callsite). Rep 1 pays JIT/codegen; later reps time the
+  *     plan.
+  *   StageProfile streamsf10 <sfDir>
+  *     drives the four AvailableNow stream drivers over a real file stream
+  *     on both state-store providers and prints rows/s, micro-batches and
+  *     state-store rows/bytes from the engines' progress metrics, which a
+  *     job trace cannot see.
   *
-  * Round-6 provenance: the d23 mode caught connectedComponents evaluating
-  * its input pair plan once per union branch (77 s → 5 s after the input
-  * checkpoint); the w4 mode showed the 14–22 s bench medians were VM load
-  * on top of a 1.7 s warm build.
+  * Run with `tools/jrun.sh graft.StageProfile <mode> ...` (SPARK_GRAFT_CPUS
+  * sets the local cores, default 32).
   */
 object StageProfile {
-  private def t[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime(); val r = f
-    println(f"[profile] $label%-34s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    r
-  }
+  private def size(bytes: Long): String =
+    if (bytes < (1L << 20)) f"${bytes / 1024.0}%.1f KB"
+    else f"${bytes / 1048576.0}%.1f MB"
 
   def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse("w4")
+    val mode = args.headOption.getOrElse("qtrace")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val spark = Verify.makeSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     mode match {
-      case "w4" =>
-        // two passes: pass 1 pays JIT/classload/codegen, pass 2 is the
-        // warm per-stage attribution (the bench medians are warm numbers)
-        for (pass <- 1 to 2) {
-          val (in, grid) = t(s"pass$pass inputs+base checkpoint") {
-            graft.queries.DynamicRow.buildInputs(spark, dir)
-          }
-          t(s"pass$pass grid count")(grid.count())
-          t(s"pass$pass priceBlock") {
-            graft.features.TickerFeatures.priceBlock(grid, in.prices).count()
-          }
-          t(s"pass$pass fusedFundamentals") {
-            graft.features.TickerFeatures
-              .fusedFundamentalsBlock(grid, in.statements.get).count()
-          }
-          t(s"pass$pass dividendBlock") {
-            graft.features.TickerFeatures
-              .dividendBlock(grid, in.dividends, in.splits).count()
-          }
-          t(s"pass$pass dynamicFeatures + validate") {
-            graft.pipeline.TickerValidation.validate(
-              graft.features.TickerFeatures.dynamicFeatures(grid, in)).count()
-          }
-        }
-      case "w4blocks" =>
-        // per-block attribution with a noop-sink write (count() lets the
-        // optimizer prune the window/agg columns away — it measured plan
-        // SKELETONS, which is how the 5 s materialization hid)
-        def force(df: org.apache.spark.sql.DataFrame): Unit =
-          df.write.mode("overwrite").format("noop").save()
-        for (pass <- 1 to 2) {
-          val (in, grid) = t(s"pass$pass inputs+base checkpoint") {
-            graft.queries.DynamicRow.buildInputs(spark, dir)
-          }
-          t(s"pass$pass priceBlock (forced)") {
-            force(graft.features.TickerFeatures.priceBlock(grid, in.prices))
-          }
-          t(s"pass$pass fusedFundamentals (forced)") {
-            force(graft.features.TickerFeatures
-              .fusedFundamentalsBlock(grid, in.statements.get))
-          }
-          t(s"pass$pass dividendBlock (forced)") {
-            force(graft.features.TickerFeatures
-              .dividendBlock(grid, in.dividends, in.splits))
-          }
-          t(s"pass$pass dynamicFeatures (forced)") {
-            force(graft.features.TickerFeatures.dynamicFeatures(grid, in))
-          }
-          t(s"pass$pass +validate (forced)") {
-            force(graft.pipeline.TickerValidation.validate(
-              graft.features.TickerFeatures.dynamicFeatures(grid, in)))
-          }
-        }
-      case "w4full" =>
-        // TimeQ-faithful loop (clear + GC per round) with the build and
-        // the materialization step timed separately
-        for (r <- 1 to 3) {
-          graft.queries.DynamicRow.clearMaterialized()
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
-          System.gc()
-          val v = t(s"r$r validatedRow plan (lazy)") {
-            graft.queries.DynamicRow.validatedRow(spark, dir)
-          }
-          val ck = t(s"r$r coalesce(8)+localCheckpoint") {
-            v.coalesce(8).localCheckpoint()
-          }
-          t(s"r$r count")(ck.count())
-        }
-      case "w4jobs" =>
-        // Job/stage accounting for the w4 drive (r11 — the verdict's floor
-        // analysis): under AQE every materialized query stage is a job, so
-        // the drive's irreducible latency floor is #jobs × per-job
-        // scheduling cost. A listener counts jobs/stages/task-time over
-        // the TimeQ-faithful loop; per-job latency = wall − task-time/32.
-        val jobs = new java.util.concurrent.atomic.AtomicInteger
-        val stages = new java.util.concurrent.atomic.AtomicInteger
-        val taskTimeMs = new java.util.concurrent.atomic.AtomicLong
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet()
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            stages.incrementAndGet()
-            taskTimeMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        for (r <- 1 to 3) {
-          graft.queries.DynamicRow.clearMaterialized()
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
-          System.gc()
-          // marker job + bus drain BEFORE the snapshots, so neither the
-          // marker's job nor listener lag lands inside the timed window
-          // (advisor r11: it inflated wall and jobs by one per run)
-          spark.sql("select 1").count()
-          Thread.sleep(500)
-          val (j0, s0, t0) = (jobs.get, stages.get, taskTimeMs.get)
-          val w0 = System.nanoTime()
-          graft.queries.DynamicRow.w4.fn(spark, dir).count()
-          val wall = (System.nanoTime() - w0) / 1e9
-          Thread.sleep(500) // let the listener bus drain
-          println(f"[profile] r$r w4 drive: wall=$wall%.2f s, " +
-            f"jobs=${jobs.get - j0}, stages=${stages.get - s0}, " +
-            f"task-time=${(taskTimeMs.get - t0) / 1e3}%.1f s " +
-            f"(/32 cores = ${(taskTimeMs.get - t0) / 32e3}%.2f s)")
-        }
-        // profiling in the same session must not double-count
-        spark.sparkContext.removeSparkListener(listener)
-      case "w4trace" =>
-        // per-job attribution for the w4 drive: callsite + wall per job,
-        // so the job-count floor can be cut surgically (r11 verdict task
-        // 1 — which eager action owns each of the ~13 jobs?)
-        val jobLog = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-        val tracer2 = new org.apache.spark.scheduler.SparkListener {
-          private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            starts.put(j.jobId, System.nanoTime())
-            val site = j.stageInfos.lastOption.map(_.details.linesIterator
-              .filter(l => l.contains("graft") && !l.contains("StageProfile"))
-              .take(1).mkString).getOrElse("")
-            jobLog.put(j.jobId, (j.stageInfos.map(_.name).lastOption.getOrElse("?") +
-              " | " + site, 0L))
-          }
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val s = Option(starts.get(j.jobId)).getOrElse(0L)
-            val (d, _) = jobLog.getOrDefault(j.jobId, ("?", 0L))
-            jobLog.put(j.jobId, (d, System.nanoTime() - s))
-          }
-        }
-        spark.sparkContext.addSparkListener(tracer2)
-        for (r <- 1 to 2) {
-          graft.queries.DynamicRow.clearMaterialized()
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
-          System.gc()
-          jobLog.clear()
-          val w0 = System.nanoTime()
-          graft.queries.DynamicRow.w4.fn(spark, dir).count()
-          val wall = (System.nanoTime() - w0) / 1e9
-          Thread.sleep(500)
-          println(f"[profile] r$r w4 drive wall=$wall%.2f s, jobs:")
-          import scala.jdk.CollectionConverters._
-          jobLog.asScala.toSeq.sortBy(_._1).foreach { case (id, (desc, ns)) =>
-            println(f"[profile]   job $id%3d ${ns / 1e9}%6.2f s  $desc")
-          }
-        }
-        spark.sparkContext.removeSparkListener(tracer2)
-      case "p1blocks" =>
-        // cumulative-layer attribution for the p1 store build (r13): each
-        // segment forces one more pipeline layer through the noop sink, so
-        // the deltas are per-layer costs (count() would prune columns and
-        // time plan skeletons — the w4blocks lesson)
-        import org.apache.spark.sql.functions.col
-        def forceP1(df: org.apache.spark.sql.DataFrame): Unit =
-          df.write.mode("overwrite").format("noop").save()
-        for (pass <- 1 to 2) {
-          graft.queries.Pipeline.clearMaterialized()
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
-          System.gc()
-          val in = t(s"pass$pass inputs (priceDiv+yearly checkpoints)") {
-            graft.queries.Pipeline.inputsForProbe(spark, dir)
-          }
-          val tickers = in.prices.select(col("ticker")).distinct()
-          val grid = t(s"pass$pass grid (forced)") {
-            val g = graft.pipeline.TickerFeaturePipeline.grid(
-              spark, tickers, "1997-12-31", 4)
-            forceP1(g); g
-          }
-          val (tickerEtf, etfIndex) =
-            graft.queries.Pipeline.indexForProbe(spark, dir)
-          val features = t(s"pass$pass features (forced)") {
-            val f = graft.features.TickerFeatures.dynamicFeaturesSharedIndex(
-              grid, in, tickerEtf, etfIndex, minPriceRows = 5,
-              seriesPriceBlock =
-                graft.features.TickerFeatures.choosePriceForm(grid, in.prices))
-            forceP1(f); f
-          }
-          val validated = t(s"pass$pass +validate (forced)") {
-            val v = graft.pipeline.TickerValidation.validate(features)
-            forceP1(v); v
-          }
-          t(s"pass$pass +normalize+sort (forced)") {
-            forceP1(graft.pipeline.TickerFeaturePipeline.normalize(validated)
-              .orderBy("ticker", "as_of"))
-          }
-          t(s"pass$pass coalesce+ckpt of full plan") {
-            graft.core.RoundCheckpointer.materializeFinal(
-              spark.sparkContext, coalesceTo = 8)(
-              graft.pipeline.TickerFeaturePipeline.normalize(
-                graft.pipeline.TickerValidation.validate(
-                  graft.features.TickerFeatures.dynamicFeaturesSharedIndex(
-                    grid, in, tickerEtf, etfIndex, minPriceRows = 5,
-                    seriesPriceBlock = graft.features.TickerFeatures
-                      .choosePriceForm(grid, in.prices))))
-                .orderBy("ticker", "as_of")).count()
-          }
-        }
-      case "p1trace" =>
-        // per-job attribution for the p1 store build (the one >10 s bench
-        // item after the r12 w4 job fix) — same listener as w4trace
-        val jl = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-        val tr = new org.apache.spark.scheduler.SparkListener {
-          private val st = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            st.put(j.jobId, System.nanoTime())
-            jl.put(j.jobId, (j.stageInfos.map(_.name).lastOption.getOrElse("?"), 0L))
-          }
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val s = Option(st.get(j.jobId)).getOrElse(0L)
-            val (d, _) = jl.getOrDefault(j.jobId, ("?", 0L))
-            jl.put(j.jobId, (d, System.nanoTime() - s))
-          }
-        }
-        spark.sparkContext.addSparkListener(tr)
-        for (r <- 1 to 2) {
-          graft.queries.Pipeline.clearMaterialized()
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
-          System.gc()
-          jl.clear()
-          val w0 = System.nanoTime()
-          SparkEntry.queries("p1_ticker_pipeline")(spark, dir).count()
-          val wall = (System.nanoTime() - w0) / 1e9
-          Thread.sleep(500)
-          println(f"[profile] r$r p1 drive wall=$wall%.2f s, jobs:")
-          import scala.jdk.CollectionConverters._
-          jl.asScala.toSeq.sortBy(_._1).foreach { case (id, (desc, ns)) =>
-            println(f"[profile]   job $id%3d ${ns / 1e9}%6.2f s  ${desc.take(110)}")
-          }
-        }
-        spark.sparkContext.removeSparkListener(tr)
-      case "m5diag" =>
-        // band-bucket occupancy for the m5 aHash LSH join: if the corpus
-        // collapses many assets into one (band, value) bucket, the
-        // candidate self-join is quadratic in bucket size
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.types._
-        val base = graft.core.Tables.documents(spark, dir)
-          .filter(col("text").rlike("^[\\x00-\\x7F]*$"))
-          .filter(length(col("text")) >= 63)
-          .select(col("doc_id"), col("text"), lit(0).as("shift"))
-        val schema = StructType(Seq(StructField("asset_id", LongType),
-          StructField("content", BinaryType)))
-        val assets = spark.createDataFrame(base.rdd.mapPartitions { it =>
-          it.map { row =>
-            val text = row.getString(1)
-            val h = math.min(text.length / 21, 9)
-            val rgb = text.substring(0, 21 * h).getBytes("US-ASCII")
-            org.apache.spark.sql.Row(row.getLong(0),
-              graft.operators.Multimodal.encodeBmp(7, h, rgb))
-          }
-        }, schema)
-        val hashed = graft.operators.Multimodal.ahashBands(assets)
-          .localCheckpoint()
-        val banded = hashed.select(col("asset_id"), posexplode(array(
-          (0 until 4).map(k => (col("bands")(2 * k) +
-            col("bands")(2 * k + 1) * 256L).cast(LongType)): _*))
-          .as(Seq("band", "v")))
-        val occ = banded.groupBy("band", "v").agg(count(lit(1)).as("n"))
-          .localCheckpoint()
-        println("[profile] m5diag assets=" + hashed.count())
-        occ.orderBy(col("n").desc).limit(12).collect().foreach { r =>
-          println(s"[profile] m5diag band=${r.getInt(0)} v=${r.getLong(1)} n=${r.getLong(2)}")
-        }
-        val pairsEst = occ.agg(sum(col("n") * (col("n") - 1) / 2)).head.getLong(0)
-        println(s"[profile] m5diag candidate pairs (pre-distinct) = $pairsEst")
-      case "ccchain" =>
-        // r12 verdict task 1, the rounds axis in isolation: PATH graphs
-        // (worst-case diameter = n) at growing scale. The pointer-jumping
-        // claim is rounds ~ O(log diameter); a linear-rounds regression
-        // shows up as 10× rounds per decade instead of +3.3. Run with
-        // GRAFT_CC_DEBUG=1 to see per-round timings on stderr.
-        import org.apache.spark.sql.functions.col
-        for (n <- Seq(100000L, 1000000L, 10000000L)) {
-          val edges = spark.range(n - 1)
-            .select(col("id").as("a"), (col("id") + 1L).as("b"))
-          val t0 = System.nanoTime()
-          val cc = graft.operators.Dedup.connectedComponents(edges, "a", "b",
-            maxIter = 80)
-          val nComp = cc.select("component").distinct().count()
-          val nNodes = cc.count()
-          println(f"[profile] ccchain n=$n%,d wall=${(System.nanoTime() - t0) / 1e9}%7.1f s " +
-            s"components=$nComp (expect 1) nodes=$nNodes")
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
-          System.gc()
+      case "qtrace" =>
+        val qname = args.lift(2).getOrElse(sys.error("qtrace needs a query name"))
+        val reps = args.lift(3).map(_.toInt).getOrElse(2)
+        val query = SparkEntry.queries(qname)
+        QueryTrace.run(spark, reps)(query(spark, dir)).zipWithIndex.foreach {
+          case (rep, i) =>
+            val phases = QueryTrace.Phases.map(p =>
+              f"$p=${rep.phasesS.getOrElse(p, 0.0)}%.3f s").mkString(" ")
+            println(f"[profile] r${i + 1} $qname wall=${rep.wallS}%.2f s rows=${rep.rows} " +
+              f"jobs=${rep.jobs.size} jobsum=${rep.jobSumS}%.2f s " +
+              f"gap=${rep.driverGapS}%.2f s $phases")
+            rep.jobs.foreach { j =>
+              println(f"[profile]   job ${j.id}%3d ${j.seconds}%6.2f s tasks=${j.tasks}%4d " +
+                f"ttime=${j.taskMs / 1e3}%6.2f s shuffle r/w=${size(j.shuffleReadBytes)}/" +
+                f"${size(j.shuffleWriteBytes)} spill=${size(j.spillBytes)} " +
+                f"gc=${j.gcMs / 1e3}%.2f s  ${j.site.take(70)}")
+            }
         }
       case "streamsf10" =>
         // r12 verdict task 5: the s-family at scale — a REAL file-stream
@@ -385,435 +104,7 @@ object StageProfile {
           }
         }
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      case "w4plan" =>
-        // static-plan exchange inventory for the drive (AQE off): each
-        // shuffle/broadcast here is one AQE stage-materialization job in
-        // production — the job-count floor task 1 attacks
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        val v = graft.queries.DynamicRow.validatedRow(spark, dir)
-        val p = v.queryExecution.executedPlan
-        val ex = p.collectWithSubqueries {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-            ("shuffle  ", e.outputPartitioning.toString.take(100))
-          case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
-            ("broadcast", b.child.output.map(_.name).mkString(",").take(100))
-        }
-        ex.zipWithIndex.foreach { case ((k, d), i) =>
-          println(f"[profile] EXCH $i%2d $k $d") }
-        println(s"[profile] TOTAL ${ex.size}")
-      case "w4planaqe" =>
-        // the FINAL adaptive plan after one real execution — what the
-        // production drive actually ran (AQE stage count = job count)
-        val v = graft.queries.DynamicRow.validatedRow(spark, dir)
-        v.count()
-        println(v.queryExecution.executedPlan.toString)
-      case "p4" =>
-        // attribution for the p4 bench median: how much is the (shared,
-        // memoized) p1 feature assembly, how much the GBT fit itself, how
-        // much the declarative phase-4/5 math (now also oracle-gated as
-        // p5_score_math). A slow driver median with flat numbers here = VM
-        // load, not a plan regression.
-        import org.apache.spark.sql.functions.{col, lit, when, broadcast}
-        import org.apache.spark.sql.types.StringType
-        val features = t("p1 feature table (build+checkpoint)") {
-          val f = graft.queries.Pipeline.p1MaterializedForProbe(spark, dir)
-          f.count(); f
-        }
-        val labeled = features.withColumn("cut_label",
-          when(col("max_drawdown_1y") > 0.5, 1.0).otherwise(0.0))
-        val (scored, auc) = t("GBT fit + holdout AUC (eager)") {
-          graft.analysis.Scoring.fitCutProbability(
-            labeled, "cut_label", cutoff = "2000-01-01")
-        }
-        println(f"  auc=$auc%.4f")
-        val cached = t("model transform (count)") {
-          val c = scored.localCheckpoint(); c.count(); c
-        }
-        t("phase 4-5 score + portfolio (count)") {
-          val sectors = graft.core.Tables.customer(spark, dir)
-            .select(col("c_custkey").cast(StringType).as("ticker"),
-              col("c_mktsegment").as("sector"))
-          graft.analysis.Scoring.constructPortfolio(
-            graft.analysis.Scoring.score(cached)
-              .join(broadcast(sectors), Seq("ticker"), "left"),
-            n = 20, groupCols = Seq("sector"), maxPerGroup = 0.2,
-            maxCutProb = 0.9).count()
-        }
-      case "d55" =>
-        // attribution for the bimodal round-7 d55 bench median (2.7 s vs
-        // 9 s on the identical plan): times each stage of the judged
-        // query via the SHARED builders in TextVector7 (no drift
-        // possible) and prints the partition counts the AQE-coalescing
-        // suspect would show up in.
-        import graft.queries.TextVector7
-        val docs = t("docs (even half + excerpt twins, count)") {
-          val d = TextVector7.d55Docs(spark, dir); println("  n_docs=" + d.count()); d
-        }
-        val sh = t("shingle explode + hash + distinct (count)") {
-          val x = TextVector7.d55Shingles(docs)
-          println("  n_doc_shingles=" + x.count()); x
-        }
-        println("  sh partitions=" + sh.rdd.getNumPartitions)
-        val kept = t("stop-cut + per-doc sizes (count)") {
-          val k = TextVector7.d55Kept(sh); println("  n_kept=" + k.count()); k
-        }
-        val ck = t("localCheckpoint") { kept.localCheckpoint(false) }
-        println("  kept partitions=" + ck.rdd.getNumPartitions)
-        t("self-join + containment verdict (count)") {
-          println("  n_pairs=" + TextVector7.d55Pairs(ck).count())
-        }
-        t("full judged d55 (fresh plan, count)") {
-          println("  n_rows=" + graft.SparkEntry.queries("d55_ngram_containment")(spark, dir).count())
-        }
-      case "d5" =>
-        // attribution for the r8 full-sf10-sweep outliers d5 (105 s) /
-        // d11 (137 s): both run the minhash near-dup pipeline; stages are
-        // the shingle+signature build, the band self-join, and the
-        // exact-Jaccard verify over candidate pairs.
-        val docs = graft.core.Tables.documents(spark, dir)
-        val (sh, banded) = graft.operators.Dedup.jvmBands(
-          docs, "doc_id", "text", shingleK = 3, numHashes = 32, numBands = 4)
-        t("sh: tokens+distinctShingles (count)") { println("  n=" + sh.count()) }
-        t("banded: minhash sigs (count)") { println("  n=" + banded.count()) }
-        val cand = graft.operators.Dedup.pairCandidates(banded, Seq("band"))
-        t("band self-join candidates (count)") { println("  n=" + cand.count()) }
-        t("verify jaccard (count)") {
-          println("  n=" + graft.operators.Dedup
-            .verifyJaccard(cand, sh, 0.8).count())
-        }
-        t("full judged d5 (fresh plan, count)") {
-          println("  n=" + SparkEntry.queries("d5_minhash_dedup")(spark, dir).count())
-        }
-      case "d41" =>
-        // semDeDup stage attribution (sf10 median 113 s while exact
-        // assignment alone is 2.3 s — where does the rest go?)
-        import org.apache.spark.sql.functions.col
-        val e = graft.core.Tables.embeddings(spark, dir)
-        val anchors = e.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("centroid_id"), col("embedding").as("centroid_vec"))
-        val cells = t("assignCellsSim + checkpoint (count)") {
-          val c = graft.operators.Similarity
-            .assignCellsSim(e, anchors, "vec_id", "embedding")
-            .localCheckpoint(false)
-          println("  n=" + c.count()); c
-        }
-        val b = cells.select(col("centroid_id"), col("id").as("id_b"),
-          col("v").as("v_b"), col("centroid_sim").as("sim_b"))
-        val joined = cells.join(b, Seq("centroid_id"))
-          .filter(col("id") < col("id_b"))
-        t("in-cluster pair join (count)") { println("  n=" + joined.count()) }
-        val withCos = joined.filter(
-          graft.functions.VectorExprs.cosine(col("v"), col("v_b")) >= 0.25)
-        t("pair cosine filter (count)") { println("  n=" + withCos.count()) }
-        t("full d41 (count)") {
-          println("  n=" + SparkEntry.queries("d41_semdedup")(spark, dir).count())
-        }
-      case "e11" =>
-        // approx vs exact assignment cost on the d41 fixture (anchors =
-        // every 50th vec) — the evidence that the hierarchical path pays
-        // for growing centroid sets
-        import org.apache.spark.sql.functions.col
-        val emb = graft.core.Tables.embeddings(spark, dir)
-        val anchors = emb.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("centroid_id"),
-            col("embedding").as("centroid_vec")).localCheckpoint(false)
-        println("  n_vec=" + emb.count() + " n_anchor=" + anchors.count())
-        t("exact assignCellsSim (count)") {
-          println("  n=" + graft.operators.Similarity
-            .assignCellsSim(emb, anchors, "vec_id", "embedding").count())
-        }
-        for (m <- Seq(150, 1500)) {
-          t(s"approx metaEvery=$m nProbe=1 (count)") {
-            println("  n=" + graft.operators.Similarity
-              .assignCellsApprox(emb, anchors, "vec_id", "embedding",
-                metaEvery = m, nProbe = 1).count())
-          }
-        }
-      case "d23" =>
-        val pairs = graft.operators.Dedup.blockedJaccardPairs(
-          graft.core.Tables.documents(spark, dir), "doc_id", "text",
-          blockCols = Seq("source", "lang"), shingleK = 3, threshold = 0.02)
-          .select("id_a", "id_b")
-        t("pair mining (count)") { println("  n_pairs=" + pairs.count()) }
-        t("connectedComponents (full d23 shape)") {
-          println("  n_nodes=" + graft.operators.Dedup
-            .connectedComponents(pairs, "id_a", "id_b").count())
-        }
-      case "d28sweep" =>
-        // hot-threshold sweep for the hierarchical PassJoin: wall + output
-        // rows per threshold (Int.MaxValue = pure cold path)
-        for (thr <- Seq(Int.MaxValue, 1024, 256, 64)) {
-          t(s"d28 hotThreshold=$thr") {
-            val n = graft.queries.TextVector3.editDistancePairs(
-              graft.core.Tables.documents(spark, dir),
-              prefixLen = 40, maxDist = 4, hotThreshold = thr).count()
-            println(s"  rows=$n")
-          }
-        }
-
-      case "d86rounds" =>
-        // per-part attribution INSIDE the capped doubling rounds on the
-        // d86 fixture: lead window vs pair-count aggregate vs group
-        // ranking (broadcast or bucketed) vs checkpoint. Mirrors the
-        // current SuffixRanks loop by hand.
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        val base = graft.core.Tables.documents(spark, dir)
-          .filter(col("doc_id") % 5 === 0 && length(col("text")) >= 1)
-          .select(col("doc_id"), col("text"))
-        val twins = base.filter(col("doc_id") % 15 === 0)
-          .select((col("doc_id") + 5000000000L).as("doc_id"), col("text"))
-        val docs = base.unionByName(twins)
-        val positions = docs
-          .select(col("doc_id"), col("text"), length(col("text")).as("n"))
-          .select(col("doc_id"), col("text"),
-            explode(sequence(lit(1), col("n"))).as("pos"))
-          .select(col("doc_id"), col("pos"),
-            expr("substring(text, pos, 1)").as("ch"))
-        val charRanks = positions.groupBy("ch").agg(count(lit(1)).as("cnt"))
-          .withColumn("r", coalesce(sum("cnt").over(
-            Window.orderBy("ch").rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)) + 1L)
-          .select("ch", "r")
-        var ranks = t("init: positions+charRanks+checkpoint") {
-          val r0 = positions.join(broadcast(charRanks), Seq("ch"))
-            .select(col("doc_id"), col("pos"), col("r")).localCheckpoint(true)
-          println("  n_pos=" + r0.count()); r0
-        }
-        val nPos = ranks.count()
-        var off = 1L
-        var round = 0
-        while (off < 16) {
-          round += 1
-          val paired = t(s"round $round: lead window -> persist") {
-            val p = ranks.withColumn("r2", coalesce(
-              lead(col("r"), off.toInt).over(
-                Window.partitionBy("doc_id").orderBy("pos")), lit(0L))).persist()
-            p.count(); p
-          }
-          val pc = t(s"round $round: pair-count aggregate") {
-            val c = paired.groupBy("r", "r2").agg(count(lit(1)).as("__w")).persist()
-            println("  m=" + c.count()); c
-          }
-          val next = t(s"round $round: broadcast group-rank + checkpoint") {
-            val grpRanks = graft.core.Indexing.globalPrefixSum(
-                pc, "r", "__w", "__ps", tieBreak = Seq("r2"))
-              .select(col("r"), col("r2"), (col("__ps") + 1L).as("__r_next"))
-            val n = paired.join(broadcast(grpRanks), Seq("r", "r2"))
-              .select(col("doc_id"), col("pos"), col("__r_next").as("r"))
-              .localCheckpoint(true)
-            n.count(); n
-          }
-          pc.unpersist(false); paired.unpersist(false)
-          ranks.unpersist(false)
-          ranks = next
-          off *= 2
-        }
-
-      case "d86" =>
-        // span-removal attribution: capped index build vs dropped-window
-        // election vs interval merge vs complement rebuild. Mirrors
-        // SuffixRanks.spanRemoval on the d86 fixture.
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.types.LongType
-        val l = 16
-        val base = graft.core.Tables.documents(spark, dir)
-          .filter(col("doc_id") % 5 === 0 && length(col("text")) >= 1)
-          .select(col("doc_id"), col("text"))
-        val twins = base.filter(col("doc_id") % 15 === 0)
-          .select((col("doc_id") + 5000000000L).as("doc_id"), col("text"))
-        val docs = base.unionByName(twins).localCheckpoint(false)
-        val ranks = t("capped index build (suffixRanks L=16)") {
-          val r = graft.operators.SuffixRanks
-            .suffixRanks(docs, maxPrefix = l.toLong).localCheckpoint(false)
-          println("  n_pos=" + r.count()); r
-        }
-        val lens = docs.select(col("doc_id"),
-          length(col("text")).cast(LongType).as("__n"))
-        val dropped = t("full-window filter + keeper election") {
-          val d = ranks.join(lens, Seq("doc_id"))
-            .filter(col("pos") + (l - 1) <= col("__n"))
-            .withColumn("__rn", row_number().over(
-              Window.partitionBy("rank").orderBy(col("doc_id"), col("pos"))))
-            .filter(col("__rn") > 1)
-            .select(col("doc_id"), col("pos").as("__s"),
-              (col("pos") + (l - 1)).as("__e")).localCheckpoint(false)
-          println("  n_dropped=" + d.count()); d
-        }
-        val merged = t("interval merge") {
-          val wOrd = Window.partitionBy("doc_id").orderBy(col("__s"), col("__e"))
-          val runMax = max(col("__e")).over(
-            wOrd.rowsBetween(Window.unboundedPreceding, -1))
-          val m = dropped
-            .withColumn("__brk",
-              when(runMax.isNull || col("__s") > runMax + 1L, 1L).otherwise(0L))
-            .withColumn("__grp", sum(col("__brk")).over(wOrd))
-            .groupBy("doc_id", "__grp")
-            .agg(min("__s").as("__s"), max("__e").as("__e")).localCheckpoint(false)
-          println("  n_merged=" + m.count()); m
-        }
-        t("complement rebuild + final join") {
-          val wg = Window.partitionBy("doc_id").orderBy("__s")
-          val headSegs = merged
-            .select(col("doc_id"),
-              (coalesce(lag(col("__e"), 1).over(wg), lit(0L)) + 1L).as("__ks"),
-              (col("__s") - 1L).as("__ke"))
-          val tailSegs = merged.groupBy("doc_id").agg((max("__e") + 1L).as("__ks"))
-            .join(lens, Seq("doc_id"))
-            .select(col("doc_id"), col("__ks"), col("__n").as("__ke"))
-          val rebuilt = headSegs.unionByName(tailSegs)
-            .filter(col("__ke") >= col("__ks"))
-            .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
-            .select(col("doc_id"), col("__ks"),
-              col("text").substr(col("__ks").cast("int"),
-                (col("__ke") - col("__ks") + 1L).cast("int")).as("__seg"))
-            .groupBy("doc_id")
-            .agg(array_join(transform(
-              array_sort(collect_list(struct(col("__ks"), col("__seg")))),
-              x => x.getField("__seg")), "").as("__cleaned"))
-          val stats = merged.groupBy("doc_id")
-            .agg(sum(col("__e") - col("__s") + 1L).as("__removed"))
-          val out = docs.select(col("doc_id"), col("text")).join(lens, Seq("doc_id"))
-            .join(stats, Seq("doc_id"), "left")
-            .join(rebuilt, Seq("doc_id"), "left")
-          println("  n_out=" + out.count())
-        }
-
-      case "d67" =>
-        // per-round attribution for the prefix-doubling build: which
-        // doubling round dominates, and inside a round, how much is the
-        // positional self-join vs the global pair ordering vs the
-        // group-min window. Mirrors SuffixRanks.suffixRanks (kept in
-        // sync by hand — the loop internals are private by design).
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        val base = graft.core.Tables.documents(spark, dir)
-          .filter(col("doc_id") % 20 === 0 && length(col("text")) >= 1)
-          .select(col("doc_id"), col("text"))
-        val twins = base.filter(col("doc_id") % 60 === 0)
-          .select((col("doc_id") + 5000000000L).as("doc_id"), col("text"))
-        val docs = base.unionByName(twins)
-        val maxLen = t("maxLen scan") {
-          val m = docs.agg(max(length(col("text")))).head().getInt(0)
-          println("  maxLen=" + m); m
-        }
-        val positions = docs
-          .select(col("doc_id"), col("text"), length(col("text")).as("n"))
-          .select(col("doc_id"), col("text"),
-            explode(sequence(lit(1), col("n"))).as("pos"))
-          .select(col("doc_id"), col("pos"),
-            expr("substring(text, pos, 1)").as("ch"))
-        val charRanks = positions.groupBy("ch").agg(count(lit(1)).as("cnt"))
-          .withColumn("r", coalesce(sum("cnt").over(
-            Window.orderBy("ch").rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)) + 1L)
-          .select("ch", "r")
-        var ranks = t("positions + char ranks + checkpoint") {
-          val r0 = positions.join(broadcast(charRanks), Seq("ch"))
-            .select(col("doc_id"), col("pos"), col("r")).localCheckpoint(false)
-          println("  n_pos=" + r0.count()); r0
-        }
-        var off = 1L
-        var round = 0
-        var converged = false
-        while (off < maxLen && !converged) {
-          round += 1
-          val paired = t(s"round $round off=$off: lead shift + checkpoint") {
-            val p = ranks.withColumn("r2", coalesce(
-                lead(col("r"), off.toInt).over(
-                  Window.partitionBy("doc_id").orderBy("pos")),
-                lit(0L)))
-              .localCheckpoint(false)
-            p.count(); p
-          }
-          val ided = t(s"round $round: globalRowIds") {
-            val i = graft.core.Indexing.globalRowIds(paired, "r", "__rid",
-              withinOrder = Seq(col("r").asc, col("r2").asc))
-              .localCheckpoint(false)
-            i.count(); i
-          }
-          ranks = t(s"round $round: group-min window + checkpoint") {
-            val rr = ided.withColumn("__r_new", min(col("__rid")).over(
-                Window.partitionBy("r", "r2")) + 1L)
-              .select(col("doc_id"), col("pos"), col("r").as("__r_old"),
-                col("__r_new").as("r")).localCheckpoint(false)
-            rr.count(); rr
-          }
-          converged = t(s"round $round: convergence scan") {
-            ranks.filter(col("r") =!= col("__r_old")).isEmpty
-          }
-          ranks = ranks.select("doc_id", "pos", "r")
-          off *= 2L
-        }
-        println(s"  rounds=$round converged=$converged")
-      case "qtrace" =>
-        // GENERIC per-job attribution for ANY registered query (r13): the
-        // p1trace listener, parameterized. Usage:
-        //   runMain graft.StageProfile qtrace <sfDir> <query> [reps]
-        // Prints wall + per-job (duration, #tasks, task-time, callsite) for
-        // each rep; rep 1 pays JIT/codegen, later reps are the plan.
-        val qname = args.lift(2).getOrElse(sys.error("qtrace needs a query name"))
-        val reps = args.lift(3).map(_.toInt).getOrElse(2)
-        case class J(site: String, var ns: Long, var tasks: Int, var taskMs: Long)
-        val jl = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-        val st = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-        val tr = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            st.put(j.jobId, System.nanoTime())
-            // first graft frame in the last stage's callsite details — the
-            // w4trace recipe (job-level callSite.short is an opaque SQL
-            // execution wrapper for every DataFrame action)
-            val site = j.stageInfos.lastOption.map { si =>
-              si.name + " | " + si.details.linesIterator
-                .filter(l => l.contains("graft") && !l.contains("StageProfile"))
-                .take(1).mkString
-            }.getOrElse("?")
-            jl.put(j.jobId, J(site, 0L, 0, 0L))
-            j.stageIds.foreach(s => stageJob.put(s, j.jobId))
-          }
-          override def onStageCompleted(
-              s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val jid = stageJob.getOrDefault(s.stageInfo.stageId, -1)
-            Option(jl.get(jid)).foreach { j =>
-              j.tasks += s.stageInfo.numTasks
-              j.taskMs += s.stageInfo.taskMetrics.executorRunTime
-            }
-          }
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val s0 = Option(st.get(j.jobId)).getOrElse(0L)
-            Option(jl.get(j.jobId)).foreach(_.ns = System.nanoTime() - s0)
-          }
-        }
-        spark.sparkContext.addSparkListener(tr)
-        for (r <- 1 to reps) {
-          graft.queries.Pipeline.clearMaterialized()
-          graft.queries.DynamicRow.clearMaterialized()
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
-          System.gc()
-          Thread.sleep(300)
-          jl.clear(); st.clear(); stageJob.clear()
-          val w0 = System.nanoTime()
-          val n = SparkEntry.queries(qname)(spark, dir).count()
-          val wall = (System.nanoTime() - w0) / 1e9
-          Thread.sleep(500)
-          import scala.jdk.CollectionConverters._
-          val js = jl.asScala.toSeq.sortBy(_._1)
-          val jobSum = js.map(_._2.ns).sum / 1e9
-          println(f"[profile] r$r $qname wall=$wall%.2f s rows=$n " +
-            f"jobs=${js.size} jobsum=$jobSum%.2f s")
-          js.foreach { case (id, j) =>
-            println(f"[profile]   job $id%3d ${j.ns / 1e9}%6.2f s tasks=${j.tasks}%4d " +
-              f"ttime=${j.taskMs / 1e3}%6.2f s  ${j.site.take(70)}")
-          }
-        }
-        spark.sparkContext.removeSparkListener(tr)
-      case other => sys.error(s"unknown mode '$other' — use w4 | d23 | p4 | d55 | d5 | d41 | e11 | d67 | qtrace")
+      case other => sys.error(s"unknown mode '$other' — use qtrace | streamsf10")
     }
     spark.stop()
   }

@@ -44,15 +44,14 @@ object GraftFunctions {
     }
 }
 
-/** `spark.sql.extensions` entry point: SQL functions + the opt-in binned
-  * range-join planner rule (fires only on `point_in_range` markers). */
+/** `spark.sql.extensions` entry point: SQL functions + the physical as-of
+  * join strategy. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.functions", name), builder))
     }
-    ext.injectOptimizerRule(_ => graft.plans.BinnedRangeJoinRule)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

@@ -91,7 +91,7 @@ object Dedup {
                        shingleK: Int, numHashes: Int,
                        numBands: Int): (DataFrame, DataFrame) = {
     val rowsPerBand = numHashes / numBands
-    // both relations checkpointed (r8 sf10 StageProfile d5): `sh` feeds
+    // both relations checkpointed (profiled on the sf10 d5): `sh` feeds
     // the signature build AND both shingle sides of the Jaccard verify,
     // `banded` feeds both sides of the band self-join — un-checkpointed,
     // the tokenize+shingle+minhash expressions re-ran once per consumer

@@ -66,14 +66,13 @@ object SuffixRanks {
     * DATA-derived (positions + suffix bytes), never core-count-derived:
     * on any cluster a corpus past them takes the doubling loop
     * unchanged. Bytes bound ≈ one modest shuffle partition set (the
-    * strings cross the network once). */
-  // `private[graft] var`, not `val` (r14, verdict task 7): the
-  // gate-boundary spec shrinks them to push a shared fixture PAST the
-  // gate and assert the loop engages with identical rows — the one code
-  // path the oracle can never reach at judged SFs. Production code never
-  // writes them; the spec restores them in `finally`.
-  private[graft] var DirectMaxPositions = 2000000L
-  private[graft] var DirectMaxSuffixBytes = 256.0 * (1L << 20)
+    * strings cross the network once). The `*Impl` entry points take
+    * them as parameters (these constants by default), so the
+    * gate-boundary spec can push a shared fixture PAST the gate — the
+    * one code path the oracle never reaches at judged SFs — without
+    * mutating shared state. */
+  private val DirectMaxPositions = 2000000L
+  private val DirectMaxSuffixBytes = 256.0 * (1L << 20)
 
   /** Which physical form the LAST build took (spec probe only): Some(true)
     * = direct single-pass, Some(false) = doubling loop / retained descent.
@@ -114,13 +113,18 @@ object SuffixRanks {
     suffixRanksImpl(docs, maxPrefix, allowDirect = true)
 
   /** allowDirect = false forces the doubling loop regardless of size —
-    * spec hook so BOTH physical forms stay pinned on shared fixtures. */
+    * spec hook so BOTH physical forms stay pinned on shared fixtures;
+    * `maxPositions` / `maxSuffixBytes` are the direct-form gates. */
   private[graft] def suffixRanksImpl(docs: DataFrame, maxPrefix: Long,
-                                     allowDirect: Boolean): DataFrame =
+                                     allowDirect: Boolean,
+                                     maxPositions: Long = DirectMaxPositions,
+                                     maxSuffixBytes: Double = DirectMaxSuffixBytes)
+                                    : DataFrame =
     // sweepShuffles: every shuffle the build registers is dead once the
     // final round is checkpointed — the returned projection reads blocks
     graft.core.RoundCheckpointer.sweepShuffles(docs.sparkSession.sparkContext) {
-      buildRanks(docs, maxPrefix, retain = false, allowDirect = allowDirect) match {
+      buildRanks(docs, maxPrefix, retain = false, allowDirect = allowDirect,
+          maxPositions = maxPositions, maxSuffixBytes = maxSuffixBytes) match {
         case None => emptyRanks(docs, "rank")
         case Some(b) =>
           b.ranks.select(col("doc_id"), col("pos").cast(LongType).as("pos"),
@@ -163,9 +167,12 @@ object SuffixRanks {
     suffixLcpImpl(docs, allowDirect = true)
 
   /** allowDirect = false forces the doubling build + composite descent —
-    * the spec hook mirroring [[suffixRanksImpl]]. */
+    * the spec hook mirroring [[suffixRanksImpl]], gates included. */
   private[graft] def suffixLcpImpl(docs: DataFrame,
-                                   allowDirect: Boolean): DataFrame =
+                                   allowDirect: Boolean,
+                                   maxPositions: Long = DirectMaxPositions,
+                                   maxSuffixBytes: Double = DirectMaxSuffixBytes)
+                                  : DataFrame =
     // sweepShuffles: the build's and descent's interior shuffles are dead
     // once `pairs` and the rounds are checkpointed; the returned tail
     // reads only those blocks + the raw docs source
@@ -182,8 +189,8 @@ object SuffixRanks {
     // Values are identical by the suffix-array property the descent
     // itself rests on (nearest sorted neighbors realize the maximal
     // common prefix); specs pin direct ≡ descent on shared fixtures.
-    else if (allowDirect && st.nPos <= DirectMaxPositions &&
-        st.sufBytes <= DirectMaxSuffixBytes) {
+    else if (allowDirect && st.nPos <= maxPositions &&
+        st.sufBytes <= maxSuffixBytes) {
       lastPathDirect = Some(true)
       directLcp(docs, st)
     } else
@@ -607,7 +614,9 @@ object SuffixRanks {
                          roundLevel: org.apache.spark.storage.StorageLevel =
                            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
                          pre: Option[Stats] = None,
-                         allowDirect: Boolean = true)
+                         allowDirect: Boolean = true,
+                         maxPositions: Long = DirectMaxPositions,
+                         maxSuffixBytes: Double = DirectMaxSuffixBytes)
                         : Option[Build] = {
     val st = pre.getOrElse(corpusStats(docs))
     val (maxLen, nPosEst) = (st.maxLen, st.nPos)
@@ -732,7 +741,7 @@ object SuffixRanks {
       if (effMaxPre < maxLen.toLong) nPosEst.toDouble * effMaxPre
       else st.sufBytes
     val takeDirect = allowDirect && !retain && startG < effMaxPre &&
-      nPosEst <= DirectMaxPositions && directBytes <= DirectMaxSuffixBytes
+      nPosEst <= maxPositions && directBytes <= maxSuffixBytes
     lastPathDirect = Some(takeDirect)
     if (takeDirect) {
       val remLen = (effMaxPre - startG).toInt
@@ -792,8 +801,8 @@ object SuffixRanks {
       // the +off lookup is a POSITIONAL SHIFT within a document, so it is
       // lead(r, off) over the per-doc window (positions are dense 1..n) —
       // never a positional self-join: the 15M×15M sort-merge join version
-      // of this line degraded 50× by round 3 at sf10 (profiled via
-      // `StageProfile d67`) while the per-doc window is doc-bounded by
+      // of this line degraded 50× by round 3 at sf10 (profiled per
+      // round on the d67 fixture) while the per-doc window is doc-bounded by
       // construction. Beyond-end positions take sentinel 0 (< every real
       // rank — the shorter-suffix-first rule).
       // persisted on big builds only: the pair-count aggregate AND the

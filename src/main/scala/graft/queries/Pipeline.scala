@@ -20,9 +20,6 @@ object Pipeline {
                                     dir: String) = inputsFrom(s, dir)
   private[graft] def p1MaterializedForProbe(s: org.apache.spark.sql.SparkSession,
                                             dir: String) = p1Materialized(s, dir)
-  private[graft] def indexForProbe(s: org.apache.spark.sql.SparkSession,
-                                   dir: String) =
-    indexFrom(s, dir, inputsFrom(s, dir).prices.select("ticker").distinct())
 
   private def inputsFrom(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val orders = Tables.orders(s, dir)

@@ -309,8 +309,8 @@ object TextVector7 {
     * 4·min(n_a, n_b) ⟺ C ≥ 0.8): no float at the boundary. Injected
     * excerpt twins (+4e9, first 10 tokens of every 40th doc — the d35
     * pattern) guarantee true containment pairs at every judged SF. */
-  // d55 stage builders — shared with `StageProfile d55` so the profiled
-  // stages cannot drift from the judged query.
+  // d55 stage builders — shared with d66 (TextVector10), which builds its
+  // graph over the same corpus and blocking.
 
   /** Even-half corpus + injected excerpt twins (the judged d55 input).
     * Judged on the even-doc_id half (the d45 subsample precedent): pair

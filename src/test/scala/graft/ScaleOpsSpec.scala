@@ -80,17 +80,25 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("binned range join equals the naive BETWEEN join at any bin size") {
     val pts = Seq(("2024-01-01", 1), ("2024-01-15", 2), ("2024-02-10", 3),
-      ("2024-03-01", 4)).toDF("d", "pid")
+      ("2024-03-01", 4),
+      ("2024-02-19", 5), ("2024-03-06", 6),  // a day outside f, either side
+      ("2024-02-20", 7), ("2024-03-05", 8),  // f's own ends (inclusive)
+      (null, 9))                             // null point: no matches
+      .toDF("d", "pid")
       .select(col("d").cast("date").as("d"), col("pid"))
     val iv = Seq(("a", "2024-01-01", "2024-01-20"),
       ("b", "2024-01-10", "2024-02-15"),
       ("c", "2024-05-01", "2024-05-02"),    // matches nothing
-      ("d", "2024-02-01", "2024-01-01"))    // end < start: no matches
+      ("d", "2024-02-01", "2024-01-01"),    // end < start: no matches
+      ("e", null, "2024-03-05"),            // null bound: no matches
+      ("f", "2024-02-20", "2024-03-05"))    // ends inclusive, neighbors out
       .toDF("iid", "s", "e")
       .select(col("iid"), col("s").cast("date").as("s"),
         col("e").cast("date").as("e"))
     val naive = pts.crossJoin(iv).filter(col("d").between(col("s"), col("e")))
       .select("pid", "iid").orderBy("pid", "iid").collect().toSeq
+    assert(naive.map(r => (r.getInt(0), r.getString(1))) == Seq(
+      1 -> "a", 2 -> "a", 2 -> "b", 3 -> "b", 4 -> "f", 7 -> "f", 8 -> "f"))
     for (bin <- Seq(1, 7, 16, 365)) {
       val got = RangeJoin.pointInInterval(pts, iv, "d", "s", "e", bin)
         .select("pid", "iid").orderBy("pid", "iid").collect().toSeq
@@ -272,6 +280,20 @@ class ScaleOpsSpec extends SparkSpec {
     val comps = Dedup.connectedComponents(path, "id_a", "id_b")
       .select("component").distinct().as[Long].collect().toSeq
     assert(comps == Seq(1L))
+  }
+
+  test("connectedComponents: a path converges in O(log diameter) rounds") {
+    import graft.operators.Dedup
+    // 256-node path (diameter 255). Pointer jumping halves the remaining
+    // distance per round, so 2·ceil(log2 256) + 4 = 20 rounds is ample;
+    // min-label propagation alone would need ~255. connectedComponents
+    // throws when the round cap is hit.
+    val n = 256L
+    val path = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val cc = Dedup.connectedComponents(path, "id_a", "id_b", maxIter = 20)
+      .as[(Long, Long)].collect()
+    assert(cc.length == n)
+    assert(cc.forall(_._2 == 1L))
   }
 
   test("stream-stream interval join agrees with the batch twin") {

@@ -89,7 +89,7 @@ class ScoringSpec extends SparkSpec {
   }
 
   /** The p4 GBT-fit envelope (round-7 verdict task 3): the last rows-only
-    * ML surface gets a regression gate. Mirrors `StageProfile p4` exactly
+    * ML surface gets a regression gate. Mirrors the recorded p4 profile
     * — the REAL p1 feature table (sf0.001 for spec cost), the same
     * drawdown-derived label, the same fixed seed (42) and walk-forward
     * cutoff — and pins the AUC floor PROFILE_p4.txt recorded (0.9998 on

@@ -249,28 +249,24 @@ class TextVector10Spec extends SparkSpec {
     assert(SR.lastPathDirect.contains(true))
     val directLcp = rows(SR.suffixLcp(fixture))
     assert(SR.lastPathDirect.contains(true))
-    val (savedPos, savedBytes) = (SR.DirectMaxPositions, SR.DirectMaxSuffixBytes)
-    try {
-      // fixture holds 32 positions (Σ len): a 31-position gate puts it
-      // PAST the boundary, so the PUBLIC entry points (allowDirect = true
-      // — the production call) must route to the loop/descent on their own
-      SR.DirectMaxPositions = 31L
-      val loopRanks = rows(SR.suffixRanks(fixture))
-      assert(SR.lastPathDirect.contains(false),
-        "positions gate exceeded but the direct form still ran")
-      assert(loopRanks == directRanks)
-      val loopLcp = rows(SR.suffixLcp(fixture))
-      assert(SR.lastPathDirect.contains(false))
-      assert(loopLcp == directLcp)
-      // same for the BYTES gate alone
-      SR.DirectMaxPositions = savedPos
-      SR.DirectMaxSuffixBytes = 1.0
-      rows(SR.suffixRanks(fixture))
-      assert(SR.lastPathDirect.contains(false),
-        "bytes gate exceeded but the direct form still ran")
-    } finally {
-      SR.DirectMaxPositions = savedPos
-      SR.DirectMaxSuffixBytes = savedBytes
-    }
+    // fixture holds 32 positions (Σ len): a 31-position gate puts it PAST
+    // the boundary, so the production call (allowDirect = true) must
+    // route to the loop/descent on its own
+    val loopRanks = rows(SR.suffixRanksImpl(fixture, Long.MaxValue,
+      allowDirect = true, maxPositions = 31L))
+    assert(SR.lastPathDirect.contains(false),
+      "positions gate exceeded but the direct form still ran")
+    assert(loopRanks == directRanks)
+    val loopLcp = rows(SR.suffixLcpImpl(fixture, allowDirect = true,
+      maxPositions = 31L))
+    assert(SR.lastPathDirect.contains(false))
+    assert(loopLcp == directLcp)
+    // same for the BYTES gate alone
+    rows(SR.suffixRanksImpl(fixture, Long.MaxValue, allowDirect = true,
+      maxSuffixBytes = 1.0))
+    assert(SR.lastPathDirect.contains(false),
+      "bytes gate exceeded but the direct form still ran")
+    rows(SR.suffixLcpImpl(fixture, allowDirect = true, maxSuffixBytes = 1.0))
+    assert(SR.lastPathDirect.contains(false))
   }
 }
