@@ -6,7 +6,7 @@ import org.apache.spark.sql.graftbridge.Listeners
   * layer split adds up, both reps see the same jobs (Bench.resetRound
   * isolates them), and the listeners leave with the run. */
 class QueryTraceSpec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = s"${sys.props("user.home")}/testdata/sf0.001"
   private val name = "q1_pricing_summary"
 
   test("QueryTrace: rows, jobs, driver gap and Catalyst phases per rep; listeners removed") {
