@@ -17,6 +17,21 @@ import graft.core.SchemaOps.qcol
   * size skew between sides, which is the right trade at 100 TB where both
   * sides are large. For a tiny right side, broadcast+filter would also work,
   * but this form is uniformly safe.
+  *
+  * Two forms per direction, chosen by key shape:
+  *   - uniform keys: the plain window form ([[joinBackward]] /
+  *     [[joinForward]]). It beat a custom co-partitioned merge exec at every
+  *     recorded scale (registry q6 vs the exec on q6's shape: 0.106 vs
+  *     0.188 s at sf0.1 in bench_detail.json, 0.259 vs 0.800 s at sf1 in
+  *     BENCH_sf1.json, 0.27 vs 2.43 s over 10M events in NOTES_r5).
+  *   - hot keys: the bucketed form ([[joinBackwardBucketed]] /
+  *     [[joinForwardBucketed]]), whose window sort is bounded per
+  *     (key, time bucket) instead of per key — a window has no AQE skew
+  *     mitigation, so one hot key is otherwise one sort task.
+  *
+  * NULL semantics (DuckDB `ASOF JOIN`, the oracle): a right row with a NULL
+  * time never matches, a left row with a NULL time matches nothing, and
+  * NULL keys group together like any window partition key.
   */
 object AsOf {
 
@@ -41,21 +56,63 @@ object AsOf {
     */
   def joinBackward(left: DataFrame, right: DataFrame, by: Seq[String],
                    timeCol: String, valueCols: Seq[String],
-                   tieBreak: Seq[Column] = Nil): DataFrame = {
+                   tieBreak: Seq[Column] = Nil): DataFrame =
+    joinPlain(forward = false, left, right, by, timeCol, valueCols, tieBreak)
+
+  /** Left as-of-FORWARD join: attaches `valueCols` from the EARLIEST right
+    * row with `right(timeCol) >= left(timeCol)` within the same `by` keys
+    * ("at or after", inclusive — a right row at the exact left timestamp
+    * matches). Among several right rows sharing that earliest timestamp the
+    * FIRST in `tieBreak` order wins. Same single-shuffle union+window
+    * construction as [[joinBackward]], with time order REVERSED so the
+    * frame stays `[unboundedPreceding, current]`:
+    *
+    * Spark evaluates an unbounded-PRECEDING frame incrementally (O(n) per
+    * partition, one running aggregate) but an unbounded-FOLLOWING frame by
+    * re-aggregating the remaining rows for EVERY row — O(n²) per
+    * partition. A naive `[current, unboundedFollowing] + first()` forward
+    * frame hung the 100M-row deep-history rehearsal (6.7k rows/key made
+    * it ~45M frame-rows per key); sorting `timeCol` DESC and carrying
+    * `last(ignoreNulls)` is the same semantics in the O(n) shape. The
+    * mirror is exact: right rows sort before left at equal time
+    * (equal-time rights visible), and `tieBreak.desc` makes the running
+    * `last` resolve equal-time rights to the FIRST in tieBreak order.
+    *
+    * `tieBreak` columns may carry explicit .asc/.desc/nulls orderings —
+    * [[reverseSort]] flips direction AND null placement, so the reversed
+    * plan preserves exactly the ordering the caller declared.
+    */
+  def joinForward(left: DataFrame, right: DataFrame, by: Seq[String],
+                  timeCol: String, valueCols: Seq[String],
+                  tieBreak: Seq[Column] = Nil): DataFrame =
+    joinPlain(forward = true, left, right, by, timeCol, valueCols, tieBreak)
+
+  /** Shared body of the two plain forms; the direction varies only in the
+    * time sort direction and the reversal of `tieBreak`.
+    *
+    * NULL times: right rows with a NULL time are dropped before the union,
+    * and the time sorts NULLS FIRST in both directions, so a NULL-time left
+    * row precedes every right row of its key and carries nothing. */
+  private def joinPlain(forward: Boolean, left: DataFrame, right: DataFrame,
+                        by: Seq[String], timeCol: String,
+                        valueCols: Seq[String],
+                        tieBreak: Seq[Column]): DataFrame = {
     requirePlainReserved(left, right)
-    val leftCols = left.columns
-    require(!leftCols.exists(valueCols.contains),
+    require(!left.columns.exists(valueCols.contains),
       s"value columns ${valueCols.mkString(",")} collide with left columns")
 
     // side: right=0 sorts before left=1 at equal time => right visible to left.
     val taggedLeft = left.withColumn("__side", lit(1))
-    val taggedRight = right.select(
+    val taggedRight = right.filter(qcol(timeCol).isNotNull).select(
       (by.map(qcol) :+ qcol(timeCol) :+ lit(0).as("__side")) ++ valueCols.map(qcol): _*)
 
     val unioned = SchemaOps.unionHarmonized(Seq(taggedLeft, taggedRight), sortColumns = false)
 
+    val timeOrder =
+      if (forward) qcol(timeCol).desc_nulls_first else qcol(timeCol).asc
+    val tieOrder = if (forward) tieBreak.map(reverseSort) else tieBreak
     val w = Window.partitionBy(by.map(qcol): _*)
-      .orderBy((qcol(timeCol).asc +: col("__side").asc +: tieBreak): _*)
+      .orderBy((timeOrder +: col("__side").asc +: tieOrder): _*)
       .rowsBetween(Window.unboundedPreceding, 0)
     // Carry ONE struct of all value columns so the whole matched right row
     // wins atomically: per-column last(ignoreNulls) would mix columns from
@@ -112,104 +169,6 @@ object AsOf {
     joinBucketed(forward = false, left, right, by, timeCol, valueCols,
       bucketOf, tieBreak)
 
-  /** [[joinBackward]] vs [[joinBackwardBucketed]] chosen from the BUILD
-    * side's shape (the choosePriceForm pattern: measure, decide, document).
-    * The straggler bound of the plain form is the hottest key's row count;
-    * if that fits `targetRows` (one comfortable task), plain wins — two
-    * fewer shuffles. Otherwise bucket, with the width picked so the
-    * hottest key's EXPECTED rows per (key, bucket) ≈ `targetRows`:
-    * `width = span × targetRows / maxKeyRows`, clamped to ≥ 1 time unit.
-    * Probe cost: one aggregation over the build side (per-key counts →
-    * max; global min/max time). Supports TimestampType (micros) and
-    * DateType (days) time columns. */
-  def joinBackwardAuto(left: DataFrame, right: DataFrame, by: Seq[String],
-                       timeCol: String, valueCols: Seq[String],
-                       targetRows: Long = 1L << 21,
-                       tieBreak: Seq[Column] = Nil): DataFrame =
-    joinAuto(forward = false, left, right, by, timeCol, valueCols,
-      targetRows, tieBreak)
-
-  /** [[joinForward]] vs [[joinForwardBucketed]] — the forward mirror of
-    * [[joinBackwardAuto]]; same build-side shape probe, same width rule. */
-  def joinForwardAuto(left: DataFrame, right: DataFrame, by: Seq[String],
-                      timeCol: String, valueCols: Seq[String],
-                      targetRows: Long = 1L << 21,
-                      tieBreak: Seq[Column] = Nil): DataFrame =
-    joinAuto(forward = true, left, right, by, timeCol, valueCols,
-      targetRows, tieBreak)
-
-  private def joinAuto(forward: Boolean, left: DataFrame, right: DataFrame,
-                       by: Seq[String], timeCol: String,
-                       valueCols: Seq[String], targetRows: Long,
-                       tieBreak: Seq[Column]): DataFrame = {
-    import org.apache.spark.sql.types.{DateType, TimestampType}
-    val toUnits: Column => Column = right.schema(timeCol).dataType match {
-      case DateType => c => unix_date(c).cast("long")
-      case TimestampType => c => unix_micros(c)
-      case t => sys.error(s"joinAuto: unsupported time type $t")
-    }
-    val shape = right.groupBy(by.map(qcol): _*)
-      .agg(count(lit(1)).as("__n"), min(toUnits(qcol(timeCol))).as("__lo"),
-        max(toUnits(qcol(timeCol))).as("__hi"))
-      .agg(max(col("__n")), min(col("__lo")), max(col("__hi"))).head
-    // isNullAt(1): every build timestamp is NULL — min/max return null even
-    // though the row count can exceed targetRows. Bucketing can't split a
-    // null-time key (all rows land in the null bucket), so fall back plain.
-    if (shape.isNullAt(0) || shape.isNullAt(1) || shape.getLong(0) <= targetRows) {
-      if (forward) joinForward(left, right, by, timeCol, valueCols, tieBreak)
-      else joinBackward(left, right, by, timeCol, valueCols, tieBreak)
-    } else {
-      val span = math.max(shape.getLong(2) - shape.getLong(1), 1L)
-      // double intermediate: span(micros) × targetRows overflows a Long
-      val width = math.max((span.toDouble * targetRows / shape.getLong(0)).toLong, 1L)
-      val bucketOf: Column => Column =
-        c => floor(toUnits(c).cast("double") / width.toDouble).cast("long")
-      if (forward)
-        joinForwardBucketed(left, right, by, timeCol, valueCols, bucketOf, tieBreak)
-      else
-        joinBackwardBucketed(left, right, by, timeCol, valueCols, bucketOf, tieBreak)
-    }
-  }
-
-  /** The plain forms' working columns: inputs carrying them would be
-    * silently overwritten by withColumn and dropped on exit, so reject
-    * them loudly — the same contract the bucketed forms enforce for
-    * __b/__m/__carry_row/__bt. */
-  private def requirePlainReserved(left: DataFrame, right: DataFrame): Unit = {
-    val reserved = Seq("__side", "__asof_row")
-    require(!(left.columns ++ right.columns).exists(reserved.contains),
-      s"columns ${reserved.mkString(",")} are reserved")
-  }
-
-  /** Reverse a sort specification: a bare column becomes .desc; a column
-    * already carrying an explicit SortOrder flips BOTH its direction and
-    * its null placement (asc nulls-first -> desc nulls-last etc.), so the
-    * reversed-order joinForward plan preserves exactly the tie ordering
-    * the caller declared. Naive `_.desc` on a SortOrder-wrapped column
-    * nests SortOrder inside SortOrder and fails analysis. */
-  /** Delegates to the sql-package bridge: Spark 4 columns are node trees
-    * and the SortOrder node companion is `private[sql]`. */
-  private def reverseSort(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.reverseSort(c)
-
-  /** Left-join the per-(key, bucket) carry row back to the probe side with
-    * NULL-SAFE key equality (`<=>`): null keys and null buckets (null
-    * timestamps) form real window partitions in the plain forms and must
-    * reach their carry too — plain `=` equality would drop them. */
-  private def attachCarry(lb: DataFrame, carry: DataFrame,
-                          by: Seq[String]): DataFrame = {
-    val l = lb.alias("__l")
-    val c = carry.alias("__c")
-    // SchemaOps.quoteName keeps a literal dot in a key name a name, not a
-    // nested-field path — one escape rule shared with qcol
-    val cond = (by :+ "__b")
-      .map { k =>
-        val q = SchemaOps.quoteName(k)
-        col(s"__l.$q") <=> col(s"__c.$q")
-      }.reduce(_ && _)
-    l.join(c, cond, "left").select(col("__l.*"), col("__c.__carry_row"))
-  }
-
   /** SKEW-RESISTANT as-of-FORWARD join — [[joinBackwardBucketed]] mirrored:
     * in-bucket pass is [[joinForward]] on (keys..., bucket); the carry is
     * the EARLIEST build row per (key, bucket) (min = first in tieBreak
@@ -245,13 +204,12 @@ object AsOf {
       s"columns ${reserved.mkString(",")} are reserved")
     require(!left.columns.exists(valueCols.contains),
       s"value columns ${valueCols.mkString(",")} collide with left columns")
-    def plainJoin(l: DataFrame, r: DataFrame, keys: Seq[String], tc: String,
-                  vals: Seq[String], tb: Seq[Column]): DataFrame =
-      if (forward) joinForward(l, r, keys, tc, vals, tb)
-      else joinBackward(l, r, keys, tc, vals, tb)
 
     val lb = left.withColumn("__b", bucketOf(qcol(timeCol)).cast("long"))
-    val rb = right.withColumn("__b", bucketOf(qcol(timeCol)).cast("long"))
+    // a NULL-time build row never matches, so it must not reach the carry
+    // aggregate either, whatever bucket `bucketOf` gives it
+    val rb = right.filter(qcol(timeCol).isNotNull)
+      .withColumn("__b", bucketOf(qcol(timeCol)).cast("long"))
 
     // carry-in: the boundary build row per (key, bucket) — equal-time ties
     // resolve like the plain window (backward keeps the last in tieBreak
@@ -265,17 +223,13 @@ object AsOf {
       .withColumn("__bt", col("__b")).drop("__b")
     val probeBuckets = lb.select((by.map(qcol) :+ col("__b")): _*).distinct()
       .withColumn("__bt", col("__b") + (if (forward) 1 else -1))
-    val carry = plainJoin(probeBuckets, carryAgg, by, "__bt",
+    val carry = joinPlain(forward, probeBuckets, carryAgg, by, "__bt",
       Seq("__carry_row"), Nil).drop("__bt")
 
     // in-bucket pass: the proven union+window machinery, with the bucket
     // folded into the partition key; __m marks "a row matched" so a
-    // matched-but-NULL value is not backfilled from the carry. The carry
-    // attaches with NULL-SAFE equality: the plain forms group null
-    // keys/timestamps into one window partition, so a null bucket (null
-    // timestamp) or null key must reach its carry row too — `=` would
-    // silently drop it.
-    val inBucket = plainJoin(
+    // matched-but-NULL value is not backfilled from the carry.
+    val inBucket = joinPlain(forward,
       attachCarry(lb, carry, by),
       rb.withColumn("__m", lit(0)),
       by :+ "__b", timeCol, valueCols :+ "__m", tieBreak)
@@ -287,55 +241,42 @@ object AsOf {
     resolved.drop("__b", "__m", "__carry_row")
   }
 
-  /** Left as-of-FORWARD join: attaches `valueCols` from the EARLIEST right
-    * row with `right(timeCol) >= left(timeCol)` within the same `by` keys
-    * ("at or after", inclusive — a right row at the exact left timestamp
-    * matches). Among several right rows sharing that earliest timestamp the
-    * FIRST in `tieBreak` order wins. Same single-shuffle union+window
-    * construction as [[joinBackward]], with time order REVERSED so the
-    * frame stays `[unboundedPreceding, current]`:
-    *
-    * Spark evaluates an unbounded-PRECEDING frame incrementally (O(n) per
-    * partition, one running aggregate) but an unbounded-FOLLOWING frame by
-    * re-aggregating the remaining rows for EVERY row — O(n²) per
-    * partition. A naive `[current, unboundedFollowing] + first()` forward
-    * frame hung the 100M-row deep-history rehearsal (6.7k rows/key made
-    * it ~45M frame-rows per key); sorting `timeCol` DESC and carrying
-    * `last(ignoreNulls)` is the same semantics in the O(n) shape. The
-    * mirror is exact: desc NULLS LAST reverses asc NULLS FIRST, right
-    * rows sort before left at equal time (equal-time rights visible), and
-    * `tieBreak.desc` makes the running `last` resolve equal-time rights
-    * to the FIRST in tieBreak order.
-    *
-    * `tieBreak` columns may carry explicit .asc/.desc/nulls orderings —
-    * [[reverseSort]] flips direction AND null placement, so the reversed
-    * plan preserves exactly the ordering the caller declared.
-    */
-  def joinForward(left: DataFrame, right: DataFrame, by: Seq[String],
-                  timeCol: String, valueCols: Seq[String],
-                  tieBreak: Seq[Column] = Nil): DataFrame = {
-    requirePlainReserved(left, right)
-    val leftCols = left.columns
-    require(!leftCols.exists(valueCols.contains),
-      s"value columns ${valueCols.mkString(",")} collide with left columns")
+  /** The plain forms' working columns: inputs carrying them would be
+    * silently overwritten by withColumn and dropped on exit, so reject
+    * them loudly — the same contract the bucketed forms enforce for
+    * __b/__m/__carry_row/__bt. */
+  private def requirePlainReserved(left: DataFrame, right: DataFrame): Unit = {
+    val reserved = Seq("__side", "__asof_row")
+    require(!(left.columns ++ right.columns).exists(reserved.contains),
+      s"columns ${reserved.mkString(",")} are reserved")
+  }
 
-    // right=0 sorts before left=1 at equal time in the REVERSED order, so
-    // an equal-time right row is inside the left row's preceding frame.
-    val taggedLeft = left.withColumn("__side", lit(1))
-    val taggedRight = right.select(
-      (by.map(qcol) :+ qcol(timeCol) :+ lit(0).as("__side")) ++ valueCols.map(qcol): _*)
+  /** Reverse a sort specification: a bare column becomes .desc; a column
+    * already carrying an explicit SortOrder flips BOTH its direction and
+    * its null placement (asc nulls-first -> desc nulls-last etc.), so the
+    * reversed-order joinForward plan preserves exactly the tie ordering
+    * the caller declared. Naive `_.desc` on a SortOrder-wrapped column
+    * nests SortOrder inside SortOrder and fails analysis. Delegates to the
+    * sql-package bridge: Spark 4 columns are node trees and the SortOrder
+    * node companion is `private[sql]`. */
+  private def reverseSort(c: Column): Column =
+    org.apache.spark.sql.graftbridge.ColumnBridge.reverseSort(c)
 
-    val unioned = SchemaOps.unionHarmonized(Seq(taggedLeft, taggedRight), sortColumns = false)
-
-    val w = Window.partitionBy(by.map(qcol): _*)
-      .orderBy((qcol(timeCol).desc +: col("__side").asc +: tieBreak.map(reverseSort)): _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val packed = unioned.withColumn("__asof_row",
-      when(col("__side") === 0, struct(valueCols.map(qcol): _*)))
-      .withColumn("__asof_row", last(col("__asof_row"), ignoreNulls = true).over(w))
-    val unpacked = valueCols.foldLeft(packed) { (df, v) =>
-      df.withColumn(v, col("__asof_row").getField(v))
-    }
-    unpacked.filter(col("__side") === 1).drop("__side", "__asof_row")
+  /** Left-join the per-(key, bucket) carry row back to the probe side with
+    * NULL-SAFE key equality (`<=>`): null keys form real window partitions
+    * in the plain forms and must reach their carry too — plain `=`
+    * equality would drop them. */
+  private def attachCarry(lb: DataFrame, carry: DataFrame,
+                          by: Seq[String]): DataFrame = {
+    val l = lb.alias("__l")
+    val c = carry.alias("__c")
+    // SchemaOps.quoteName keeps a literal dot in a key name a name, not a
+    // nested-field path — one escape rule shared with qcol
+    val cond = (by :+ "__b")
+      .map { k =>
+        val q = SchemaOps.quoteName(k)
+        col(s"__l.$q") <=> col(s"__c.$q")
+      }.reduce(_ && _)
+    l.join(c, cond, "left").select(col("__l.*"), col("__c.__carry_row"))
   }
 }

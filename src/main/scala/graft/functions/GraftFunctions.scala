@@ -44,14 +44,12 @@ object GraftFunctions {
     }
 }
 
-/** `spark.sql.extensions` entry point: SQL functions + the physical as-of
-  * join strategy. */
+/** `spark.sql.extensions` entry point: injects the SQL functions of
+  * [[GraftFunctions.all]] and nothing else. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftFunctions.all.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.functions", name), builder))
     }
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-  }
 }

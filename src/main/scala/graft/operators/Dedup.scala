@@ -352,22 +352,15 @@ object Dedup {
       s"connectedComponents needs integral node ids, got " +
         s"${pairs.schema(aCol).dataType}/${pairs.schema(bCol).dataType} — " +
         "hash other id types to int64 first (e.g. xxhash64)")
-    def dbg(label: String, t0: Long): Unit =
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // materialize the INPUT once before the symmetric union: the two
     // union branches are separate stages, so a lazy (expensive) pair plan
     // would run twice — and with AQE each branch re-plans it again. The
     // pair miner feeding this is usually the most expensive stage in the
     // whole query (measured 7x on the sf1 rehearsal: 77 s -> 11 s).
-    val tF = System.nanoTime()
     val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .localCheckpoint()
-    dbg("fwd checkpoint", tF)
-    val tE = System.nanoTime()
     val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
-    dbg("edges checkpoint", tE)
     // round 0 fused into the node extraction: component = min(node,
     // min neighbor) straight off the symmetric edge list — one groupBy
     // replaces a full propagate round (every node appears as src)
@@ -383,7 +376,6 @@ object Dedup {
     var prevSum = labelSum(labels)
     var converged = false
     var iter = 0
-    var tR = System.nanoTime()
     while (!converged && iter < maxIter) {
       val nbrMin = edges
         .join(labels.select(col("node").as("dst"), col("component").as("__nl")),
@@ -407,8 +399,6 @@ object Dedup {
       prevSum = nextSum
       labels = next
       iter += 1
-      dbg(s"round $iter", tR)
-      tR = System.nanoTime()
     }
     require(converged,
       s"connectedComponents did not converge within $maxIter rounds")

@@ -544,8 +544,8 @@ object Relational7 {
       FROM lineitem GROUP BY 1 ORDER BY 1"""))
 
   /** The SKEW-RESISTANT bucketed as-of join (core.AsOf.joinBackwardBucketed)
-    * on q6/q74's exact shape — the THIRD Spark construction of the same
-    * semantics, gated by the same DuckDB ASOF oracle. Daily buckets over
+    * on q6's exact shape — the hot-key form of the same semantics, gated
+    * by the same DuckDB ASOF oracle. Daily buckets over
     * the event timestamps: a hot user's history splits across day buckets
     * instead of forming one window sort task (windows have no AQE skew
     * mitigation, so at 100 TB this form is the difference between a

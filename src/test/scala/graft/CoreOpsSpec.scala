@@ -1,9 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import graft.core.{AsOf, SchemaOps, SeriesOps}
+
+/** Traverses AQE query stages when collecting plan nodes. */
+private object AdaptivePlans extends AdaptiveSparkPlanHelper
 
 class CoreOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -25,6 +32,54 @@ class CoreOpsSpec extends SparkSpec {
     assert(out(1).getDouble(2) == 2.0)
     assert(out(2).getDouble(2) == 3.0)
     assert(out(3).isNullAt(2))
+
+    // composite keys: matches never cross (k1, k2) groups
+    val mkLeft = Seq((1, "x", 10L), (1, "y", 10L), (2, "x", 10L)).toDF("k1", "k2", "t")
+    val mkRight = Seq((1, "x", 5L, 1.0), (1, "x", 15L, 3.0), (1, "y", 6L, 2.0),
+      (2, "y", 1L, 9.0), (2, "y", 20L, 8.0)).toDF("k1", "k2", "t", "v")
+    // both sides from one relation: their attribute ids coincide
+    val ev = Seq((1L, 1L, "click", 1.5), (1L, 5L, "purchase", 0.0),
+      (1L, 7L, "click", 2.5), (2L, 2L, "purchase", 0.0))
+      .toDF("user_id", "t", "kind", "v")
+    val purchases = ev.filter($"kind" === "purchase").select("user_id", "t")
+    val clicks = ev.filter($"kind" === "click")
+      .select($"user_id", $"t", $"v".as("click_v"))
+    for ((form, forward, join) <- asofForms) {
+      val mk = join(mkLeft, mkRight, Seq("k1", "k2"), "t", Seq("v"))
+        .orderBy("k1", "k2").select("v").as[Option[Double]].collect().toSeq
+      assert(mk == (if (forward) Seq(Some(3.0), None, None)
+        else Seq(Some(1.0), Some(2.0), None)), form)
+      val self = join(purchases, clicks, Seq("user_id"), "t", Seq("click_v"))
+        .orderBy("user_id").select("click_v").as[Option[Double]].collect().toSeq
+      assert(self == Seq(Some(if (forward) 2.5 else 1.5), None), form)
+    }
+  }
+
+  private type AsOfForm =
+    (DataFrame, DataFrame, Seq[String], String, Seq[String]) => DataFrame
+
+  // the four as-of forms as (name, forward, join); the bucketed ones use
+  // width-3 buckets over an integral time column
+  private val asofForms: Seq[(String, Boolean, AsOfForm)] = {
+    val b3: Column => Column = c => floor(c / lit(3.0)).cast("long")
+    Seq(
+      ("joinBackward", false, AsOf.joinBackward(_, _, _, _, _)),
+      ("joinForward", true, AsOf.joinForward(_, _, _, _, _)),
+      ("joinBackwardBucketed", false, AsOf.joinBackwardBucketed(_, _, _, _, _, b3)),
+      ("joinForwardBucketed", true, AsOf.joinForwardBucketed(_, _, _, _, _, b3)))
+  }
+
+  test("as-of NULL times never match, in all four forms") {
+    val left = Seq(("A", Some(5L)), ("A", None), ("B", Some(5L))).toDF("k", "t")
+    val right = Seq(("A", Some(7L), 1.0), ("A", None, 99.0), ("B", None, 42.0))
+      .toDF("k", "t", "v")
+    for ((form, forward, join) <- asofForms) {
+      val out = join(left, right, Seq("k"), "t", Seq("v"))
+        .as[(String, Option[Long], Option[Double])].collect().toSet
+      val want = Set(("A", Some(5L), if (forward) Some(1.0) else None),
+        ("A", None, None), ("B", Some(5L), None))
+      assert(out == want, form)
+    }
   }
 
   test("asof backward attaches the matched row atomically: its NULLs are not backfilled") {
@@ -91,67 +146,30 @@ class CoreOpsSpec extends SparkSpec {
     }
   }
 
-  test("joinBackwardAuto: plain below the hot-key threshold, bucketed above, identical rows either way") {
-    val left = (0 until 200).map(i =>
-      (if (i % 2 == 0) "HOT" else s"K${i % 7}",
-        java.sql.Timestamp.valueOf(s"2024-01-01 00:0${i % 6}:${10 + i % 50}"),
-        i.toLong)).toDF("k", "ts", "seq")
-    val right = (0 until 300).map(i =>
-      (if (i % 3 != 2) "HOT" else s"K${i % 7}",
-        java.sql.Timestamp.valueOf(s"2024-01-01 00:0${i % 6}:${10 + (i * 7) % 50}"),
-        i.toLong, i * 1.5)).toDF("k", "ts", "rseq", "rv")
-    val plain = AsOf.joinBackward(left, right, Seq("k"), "ts",
-      Seq("rv", "rseq"), tieBreak = Seq(col("rseq")))
-    // HOT holds 200 build rows: targetRows above that -> plain path,
-    // below -> bucketed path; both must equal joinBackward row-for-row
-    for (target <- Seq(1000L, 20L)) {
-      val auto = AsOf.joinBackwardAuto(left, right, Seq("k"), "ts",
-        Seq("rv", "rseq"), targetRows = target, tieBreak = Seq(col("rseq")))
-        .select(plain.columns.map(col): _*)
-      assert(auto.exceptAll(plain).isEmpty && plain.exceptAll(auto).isEmpty,
-        s"targetRows=$target diverges")
+  test("as-of window partitions: bucketed on (keys, bucket), plain on keys alone") {
+    val left = genAsOf(200, 7, 3)
+    val right = genAsOf(150, 13, 3).withColumnRenamed("v", "rv")
+      .withColumnRenamed("seq", "rseq")
+    // the hot-key bound: a key's window sort spans one (key, bucket) in
+    // the bucketed form and the key's whole history in the plain form.
+    // Partition keys of every window in the executed (AQE final) plan:
+    def windowKeys(df: DataFrame): Seq[Seq[String]] = {
+      df.collect()
+      AdaptivePlans.collect(df.queryExecution.executedPlan) {
+        case w: WindowExec => w.partitionSpec.map {
+          case a: Attribute => a.name
+          case e => e.sql
+        }
+      }
     }
-    // DateType time column drives the unix_date branch
-    val dl = left.withColumn("ts", to_date(col("ts")))
-    val dr = right.withColumn("ts", to_date(col("ts")))
-    val dPlain = AsOf.joinBackward(dl, dr, Seq("k"), "ts",
-      Seq("rv", "rseq"), tieBreak = Seq(col("rseq")))
-    val dAuto = AsOf.joinBackwardAuto(dl, dr, Seq("k"), "ts",
-      Seq("rv", "rseq"), targetRows = 20L, tieBreak = Seq(col("rseq")))
-      .select(dPlain.columns.map(col): _*)
-    assert(dAuto.exceptAll(dPlain).isEmpty && dPlain.exceptAll(dAuto).isEmpty)
-    // empty build side: degenerate, must not throw
-    assert(AsOf.joinBackwardAuto(dl, dr.limit(0), Seq("k"), "ts",
-      Seq("rv", "rseq")).count() == 200)
-  }
-
-  test("joinForwardAuto: plain and bucketed paths both equal joinForward") {
-    val left = (0 until 200).map(i =>
-      (if (i % 2 == 0) "HOT" else s"K${i % 7}",
-        java.sql.Timestamp.valueOf(s"2024-01-01 00:0${i % 6}:${10 + i % 50}"),
-        i.toLong)).toDF("k", "ts", "seq")
-    val right = (0 until 300).map(i =>
-      (if (i % 3 != 2) "HOT" else s"K${i % 7}",
-        java.sql.Timestamp.valueOf(s"2024-01-01 00:0${i % 6}:${10 + (i * 7) % 50}"),
-        i.toLong, i * 1.5)).toDF("k", "ts", "rseq", "rv")
-    val plain = AsOf.joinForward(left, right, Seq("k"), "ts",
-      Seq("rv", "rseq"), tieBreak = Seq(col("rseq")))
-    for (target <- Seq(1000L, 20L)) {
-      val auto = AsOf.joinForwardAuto(left, right, Seq("k"), "ts",
-        Seq("rv", "rseq"), targetRows = target, tieBreak = Seq(col("rseq")))
-        .select(plain.columns.map(col): _*)
-      assert(auto.exceptAll(plain).isEmpty && plain.exceptAll(auto).isEmpty,
-        s"targetRows=$target diverges")
+    for ((form, _, join) <- asofForms) {
+      val keys = windowKeys(join(left, right, Seq("k"), "ts", Seq("rv", "rseq")))
+      if (form.endsWith("Bucketed"))
+        // the in-bucket pass on (k, __b) plus the carry-in as-of on k,
+        // which runs over one aggregate row per (key, bucket)
+        assert(keys.sortBy(_.size) == Seq(Seq("k"), Seq("k", "__b")), form)
+      else assert(keys == Seq(Seq("k")), form)
     }
-    assert(AsOf.joinForwardAuto(left, right.limit(0), Seq("k"), "ts",
-      Seq("rv", "rseq")).count() == 200)
-    // all-NULL build timestamps over the hot-key threshold: min/max time
-    // come back null, so the auto probe must fall back plain, not NPE
-    val nullTs = right.withColumn("ts", lit(null).cast("timestamp"))
-    assert(AsOf.joinForwardAuto(left, nullTs, Seq("k"), "ts",
-      Seq("rv", "rseq"), targetRows = 20L).count() == 200)
-    assert(AsOf.joinBackwardAuto(left, nullTs, Seq("k"), "ts",
-      Seq("rv", "rseq"), targetRows = 20L).count() == 200)
   }
 
   test("as-of family accepts dotted key/time/value column names, both directions") {
