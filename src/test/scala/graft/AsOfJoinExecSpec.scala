@@ -1,161 +1,88 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.AsOf
-import graft.plans.{AsOfJoinApi, AsOfJoinExec}
 
-/** Physical as-of join (AsOfJoinPlan/Strategy/Exec): golden semantics,
-  * randomized equivalence against the union+window construction
-  * (`core.AsOf.joinBackward`), and the physical plan contract (one
-  * co-partitioning Exchange per child, sorted merge, no union/window).
+/** The four `core.AsOf` forms as (name, forward, join); the bucketed ones
+  * use width-3 buckets over an integral time column. */
+private[graft] object AsOfForms {
+  type Join = (DataFrame, DataFrame, Seq[String], String, Seq[String]) => DataFrame
+
+  val all: Seq[(String, Boolean, Join)] = {
+    val b3: Column => Column = c => floor(c / lit(3.0)).cast("long")
+    Seq(
+      ("joinBackward", false, AsOf.joinBackward(_, _, _, _, _)),
+      ("joinForward", true, AsOf.joinForward(_, _, _, _, _)),
+      ("joinBackwardBucketed", false, AsOf.joinBackwardBucketed(_, _, _, _, _, b3)),
+      ("joinForwardBucketed", true, AsOf.joinForwardBucketed(_, _, _, _, _, b3)))
+  }
+
+  val backward: Seq[(String, Boolean, Join)] = all.filterNot(_._2)
+}
+
+/** Match semantics of the as-of join behind q74_asof_exec, checked on every
+  * `core.AsOf` form they apply to: inclusive backward match, atomic row
+  * carry, composite keys, and two sides drawn from one relation.
   */
 class AsOfJoinExecSpec extends SparkSpec {
   import spark.implicits._
-
-  private def execPlan(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString
 
   test("backward inclusive match, atomic carry, no-match rows are null") {
     val left = Seq(("A", 1L), ("A", 5L), ("A", 10L), ("B", 3L), ("C", 2L))
       .toDF("k", "t")
     val right = Seq(("A", 1L, 10.0, "x"), ("A", 7L, 70.0, "y"),
       ("B", 4L, 40.0, "z")).toDF("k", "t", "v", "tag")
-    val out = AsOfJoinApi.joinBackward(left, right, Seq("k"), "t", Seq("v", "tag"))
-      .orderBy("k", "t")
-      .as[(String, Long, Option[Double], Option[String])].collect().toSeq
-    assert(out == Seq(
-      ("A", 1L, Some(10.0), Some("x")),   // exact-timestamp match is visible
-      ("A", 5L, Some(10.0), Some("x")),
-      ("A", 10L, Some(70.0), Some("y")),
-      ("B", 3L, None, None),              // right row at t=4 is in the future
-      ("C", 2L, None, None)))             // key with no right rows at all
+    for ((form, _, join) <- AsOfForms.backward) {
+      val out = join(left, right, Seq("k"), "t", Seq("v", "tag"))
+        .orderBy("k", "t")
+        .as[(String, Long, Option[Double], Option[String])].collect().toSeq
+      assert(out == Seq(
+        ("A", 1L, Some(10.0), Some("x")),   // exact-timestamp match is visible
+        ("A", 5L, Some(10.0), Some("x")),
+        ("A", 10L, Some(70.0), Some("y")),
+        ("B", 3L, None, None),              // right row at t=4 is in the future
+        ("C", 2L, None, None)), form)       // key with no right rows at all
+    }
   }
 
   test("atomic row carry: a NULL value in the matched right row stays NULL") {
     val left = Seq(("A", 10L)).toDF("k", "t")
     val right = Seq(("A", 1L, Some(1.0), Some(100.0)),
       ("A", 5L, Some(5.0), None)).toDF("k", "t", "a", "b")
-    val row = AsOfJoinApi.joinBackward(left, right, Seq("k"), "t", Seq("a", "b"))
-      .as[(String, Long, Option[Double], Option[Double])].head()
-    // matched row is t=5: its b is NULL and must NOT backfill from t=1
-    assert(row == (("A", 10L, Some(5.0), None)))
-  }
-
-  test("null left time matches nothing; null right times are skipped") {
-    val left = Seq(("A", Some(5L)), ("A", None)).toDF("k", "t")
-    val right = Seq(("A", Some(1L), 1.0), ("A", None, 99.0)).toDF("k", "t", "v")
-    val out = AsOfJoinApi.joinBackward(left, right, Seq("k"), "t", Seq("v"))
-      .collect().map(r => (r.getAs[Any](1), Option(r.getAs[Any](2)))).toSet
-    assert(out == Set((5L, Some(1.0)), (null, None)))
-  }
-
-  test("randomized equivalence with the union+window construction") {
-    val rnd = new scala.util.Random(7)
-    val keys = Seq("a", "b", "c", "d")
-    // unique (key, time) on the right — both forms' determinism contract
-    val rightRows = (for (k <- keys; t <- rnd.shuffle((0 to 400).toList).take(60))
-      yield (k, t.toLong, rnd.nextDouble(), rnd.nextInt(5).toString)).distinct
-    val leftRows = for (_ <- 1 to 500) yield
-      (keys(rnd.nextInt(keys.size)), rnd.nextInt(420).toLong, rnd.nextInt(100))
-    val left = leftRows.toDF("k", "t", "payload")
-    val right = rightRows.toDF("k", "t", "v", "tag")
-
-    val viaExec = AsOfJoinApi.joinBackward(left, right, Seq("k"), "t", Seq("v", "tag"))
-      .orderBy("k", "t", "payload")
-      .as[(String, Long, Int, Option[Double], Option[String])].collect().toSeq
-    val viaWindow = AsOf.joinBackward(left, right, Seq("k"), "t", Seq("v", "tag"))
-      .orderBy("k", "t", "payload")
-      .as[(String, Long, Int, Option[Double], Option[String])].collect().toSeq
-    assert(viaExec == viaWindow)
-    assert(viaExec.size == 500)
-  }
-
-  test("physical plan: AsOfJoinExec with one hash exchange + sort per child, no window") {
-    val left = (1 to 100).map(i => (s"k${i % 7}", i.toLong)).toDF("k", "t")
-    val right = (1 to 50).map(i => (s"k${i % 7}", i.toLong * 2, i * 1.0)).toDF("k", "t", "v")
-    val df = AsOfJoinApi.joinBackward(left, right, Seq("k"), "t", Seq("v"))
-    df.collect() // force execution so AQE finalizes the plan
-    // AQE prints "Final Plan" then "Initial Plan" — count only the final
-    val plan = execPlan(df).split("== Initial Plan ==").head
-    assert(plan.contains("AsOfJoin"), plan)
-    assert("Exchange hashpartitioning".r.findAllIn(plan).size == 2, plan)
-    assert(!plan.contains("Window"), plan)
-    assert(!plan.contains("Union"), plan)
-    // AQE wraps the final plan in query stages `exists` won't traverse;
-    // the node name in the final-plan string IS the typed assertion
-    assert(plan.contains("AsOfJoin ["), plan)
-  }
-
-  test("bucketed inputs join with ZERO exchanges — the union+window form cannot") {
-    // the structural scale advantage of the physical operator: its
-    // ClusteredDistribution requirement is satisfied by bucketed scans, so
-    // pre-bucketed (or pre-shuffled) inputs co-locate with no shuffle at
-    // all; the union construction always re-shuffles because the union of
-    // two hash-partitioned relations has no partitioning
-    val wh = java.nio.file.Files.createTempDirectory("asof_bucket").toFile
-    wh.deleteOnExit()
-    val l = (1 to 1000).map(i => (i % 13L, i.toLong)).toDF("k", "t")
-    val r = (1 to 300).map(i => (i % 13L, i.toLong * 3, i * 0.5)).toDF("k", "t", "v")
-    l.write.mode("overwrite").bucketBy(4, "k").sortBy("k", "t")
-      .option("path", s"$wh/asof_l").saveAsTable("asof_l")
-    r.write.mode("overwrite").bucketBy(4, "k").sortBy("k", "t")
-      .option("path", s"$wh/asof_r").saveAsTable("asof_r")
-    try {
-      val df = AsOfJoinApi.joinBackward(
-        spark.table("asof_l"), spark.table("asof_r"), Seq("k"), "t", Seq("v"))
-      df.collect()
-      val plan = execPlan(df).split("== Initial Plan ==").head
-      assert(plan.contains("AsOfJoin"), plan)
-      assert(!plan.contains("Exchange"), plan)
-      // outputPartitioning carries the left child's partitioning through,
-      // so a downstream agg on the join keys re-shuffles nothing either
-      val agg = df.groupBy("k").agg(sum("v"))
-      agg.collect()
-      val aggPlan = execPlan(agg).split("== Initial Plan ==").head
-      assert(!aggPlan.contains("Exchange"), aggPlan)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS asof_l")
-      spark.sql("DROP TABLE IF EXISTS asof_r")
+    for ((form, _, join) <- AsOfForms.backward) {
+      val row = join(left, right, Seq("k"), "t", Seq("a", "b"))
+        .as[(String, Long, Option[Double], Option[Double])].head()
+      // matched row is t=5: its b is NULL and must NOT backfill from t=1
+      assert(row == (("A", 10L, Some(5.0), None)), form)
     }
   }
 
   test("self-join: both sides from one relation re-alias instead of mis-pruning") {
     // left and right derive from the SAME DataFrame, so their attribute ids
-    // collide — the API's re-alias branch must keep the optimizer from
-    // resolving right-side references against the left child
+    // collide; right-side references must not resolve against the left
     val ev = Seq((1L, 1L, "click", 1.5), (1L, 5L, "purchase", 0.0),
-      (2L, 2L, "purchase", 0.0)).toDF("user_id", "t", "kind", "v")
+      (1L, 7L, "click", 2.5), (2L, 2L, "purchase", 0.0))
+      .toDF("user_id", "t", "kind", "v")
     val purchases = ev.filter($"kind" === "purchase").select("user_id", "t")
     val clicks = ev.filter($"kind" === "click")
       .select($"user_id", $"t", $"v".as("click_v"))
-    val out = AsOfJoinApi.joinBackward(purchases, clicks,
-      Seq("user_id"), "t", Seq("click_v"))
-      .orderBy("user_id")
-      .collect().map(r => (r.getLong(0), Option(r.getAs[Any]("click_v")))).toSeq
-    assert(out == Seq((1L, Some(1.5)), (2L, None)))
-  }
-
-  test("mismatched key or time types fail loudly at construction") {
-    val l = Seq((1, 1L)).toDF("k", "t")
-    val rBadKey = Seq((1L, 1L, 1.0)).toDF("k", "t", "v")   // k long vs int
-    val rBadTime = Seq((1, 1.5, 1.0)).toDF("k", "t", "v")  // t double vs long
-    val e1 = intercept[IllegalArgumentException] {
-      AsOfJoinApi.joinBackward(l, rBadKey, Seq("k"), "t", Seq("v"))
+    for ((form, forward, join) <- AsOfForms.all) {
+      val out = join(purchases, clicks, Seq("user_id"), "t", Seq("click_v"))
+        .orderBy("user_id").select("click_v").as[Option[Double]].collect().toSeq
+      assert(out == Seq(Some(if (forward) 2.5 else 1.5), None), form)
     }
-    assert(e1.getMessage.contains("key types differ"))
-    val e2 = intercept[IllegalArgumentException] {
-      AsOfJoinApi.joinBackward(l, rBadTime, Seq("k"), "t", Seq("v"))
-    }
-    assert(e2.getMessage.contains("time types differ"))
   }
 
   test("multi-key grouping: matches never cross composite keys") {
     val left = Seq((1, "x", 10L), (1, "y", 10L), (2, "x", 10L)).toDF("k1", "k2", "t")
-    val right = Seq((1, "x", 5L, 1.0), (1, "y", 6L, 2.0), (2, "y", 1L, 9.0))
-      .toDF("k1", "k2", "t", "v")
-    val out = AsOfJoinApi.joinBackward(left, right, Seq("k1", "k2"), "t", Seq("v"))
-      .orderBy("k1", "k2")
-      .collect().map(r => Option(r.getAs[Any]("v"))).toSeq
-    assert(out == Seq(Some(1.0), Some(2.0), None))
+    val right = Seq((1, "x", 5L, 1.0), (1, "x", 15L, 3.0), (1, "y", 6L, 2.0),
+      (2, "y", 1L, 9.0), (2, "y", 20L, 8.0)).toDF("k1", "k2", "t", "v")
+    for ((form, forward, join) <- AsOfForms.all) {
+      val out = join(left, right, Seq("k1", "k2"), "t", Seq("v"))
+        .orderBy("k1", "k2").select("v").as[Option[Double]].collect().toSeq
+      assert(out == (if (forward) Seq(Some(3.0), None, None)
+        else Seq(Some(1.0), Some(2.0), None)), form)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -32,42 +32,9 @@ class CoreOpsSpec extends SparkSpec {
     assert(out(1).getDouble(2) == 2.0)
     assert(out(2).getDouble(2) == 3.0)
     assert(out(3).isNullAt(2))
-
-    // composite keys: matches never cross (k1, k2) groups
-    val mkLeft = Seq((1, "x", 10L), (1, "y", 10L), (2, "x", 10L)).toDF("k1", "k2", "t")
-    val mkRight = Seq((1, "x", 5L, 1.0), (1, "x", 15L, 3.0), (1, "y", 6L, 2.0),
-      (2, "y", 1L, 9.0), (2, "y", 20L, 8.0)).toDF("k1", "k2", "t", "v")
-    // both sides from one relation: their attribute ids coincide
-    val ev = Seq((1L, 1L, "click", 1.5), (1L, 5L, "purchase", 0.0),
-      (1L, 7L, "click", 2.5), (2L, 2L, "purchase", 0.0))
-      .toDF("user_id", "t", "kind", "v")
-    val purchases = ev.filter($"kind" === "purchase").select("user_id", "t")
-    val clicks = ev.filter($"kind" === "click")
-      .select($"user_id", $"t", $"v".as("click_v"))
-    for ((form, forward, join) <- asofForms) {
-      val mk = join(mkLeft, mkRight, Seq("k1", "k2"), "t", Seq("v"))
-        .orderBy("k1", "k2").select("v").as[Option[Double]].collect().toSeq
-      assert(mk == (if (forward) Seq(Some(3.0), None, None)
-        else Seq(Some(1.0), Some(2.0), None)), form)
-      val self = join(purchases, clicks, Seq("user_id"), "t", Seq("click_v"))
-        .orderBy("user_id").select("click_v").as[Option[Double]].collect().toSeq
-      assert(self == Seq(Some(if (forward) 2.5 else 1.5), None), form)
-    }
   }
 
-  private type AsOfForm =
-    (DataFrame, DataFrame, Seq[String], String, Seq[String]) => DataFrame
-
-  // the four as-of forms as (name, forward, join); the bucketed ones use
-  // width-3 buckets over an integral time column
-  private val asofForms: Seq[(String, Boolean, AsOfForm)] = {
-    val b3: Column => Column = c => floor(c / lit(3.0)).cast("long")
-    Seq(
-      ("joinBackward", false, AsOf.joinBackward(_, _, _, _, _)),
-      ("joinForward", true, AsOf.joinForward(_, _, _, _, _)),
-      ("joinBackwardBucketed", false, AsOf.joinBackwardBucketed(_, _, _, _, _, b3)),
-      ("joinForwardBucketed", true, AsOf.joinForwardBucketed(_, _, _, _, _, b3)))
-  }
+  private val asofForms = AsOfForms.all
 
   test("as-of NULL times never match, in all four forms") {
     val left = Seq(("A", Some(5L)), ("A", None), ("B", Some(5L))).toDF("k", "t")
