@@ -29,9 +29,10 @@ import graft.core.SchemaOps.qcol
   *     (key, time bucket) instead of per key — a window has no AQE skew
   *     mitigation, so one hot key is otherwise one sort task.
   *
-  * NULL semantics (DuckDB `ASOF JOIN`, the oracle): a right row with a NULL
-  * time never matches, a left row with a NULL time matches nothing, and
-  * NULL keys group together like any window partition key.
+  * NULL semantics (DuckDB `ASOF LEFT JOIN ... ON` key equality, the
+  * oracle): a right row with a NULL time or a NULL in any `by` key never
+  * matches; a left row with a NULL time or a NULL key stays in the output
+  * with NULL matched values.
   */
 object AsOf {
 
@@ -90,9 +91,11 @@ object AsOf {
   /** Shared body of the two plain forms; the direction varies only in the
     * time sort direction and the reversal of `tieBreak`.
     *
-    * NULL times: right rows with a NULL time are dropped before the union,
-    * and the time sorts NULLS FIRST in both directions, so a NULL-time left
-    * row precedes every right row of its key and carries nothing. */
+    * NULLs: right rows with a NULL time or a NULL key are dropped before
+    * the union, so a NULL-key left row finds no right row in its window
+    * partition; the time sorts NULLS FIRST in both directions, so a
+    * NULL-time left row precedes every right row of its key and carries
+    * nothing. */
   private def joinPlain(forward: Boolean, left: DataFrame, right: DataFrame,
                         by: Seq[String], timeCol: String,
                         valueCols: Seq[String],
@@ -103,7 +106,7 @@ object AsOf {
 
     // side: right=0 sorts before left=1 at equal time => right visible to left.
     val taggedLeft = left.withColumn("__side", lit(1))
-    val taggedRight = right.filter(qcol(timeCol).isNotNull).select(
+    val taggedRight = right.filter(notNull(timeCol +: by)).select(
       (by.map(qcol) :+ qcol(timeCol) :+ lit(0).as("__side")) ++ valueCols.map(qcol): _*)
 
     val unioned = SchemaOps.unionHarmonized(Seq(taggedLeft, taggedRight), sortColumns = false)
@@ -206,9 +209,9 @@ object AsOf {
       s"value columns ${valueCols.mkString(",")} collide with left columns")
 
     val lb = left.withColumn("__b", bucketOf(qcol(timeCol)).cast("long"))
-    // a NULL-time build row never matches, so it must not reach the carry
-    // aggregate either, whatever bucket `bucketOf` gives it
-    val rb = right.filter(qcol(timeCol).isNotNull)
+    // a build row with a NULL time or key never matches, so it must not
+    // reach the carry aggregate either, whatever bucket `bucketOf` gives it
+    val rb = right.filter(notNull(timeCol +: by))
       .withColumn("__b", bucketOf(qcol(timeCol)).cast("long"))
 
     // carry-in: the boundary build row per (key, bucket) — equal-time ties
@@ -241,6 +244,10 @@ object AsOf {
     resolved.drop("__b", "__m", "__carry_row")
   }
 
+  /** Every one of `cols` is non-NULL. */
+  private def notNull(cols: Seq[String]): Column =
+    cols.map(c => qcol(c).isNotNull).reduce(_ && _)
+
   /** The plain forms' working columns: inputs carrying them would be
     * silently overwritten by withColumn and dropped on exit, so reject
     * them loudly — the same contract the bucketed forms enforce for
@@ -262,10 +269,10 @@ object AsOf {
   private def reverseSort(c: Column): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.reverseSort(c)
 
-  /** Left-join the per-(key, bucket) carry row back to the probe side with
-    * NULL-SAFE key equality (`<=>`): null keys form real window partitions
-    * in the plain forms and must reach their carry too — plain `=`
-    * equality would drop them. */
+  /** Left-join the per-(key, bucket) carry row back to the probe side. No
+    * carry row has a NULL key (the build side drops them), so plain `=`
+    * equality is exact: a NULL-key or NULL-bucket probe row keeps a NULL
+    * carry. */
   private def attachCarry(lb: DataFrame, carry: DataFrame,
                           by: Seq[String]): DataFrame = {
     val l = lb.alias("__l")
@@ -275,7 +282,7 @@ object AsOf {
     val cond = (by :+ "__b")
       .map { k =>
         val q = SchemaOps.quoteName(k)
-        col(s"__l.$q") <=> col(s"__c.$q")
+        col(s"__l.$q") === col(s"__c.$q")
       }.reduce(_ && _)
     l.join(c, cond, "left").select(col("__l.*"), col("__c.__carry_row"))
   }

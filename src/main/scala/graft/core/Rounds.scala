@@ -17,21 +17,21 @@ import org.apache.spark.sql.DataFrame
   * The contract here: EAGER localCheckpoint (materialize first), then
   * free the previous round's blocks (free second), tracking only the
   * RDD ids THIS loop persisted (set-diff against pre-existing ids, so a
-  * caller's checkpoints are never touched); a GC nudge every `gcEvery`
-  * steps bounds on-disk shuffle state (shuffle files are deleted only
-  * after their dependency is GC'd — an sf10 probe hit ENOSPC without
-  * it). Live storage is bounded by two rounds.
+  * caller's checkpoints are never touched); a GC nudge every four steps
+  * bounds on-disk shuffle state (shuffle files are deleted only after
+  * their dependency is GC'd — an sf10 probe hit ENOSPC without it). Live
+  * storage is bounded by two rounds.
   *
   * `freeSuperseded = false` keeps every round alive (the LCP descent
   * needs all doubling rounds) — freeing is then the caller's duty via
   * the ids [[stepTracked]] returns.
   *
-  * `freeShuffles = true` ALSO drops each step's interior shuffle FILES
-  * deterministically (r12, the d86 ENOSPC fix): unpersisting blocks
-  * frees memory, but a shuffle's map-output files are deleted only when
-  * the ContextCleaner notices its dependency was GC'd — an iterative
-  * build writes one corpus-sized shuffle per round and the files pile up
-  * until the disk fills. After the step's EAGER checkpoint the shuffles
+  * Each step ALSO drops its interior shuffle FILES deterministically
+  * (r12, the d86 ENOSPC fix): unpersisting blocks frees memory, but a
+  * shuffle's map-output files are deleted only when the ContextCleaner
+  * notices its dependency was GC'd — an iterative build writes one
+  * corpus-sized shuffle per round and the files pile up until the disk
+  * fills. After the step's EAGER checkpoint the shuffles
   * that appeared during it are dead by construction (retained ROUNDS are
   * checkpointed blocks, never shuffles), so they are removed via
   * [[org.apache.spark.graftbridge.ShuffleBridge]] — the GC path, run on
@@ -45,9 +45,8 @@ import org.apache.spark.sql.DataFrame
   * blocks as compact serialized (and, with spark.rdd.compress, LZ4'd)
   * bytes in memory AND on disk — the right level when a round relation
   * is corpus-sized. */
-final class RoundCheckpointer(sc: SparkContext, gcEvery: Int = 4,
+final class RoundCheckpointer(sc: SparkContext,
                               freeSuperseded: Boolean = true,
-                              freeShuffles: Boolean = false,
                               level: org.apache.spark.storage.StorageLevel =
                                 org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) {
   private var live: Set[Int] = Set.empty
@@ -65,37 +64,29 @@ final class RoundCheckpointer(sc: SparkContext, gcEvery: Int = 4,
     // diffing build runs concurrently (advisor r12): hold the JVM-wide
     // build lock for the step so a violated contract fails loudly
     // (reentrant when the caller's sweepShuffles bracket already holds it)
-    if (freeShuffles) RoundCheckpointer.withBuildLock("stepTracked(freeShuffles)") {
-      stepTrackedImpl(df)
-    } else stepTrackedImpl(df)
-
-  private def stepTrackedImpl(df: DataFrame): (DataFrame, Set[Int]) = {
-    val before = persistedIds
-    val shBefore = if (freeShuffles)
-      org.apache.spark.graftbridge.ShuffleBridge.activeShuffleIds(sc)
-    else Set.empty[Int]
-    val out = df.localCheckpoint(true, level) // eager: materialize-then-free
-    val fresh = persistedIds -- before
-    if (freeSuperseded) free(live)
-    if (freeShuffles) {
+    RoundCheckpointer.withBuildLock("stepTracked") {
+      val before = persistedIds
+      val shBefore = org.apache.spark.graftbridge.ShuffleBridge.activeShuffleIds(sc)
+      val out = df.localCheckpoint(true, level) // eager: materialize-then-free
+      val fresh = persistedIds -- before
+      if (freeSuperseded) free(live)
       val shFresh =
         org.apache.spark.graftbridge.ShuffleBridge.activeShuffleIds(sc) -- shBefore
-      RoundCheckpointer.assertNoForeignJobs(sc, "stepTracked(freeShuffles)")
+      RoundCheckpointer.assertNoForeignJobs(sc, "stepTracked")
       org.apache.spark.graftbridge.ShuffleBridge.removeShuffles(sc, shFresh)
+      live = fresh
+      n += 1
+      if (n % RoundCheckpointer.GcEvery == 0) System.gc()
+      (out, fresh)
     }
-    live = fresh
-    n += 1
-    if (n % gcEvery == 0) System.gc()
-    (out, fresh)
-  }
 
   def step(df: DataFrame): DataFrame = stepTracked(df)._1
-
-  /** The final round's ids (still persisted — the loop's output). */
-  def liveIds: Set[Int] = live
 }
 
 object RoundCheckpointer {
+  /** Steps between the GC nudges of [[RoundCheckpointer.stepTracked]]. */
+  private val GcEvery = 4
+
   /** One-shot form of the round hygiene for memoized FINAL results (the
     * p1 / dynamic-row stores): run `build`, eagerly checkpoint its result,
     * then free every block the build persisted along the way (interior

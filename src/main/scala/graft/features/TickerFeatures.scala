@@ -26,11 +26,14 @@ object TickerFeatures {
     *
     * `statements`: set when income, balance, and ratios are projections of
     * ONE statement table sharing the same (ticker, date) rows (one column
-    * superset frame). The assembly then computes the fundamentals, growth,
-    * and ratios blocks in a single grid slice + aggregation instead of
-    * three — identical output (pinned by TickerFeaturesSpec), two fewer
-    * shuffle pairs. Leave None when the three inputs have independent date
-    * spines (separate statement feeds). */
+    * superset frame). With the grid price form the assembly then computes
+    * every per-cell block over one source-tagged union and one exchange
+    * ([[fusedCellBlocks]]) — identical output (pinned by
+    * TickerFeaturesSpec). The series price form and `statements = None`
+    * build from the separate fundamentals, growth and ratios blocks over
+    * `income`, `balance` and `ratios`, so those are always required. Leave
+    * None when the three inputs have independent date spines (separate
+    * statement feeds). */
   final case class Inputs(prices: DataFrame, dividends: DataFrame,
                           splits: DataFrame, ratios: DataFrame,
                           income: DataFrame, balance: DataFrame,
@@ -54,6 +57,112 @@ object TickerFeatures {
     grid.join(r, col(T) === col("__t") && col("date") <= col("as_of"), "left")
       .drop("__t")
   }
+
+  /** Daily returns `close / previous close - 1`, per ticker in date order.
+    * Prefix-stable: the lag at any date <= as_of only sees earlier dates,
+    * so every form computes it once over the unreplicated series. */
+  private def dailyReturns(prices: DataFrame): DataFrame =
+    prices.withColumn("__ret",
+      col("close") / lag(col("close"), 1).over(Window.partitionBy(T).orderBy("date")) - 1)
+
+  /** The 365-day window ending at as_of of the sector-relative feature. */
+  private def in365: Column =
+    col("date").between(date_sub(col("as_of"), 365), col("as_of"))
+
+  /** The cell's end date (latest sliced row), which anchors every
+    * start-value and validity window of the statement and dividend blocks. */
+  private def cellEndDate: Column = max(col("date")).over(Window.partitionBy(gcols: _*))
+
+  /** `date` within ±90 days of (end date − 365·years): the start window of
+    * the statement CAGRs (`growth_features.py`). */
+  private def startWindowDays(years: Int): Column = {
+    val target = date_sub(cellEndDate, 365 * years)
+    col("date").between(date_sub(target, 90), date_add(target, 90))
+  }
+
+  /** CAGR over `years` from a start and end value: NaN when the cell has
+    * fewer than two rows (`n`) or either value is missing or <= 0
+    * (`growth_features.py:30-56`). */
+  private def cagr(n: Column, start: Column, end: Column, years: Int): Column =
+    when(n >= 2 && start.isNotNull && start > 0 && end.isNotNull && end > 0,
+      pow(end / start, lit(1.0) / years) - 1)
+      .otherwise(nan)
+
+  /** Per-row statement enrichment of `fundamental_features.py`: `__nde`
+    * (net debt / EBITDA, NULL unless finite), `__eic` (EBIT interest
+    * cover, inf at or above the cap) and `__eic_capped`. Absent additive
+    * columns count as 0; EBIT is operatingIncome, else incomeBeforeTax. */
+  private def enrichStatements(fund: DataFrame): DataFrame = {
+    def safeCol(name: String): Column =
+      if (fund.columns.contains(name)) col(name) else lit(0)
+    val ebitda = safeCol("incomeBeforeTax") + safeCol("interestExpense") +
+      safeCol("depreciationAndAmortization")
+    val netDebt = safeCol("totalDebt") - safeCol("cashAndShortTermInvestments")
+    val ndeRaw = netDebt / ebitda
+    // Polars is_finite => null on inf/NaN (div by 0 EBITDA)
+    val nde = when(!isnan(ndeRaw) && ndeRaw =!= Double.PositiveInfinity &&
+      ndeRaw =!= Double.NegativeInfinity, ndeRaw)
+
+    val ebit =
+      if (fund.columns.contains("operatingIncome")) col("operatingIncome")
+      else if (fund.columns.contains("incomeBeforeTax")) col("incomeBeforeTax")
+      else throw new IllegalArgumentException(
+        "Missing both operatingIncome and incomeBeforeTax — cannot compute EBIT")
+    val interest = if (fund.columns.contains("interestExpense")) col("interestExpense")
+      else lit(null)
+    val cap = 1000.0
+    val eicRaw = when(interest.isNotNull && interest =!= 0, ebit / interest)
+    // reference: when(raw < cap).then(raw).otherwise(inf) — null raw => inf
+    val eic = when(eicRaw < cap, eicRaw).otherwise(lit(Double.PositiveInfinity))
+    val eicCapFlag = when(eicRaw.isNull || eicRaw >= cap, lit(true)).otherwise(lit(false))
+
+    fund
+      .withColumn("__nde", nde)
+      .withColumn("__eic", eic)
+      .withColumn("__eic_capped", eicCapFlag)
+  }
+
+  /** The five price outputs from the per-cell price aggregates (`__p_now`,
+    * `__p_6m`, `__p_12m`, `__ret_sd`, `__max_dd`, `__sma50`, `__sma200`):
+    * `n` is the cell's price-row count, `nDd` its drawdown-window count. */
+  private def priceOutputs(n: Column, nDd: Column): Seq[Column] = {
+    def ret(anchor: String): Column =
+      when(col(anchor).isNotNull && col("__p_now").isNotNull,
+        (col("__p_now") - col(anchor)) / col(anchor)).otherwise(0.0)
+    Seq(
+      ret("__p_6m").as("6m_return"),
+      ret("__p_12m").as("12m_return"),
+      coalesce(col("__ret_sd") * sqrt(lit(252.0)), lit(0.0)).as("volatility"),
+      when(n < 2 || nDd < 2, 0.0)
+        .otherwise(coalesce(col("__max_dd"), lit(0.0))).as("max_drawdown_1y"),
+      when(n >= 200,
+        when(col("__sma200") =!= 0, (col("__sma50") - col("__sma200")) / col("__sma200"))
+          .otherwise(0.0)).as("sma_50_200_delta"))
+  }
+
+  /** The fundamentals triple from the latest statement row's picks; the
+    * reference's safe_get defaults (0.0 / 0.0 / false) when the cell has
+    * no statement rows (`n` = 0). */
+  private def fundamentalsOutputs(n: Column): Seq[Column] = Seq(
+    when(n > 0, col("__nde_last")).otherwise(0.0).as("net_debt_to_ebitda"),
+    when(n > 0, col("__eic_last")).otherwise(0.0).as("ebit_interest_cover"),
+    when(n > 0, coalesce(col("__eic_capped_last"), lit(false)))
+      .otherwise(lit(false)).as("ebit_interest_cover_capped"))
+
+  /** Dividend yield, yield vs its 5y median, the latest valid P/E and P/FCF
+    * and the payout ratio from the ratio picks; `n` is the cell's
+    * ratio-row count. */
+  private def ratiosOutputs(n: Column): Seq[Column] = Seq(
+    when(n > 0, coalesce(col("__dy_last"), lit(0.0))).otherwise(0.0)
+      .as("dividend_yield"),
+    when(n < 2, nan)
+      .when(col("__y_n") === 0, nan)
+      .when(col("__y_med") === 0, 0.0)
+      .otherwise((col("__y_cur") - col("__y_med")) / col("__y_med"))
+      .as("yield_vs_5y_median"),
+    coalesce(col("__pe"), lit(0.0)).as("pe_ratio"),
+    coalesce(col("__pfcf"), lit(0.0)).as("pfcf_ratio"),
+    coalesce(col("__po"), lit(0.0)).as("payout_ratio"))
 
   /** All 18 dynamic features + 6 `has_` flags for every (ticker, as_of)
     * grid cell. Grid: (ticker DATE-typed as_of). */
@@ -91,12 +200,7 @@ object TickerFeatures {
   /** 6m/12m point-to-point returns, annualized volatility, 1y max drawdown,
     * SMA(50)/SMA(200) delta — `price_features.py`. */
   def priceBlock(grid: DataFrame, prices: DataFrame): DataFrame = {
-    // daily returns are a prefix-stable per-ticker computation: the lag at
-    // any date <= as_of only sees earlier dates, so compute once globally.
-    val wT = Window.partitionBy(T).orderBy("date")
-    val p = prices.withColumn("__ret", col("close") / lag(col("close"), 1).over(wT) - 1)
-
-    val sliced = gridAsOfJoin(grid, p)
+    val sliced = gridAsOfJoin(grid, dailyReturns(prices))
 
     val wCell = Window.partitionBy(gcols: _*).orderBy(col("date"))
     // whole-partition scalars (end date, row count) phrased over the SAME
@@ -119,7 +223,6 @@ object TickerFeatures {
       .withColumn("__dd", dd)
       .withColumn("__in_dd", when(inDd, 1).otherwise(0))
 
-    val in365 = col("date").between(date_sub(col("as_of"), 365), col("as_of"))
     staged.groupBy(gcols: _*).agg(
       max_by(col("close"), col("date")).as("__p_now"),
       max_by(when(col("date") <= add_months(col("as_of"), -6), col("close")),
@@ -135,20 +238,11 @@ object TickerFeatures {
       min_by(when(in365, col("close")), when(in365, col("date"))).as("__s_first"),
       max_by(when(in365, col("close")), when(in365, col("date"))).as("__s_last"),
       count(when(in365, 1)).as("__s_n"))
-    .select(
+    .select((Seq(
       col("ticker"), col("as_of"),
       col("__s_first"), col("__s_last"), col("__s_n"),
-      col("__n").as("__price_n"),
-      when(col("__p_6m").isNotNull && col("__p_now").isNotNull,
-        (col("__p_now") - col("__p_6m")) / col("__p_6m")).otherwise(0.0).as("6m_return"),
-      when(col("__p_12m").isNotNull && col("__p_now").isNotNull,
-        (col("__p_now") - col("__p_12m")) / col("__p_12m")).otherwise(0.0).as("12m_return"),
-      coalesce(col("__ret_sd") * sqrt(lit(252.0)), lit(0.0)).as("volatility"),
-      when(col("__n") < 2 || col("__n_dd") < 2, 0.0)
-        .otherwise(coalesce(col("__max_dd"), lit(0.0))).as("max_drawdown_1y"),
-      when(col("__n") >= 200,
-        when(col("__sma200") =!= 0, (col("__sma50") - col("__sma200")) / col("__sma200"))
-          .otherwise(0.0)).as("sma_50_200_delta"))
+      col("__n").as("__price_n")) ++
+      priceOutputs(col("__n"), col("__n_dd"))): _*)
   }
 
   /** [[priceBlock]] semantics computed WITHOUT replicating the price series
@@ -176,8 +270,7 @@ object TickerFeatures {
   def priceBlockSeries(grid: DataFrame, prices: DataFrame): DataFrame = {
     val w = Window.partitionBy(T).orderBy("date")
     val wPrefix = w.rowsBetween(Window.unboundedPreceding, 0)
-    val enriched = prices
-      .withColumn("__ret", col("close") / lag(col("close"), 1).over(w) - 1)
+    val enriched = dailyReturns(prices)
       .withColumn("__sd_run", stddev_samp(col("__ret")).over(wPrefix))
       .withColumn("__sma50_run", avg(col("close")).over(w.rowsBetween(-49, 0)))
       .withColumn("__sma200_run", avg(col("close")).over(w.rowsBetween(-199, 0)))
@@ -246,32 +339,24 @@ object TickerFeatures {
       .drop("__t")
     val wCell = Window.partitionBy(gcols: _*).orderBy(col("date"))
     val peak = max(col("close")).over(wCell.rowsBetween(Window.unboundedPreceding, 0))
-    val in365 = col("date") >= date_sub(col("as_of"), 365)
+    // the slice already ends at as_of, so only the lower bound remains
+    val inYear = col("date") >= date_sub(col("as_of"), 365)
     val sliceAggs = slice
       .withColumn("__dd", (peak - col("close")) / peak)
       .groupBy(gcols: _*).agg(
         count(lit(1)).as("__n_dd"),
         max(col("__dd")).as("__max_dd"),
-        min_by(when(in365, col("close")), when(in365, col("date"))).as("__s_first"),
-        max_by(when(in365, col("close")), when(in365, col("date"))).as("__s_last"),
-        count(when(in365, 1)).as("__s_n"))
+        min_by(when(inYear, col("close")), when(inYear, col("date"))).as("__s_first"),
+        max_by(when(inYear, col("close")), when(inYear, col("date"))).as("__s_last"),
+        count(when(inYear, 1)).as("__s_n"))
 
     cells.join(sliceAggs, K, "left")
-      .select(
+      .select((Seq(
         col("ticker"), col("as_of"),
         col("__s_first"), col("__s_last"),
         coalesce(col("__s_n"), lit(0L)).as("__s_n"),
-        col("__n").as("__price_n"),
-        when(col("__p_6m").isNotNull && col("__p_now").isNotNull,
-          (col("__p_now") - col("__p_6m")) / col("__p_6m")).otherwise(0.0).as("6m_return"),
-        when(col("__p_12m").isNotNull && col("__p_now").isNotNull,
-          (col("__p_now") - col("__p_12m")) / col("__p_12m")).otherwise(0.0).as("12m_return"),
-        coalesce(col("__ret_sd") * sqrt(lit(252.0)), lit(0.0)).as("volatility"),
-        when(col("__n") < 2 || coalesce(col("__n_dd"), lit(0L)) < 2, 0.0)
-          .otherwise(coalesce(col("__max_dd"), lit(0.0))).as("max_drawdown_1y"),
-        when(col("__n") >= 200,
-          when(col("__sma200") =!= 0, (col("__sma50") - col("__sma200")) / col("__sma200"))
-            .otherwise(0.0)).as("sma_50_200_delta"))
+        col("__n").as("__price_n")) ++
+        priceOutputs(col("__n"), coalesce(col("__n_dd"), lit(0L)))): _*)
   }
 
   /** Pick the price-block physical form from the DATA SHAPE: the grid form
@@ -336,7 +421,6 @@ object TickerFeatures {
                                  minPriceRows: Int = 0,
                                  seriesPriceBlock: Boolean = false): DataFrame = {
     val etfCells = grid.join(tickerEtf, Seq(T)).select(col("etf"), col("as_of")).distinct()
-    val in365 = col("date").between(date_sub(col("as_of"), 365), col("as_of"))
     val perEtf = etfCells.join(etfIndex, Seq("etf")).filter(in365)
       .groupBy(col("etf"), col("as_of")).agg(
         min_by(col("close"), col("date")).as("__x_first"),
@@ -378,22 +462,23 @@ object TickerFeatures {
                     else price0
         val sector = price.join(etfSide, K, "left")
           .select(col("ticker"), col("as_of"), sectorRelativeExpr.as("sector_relative_6m"))
-        val div = dividendBlock(grid, in.dividends, in.splits)
-        val fundBlocks = in.statements match {
-          case Some(st) => Seq(fusedFundamentalsBlock(grid, st))
-          case None => Seq(fundamentalsBlock(grid, in.income, in.balance),
-            incomeGrowthBlock(grid, in.income), ratiosBlock(grid, in.ratios))
-        }
+        // the series price form joins the separate reference blocks even when
+        // `statements` is set: it is picked only for long histories, where
+        // two extra shuffles over yearly statement rows are small
+        val blocks = Seq(sector,
+          fundamentalsBlock(grid, in.income, in.balance),
+          incomeGrowthBlock(grid, in.income),
+          ratiosBlock(grid, in.ratios),
+          dividendBlock(grid, in.dividends, in.splits))
         // surviving price cells are the join spine: blocks computed on the full
         // grid contribute only to cells that passed the gate.
         val spine = price.drop("__s_first", "__s_last", "__s_n", "__price_n")
-        val joined = (Seq(sector) ++ fundBlocks ++ Seq(div))
-          .foldLeft(spine)((acc, block) => acc.join(block, K, "left"))
+        val joined = blocks.foldLeft(spine)((acc, block) => acc.join(block, K, "left"))
         finalProjection(joined)
     }
 
-  /** Price + fused-fundamentals + dividend blocks over ONE grid slice and
-    * ONE (ticker, as_of) exchange: the three inputs (returns-enriched
+  /** Price, fundamentals, growth, ratios and dividend blocks over ONE grid
+    * slice and ONE (ticker, as_of) exchange: the three inputs (returns-enriched
     * prices, enriched statements, split-adjusted dividends) union into a
     * source-tagged relation, slice through a single [[gridAsOfJoin]], and
     * every per-cell window and aggregate is SOURCE-GUARDED — each block's
@@ -411,31 +496,9 @@ object TickerFeatures {
                               statements: DataFrame, dividends: DataFrame,
                               splits: DataFrame,
                               rawSector: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.types.{BooleanType, DoubleType}
-    // per-source pre-slice enrichment (verbatim from the separate blocks)
-    val wT = Window.partitionBy(T).orderBy("date")
-    val p = prices.withColumn("__ret", col("close") / lag(col("close"), 1).over(wT) - 1)
-    def safeCol(name: String): Column =
-      if (statements.columns.contains(name)) col(name) else lit(0)
-    val ebitda = safeCol("incomeBeforeTax") + safeCol("interestExpense") +
-      safeCol("depreciationAndAmortization")
-    val netDebt = safeCol("totalDebt") - safeCol("cashAndShortTermInvestments")
-    val ndeRaw = netDebt / ebitda
-    val nde = when(!isnan(ndeRaw) && ndeRaw =!= Double.PositiveInfinity &&
-      ndeRaw =!= Double.NegativeInfinity, ndeRaw)
-    val ebit =
-      if (statements.columns.contains("operatingIncome")) col("operatingIncome")
-      else if (statements.columns.contains("incomeBeforeTax")) col("incomeBeforeTax")
-      else throw new IllegalArgumentException(
-        "Missing both operatingIncome and incomeBeforeTax — cannot compute EBIT")
-    val interest = if (statements.columns.contains("interestExpense"))
-      col("interestExpense") else lit(null)
-    val eicRaw = when(interest.isNotNull && interest =!= 0, ebit / interest)
-    val eic = when(eicRaw < 1000.0, eicRaw).otherwise(lit(Double.PositiveInfinity))
-    val eicCapFlag = when(eicRaw.isNull || eicRaw >= 1000.0, lit(true)).otherwise(lit(false))
-    val st = statements
-      .withColumn("__nde", nde).withColumn("__eic", eic)
-      .withColumn("__eic_capped", eicCapFlag)
+    // per-source pre-slice enrichment (shared with the separate blocks)
+    val p = dailyReturns(prices)
+    val st = enrichStatements(statements)
     val adjusted = SeriesOps.adjustForSplits(dividends, splits, Seq(T),
       "date", "dividend", "split_ratio")
 
@@ -493,7 +556,6 @@ object TickerFeatures {
     // operator; a broadcast end-date phase got to ~4.3 s but paid a second
     // slice pass + one more job); this form carries the anchors IN the
     // arrays, so the whole block layer is one shuffle, one job.
-    val in365 = col("date").between(date_sub(col("as_of"), 365), col("as_of"))
     val agged = sliced.groupBy(gcols: _*).agg(
       // --- price
       max_by(when(isP, col("close")), when(isP, col("date"))).as("__p_now"),
@@ -619,61 +681,25 @@ object TickerFeatures {
         expr("CASE WHEN size(__dw3) = 0 THEN NULL ELSE element_at(__dw3, -1).v END"))
       .withColumn("__d_s5",
         expr("CASE WHEN size(__dw5) = 0 THEN NULL ELSE element_at(__dw5, -1).v END"))
-    def divCagr(startCol: String, years: Int): Column =
-      when(col("__dn") >= 2 && col(startCol).isNotNull && col(startCol) > 0 &&
-        col("__d_end").isNotNull && col("__d_end") > 0,
-        pow(col("__d_end") / col(startCol), lit(1.0) / years) - 1)
-        .otherwise(nan)
     // __x_* ship only on the rawSector path — otherwise the caller joins
     // etfSide, which brings its own __x_* columns
     val xCols = if (rawSector.isDefined)
       Seq(col("__x_first"), col("__x_last"), col("__x_n")) else Seq.empty[Column]
-    withPrice.select(Seq(
-      col("ticker"), col("as_of"),
-      col("__s_first"), col("__s_last"), col("__s_n"),
-      col("__pn").as("__price_n"),
-      // price block outputs (verbatim expressions, __n -> __pn)
-      when(col("__p_6m").isNotNull && col("__p_now").isNotNull,
-        (col("__p_now") - col("__p_6m")) / col("__p_6m")).otherwise(0.0).as("6m_return"),
-      when(col("__p_12m").isNotNull && col("__p_now").isNotNull,
-        (col("__p_now") - col("__p_12m")) / col("__p_12m")).otherwise(0.0).as("12m_return"),
-      coalesce(col("__ret_sd") * sqrt(lit(252.0)), lit(0.0)).as("volatility"),
-      when(col("__pn") < 2 || col("__n_dd") < 2, 0.0)
-        .otherwise(coalesce(col("__max_dd"), lit(0.0))).as("max_drawdown_1y"),
-      when(col("__pn") >= 200,
-        when(col("__sma200") =!= 0, (col("__sma50") - col("__sma200")) / col("__sma200"))
-          .otherwise(0.0)).as("sma_50_200_delta"),
-      // fused fundamentals outputs (verbatim, __n -> __fn)
-      when(col("__fn") > 0, col("__nde_last")).otherwise(0.0).as("net_debt_to_ebitda"),
-      when(col("__fn") > 0, col("__eic_last")).otherwise(0.0).as("ebit_interest_cover"),
-      when(col("__fn") > 0, coalesce(col("__eic_capped_last"), lit(false)))
-        .otherwise(lit(false)).as("ebit_interest_cover_capped"),
-      when(col("__fn") >= 2 && col("__eps_start").isNotNull && col("__eps_start") > 0 &&
-        col("__eps_end").isNotNull && col("__eps_end") > 0,
-        pow(col("__eps_end") / col("__eps_start"), lit(1.0) / 3) - 1)
-        .otherwise(nan).as("eps_cagr_3y"),
-      when(col("__fn") > 0, coalesce(col("__dy_last"), lit(0.0))).otherwise(0.0)
-        .as("dividend_yield"),
-      when(col("__fn") < 2, nan)
-        .when(col("__y_n") === 0, nan)
-        .when(col("__y_med") === 0, 0.0)
-        .otherwise((col("__y_cur") - col("__y_med")) / col("__y_med"))
-        .as("yield_vs_5y_median"),
-      coalesce(col("__pe"), lit(0.0)).as("pe_ratio"),
-      coalesce(col("__pfcf"), lit(0.0)).as("pfcf_ratio"),
-      coalesce(col("__po"), lit(0.0)).as("payout_ratio"),
-      when(col("__fn") >= 2 && col("__fcf_start").isNotNull && col("__fcf_start") > 0 &&
-        col("__fcf_end").isNotNull && col("__fcf_end") > 0,
-        pow(col("__fcf_end") / col("__fcf_start"), lit(1.0) / 3) - 1)
-        .otherwise(nan).as("fcf_cagr_3y"),
-      // dividend block outputs (verbatim, __n -> __dn)
-      divCagr("__d_s3", 3).as("dividend_cagr_3y"),
-      divCagr("__d_s5", 5).as("dividend_cagr_5y")) ++ xCols: _*)
+    withPrice.select((
+      Seq(col("ticker"), col("as_of"), col("__s_first"), col("__s_last"), col("__s_n"),
+        col("__pn").as("__price_n")) ++
+      priceOutputs(col("__pn"), col("__n_dd")) ++
+      fundamentalsOutputs(col("__fn")) ++
+      Seq(cagr(col("__fn"), col("__eps_start"), col("__eps_end"), 3).as("eps_cagr_3y")) ++
+      ratiosOutputs(col("__fn")) ++
+      Seq(cagr(col("__fn"), col("__fcf_start"), col("__fcf_end"), 3).as("fcf_cagr_3y"),
+        cagr(col("__dn"), col("__d_s3"), col("__d_end"), 3).as("dividend_cagr_3y"),
+        cagr(col("__dn"), col("__d_s5"), col("__d_end"), 5).as("dividend_cagr_5y")) ++
+      xCols): _*)
   }
 
   /** ETF-side 365d window aggregates for the sector-relative feature. */
   private[graft] def etfSideAgg(grid: DataFrame, sectorIndex: DataFrame): DataFrame = {
-    val in365 = col("date").between(date_sub(col("as_of"), 365), col("as_of"))
     grid.join(sectorIndex, Seq(T)).filter(in365)
       .groupBy(gcols: _*).agg(
         min_by(col("close"), col("date")).as("__x_first"),
@@ -697,7 +723,6 @@ object TickerFeatures {
     * the quirk is contract, SURVEY §7.5). */
   def sectorRelativeBlock(grid: DataFrame, prices: DataFrame,
                           sectorIndex: DataFrame): DataFrame = {
-    val in365 = col("date").between(date_sub(col("as_of"), 365), col("as_of"))
     val stock = grid.join(prices, Seq(T)).filter(in365)
       .groupBy(gcols: _*).agg(
         min_by(col("close"), col("date")).as("__s_first"),
@@ -712,209 +737,42 @@ object TickerFeatures {
     * Missing fundamentals entirely => the reference's safe_get defaults
     * (0.0 / 0.0 / false). */
   def fundamentalsBlock(grid: DataFrame, income: DataFrame,
-                        balance: DataFrame): DataFrame = {
-    def safeCol(df: DataFrame, name: String): Column =
-      if (df.columns.contains(name)) col(name) else lit(0)
-
-    val fund = income.join(balance, Seq(T, "date"))
-    val ebitda = safeCol(fund, "incomeBeforeTax") + safeCol(fund, "interestExpense") +
-      safeCol(fund, "depreciationAndAmortization")
-    val netDebt = safeCol(fund, "totalDebt") - safeCol(fund, "cashAndShortTermInvestments")
-    val ndeRaw = netDebt / ebitda
-    // Polars is_finite => null on inf/NaN (div by 0 EBITDA)
-    val nde = when(!isnan(ndeRaw) && ndeRaw =!= Double.PositiveInfinity &&
-      ndeRaw =!= Double.NegativeInfinity, ndeRaw)
-
-    val ebit =
-      if (fund.columns.contains("operatingIncome")) col("operatingIncome")
-      else if (fund.columns.contains("incomeBeforeTax")) col("incomeBeforeTax")
-      else throw new IllegalArgumentException(
-        "Missing both operatingIncome and incomeBeforeTax — cannot compute EBIT")
-    val interest = if (fund.columns.contains("interestExpense")) col("interestExpense")
-      else lit(null)
-    val cap = 1000.0
-    val eicRaw = when(interest.isNotNull && interest =!= 0, ebit / interest)
-    // reference: when(raw < cap).then(raw).otherwise(inf) — null raw => inf
-    val eic = when(eicRaw < cap, eicRaw).otherwise(lit(Double.PositiveInfinity))
-    val eicCapFlag = when(eicRaw.isNull || eicRaw >= cap, lit(true)).otherwise(lit(false))
-
-    val enriched = fund
-      .withColumn("__nde", nde)
-      .withColumn("__eic", eic)
-      .withColumn("__eic_capped", eicCapFlag)
-
-    gridAsOfJoin(grid, enriched)
+                        balance: DataFrame): DataFrame =
+    gridAsOfJoin(grid, enrichStatements(income.join(balance, Seq(T, "date"))))
       .groupBy(gcols: _*).agg(
         max_by(col("__nde"), col("date")).as("__nde_last"),
         max_by(col("__eic"), col("date")).as("__eic_last"),
         max_by(col("__eic_capped"), col("date")).as("__eic_capped_last"),
         count(col("date")).as("__n"))
-      .select(col("ticker"), col("as_of"),
-        when(col("__n") > 0, col("__nde_last")).otherwise(0.0).as("net_debt_to_ebitda"),
-        when(col("__n") > 0, col("__eic_last")).otherwise(0.0).as("ebit_interest_cover"),
-        when(col("__n") > 0, coalesce(col("__eic_capped_last"), lit(false)))
-          .otherwise(lit(false)).as("ebit_interest_cover_capped"))
-  }
+      .select((gcols ++ fundamentalsOutputs(col("__n"))): _*)
 
-  /** Fundamentals + income growth + ratios in ONE grid slice + ONE
-    * aggregation, for the shared-spine case ([[Inputs.statements]]): all
-    * three blocks' per-cell aggregates ride the same groupBy(ticker, as_of)
-    * shuffle instead of paying three join+aggregate pairs. Column-for-column
-    * identical to the separate blocks when income/balance/ratios are
-    * projections of `statements` (equivalence pinned by
-    * TickerFeaturesSpec). */
-  def fusedFundamentalsBlock(grid: DataFrame, statements: DataFrame): DataFrame = {
-    def safeCol(name: String): Column =
-      if (statements.columns.contains(name)) col(name) else lit(0)
-
-    // fundamentalsBlock's per-row enrichment (pre-slice, date-independent)
-    val ebitda = safeCol("incomeBeforeTax") + safeCol("interestExpense") +
-      safeCol("depreciationAndAmortization")
-    val netDebt = safeCol("totalDebt") - safeCol("cashAndShortTermInvestments")
-    val ndeRaw = netDebt / ebitda
-    val nde = when(!isnan(ndeRaw) && ndeRaw =!= Double.PositiveInfinity &&
-      ndeRaw =!= Double.NegativeInfinity, ndeRaw)
-    val ebit =
-      if (statements.columns.contains("operatingIncome")) col("operatingIncome")
-      else if (statements.columns.contains("incomeBeforeTax")) col("incomeBeforeTax")
-      else throw new IllegalArgumentException(
-        "Missing both operatingIncome and incomeBeforeTax — cannot compute EBIT")
-    val interest = if (statements.columns.contains("interestExpense"))
-      col("interestExpense") else lit(null)
-    val cap = 1000.0
-    val eicRaw = when(interest.isNotNull && interest =!= 0, ebit / interest)
-    val eic = when(eicRaw < cap, eicRaw).otherwise(lit(Double.PositiveInfinity))
-    val eicCapFlag = when(eicRaw.isNull || eicRaw >= cap, lit(true)).otherwise(lit(false))
-
-    val sliced = gridAsOfJoin(grid, statements
-      .withColumn("__nde", nde)
-      .withColumn("__eic", eic)
-      .withColumn("__eic_capped", eicCapFlag))
-
-    // one per-cell window feeds every date-anchored validity flag
-    val wCellAll = Window.partitionBy(gcols: _*)
-    val endDate = max(col("date")).over(wCellAll)
-    // incomeGrowthBlock: (endDate - 3y) ± 90 DAYS
-    val epsTarget = date_sub(endDate, 365 * 3)
-    val epsWin = col("date").between(date_sub(epsTarget, 90), date_add(epsTarget, 90))
-    // ratiosBlock windows (verbatim)
-    val yLo = date_sub(add_months(endDate, -60), 90)
-    val yValid = col("dividendYield").isNotNull && col("dividendYield") > 0 &&
-      col("date") >= yLo
-    val pvValid = col("priceEarningsRatio") > 0 && col("priceToFreeCashFlowsRatio") > 0
-    val poValid = col("payoutRatio").isNotNull && col("payoutRatio") > 0
-    val fcfTarget = date_sub(endDate, 365 * 3)
-    val fcfWin = col("date").between(date_sub(fcfTarget, 90), date_add(fcfTarget, 90))
-
-    sliced
-      .withColumn("__eps_win", epsWin)
-      .withColumn("__y_valid", yValid)
-      .withColumn("__fcf_win", fcfWin)
-      .groupBy(gcols: _*).agg(
-        count(col("date")).as("__n"),
-        // fundamentals
-        max_by(col("__nde"), col("date")).as("__nde_last"),
-        max_by(col("__eic"), col("date")).as("__eic_last"),
-        max_by(col("__eic_capped"), col("date")).as("__eic_capped_last"),
-        // income growth (eps CAGR)
-        max_by(col("eps"), col("date")).as("__eps_end"),
-        max_by(when(col("__eps_win"), col("eps")),
-          when(col("__eps_win"), col("date"))).as("__eps_start"),
-        // ratios
-        max_by(col("dividendYield"), col("date")).as("__dy_last"),
-        max_by(when(col("__y_valid"), col("dividendYield")),
-          when(col("__y_valid"), col("date"))).as("__y_cur"),
-        // percentile-family audit (r9): this aggregate's value buffer is
-        // ONE ticker's valid-yield history — entity-history-bounded, the
-        // safe side of the d53 contract (corpus-sized groups moved to
-        // Indexing.groupQuantiles in r8; this one stays an aggregate).
-        percentile(when(col("__y_valid"), col("dividendYield")), lit(0.5)).as("__y_med"),
-        count(when(col("__y_valid"), 1)).as("__y_n"),
-        max_by(when(pvValid, col("priceEarningsRatio")), when(pvValid, col("date"))).as("__pe"),
-        max_by(when(pvValid, col("priceToFreeCashFlowsRatio")), when(pvValid, col("date"))).as("__pfcf"),
-        max_by(when(poValid, col("payoutRatio")), when(poValid, col("date"))).as("__po"),
-        max_by(col("freeCashFlowPerShare"), col("date")).as("__fcf_end"),
-        max_by(when(col("__fcf_win"), col("freeCashFlowPerShare")),
-          when(col("__fcf_win"), col("date"))).as("__fcf_start"))
-      .select(col("ticker"), col("as_of"),
-        when(col("__n") > 0, col("__nde_last")).otherwise(0.0).as("net_debt_to_ebitda"),
-        when(col("__n") > 0, col("__eic_last")).otherwise(0.0).as("ebit_interest_cover"),
-        when(col("__n") > 0, coalesce(col("__eic_capped_last"), lit(false)))
-          .otherwise(lit(false)).as("ebit_interest_cover_capped"),
-        when(col("__n") >= 2 && col("__eps_start").isNotNull && col("__eps_start") > 0 &&
-          col("__eps_end").isNotNull && col("__eps_end") > 0,
-          pow(col("__eps_end") / col("__eps_start"), lit(1.0) / 3) - 1)
-          .otherwise(nan).as("eps_cagr_3y"),
-        when(col("__n") > 0, coalesce(col("__dy_last"), lit(0.0))).otherwise(0.0)
-          .as("dividend_yield"),
-        when(col("__n") < 2, nan)
-          .when(col("__y_n") === 0, nan)
-          .when(col("__y_med") === 0, 0.0)
-          .otherwise((col("__y_cur") - col("__y_med")) / col("__y_med"))
-          .as("yield_vs_5y_median"),
-        coalesce(col("__pe"), lit(0.0)).as("pe_ratio"),
-        coalesce(col("__pfcf"), lit(0.0)).as("pfcf_ratio"),
-        coalesce(col("__po"), lit(0.0)).as("payout_ratio"),
-        when(col("__n") >= 2 && col("__fcf_start").isNotNull && col("__fcf_start") > 0 &&
-          col("__fcf_end").isNotNull && col("__fcf_end") > 0,
-          pow(col("__fcf_end") / col("__fcf_start"), lit(1.0) / 3) - 1)
-          .otherwise(nan).as("fcf_cagr_3y"))
-  }
-
-  /** Generic CAGR aggregate over a grid-joined series slice: end = last
-    * value at or before as_of; start = last value within the grace window
-    * around (end_date - 365*years); NaN when <2 rows / missing / <= 0
-    * (`growth_features.py:30-56`). Returns aggregate columns keyed by
-    * (ticker, as_of): "<out>" */
-  private def cagrAgg(df: DataFrame, grid: DataFrame, valueCol: String,
-                      years: Int, graceDays: Int, graceMonths: Int,
-                      out: String): DataFrame = {
-    val sliced = gridAsOfJoin(grid, df)
-    val wCellAll = Window.partitionBy(gcols: _*)
-    val endDate = max(col("date")).over(wCellAll)
-    val startTarget = date_sub(endDate, 365 * years)
-    val (lo, hi) =
-      if (graceMonths > 0) (add_months(startTarget, -graceMonths), add_months(startTarget, graceMonths))
-      else (date_sub(startTarget, graceDays), date_add(startTarget, graceDays))
-    val inWin = col("date").between(lo, hi)
-    sliced
-      .withColumn("__in_win", inWin)
-      .groupBy(gcols: _*).agg(
-        max_by(col(valueCol), col("date")).as("__end"),
-        max_by(when(col("__in_win"), col(valueCol)), when(col("__in_win"), col("date"))).as("__start"),
-        count(col("date")).as("__n"))
-      .select(col("ticker"), col("as_of"),
-        when(col("__n") >= 2 && col("__start").isNotNull && col("__start") > 0 &&
-          col("__end").isNotNull && col("__end") > 0,
-          pow(col("__end") / col("__start"), lit(1.0) / years) - 1)
-          .otherwise(nan).as(out))
-  }
-
-  /** EPS CAGR (3y, 90-day grace) — `compute_eps_cagr`. */
+  /** EPS CAGR (3y, 90-day grace) — `compute_eps_cagr`: end = last eps at or
+    * before as_of; start = last eps within the grace window around
+    * (end date − 3y). */
   def incomeGrowthBlock(grid: DataFrame, income: DataFrame): DataFrame =
-    cagrAgg(income.select(col(T), col("date"), col("eps")), grid,
-      "eps", years = 3, graceDays = 90, graceMonths = 0, out = "eps_cagr_3y")
+    gridAsOfJoin(grid, income.select(col(T), col("date"), col("eps")))
+      .withColumn("__in_win", startWindowDays(3))
+      .groupBy(gcols: _*).agg(
+        max_by(col("eps"), col("date")).as("__end"),
+        max_by(when(col("__in_win"), col("eps")), when(col("__in_win"), col("date"))).as("__start"),
+        count(col("date")).as("__n"))
+      .select(col("ticker"), col("as_of"),
+        cagr(col("__n"), col("__start"), col("__end"), 3).as("eps_cagr_3y"))
 
   /** FCF/share CAGR, dividend yield, yield-vs-5y-median, latest valid
     * P/E + P/FCF, payout ratio — ONE grid⨝ratios aggregation (the fcf CAGR
     * shares the slice instead of paying its own shuffle). */
   def ratiosBlock(grid: DataFrame, ratios: DataFrame): DataFrame = {
-    val sliced = gridAsOfJoin(grid, ratios)
-    val wCellAll = Window.partitionBy(gcols: _*)
-    val endDate = max(col("date")).over(wCellAll)
     // 5y window with 90d grace, positive yields only (dividend_features.py)
-    val yLo = date_sub(add_months(endDate, -60), 90)
+    val yLo = date_sub(add_months(cellEndDate, -60), 90)
     val yValid = col("dividendYield").isNotNull && col("dividendYield") > 0 &&
       col("date") >= yLo
     val pvValid = col("priceEarningsRatio") > 0 && col("priceToFreeCashFlowsRatio") > 0
     val poValid = col("payoutRatio").isNotNull && col("payoutRatio") > 0
-    // fcf CAGR start window: (endDate - 3y) +/- 90d (growth_features.py)
-    val fcfTarget = date_sub(endDate, 365 * 3)
-    val fcfWin = col("date").between(date_sub(fcfTarget, 90), date_add(fcfTarget, 90))
 
-    sliced
+    gridAsOfJoin(grid, ratios)
       .withColumn("__y_valid", yValid)
-      .withColumn("__fcf_win", fcfWin)
+      .withColumn("__fcf_win", startWindowDays(3))
       .groupBy(gcols: _*).agg(
         count(col("date")).as("__n"),
         max_by(col("dividendYield"), col("date")).as("__dy_last"),
@@ -932,21 +790,8 @@ object TickerFeatures {
         max_by(col("freeCashFlowPerShare"), col("date")).as("__fcf_end"),
         max_by(when(col("__fcf_win"), col("freeCashFlowPerShare")),
           when(col("__fcf_win"), col("date"))).as("__fcf_start"))
-      .select(col("ticker"), col("as_of"),
-        when(col("__n") > 0, coalesce(col("__dy_last"), lit(0.0))).otherwise(0.0)
-          .as("dividend_yield"),
-        when(col("__n") < 2, nan)
-          .when(col("__y_n") === 0, nan)
-          .when(col("__y_med") === 0, 0.0)
-          .otherwise((col("__y_cur") - col("__y_med")) / col("__y_med"))
-          .as("yield_vs_5y_median"),
-        coalesce(col("__pe"), lit(0.0)).as("pe_ratio"),
-        coalesce(col("__pfcf"), lit(0.0)).as("pfcf_ratio"),
-        coalesce(col("__po"), lit(0.0)).as("payout_ratio"),
-        when(col("__n") >= 2 && col("__fcf_start").isNotNull && col("__fcf_start") > 0 &&
-          col("__fcf_end").isNotNull && col("__fcf_end") > 0,
-          pow(col("__fcf_end") / col("__fcf_start"), lit(1.0) / 3) - 1)
-          .otherwise(nan).as("fcf_cagr_3y"))
+      .select((gcols ++ ratiosOutputs(col("__n")) :+
+        cagr(col("__n"), col("__fcf_start"), col("__fcf_end"), 3).as("fcf_cagr_3y")): _*)
   }
 
   /** Split-adjusted dividend CAGR at 3y and 5y horizons with 3-month grace
@@ -959,19 +804,11 @@ object TickerFeatures {
     val adjusted = SeriesOps.adjustForSplits(dividends, splits, Seq(T),
       "date", "dividend", "split_ratio")
       .select(col(T), col("date"), col("dividend"))
-    val sliced = gridAsOfJoin(grid, adjusted)
-    val wCellAll = Window.partitionBy(gcols: _*)
-    val endDate = max(col("date")).over(wCellAll)
     def win(years: Int) = {
-      val target = date_sub(endDate, 365 * years)
+      val target = date_sub(cellEndDate, 365 * years)
       col("date").between(add_months(target, -3), add_months(target, 3))
     }
-    def cagrOut(startCol: String, years: Int): Column =
-      when(col("__n") >= 2 && col(startCol).isNotNull && col(startCol) > 0 &&
-        col("__end").isNotNull && col("__end") > 0,
-        pow(col("__end") / col(startCol), lit(1.0) / years) - 1)
-        .otherwise(nan)
-    sliced
+    gridAsOfJoin(grid, adjusted)
       .withColumn("__w3", win(3))
       .withColumn("__w5", win(5))
       .groupBy(gcols: _*).agg(
@@ -980,7 +817,7 @@ object TickerFeatures {
         max_by(when(col("__w5"), col("dividend")), when(col("__w5"), col("date"))).as("__s5"),
         count(col("date")).as("__n"))
       .select(col("ticker"), col("as_of"),
-        cagrOut("__s3", 3).as("dividend_cagr_3y"),
-        cagrOut("__s5", 5).as("dividend_cagr_5y"))
+        cagr(col("__n"), col("__s3"), col("__end"), 3).as("dividend_cagr_3y"),
+        cagr(col("__n"), col("__s5"), col("__end"), 5).as("dividend_cagr_5y"))
   }
 }

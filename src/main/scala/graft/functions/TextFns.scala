@@ -89,35 +89,12 @@ object TextFns {
   /** Distinct shingle set (for Jaccard). */
   def shingleSet(text: Column, k: Int): Column = array_distinct(shingles(text, k))
 
-  /** Distinct murmur3-hashed shingle set over a pre-bound token column —
-    * the compact form for MinHash/LSH (int comparisons instead of string
-    * re-hashing per hash-family member). */
-  def shingleHashesOf(t: Column, k: Int): Column =
-    array_distinct(transform(shinglesOf(t, k), s => hash(s)))
-
   /** Exact n-gram Jaccard similarity between two distinct-shingle arrays. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
     val union = (size(a) + size(b)).cast("double") - inter
     when(union > 0, inter / union).otherwise(lit(0.0))
   }
-
-  /** MinHash signature: for each of `numHashes` seeded murmur3 functions,
-    * the minimum hash over the shingle set. Returns array<int> of length
-    * `numHashes`; empty shingle set yields nulls.
-    * Works on STRING shingles (hashes the bytes per family member). For
-    * hot paths prefer [[minHashSignatureInts]] over pre-hashed shingles. */
-  def minHashSignature(shingleArr: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(shingleArr, s => hash(concat(lit(s"mh$i|"), s))))
-    }: _*)
-
-  /** MinHash over int-hashed shingles: family member i is murmur3 of
-    * (shingleHash, i) — integer-only work per element. */
-  def minHashSignatureInts(shingleHashArr: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(shingleHashArr, x => hash(x, lit(i))))
-    }: _*)
 
   /** LSH band keys from a minhash signature: `numBands` strings, each hashing
     * `rows = numHashes / numBands` consecutive signature slots. Two docs share
@@ -151,14 +128,6 @@ object TextFns {
   /** Count of tokens found in `vocab`. */
   def vocabTokenCount(text: Column, vocab: Seq[String]): Column =
     vocabTokenCountOf(tokens(text), vocab)
-
-  /** Punctuation character ratio. */
-  def punctRatio(text: Column): Column = {
-    val n = length(text)
-    when(n > 0,
-      length(regexp_replace(text, "[^\\p{Punct}]", "")).cast("double") / n.cast("double"))
-      .otherwise(lit(0.0))
-  }
 
   /** Mean token length (non-whitespace chars / token count). */
   def meanTokenLen(text: Column): Column = {

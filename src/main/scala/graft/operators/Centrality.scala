@@ -55,8 +55,7 @@ object Centrality {
       .agg(count(lit(1)).cast(LongType).as("deg"))
       .localCheckpoint(false)
     val base = lit(unit * 15L / 100L)
-    val rounds = new graft.core.RoundCheckpointer(nodes.sparkSession.sparkContext,
-      freeShuffles = true)
+    val rounds = new graft.core.RoundCheckpointer(nodes.sparkSession.sparkContext)
     // Checkpoint CADENCE, not every round (r13): each round's score
     // relation has exactly ONE consumer (the next round — the 3-way join
     // references `scores` once), so the multi-consumer O(k²) replay trap

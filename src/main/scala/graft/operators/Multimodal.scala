@@ -28,11 +28,6 @@ object Multimodal {
     StructField("duration_ms", LongType),
     StructField("decoder", StringType)))
 
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType),
-    StructField("content", BinaryType),
-    StructField("meta", assetMetaType)))
-
   /** STUB decode: deterministic pseudo-metadata from the byte content.
     * Replace with a real codec (libjpeg/ffmpeg via JNI) in production — the
     * signature (bytes -> meta) and the batch shape are the contract. */

@@ -201,7 +201,7 @@ object SuffixRanks {
         // materialize-then-free + GC nudge: the shared round hygiene
         // (graft.core.RoundCheckpointer — the helper this loop's lessons
         // produced)
-        val rc = new graft.core.RoundCheckpointer(sc, freeShuffles = true)
+        val rc = new graft.core.RoundCheckpointer(sc)
         def step(df: DataFrame): DataFrame = rc.step(df)
         // global suffix order -> adjacent pairs (sid, sid+1). The order is
         // (rank, doc_id, pos); the tie-break never affects an LCP value
@@ -455,7 +455,7 @@ object SuffixRanks {
     // doubling rounds are freed explicitly — nothing this call persisted
     // outlives it except the returned (live) relation itself.
     val rc = new graft.core.RoundCheckpointer(docs.sparkSession.sparkContext,
-      freeShuffles = true, level = serLevel)
+      level = serLevel)
     val lens = docs.select(col("doc_id"), length(col("text")).cast(LongType).as("__n"))
     // ELECTION FIRST, full-window filter second (r12 — the stage-92 disk
     // fix): the d68 sentinel argument says a <l-char suffix can never tie
@@ -707,7 +707,7 @@ object SuffixRanks {
     // files hit ENOSPC). retain = true keeps every round for the LCP
     // descent — freeing is then the caller's duty via roundIds.
     val rc = new graft.core.RoundCheckpointer(sc, freeSuperseded = !retain,
-      freeShuffles = true, level = roundLevel)
+      level = roundLevel)
     def checkpointTracked(df: DataFrame): DataFrame = {
       val (out, fresh) = rc.stepTracked(df)
       roundIds += fresh

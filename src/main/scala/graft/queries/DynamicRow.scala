@@ -6,11 +6,11 @@ import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.features.TickerFeatures
 import graft.pipeline.TickerValidation
-import QueryDef.moneySum
+import QueryDef.{moneySum, priceBlockCtes}
 
 /** w4: the COMPOSED dynamic feature row, end-to-end — the flagship p1 path
-  * (`TickerFeatures.dynamicFeatures`: fused fundamentals + price + dividend
-  * + sector blocks, has_ flags) followed by the full V1-V5 validation
+  * (`TickerFeatures.dynamicFeatures`: the one-shuffle cell layer over price,
+  * statement, dividend and sector rows, has_ flags) followed by the full V1-V5 validation
   * (`TickerValidation.validate`: nullification, range checks, relative-jump
   * checks, consistency, status + ";"-joined violations) — oracle-gated: the
   * DuckDB twin recomputes every block AND the validation tag strings
@@ -228,48 +228,7 @@ object DynamicRow {
         SELECT ticker, date,
                CAST(100.0 AS DOUBLE) + d * CAST(0.05 AS DOUBLE) + CAST(sk % 13 AS DOUBLE) AS close
         FROM base),
-      rets AS (
-        SELECT ticker, date, close,
-               close / lag(close) OVER (PARTITION BY ticker ORDER BY date) - 1 AS ret
-        FROM prices),
-      psliced AS (
-        SELECT g.ticker, g.as_of, r.date, r.close, r.ret
-        FROM grid g LEFT JOIN rets r ON r.ticker = g.ticker AND r.date <= g.as_of),
-      pstaged AS (
-        SELECT *,
-          (count(*) OVER (PARTITION BY ticker, as_of)
-           - row_number() OVER (PARTITION BY ticker, as_of ORDER BY date) + 1) AS rn_desc,
-          (date >= (max(date) OVER (PARTITION BY ticker, as_of) - INTERVAL 380 DAY)::DATE) AS in_dd,
-          (date BETWEEN (as_of - INTERVAL 365 DAY)::DATE AND as_of) AS in365
-        FROM psliced),
-      pdd AS (
-        SELECT *,
-          CASE WHEN in_dd THEN
-            (max(CASE WHEN in_dd THEN close END) OVER (
-               PARTITION BY ticker, as_of ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - close)
-            / max(CASE WHEN in_dd THEN close END) OVER (
-               PARTITION BY ticker, as_of ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          END AS dd
-        FROM pstaged),
-      pagg AS (
-        SELECT ticker, as_of,
-          arg_max(close, date) AS p_now,
-          arg_max(CASE WHEN date <= (as_of - INTERVAL 6 MONTH)::DATE THEN close END,
-                  CASE WHEN date <= (as_of - INTERVAL 6 MONTH)::DATE THEN date END) AS p6,
-          arg_max(CASE WHEN date <= (as_of - INTERVAL 12 MONTH)::DATE THEN close END,
-                  CASE WHEN date <= (as_of - INTERVAL 12 MONTH)::DATE THEN date END) AS p12,
-          stddev_samp(ret) AS sd,
-          avg(CASE WHEN rn_desc <= 50 THEN close END) AS sma50,
-          avg(CASE WHEN rn_desc <= 200 THEN close END) AS sma200,
-          count(date) AS pn,
-          sum(CASE WHEN in_dd THEN 1 ELSE 0 END) AS n_dd,
-          max(dd) AS max_dd,
-          arg_min(CASE WHEN in365 THEN close END, CASE WHEN in365 THEN date END) AS s_first,
-          arg_max(CASE WHEN in365 THEN close END, CASE WHEN in365 THEN date END) AS s_last,
-          count(CASE WHEN in365 THEN 1 END) AS s_n
-        FROM pdd GROUP BY 1, 2),
+      ${priceBlockCtes("prices", "grid", sector365 = true)},
       sidx AS (
         SELECT ticker, date, CAST(100.0 AS DOUBLE) + d * CAST(0.04 AS DOUBLE) AS xclose
         FROM base),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.features.TickerFeatures
-import QueryDef.moneySum
+import QueryDef.{moneySum, priceBlockCtes}
 
 /** Oracle conversions for the ticker-feature blocks that were previously
   * pinned only by golden specs (SURVEY §2.6 W6/W9/W10/W11/W14): the judged
@@ -153,63 +153,26 @@ object FeatureBlocks {
           round(col("sma_50_200_delta"), 6).as("sma_50_200_delta"))
         .orderBy("ticker", "as_of")
     },
-    Some("""WITH base AS (
+    Some(s"""WITH base AS (
         SELECT l_suppkey::VARCHAR AS ticker, l_shipdate AS date,
                CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 100 AS close
         FROM lineitem GROUP BY 1, 2),
-      rets AS (
-        SELECT ticker, date, close,
-               close / lag(close) OVER (PARTITION BY ticker ORDER BY date) - 1 AS ret
-        FROM base),
       grid AS (
         SELECT DISTINCT l_suppkey::VARCHAR AS ticker, t.as_of
         FROM lineitem CROSS JOIN (VALUES (DATE '1997-06-30'), (DATE '1998-06-30')) t(as_of)),
-      sliced AS (
-        SELECT g.ticker, g.as_of, r.date, r.close, r.ret
-        FROM grid g LEFT JOIN rets r ON r.ticker = g.ticker AND r.date <= g.as_of),
-      staged AS (
-        SELECT *,
-          (count(*) OVER (PARTITION BY ticker, as_of)
-           - row_number() OVER (PARTITION BY ticker, as_of ORDER BY date) + 1) AS rn_desc,
-          (date >= (max(date) OVER (PARTITION BY ticker, as_of) - INTERVAL 380 DAY)::DATE) AS in_dd
-        FROM sliced),
-      dded AS (
-        SELECT *,
-          CASE WHEN in_dd THEN
-            (max(CASE WHEN in_dd THEN close END) OVER (
-               PARTITION BY ticker, as_of ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - close)
-            / max(CASE WHEN in_dd THEN close END) OVER (
-               PARTITION BY ticker, as_of ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          END AS dd
-        FROM staged),
-      agg AS (
-        SELECT ticker, as_of,
-          arg_max(close, date) AS p_now,
-          arg_max(CASE WHEN date <= (as_of - INTERVAL 6 MONTH)::DATE THEN close END,
-                  CASE WHEN date <= (as_of - INTERVAL 6 MONTH)::DATE THEN date END) AS p6,
-          arg_max(CASE WHEN date <= (as_of - INTERVAL 12 MONTH)::DATE THEN close END,
-                  CASE WHEN date <= (as_of - INTERVAL 12 MONTH)::DATE THEN date END) AS p12,
-          stddev_samp(ret) AS sd,
-          avg(CASE WHEN rn_desc <= 50 THEN close END) AS sma50,
-          avg(CASE WHEN rn_desc <= 200 THEN close END) AS sma200,
-          count(date) AS n,
-          sum(CASE WHEN in_dd THEN 1 ELSE 0 END) AS n_dd,
-          max(dd) AS max_dd
-        FROM dded GROUP BY 1, 2)
+      ${priceBlockCtes("base", "grid", sector365 = false)}
       SELECT ticker, as_of,
         round(CASE WHEN p6 IS NOT NULL AND p_now IS NOT NULL
               THEN (p_now - p6) / p6 ELSE 0.0 END, 6) AS ret_6m,
         round(CASE WHEN p12 IS NOT NULL AND p_now IS NOT NULL
               THEN (p_now - p12) / p12 ELSE 0.0 END, 6) AS ret_12m,
         round(COALESCE(sd * sqrt(252.0), 0.0), 6) AS volatility,
-        round(CASE WHEN n < 2 OR n_dd < 2 THEN 0.0
+        round(CASE WHEN pn < 2 OR n_dd < 2 THEN 0.0
               ELSE COALESCE(max_dd, 0.0) END, 6) AS max_drawdown_1y,
-        round(CASE WHEN n >= 200 THEN
+        round(CASE WHEN pn >= 200 THEN
               CASE WHEN sma200 <> 0 THEN (sma50 - sma200) / sma200 ELSE 0.0 END
               END, 6) AS sma_50_200_delta
-      FROM agg ORDER BY ticker, as_of"""))
+      FROM pagg ORDER BY ticker, as_of"""))
 
   /** W6/W14: split-adjusted dividend CAGR at 3y and 5y horizons — the
     * dividends ride `SeriesOps.adjustForSplits` (divide by the cumulative

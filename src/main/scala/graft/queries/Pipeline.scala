@@ -121,8 +121,9 @@ object Pipeline {
     // form multiplies the index by the universe size (36M rows at sf0.1).
     val emptySectorIndex = prices.filter(lit(false))
     // income/balance/ratios are all projections of `yearly` — hand the
-    // assembly the column superset so it fuses the three blocks into one
-    // slice + aggregation (shared (ticker, date) spine).
+    // assembly the column superset so the grid price form computes every
+    // per-cell block over one slice + aggregation (shared (ticker, date)
+    // spine).
     val statements = yearly
       .withColumn("cashAndShortTermInvestments", col("incomeBeforeTax") / 10)
       .withColumn("totalDebt", col("incomeBeforeTax") / 5)
@@ -262,12 +263,8 @@ object Pipeline {
     new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String),
       org.apache.spark.sql.DataFrame]()
 
-  /** Drop memoized feature tables (all of them, or one session's). */
-  def clearMaterialized(session: Option[org.apache.spark.sql.SparkSession] = None): Unit =
-    session match {
-      case None => p1Store.clear()
-      case Some(s) => p1Store.keySet.removeIf(_._1 eq s)
-    }
+  /** Drop every memoized feature table. */
+  def clearMaterialized(): Unit = p1Store.clear()
   private def p1Materialized(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame =
     p1Store.computeIfAbsent((s, dir), { case (sess, d) =>
@@ -304,7 +301,7 @@ object Pipeline {
         col("ticker"), col("as_of"), col("6m_return"), col("12m_return"),
         col("volatility"), col("max_drawdown_1y"), col("sma_50_200_delta"))
       .orderBy("ticker", "as_of"),
-    Some("""WITH px AS (
+    Some(s"""WITH px AS (
         SELECT CAST(o_custkey AS VARCHAR) AS ticker,
                CAST(o_orderdate AS DATE) AS date,
                CAST(max(o_totalprice) AS DOUBLE) AS close
@@ -313,44 +310,7 @@ object Pipeline {
         SELECT DISTINCT ticker, t.as_of
         FROM px CROSS JOIN (VALUES (DATE '1997-12-31'), (DATE '1998-12-31'),
           (DATE '1999-12-31'), (DATE '2000-12-31')) t(as_of)),
-      rets AS (
-        SELECT ticker, date, close,
-               close / lag(close) OVER (PARTITION BY ticker ORDER BY date) - 1 AS ret
-        FROM px),
-      psliced AS (
-        SELECT g.ticker, g.as_of, r.date, r.close, r.ret
-        FROM grid g LEFT JOIN rets r ON r.ticker = g.ticker AND r.date <= g.as_of),
-      pstaged AS (
-        SELECT *,
-          (count(*) OVER (PARTITION BY ticker, as_of)
-           - row_number() OVER (PARTITION BY ticker, as_of ORDER BY date) + 1) AS rn_desc,
-          (date >= (max(date) OVER (PARTITION BY ticker, as_of) - INTERVAL 380 DAY)::DATE) AS in_dd
-        FROM psliced),
-      pdd AS (
-        SELECT *,
-          CASE WHEN in_dd THEN
-            (max(CASE WHEN in_dd THEN close END) OVER (
-               PARTITION BY ticker, as_of ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - close)
-            / max(CASE WHEN in_dd THEN close END) OVER (
-               PARTITION BY ticker, as_of ORDER BY date
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          END AS dd
-        FROM pstaged),
-      pagg AS (
-        SELECT ticker, as_of,
-          arg_max(close, date) AS p_now,
-          arg_max(CASE WHEN date <= (as_of - INTERVAL 6 MONTH)::DATE THEN close END,
-                  CASE WHEN date <= (as_of - INTERVAL 6 MONTH)::DATE THEN date END) AS p6,
-          arg_max(CASE WHEN date <= (as_of - INTERVAL 12 MONTH)::DATE THEN close END,
-                  CASE WHEN date <= (as_of - INTERVAL 12 MONTH)::DATE THEN date END) AS p12,
-          stddev_samp(ret) AS sd,
-          avg(CASE WHEN rn_desc <= 50 THEN close END) AS sma50,
-          avg(CASE WHEN rn_desc <= 200 THEN close END) AS sma200,
-          count(date) AS pn,
-          sum(CASE WHEN in_dd THEN 1 ELSE 0 END) AS n_dd,
-          max(dd) AS max_dd
-        FROM pdd GROUP BY 1, 2),
+      ${QueryDef.priceBlockCtes("px", "grid", sector365 = false)},
       feat AS (
         SELECT ticker, as_of,
           CASE WHEN p6 IS NOT NULL AND p_now IS NOT NULL

@@ -77,4 +77,59 @@ object QueryDef {
   def cosSql64(a: String, b: String): String =
     s"""CASE WHEN ${dotSql64(a, a)} > 0 AND ${dotSql64(b, b)} > 0
       THEN ${dotSql64(a, b)} / (sqrt(${dotSql64(a, a)}) * sqrt(${dotSql64(b, b)})) END"""
+  /** The price-block CTE chain of the DuckDB oracles, the SQL form of
+    * `TickerFeatures.priceBlock`: `rets` (daily returns), `psliced` (grid ⟕
+    * returns at or before as_of), `pstaged` (descending rank, drawdown
+    * window flag), `pdd` (running-peak drawdown) and `pagg`, one row per
+    * cell with p_now, p6, p12, sd, sma50, sma200, pn, n_dd and max_dd.
+    * `prices` names a (ticker, date, close) CTE and `grid` a (ticker,
+    * as_of) CTE; `sector365` adds the stock side of the 365-day sector
+    * window to `pagg` (s_first, s_last, s_n). Shared by the oracles so the
+    * formulation cannot fork. */
+  def priceBlockCtes(prices: String, grid: String, sector365: Boolean): String = {
+    val in365 = if (!sector365) "" else """,
+          (date BETWEEN (as_of - INTERVAL 365 DAY)::DATE AND as_of) AS in365"""
+    val sectorAggs = if (!sector365) "" else """,
+          arg_min(CASE WHEN in365 THEN close END, CASE WHEN in365 THEN date END) AS s_first,
+          arg_max(CASE WHEN in365 THEN close END, CASE WHEN in365 THEN date END) AS s_last,
+          count(CASE WHEN in365 THEN 1 END) AS s_n"""
+    s"""rets AS (
+        SELECT ticker, date, close,
+               close / lag(close) OVER (PARTITION BY ticker ORDER BY date) - 1 AS ret
+        FROM $prices),
+      psliced AS (
+        SELECT g.ticker, g.as_of, r.date, r.close, r.ret
+        FROM $grid g LEFT JOIN rets r ON r.ticker = g.ticker AND r.date <= g.as_of),
+      pstaged AS (
+        SELECT *,
+          (count(*) OVER (PARTITION BY ticker, as_of)
+           - row_number() OVER (PARTITION BY ticker, as_of ORDER BY date) + 1) AS rn_desc,
+          (date >= (max(date) OVER (PARTITION BY ticker, as_of) - INTERVAL 380 DAY)::DATE) AS in_dd$in365
+        FROM psliced),
+      pdd AS (
+        SELECT *,
+          CASE WHEN in_dd THEN
+            (max(CASE WHEN in_dd THEN close END) OVER (
+               PARTITION BY ticker, as_of ORDER BY date
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - close)
+            / max(CASE WHEN in_dd THEN close END) OVER (
+               PARTITION BY ticker, as_of ORDER BY date
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+          END AS dd
+        FROM pstaged),
+      pagg AS (
+        SELECT ticker, as_of,
+          arg_max(close, date) AS p_now,
+          arg_max(CASE WHEN date <= (as_of - INTERVAL 6 MONTH)::DATE THEN close END,
+                  CASE WHEN date <= (as_of - INTERVAL 6 MONTH)::DATE THEN date END) AS p6,
+          arg_max(CASE WHEN date <= (as_of - INTERVAL 12 MONTH)::DATE THEN close END,
+                  CASE WHEN date <= (as_of - INTERVAL 12 MONTH)::DATE THEN date END) AS p12,
+          stddev_samp(ret) AS sd,
+          avg(CASE WHEN rn_desc <= 50 THEN close END) AS sma50,
+          avg(CASE WHEN rn_desc <= 200 THEN close END) AS sma200,
+          count(date) AS pn,
+          sum(CASE WHEN in_dd THEN 1 ELSE 0 END) AS n_dd,
+          max(dd) AS max_dd$sectorAggs
+        FROM pdd GROUP BY 1, 2)"""
+  }
 }

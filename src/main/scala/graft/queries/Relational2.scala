@@ -24,7 +24,6 @@ object Relational2 {
     * reference selects `sector_*` columns by introspection). */
   val q31 = {
     val vocab = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "MACHINERY", "HOUSEHOLD")
-    val slugs = vocab.map(v => s"seg_${Encoding.slugify(v)}")
     QueryDef("q31_prefix_projection",
       (s, dir) => {
         val wide = Encoding.oneHot(Tables.customer(s, dir), "c_mktsegment", vocab, "seg")

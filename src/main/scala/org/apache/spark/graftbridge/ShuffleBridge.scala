@@ -47,14 +47,4 @@ object ShuffleBridge {
     }
     removed
   }
-
-  /** Total on-disk bytes under every block-manager local dir — the probe
-    * the sizing rule reads (shuffle files + spilled/checkpointed blocks). */
-  def localDirsBytes(sc: SparkContext): Long = {
-    def du(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(du).sum).getOrElse(0L)
-    org.apache.spark.util.Utils.getConfiguredLocalDirs(sc.conf)
-      .map(new java.io.File(_)).map(du).sum
-  }
 }

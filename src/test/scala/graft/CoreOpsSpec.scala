@@ -49,6 +49,21 @@ class CoreOpsSpec extends SparkSpec {
     }
   }
 
+  test("as-of NULL keys never match, in all four forms") {
+    // DuckDB's ASOF LEFT JOIN ... ON p.k = c.k: a NULL-key left row stays,
+    // with NULL matched values; a NULL-key right row matches nothing
+    val left = Seq[(Option[String], Long)]((None, 5L), (Some("A"), 5L)).toDF("k", "t")
+    val right = Seq[(Option[String], Long, Double)]((None, 1L, 7.0), (Some("A"), 1L, 1.0),
+      (None, 9L, 8.0), (Some("A"), 9L, 2.0)).toDF("k", "t", "v")
+    for ((form, forward, join) <- asofForms) {
+      val out = join(left, right, Seq("k"), "t", Seq("v"))
+        .as[(Option[String], Long, Option[Double])].collect().toSet
+      val want = Set((None, 5L, None),
+        (Some("A"), 5L, Some(if (forward) 2.0 else 1.0)))
+      assert(out == want, form)
+    }
+  }
+
   test("asof backward attaches the matched row atomically: its NULLs are not backfilled") {
     val left = Seq(("A", d("2024-01-10"))).toDF("k", "date")
     // latest matching right row (01-09) has v2 = NULL; an older row (01-02)
@@ -64,7 +79,7 @@ class CoreOpsSpec extends SparkSpec {
   }
 
   // deterministic pseudo-random data with a HOT key (~40% of rows), NULL
-  // keys (~1/13 — the null-safe carry-attach path), duplicate timestamps
+  // keys (~1/13 — never matched, on either side), duplicate timestamps
   // (disambiguated by a seq tie-break), NULL values in one column, and a
   // few NULL timestamps (the null-bucket path)
   private def genAsOf(n: Int, seed: Int, keys: Int) = {

@@ -85,7 +85,7 @@ class TextVector17Spec extends SparkSpec {
     val leaked = ShuffleBridge.activeShuffleIds(sc) -- before
     // every interior shuffle of the build (one+ per doubling round, plus
     // the span/merge/rebuild phases) must be unregistered by the time the
-    // output is materialized — without freeShuffles this leaks one
+    // output is materialized — without the per-step removal this leaks one
     // positions-sized shuffle per round until the ContextCleaner's next GC
     // (the measured d86 ENOSPC class). The ORDER BY / driver-side collect
     // of the final result may hold a trailing shuffle or two.

@@ -452,15 +452,24 @@ class TickerFeaturesSpec extends SparkSpec {
         .orderBy("ticker", "as_of").collect().toSeq
     val separate = rows(inputs(None))
     val fused = rows(inputs(Some(st)))
-    assert(separate.nonEmpty && separate.size == fused.size)
+    // the series price form assembles from the separate statement blocks
+    // even when `statements` is set; an empty ETF index gives the same NaN
+    // sector feature as the empty per-ticker index above
+    val tickerEtf = tickers.map(t => (t, "X")).toDF("ticker", "etf")
+    val emptyEtfIndex = Seq.empty[(String, java.sql.Date, Double)].toDF("etf", "date", "close")
+    val series = TickerFeatures.dynamicFeaturesSharedIndex(grid, inputs(Some(st)),
+      tickerEtf, emptyEtfIndex, seriesPriceBlock = true)
+      .orderBy("ticker", "as_of").collect().toSeq
+    assert(separate.nonEmpty && separate.size == fused.size && separate.size == series.size)
     // volatility and the SMA delta accumulate in DIFFERENT orders between
     // the forms (shuffle-arrival avg/stddev vs the fused path's date-order
-    // fold) — last-ulp differences by design, absorbed by the pipeline's
-    // round(6); every other column is exact picks/counts/IEEE arithmetic
-    // on identical inputs and must match bit-for-bit.
+    // fold or the series form's running window) — last-ulp differences by
+    // design, absorbed by the pipeline's round(6); every other column is
+    // exact picks/counts/IEEE arithmetic on identical inputs and must match
+    // bit-for-bit.
     val cols = TickerFeatures.dynamicFeatures(grid, inputs(None)).columns
     val ulpCols = Set("volatility", "sma_50_200_delta")
-    separate.zip(fused).foreach { case (a, b) =>
+    (separate.zip(fused) ++ separate.zip(series)).foreach { case (a, b) =>
       cols.zipWithIndex.foreach { case (c, i) =>
         if (ulpCols(c)) {
           val (x, y) = (a.get(i), b.get(i))
