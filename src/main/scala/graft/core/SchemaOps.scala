@@ -78,15 +78,6 @@ object SchemaOps {
     aligned.reduce(_.unionByName(_))
   }
 
-  /** Add missing columns as typed nulls and project to `want` order
-    * (reference `fill_missing_columns`). */
-  def fillMissingColumns(df: DataFrame, want: Seq[(String, DataType)]): DataFrame = {
-    val present = df.columns.toSet
-    df.select(want.map { case (c, t) =>
-      if (present.contains(c)) qcol(c).cast(t).as(c) else lit(null).cast(t).as(c)
-    }: _*)
-  }
-
   /** The reference's save-path numeric policy: every numeric column
     * `round(2).cast(Float32)` (`ticker_batch_runner.py:190-198`). Done through
     * an exact decimal intermediate so the result is engine-independent (double

@@ -90,17 +90,6 @@ object SeriesOps {
       .drop("__cum_ratio")
   }
 
-  /** Point-in-time "nearest value at or before" aggregate: max_by over a
-    * filtered slice (reference `find_nearest_price`, `utils.py:14-18`). */
-  def lastValueAtOrBefore(valueCol: Column, dateCol: Column, cutoff: Column): Column =
-    max_by(when(dateCol <= cutoff, valueCol), when(dateCol <= cutoff, dateCol))
-
-  /** Value within a grace window around a target date, latest wins
-    * (reference `find_value_near_date`, `growth_features.py:10-27`). */
-  def valueNearDate(valueCol: Column, dateCol: Column, lo: Column, hi: Column): Column =
-    max_by(when(dateCol.between(lo, hi), valueCol),
-           when(dateCol.between(lo, hi), dateCol))
-
   /** CAGR: (end/start)^(1/years) - 1, null-safe (reference
     * `growth_features.py:30-56`: NaN when start/end missing or <= 0). */
   def cagr(endV: Column, startV: Column, years: Column): Column =

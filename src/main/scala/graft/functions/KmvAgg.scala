@@ -28,9 +28,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * ObjectHashAggregateExec with sort-based fallback, so memory stays
   * bounded however many groups a partition holds.
   *
-  * Input must be the 32-bit hash itself (e.g. `conv(substring(md5(x),1,8),
-  * 16,10)` cast to long) so the hashing step stays visible — and provably
-  * identical — on both engines.
+  * Input must be the 32-bit hash itself, [[TextFns.hash32]] over the value
+  * cast to string, so the hashing step stays visible on both engines: the
+  * DuckDB twin hashes with [[TextFns.hash32Sql]] over `CAST(x AS VARCHAR)`.
   */
 case class KmvAgg(child: Expression, k: Int,
                   mutableAggBufferOffset: Int = 0,
@@ -110,12 +110,4 @@ object KmvAgg {
   def kmvDistinct(hash32: Column, k: Int): Column =
     ColumnBridge.column(
       KmvAgg(ColumnBridge.expression(hash32), k).toAggregateExpression())
-
-  /** The md5-derived 32-bit hash both engines compute identically:
-    * Spark `conv(substring(md5(cast(x as string)),1,8),16,10)` ==
-    * DuckDB `CAST(CONCAT('0x', SUBSTR(md5(CAST(x AS VARCHAR)),1,8)) AS BIGINT)`. */
-  def hash32(c: Column): Column = {
-    import org.apache.spark.sql.functions._
-    conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long")
-  }
 }

@@ -19,7 +19,7 @@ object TextFns {
     * (`withColumn("toks", tokens(...))`) and pass the attribute.
     *
     * ORACLE-PARITY boundary (relied on by every documents oracle, which
-    * pairs this with DuckDB's `regexp_split_to_array(trim(text), '\s+')`):
+    * pairs this with its DuckDB twin [[tokensSql]]):
     * Java regex `\s` is [ \t\n\x0B\f\r] but DuckDB's RE2 `\s` excludes
     * vertical tab \x0B — outside the corpus contract (no \x0B); a corpus
     * where it could occur needs an explicit pre-normalization step.
@@ -29,6 +29,21 @@ object TextFns {
     * Spark 4.1.2: split(trim(lit("")), "\s+") == [""]). */
   def tokens(text: Column): Column =
     split(trim(text), "\\s+")
+
+  /** DuckDB twin of [[tokens]]: `regexp_split_to_array(trim(t), '\s+')`. */
+  def tokensSql(t: String): String =
+    s"regexp_split_to_array(trim($t), '\\s+')"
+
+  /** The md5-prefix 32-bit hash both engines compute identically: the first
+    * 8 hex digits of md5 over a STRING column, as a long in [0, 2³²). The
+    * cross-engine basis of the dedup, sampling, sharding and sketch
+    * operators; [[hash32Sql]] renders the DuckDB form. */
+  def hash32(s: Column): Column =
+    conv(substring(md5(s), 1, 8), 16, 10).cast("long")
+
+  /** DuckDB twin of [[hash32]] over a VARCHAR expression `s`. */
+  def hash32Sql(s: String): String =
+    s"CAST(CONCAT('0x', SUBSTR(md5($s), 1, 8)) AS BIGINT)"
 
   /** The C4 doc-level rule primitives (Raffel et al. 2020, arXiv:1910.10683
     * §2.2), shared by the d50 rule query and the d54 pipeline composition

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, StringType}
+import graft.functions.TextFns
 
 /** The GPT-3-style document-quality classifier + Pareto acceptance filter
   * (Brown et al. 2020, "Language Models are Few-Shot Learners",
@@ -49,8 +50,7 @@ object Classifier {
     val feats = toks
       .select(col("id"), col("__pos"), explode(col("t")).as("tok"))
       .select(col("id"), col("__pos"),
-        (conv(substring(md5(col("tok")), 1, 8), 16, 10)
-          .cast(LongType) % numBuckets).as("bucket"))
+        (TextFns.hash32(col("tok")) % numBuckets).as("bucket"))
       .distinct()
     // ONE distinct-feature plan feeds the model, the doc counts, and the
     // scoring join — lazy checkpoint so no consumer re-derives it (the
@@ -79,8 +79,8 @@ object Classifier {
     val prob = round(lit(1.0) / (lit(1.0) + exp(-col("score_r"))), 6)
     // u ∈ [0, 1): md5 of the id at 10⁻⁶ resolution; /1e6 is the same
     // IEEE division on any engine
-    val u = (conv(substring(md5(concat(col("id").cast(StringType), lit("|u"))), 1, 8), 16, 10)
-      .cast(LongType) % 1000000).cast(DoubleType) / lit(1000000.0)
+    val u = (TextFns.hash32(concat(col("id").cast(StringType), lit("|u"))) % 1000000)
+      .cast(DoubleType) / lit(1000000.0)
     scored.withColumn("prob_r", prob).withColumn("u", u)
       .withColumn("kept", paretoKeep(col("prob_r"), col("u")))
   }
@@ -96,8 +96,7 @@ object Classifier {
       .filter(size(col("t")) >= 1)
       .select(col("id"), explode(col("t")).as("tok"))
       .select(col("id"),
-        (conv(substring(md5(col("tok")), 1, 8), 16, 10)
-          .cast(LongType) % numBuckets).as("bucket"))
+        (TextFns.hash32(col("tok")) % numBuckets).as("bucket"))
       .distinct()
 
   /** Train the hashed-NB log-odds weights ONCE and hand them back as a
@@ -115,8 +114,7 @@ object Classifier {
       .filter(size(col("t")) >= 1)
       .select(col("id"), col("__pos"), explode(col("t")).as("tok"))
       .select(col("id"), col("__pos"),
-        (conv(substring(md5(col("tok")), 1, 8), 16, 10)
-          .cast(LongType) % numBuckets).as("bucket"))
+        (TextFns.hash32(col("tok")) % numBuckets).as("bucket"))
       .distinct()
       .localCheckpoint(false)
     val docTotals = feats.select(col("id"), col("__pos")).distinct()
@@ -150,8 +148,8 @@ object Classifier {
         when(col("n_feat") > 0, round(col("__sw") / col("n_feat"), 6))
           .otherwise(lit(0.0)).as("score_r"))
     val prob = round(lit(1.0) / (lit(1.0) + exp(-col("score_r"))), 6)
-    val u = (conv(substring(md5(concat(col("id").cast(StringType), lit("|u"))), 1, 8), 16, 10)
-      .cast(LongType) % 1000000).cast(DoubleType) / lit(1000000.0)
+    val u = (TextFns.hash32(concat(col("id").cast(StringType), lit("|u"))) % 1000000)
+      .cast(DoubleType) / lit(1000000.0)
     scored.withColumn("prob_r", prob).withColumn("u", u)
       .withColumn("kept", paretoKeep(col("prob_r"), col("u")))
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.functions.TextFns
 
 /** Count-Min Sketch (Cormode & Muthukrishnan 2005, J.Algorithms 55) —
   * THE bounded-memory frequency structure for corpus-scale token stats:
@@ -30,8 +30,7 @@ object CountMin {
 
   /** The seeded bucket column — md5("seed:token") % width. */
   def bucket(seed: Column, tok: Column, width: Int): Column =
-    (conv(substring(md5(concat(seed.cast("string"), lit(":"), tok)), 1, 8),
-      16, 10).cast(LongType) % width)
+    (TextFns.hash32(concat(seed.cast("string"), lit(":"), tok)) % width)
 
   /** Build the sketch over a token column: (seed, bucket, cnt), exactly
     * depth × width rows max (absent (seed,bucket) pairs = zero count —

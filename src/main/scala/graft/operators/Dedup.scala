@@ -205,14 +205,14 @@ object Dedup {
   /** The constants above as a SQL VALUES body — `(seed, a, b), …` —
     * generated from the same derivation so oracle and engine cannot
     * drift. */
-  def affineSeedsSqlValues(n: Int): String =
+  private def affineSeedsSqlValues(n: Int): String =
     affineConsts(n).zipWithIndex
       .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
 
   /** Per-seed affine rehash of the 32-bit base hash `x`:
     * (a_seed·x + b_seed) mod p, constants inlined as array literals so the
     * whole expression stays inside whole-stage codegen. */
-  private[graft] def affineHash(seed: Column, x: Column, numHashes: Int): Column = {
+  private def affineHash(seed: Column, x: Column, numHashes: Int): Column = {
     val cs = affineConsts(numHashes)
     val aArr = array(cs.map(c => lit(c._1)): _*)
     val bArr = array(cs.map(c => lit(c._2)): _*)
@@ -220,9 +220,38 @@ object Dedup {
     (element_at(aArr, i) * x + element_at(bArr, i)) % AffineP
   }
 
-  /** 32-bit base hash of a shingle: first 8 hex digits of md5. */
-  private[graft] def baseHash32(shingle: Column): Column =
-    conv(substring(md5(shingle), 1, 8), 16, 10).cast("long")
+  /** Affine MinHash signature of a shingle relation (keys…, shingle):
+    * one [[TextFns.hash32]] base hash per row, rehashed by [[affineHash]]
+    * for every seed in 0 until numHashes, min-reduced per (keys…, seed).
+    * Returns (keys…, seed, mh); [[affineSignatureSql]] is the DuckDB twin. */
+  private[graft] def affineSignature(shingles: DataFrame, keys: Seq[String],
+                                     numHashes: Int): DataFrame = {
+    val k = keys.map(col)
+    shingles.select(k :+ TextFns.hash32(col("shingle")).as("x"): _*)
+      .select(k :+ col("x") :+
+        explode(sequence(lit(0L), lit(numHashes - 1L))).as("seed"): _*)
+      .select(k :+ col("seed") :+
+        affineHash(col("seed"), col("x"), numHashes).as("h"): _*)
+      .groupBy(k :+ col("seed"): _*).agg(min(col("h")).as("mh"))
+  }
+
+  /** DuckDB twin of [[affineSignature]] over the word 3-shingles of
+    * [[TextFns.tokensSql]]`(text)`, as CTEs to splice into a WITH list:
+    * `tok` (keys, toks) from `from` (a relation, optionally with a WHERE),
+    * `sh` (keys, shingle) the distinct shingles, `seeds` (seed, a, b),
+    * `xv` (keys, x) the [[TextFns.hash32Sql]] base hashes, and `sig`
+    * (keys, seed BIGINT, mh). `keys` is a SQL column list. */
+  def affineSignatureSql(from: String, keys: String, text: String,
+                         numHashes: Int): String =
+    s"""tok AS (SELECT $keys, ${TextFns.tokensSql(text)} AS toks FROM $from),
+      sh AS (SELECT DISTINCT $keys, array_to_string(toks[i:i+2], ' ') AS shingle
+        FROM tok, UNNEST(generate_series(1, len(toks)-2)) AS t(i)
+        WHERE len(toks) >= 3),
+      seeds(seed, a, b) AS (VALUES ${affineSeedsSqlValues(numHashes)}),
+      xv AS (SELECT $keys, ${TextFns.hash32Sql("shingle")} AS x FROM sh),
+      sig AS (SELECT $keys, CAST(seed AS BIGINT) AS seed,
+          MIN((CAST(a AS BIGINT) * x + b) % $AffineP) AS mh
+        FROM xv CROSS JOIN seeds GROUP BY ALL)"""
 
   /** Shingle sets + (id, band, band-signature) rows for the md5-seeded
     * affine family: one md5 per distinct shingle, numHashes affine
@@ -239,14 +268,8 @@ object Dedup {
       .select(col("id"), TextExprs.distinctShingles(col("toks"), shingleK).as("sh"))
       .filter(size(col("sh")) > 0)
       .localCheckpoint(false)
-    val sig = sh
-      .select(col("id"), explode(col("sh")).as("shingle"))
-      .select(col("id"), baseHash32(col("shingle")).as("x"))
-      .select(col("id"), col("x"),
-        explode(sequence(lit(0L), lit(numHashes - 1L))).as("seed"))
-      .select(col("id"), col("seed"),
-        affineHash(col("seed"), col("x"), numHashes).as("h"))
-      .groupBy("id", "seed").agg(min(col("h")).as("mh"))
+    val sig = affineSignature(
+      sh.select(col("id"), explode(col("sh")).as("shingle")), Seq("id"), numHashes)
     val banded = sig
       .withColumn("band", (col("seed") / rowsPerBand).cast("int"))
       .groupBy("id", "band")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.StringType
 import graft.functions.TextFns
 
 /** Incremental corpus curation — the reference's skip-existing / merge
@@ -65,8 +65,7 @@ object Incremental {
 
   /** Stateless shard assignment (md5 of the id, `% nShards`). */
   def hashShard(idCol: Column, nShards: Int): Column =
-    conv(substring(md5(idCol.cast(StringType)), 1, 8), 16, 10)
-      .cast(LongType) % nShards
+    TextFns.hash32(idCol.cast(StringType)) % nShards
 
   /** Curate ONE batch against frozen state. `batch`: (doc_id, lang,
     * source, text). Returns one row per batch doc:
@@ -111,8 +110,7 @@ object Incremental {
     val spark = batch.sparkSession
     import spark.implicits._
     val rates = state.rates.toDF("__grp", "rate_bp")
-    val fate = conv(substring(md5(col("doc_id").cast(StringType)), 1, 8), 16, 10)
-      .cast(LongType) % 10000
+    val fate = TextFns.hash32(col("doc_id").cast(StringType)) % 10000
     val mixFlag = surv3
       .join(broadcast(rates), col("lang").cast(StringType) === col("__grp"))
       .filter(fate < col("rate_bp"))

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types.StringType
+import graft.functions.TextFns
 
 /** Temperature-scaled corpus mixture resampling — the multilingual /
   * multi-domain rebalance step of a training-data pipeline (the α-sampling
@@ -92,10 +93,9 @@ object Mixture {
       .select(col("id"), col("__tgt"),
         explode(sequence(lit(1), size(col("t")) - 1)).as("i"), col("t"))
       .select(col("id"), col("__tgt"),
-        (conv(substring(md5(concat_ws(" ",
+        (TextFns.hash32(concat_ws(" ",
             element_at(col("t"), col("i")),
-            element_at(col("t"), col("i") + 1))), 1, 8), 16, 10)
-          .cast(LongType) % numBuckets).as("bucket"))
+            element_at(col("t"), col("i") + 1))) % numBuckets).as("bucket"))
     // ONE tokenize+explode scan feeds both the bucket model and the
     // per-doc counts: a lazy checkpoint truncates the plan so neither
     // consumer re-derives it (the duplicated-lazy-plan trap measured at
@@ -159,8 +159,7 @@ object Mixture {
                         numBuckets: Int = 10000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val b = budgets.toDF("__grp", "__budget")
-    val bucket = conv(substring(md5(col(idCol).cast(StringType)), 1, 8), 16, 10)
-      .cast(LongType) % numBuckets
+    val bucket = TextFns.hash32(col(idCol).cast(StringType)) % numBuckets
     val wb = df.withColumn("__bucket", bucket)
     val perBucket = wb.groupBy(col(groupCol).cast(StringType).as("__grp"),
         col("__bucket"))
@@ -207,8 +206,7 @@ object Mixture {
     val rates = (if (counts.isEmpty) Seq.empty[(String, Long)]
       else temperatureRates(counts, alpha, targetFraction))
       .toDF("__grp", "rate_bp")
-    val bucket = conv(substring(md5(col(idCol).cast(StringType)), 1, 8), 16, 10)
-      .cast(LongType) % 10000
+    val bucket = TextFns.hash32(col(idCol).cast(StringType)) % 10000
     df.join(broadcast(rates), col(groupCol).cast(StringType) === col("__grp"))
       .withColumn("__bucket", bucket)
       .filter(col("__bucket") < col("rate_bp"))

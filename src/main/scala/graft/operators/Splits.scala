@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.functions.TextFns
 
 /** Train/val/test splitting for training corpora.
   *
@@ -36,8 +36,7 @@ object Splits {
     require(trainPct >= 1 && valPct >= 0 && trainPct + valPct <= 100,
       s"split percentages must satisfy 1 <= train, 0 <= val, train+val <= 100; " +
         s"got $trainPct/$valPct")
-    val bucket = (conv(substring(md5(concat(groupCol, lit("|" + salt))), 1, 8),
-      16, 10).cast(LongType) % 100).cast("int")
+    val bucket = (TextFns.hash32(concat(groupCol, lit("|" + salt))) % 100).cast("int")
     df.withColumn("split_bucket", bucket)
       .withColumn("split",
         when(col("split_bucket") < trainPct, "train")

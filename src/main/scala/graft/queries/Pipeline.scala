@@ -1,10 +1,12 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.features.{TickerFeatures, TickerStatics}
 import graft.pipeline.{TickerFeaturePipeline, TickerValidation}
+import graft.functions.TextFns
 
 /** End-to-end drive of the ticker feature pipeline over testdata-derived
   * inputs: customers play tickers, their order series plays the price
@@ -56,33 +58,46 @@ object Pipeline {
     // stddev_samp decompose into (Σx, Σx², n) moments; every output lands
     // behind normalize's round-to-2-decimals, where the reordering's
     // last-ulp differences vanish (P1Probe2: 2.8 s -> 1.9 s for this stage).
+    // Every non-integral term is summed EXACTLY, in fixed point (QueryDef.
+    // moneySum's rule): rounded once per row to a long count of 1e-9 units,
+    // summed as longs at both levels, and turned back into a double only
+    // at the end. A double sum moves in the last ulp with the order rows
+    // arrive in, which follows the orders⨝liAgg join strategy, and the
+    // violations text prints ratios built from these sums at full
+    // precision. Longs rather than decimals: a DECIMAL(38,12) form keeps
+    // its sum buffers in BigDecimal and measured +0.16 s on this stage of
+    // a ~0.5 s p1 input build at sf0.001. Headroom: a lineitem term is
+    // below 1.1e5, so a (ticker, year) sum overflows only past ~8e4 rows.
+    // Quantity sums and counts are integral, so exact already.
+    def exact(c: Column): Column = rint(c * 1e9).cast(LongType)
     val liAgg = li.groupBy(col("l_orderkey").as("__ok")).agg(
-      sum(col("l_extendedprice")).as("__sp"),
-      sum(col("l_extendedprice") * col("l_discount")).as("__spd"),
-      sum(col("l_extendedprice") * col("l_tax")).as("__spt"),
+      sum(exact(col("l_extendedprice"))).as("__sp"),
+      sum(exact(col("l_extendedprice") * col("l_discount"))).as("__spd"),
+      sum(exact(col("l_extendedprice") * col("l_tax"))).as("__spt"),
       sum(col("l_quantity")).as("__sq"),
       sum(col("l_quantity") * col("l_quantity")).as("__sq2"),
       count(lit(1)).as("__n"),
-      sum(col("l_extendedprice") / col("l_quantity")).as("__spq"),
-      sum(col("l_extendedprice") / greatest(col("l_quantity"), lit(1.0))).as("__spq1"),
-      sum(col("l_discount")).as("__sd"))
+      sum(exact(col("l_extendedprice") / col("l_quantity"))).as("__spq"),
+      sum(exact(col("l_extendedprice") / greatest(col("l_quantity"), lit(1.0)))).as("__spq1"),
+      sum(exact(col("l_discount"))).as("__sd"))
+    def total(c: String): Column = sum(col(c)) / 1e9
     val yearlyPlan = orders.select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
       .join(liAgg, col("__ok") === col("o_orderkey"))
       .groupBy(col("o_custkey").cast(StringType).as("ticker"),
         to_date(concat(year(col("o_orderdate")), lit("-12-31"))).as("date"))
       .agg(
-        sum(col("__sp")).as("incomeBeforeTax"),
-        sum(col("__spd")).as("interestExpense"),
-        sum(col("__spt")).as("depreciationAndAmortization"),
+        total("__sp").as("incomeBeforeTax"),
+        total("__spd").as("interestExpense"),
+        total("__spt").as("depreciationAndAmortization"),
         (sum(col("__sq")) / sum(col("__n"))).as("eps"),
         (sum(col("__sq")) / sum(col("__n")) / 10).as("freeCashFlowPerShare"),
         // sample stddev from moments: sqrt((Σx² − (Σx)²/n) / (n−1)); no
         // cancellation hazard at these magnitudes (x ∈ [1,50], n ~ 40/group)
         (sqrt((sum(col("__sq2")) - sum(col("__sq")) * sum(col("__sq")) / sum(col("__n"))) /
           (sum(col("__n")) - 1)) / 100).as("dividendYield"),
-        (sum(col("__spq")) / sum(col("__n"))).as("priceEarningsRatio"),
-        (sum(col("__spq1")) / sum(col("__n"))).as("priceToFreeCashFlowsRatio"),
-        (sum(col("__sd")) / sum(col("__n")) * 10).as("payoutRatio"))
+        (total("__spq") / sum(col("__n"))).as("priceEarningsRatio"),
+        (total("__spq1") / sum(col("__n"))).as("priceToFreeCashFlowsRatio"),
+        (total("__sd") / sum(col("__n")) * 10).as("payoutRatio"))
     // the aggregate feeds income/balance/ratios — without a checkpoint each
     // block re-executes the join. PLAIN checkpoint, deliberately not
     // checkpointPartitioned (r12 A/B): the AQE-off build loses the runtime
@@ -396,8 +411,7 @@ object Pipeline {
           .otherwise((ck % 25).cast(DoubleType) / 10.0).as("payout_ratio"),
         when(ck % 19 === 0, lit(null).cast(DoubleType))
           .otherwise((ck % 22).cast(DoubleType)).as("net_debt_to_ebitda"),
-        ((conv(substring(md5(ck.cast(StringType)), 1, 8), 16, 10)
-          .cast(LongType) % 10000).cast(DoubleType) / 10000.0).as("cut_prob"))
+        ((TextFns.hash32(ck.cast(StringType)) % 10000).cast(DoubleType) / 10000.0).as("cut_prob"))
       val scored = graft.analysis.Scoring.score(feat)
       graft.analysis.Scoring.constructPortfolio(scored, n = 20,
         groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.25)
@@ -409,7 +423,7 @@ object Pipeline {
           round(col("weight"), 6).as("weight"))
         .orderBy("ticker")
     },
-    Some("""WITH feat AS (
+    Some(s"""WITH feat AS (
         SELECT CAST(c_custkey AS VARCHAR) AS ticker, c_mktsegment AS sector,
           CASE WHEN c_custkey % 23 = 0 THEN NULL
                ELSE CAST(c_custkey % 80 AS DOUBLE) / 1000.0 END AS dy,
@@ -423,8 +437,8 @@ object Pipeline {
                ELSE CAST(c_custkey % 25 AS DOUBLE) / 10.0 END AS pr,
           CASE WHEN c_custkey % 19 = 0 THEN NULL
                ELSE CAST(c_custkey % 22 AS DOUBLE) END AS nde,
-          CAST(CAST(CONCAT('0x', SUBSTR(md5(CAST(c_custkey AS VARCHAR)), 1, 8))
-            AS BIGINT) % 10000 AS DOUBLE) / 10000.0 AS cut_prob
+          CAST(${TextFns.hash32Sql("CAST(c_custkey AS VARCHAR)")} % 10000 AS DOUBLE)
+            / 10000.0 AS cut_prob
         FROM customer),
       scored AS (
         SELECT ticker, sector, cut_prob,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
 import QueryDef.moneySum
+import graft.functions.TextFns
 
 /** Eighth coverage batch: correlated EXISTS decorrelation, the NOT IN /
   * NOT EXISTS null-semantics trap, IGNORE NULLS window navigation,
@@ -202,7 +203,7 @@ object Relational7 {
           col("col").as("token"))
         .orderBy("doc_id", "pos")
     },
-    Some("""WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+    Some(s"""WITH tok AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
         FROM documents WHERE doc_id < 100)
       SELECT doc_id, i AS pos, toks[i] AS token
       FROM tok, UNNEST(generate_series(1, least(len(toks), 5))) AS t(i)
@@ -619,20 +620,10 @@ object Relational7 {
       Tables.documents(s, dir), "doc_id", "text",
       shingleK = 3, numHashes = 16, numBands = 4, jaccardThreshold = 0.5)
       .orderBy("id_a", "id_b"),
-    Some(s"""WITH tok AS (SELECT doc_id,
-        regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
-      sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-        FROM tok, UNNEST(generate_series(1, len(toks)-2)) AS t(i)
-        WHERE len(toks) >= 3),
-      seeds(seed, a, b) AS (VALUES ${graft.operators.Dedup.affineSeedsSqlValues(16)}),
-      xv AS (SELECT doc_id,
-        CAST(CONCAT('0x', SUBSTR(md5(shingle), 1, 8)) AS BIGINT) AS x FROM sh),
-      mh AS (SELECT doc_id, seed,
-        MIN((CAST(a AS BIGINT) * x + b) % 4294967311) AS mh
-        FROM xv CROSS JOIN seeds GROUP BY 1, 2),
+    Some(s"""WITH ${graft.operators.Dedup.affineSignatureSql("documents", "doc_id", "text", 16)},
       banded AS (SELECT doc_id, CAST(seed // 4 AS INT) AS band,
         string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS bkey
-        FROM mh GROUP BY 1, 2),
+        FROM sig GROUP BY 1, 2),
       hubs AS (SELECT band, bkey, MIN(doc_id) AS id_a FROM banded GROUP BY 1, 2),
       edges AS (SELECT DISTINCT h.id_a, b.doc_id AS id_b
         FROM banded b JOIN hubs h USING (band, bkey) WHERE b.doc_id <> h.id_a),

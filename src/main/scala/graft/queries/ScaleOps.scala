@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{RangeJoin, RuntimeFilters, Tables}
 import graft.operators.Chunking
+import graft.functions.TextFns
 
 /** Scale-machinery queries added in round 3: runtime-filtered joins,
   * binned range joins, chunking, PII masking, and the stream-dedup batch
@@ -38,18 +39,17 @@ object ScaleOps {
         .select(col("doc_id"), col("text"),
           explode(sequence(lit(1), length(col("text")) - (k - 1))).as("pos"))
         .select(col("doc_id"), col("pos"), length(col("text")).as("lt"),
-          conv(substring(md5(col("text").substr(col("pos"), lit(k))), 1, 8),
-            16, 10).cast(LongType).as("hv"))
+          TextFns.hash32(col("text").substr(col("pos"), lit(k))).as("hv"))
         .withColumn("fp", min(col("hv")).over(win))
         .filter(col("pos") <= col("lt") - (k + w - 2))
         .select(col("doc_id"), col("fp")).distinct()
         .orderBy("doc_id", "fp")
     },
-    Some("""WITH pos AS (SELECT doc_id, text,
+    Some(s"""WITH pos AS (SELECT doc_id, text,
         unnest(generate_series(1, len(text) - 19)) AS p
         FROM documents WHERE doc_id % 10 = 0 AND len(text) >= 27),
       h AS (SELECT doc_id, p, len(text) AS lt,
-        CAST(CONCAT('0x', SUBSTR(md5(substr(text, p, 20)), 1, 8)) AS BIGINT) AS hv
+        ${TextFns.hash32Sql("substr(text, p, 20)")} AS hv
         FROM pos),
       wm AS (SELECT doc_id, p, lt,
         MIN(hv) OVER (PARTITION BY doc_id ORDER BY p
@@ -89,7 +89,7 @@ object ScaleOps {
             .as("avg_logp"))
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+    Some(s"""WITH toks AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS t
         FROM documents),
       big AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2
         FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS u(i)
@@ -283,11 +283,11 @@ object ScaleOps {
         .withColumnRenamed("component", "cluster_id")
         .orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE sh AS (SELECT doc_id, source, lang,
+    Some(s"""WITH RECURSIVE sh AS (SELECT doc_id, source, lang,
         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
         FROM (SELECT doc_id, source, lang,
-          regexp_split_to_array(trim(text), '\s+') AS t FROM documents)),
+          ${TextFns.tokensSql("text")} AS t FROM documents)),
       pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
         FROM sh a JOIN sh b ON a.source = b.source AND a.lang = b.lang
           AND a.doc_id < b.doc_id
@@ -324,8 +324,8 @@ object ScaleOps {
             .as("oov_rate"))
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS (SELECT doc_id,
-        unnest(regexp_split_to_array(trim(text), '\s+')) AS w FROM documents),
+    Some(s"""WITH toks AS (SELECT doc_id,
+        unnest(${TextFns.tokensSql("text")}) AS w FROM documents),
       vocab AS (SELECT w FROM (SELECT w, COUNT(*) AS c FROM toks
         GROUP BY w ORDER BY c DESC, w LIMIT 16)),
       j AS (SELECT t.doc_id, t.w, v.w AS vw FROM toks t
@@ -420,13 +420,13 @@ object ScaleOps {
       li.groupBy("l_returnflag")
         .agg(
           round(graft.functions.KmvAgg.kmvDistinct(
-            graft.functions.KmvAgg.hash32(col("l_partkey")), 64), 6)
+            TextFns.hash32(col("l_partkey").cast("string")), 64), 6)
             .as("est_distinct_parts"),
           countDistinct(col("l_partkey")).as("n_distinct_parts"))
         .orderBy("l_returnflag")
     },
-    Some("""WITH h AS (SELECT DISTINCT l_returnflag AS g,
-        CAST(CONCAT('0x', SUBSTR(md5(CAST(l_partkey AS VARCHAR)), 1, 8)) AS BIGINT) AS hv
+    Some(s"""WITH h AS (SELECT DISTINCT l_returnflag AS g,
+        ${TextFns.hash32Sql("CAST(l_partkey AS VARCHAR)")} AS hv
         FROM lineitem WHERE l_partkey IS NOT NULL),
       r AS (SELECT g, hv,
         row_number() OVER (PARTITION BY g ORDER BY hv) AS rn,
@@ -467,30 +467,13 @@ object ScaleOps {
         .select(col("doc_id"),
           concat_ws(" ", slice(col("toks"), col("i"), lit(3))).as("shingle"))
         .distinct()
-      val hv = sh
-        .select(col("doc_id"),
-          graft.operators.Dedup.baseHash32(col("shingle")).as("x"))
-        .select(col("doc_id"), col("x"),
-          explode(sequence(lit(0L), lit(15L))).as("seed"))
-        .select(col("doc_id"), col("seed"),
-          graft.operators.Dedup.affineHash(col("seed"), col("x"), 16).as("h"))
-      hv.groupBy("doc_id", "seed").agg(min(col("h")).as("minhash"))
+      graft.operators.Dedup.affineSignature(sh, Seq("doc_id"), 16)
+        .withColumnRenamed("mh", "minhash")
         .orderBy("doc_id", "seed")
     },
-    Some(s"""WITH tok AS (SELECT doc_id,
-        regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM documents WHERE doc_id % 20 = 0),
-      sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-        FROM tok, UNNEST(generate_series(1, len(toks)-2)) AS t(i)
-        WHERE len(toks) >= 3),
-      seeds(seed, a, b) AS (VALUES ${graft.operators.Dedup.affineSeedsSqlValues(16)}),
-      xv AS (SELECT doc_id,
-        CAST(CONCAT('0x', SUBSTR(md5(shingle), 1, 8)) AS BIGINT) AS x FROM sh),
-      hv AS (SELECT doc_id, CAST(seed AS BIGINT) AS seed,
-        (CAST(a AS BIGINT) * x + b) % 4294967311 AS h
-        FROM xv CROSS JOIN seeds)
-      SELECT doc_id, seed, MIN(h) AS minhash FROM hv
-      GROUP BY doc_id, seed ORDER BY doc_id, seed"""))
+    Some(s"""WITH ${graft.operators.Dedup.affineSignatureSql(
+        "documents WHERE doc_id % 20 = 0", "doc_id", "text", 16)}
+      SELECT doc_id, seed, mh AS minhash FROM sig ORDER BY doc_id, seed"""))
 
   /** J2 forward variant: for each purchase, the EARLIEST view at or after
     * it by the same user (union + forward-frame window, one shuffle). */
@@ -609,8 +592,8 @@ object ScaleOps {
     (s, dir) => Chunking.chunkByTokens(Tables.documents(s, dir),
         "doc_id", "text", window = 50, stride = 40)
       .orderBy("doc_id", "chunk_idx"),
-    Some("""WITH t AS (SELECT doc_id,
-        regexp_split_to_array(trim(text), '\s+') AS toks FROM documents),
+    Some(s"""WITH t AS (SELECT doc_id,
+        ${TextFns.tokensSql("text")} AS toks FROM documents),
       st AS (SELECT doc_id, toks,
         unnest(generate_series(0, len(toks) - 1, 40)) AS s
         FROM t WHERE len(toks) >= 1)

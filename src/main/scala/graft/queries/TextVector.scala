@@ -42,13 +42,13 @@ object TextVector {
         TextFns.meanTokenLen(col("text")).as("mean_token_len"))
         .orderBy("doc_id")
     },
-    Some("""SELECT doc_id,
-      len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
-      len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]+')) AS n_bpe_tokens,
-      length(regexp_replace(text, '\s+', '', 'g')) AS n_chars_nows,
-      CASE WHEN len(regexp_split_to_array(trim(text), '\s+')) > 0
-        THEN CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
-             / len(regexp_split_to_array(trim(text), '\s+'))
+    Some(s"""SELECT doc_id,
+      len(${TextFns.tokensSql("text")}) AS n_tokens,
+      len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]+')) AS n_bpe_tokens,
+      length(regexp_replace(text, '\\s+', '', 'g')) AS n_chars_nows,
+      CASE WHEN len(${TextFns.tokensSql("text")}) > 0
+        THEN CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS DOUBLE)
+             / len(${TextFns.tokensSql("text")})
         ELSE 0.0 END AS mean_token_len
       FROM documents ORDER BY doc_id"""))
 
@@ -68,21 +68,21 @@ object TextVector {
             size(col("toks")).between(20, 2000), 1).otherwise(0).as("is_quality"))
         .orderBy("doc_id")
     },
-    Some("""SELECT doc_id,
-      len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+    Some(s"""SELECT doc_id,
+      len(list_filter(${TextFns.tokensSql("text")},
         x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS stopword_hits,
-      CASE WHEN len(regexp_split_to_array(trim(text), '\s+')) > 0
-        THEN CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      CASE WHEN len(${TextFns.tokensSql("text")}) > 0
+        THEN CAST(len(list_filter(${TextFns.tokensSql("text")},
           x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS DOUBLE)
-          / len(regexp_split_to_array(trim(text), '\s+'))
+          / len(${TextFns.tokensSql("text")})
         ELSE 0.0 END AS stop_ratio,
       length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS punct_chars,
-      CASE WHEN (CASE WHEN len(regexp_split_to_array(trim(text), '\s+')) > 0
-          THEN CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      CASE WHEN (CASE WHEN len(${TextFns.tokensSql("text")}) > 0
+          THEN CAST(len(list_filter(${TextFns.tokensSql("text")},
             x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS DOUBLE)
-            / len(regexp_split_to_array(trim(text), '\s+'))
+            / len(${TextFns.tokensSql("text")})
           ELSE 0.0 END) > 0.02
-        AND len(regexp_split_to_array(trim(text), '\s+')) BETWEEN 20 AND 2000
+        AND len(${TextFns.tokensSql("text")}) BETWEEN 20 AND 2000
         THEN 1 ELSE 0 END AS is_quality
       FROM documents ORDER BY doc_id"""))
 
@@ -101,16 +101,16 @@ object TextVector {
         TextFns.langIdHeuristicOf(col("toks")).as("predicted_lang"))
         .orderBy("doc_id")
     },
-    Some("""WITH sc AS (SELECT doc_id,
-        len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+    Some(s"""WITH sc AS (SELECT doc_id,
+        len(list_filter(${TextFns.tokensSql("text")},
           x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS s_en,
-        len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+        len(list_filter(${TextFns.tokensSql("text")},
           x -> x IN ('der','die','das','und','ist','nicht','ein','mit','von','zu'))) AS s_de,
-        len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+        len(list_filter(${TextFns.tokensSql("text")},
           x -> x IN ('el','la','de','que','y','en','un','por','con','para'))) AS s_es,
-        len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+        len(list_filter(${TextFns.tokensSql("text")},
           x -> x IN ('le','la','les','et','un','une','dans','est','pour','que'))) AS s_fr,
-        len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+        len(list_filter(${TextFns.tokensSql("text")},
           x -> x IN ('的','是','了','在','我','有','和','就','不','人'))) AS s_zh
       FROM documents)
       SELECT doc_id, s_en, s_de, s_es, s_fr, s_zh,
@@ -151,19 +151,8 @@ object TextVector {
           round(col("jaccard"), 6).as("jaccard"))
       jvm.union(md5f).orderBy("family", "id_a", "id_b")
     },
-    Some(s"""WITH tok AS (SELECT doc_id,
-        regexp_split_to_array(trim(text), '\\s+') AS toks FROM documents),
-      sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-        FROM tok, UNNEST(generate_series(1, len(toks)-2)) AS t(i)
-        WHERE len(toks) >= 3),
+    Some(s"""WITH ${Dedup.affineSignatureSql("documents", "doc_id", "text", 16)},
       shset AS (SELECT doc_id, list(shingle) AS s FROM sh GROUP BY doc_id),
-      seeds(seed, a, b) AS (VALUES ${graft.operators.Dedup.affineSeedsSqlValues(16)}),
-      xv AS (SELECT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(shingle), 1, 8)) AS BIGINT) AS x
-        FROM sh),
-      sig AS (SELECT doc_id, seed,
-          MIN((CAST(a AS BIGINT) * x + b) % 4294967311) AS mh
-        FROM xv CROSS JOIN seeds GROUP BY 1, 2),
       banded AS (SELECT doc_id, CAST(seed // 4 AS INT) AS band,
           array_to_string(list(CAST(mh AS VARCHAR) ORDER BY seed), ',') AS bkey
         FROM sig GROUP BY 1, 2),
@@ -189,10 +178,10 @@ object TextVector {
       threshold = 0.05)
       .withColumn("jaccard", round(col("jaccard"), 6))
       .orderBy("id_a", "id_b"),
-    Some("""WITH sh AS (SELECT doc_id, source, lang,
+    Some(s"""WITH sh AS (SELECT doc_id, source, lang,
         list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-      FROM (SELECT doc_id, source, lang, regexp_split_to_array(trim(text), '\s+') AS t FROM documents))
+      FROM (SELECT doc_id, source, lang, ${TextFns.tokensSql("text")} AS t FROM documents))
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
           / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
@@ -226,11 +215,11 @@ object TextVector {
         TextFns.minShingleFingerprintOf(col("toks"), col("text"), 5)
           .as("fingerprint"))
       .orderBy("doc_id"),
-    Some("""SELECT doc_id,
+    Some(s"""SELECT doc_id,
       COALESCE(list_min(list_transform(range(1, greatest(len(t) - 3, 1)),
         i -> md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))),
         md5(trim(text))) AS fingerprint
-      FROM (SELECT doc_id, text, regexp_split_to_array(trim(text), '\s+') AS t FROM documents)
+      FROM (SELECT doc_id, text, ${TextFns.tokensSql("text")} AS t FROM documents)
       ORDER BY doc_id"""))
 
   /** Rolling-hash winnowing fingerprints (custom Catalyst expression) +
@@ -278,11 +267,11 @@ object TextVector {
             .cast(LongType).as("n_removed"))
         .orderBy("doc_id")
     },
-    Some("""SELECT doc_id,
-      array_to_string(list_filter(regexp_split_to_array(trim(text), '\s+'),
+    Some(s"""SELECT doc_id,
+      array_to_string(list_filter(${TextFns.tokensSql("text")},
         t -> t NOT IN ('the','a','of','and','to','in','is','that','it','for')), ' ') AS clean_text,
-      len(regexp_split_to_array(trim(text), '\s+'))
-        - len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      len(${TextFns.tokensSql("text")})
+        - len(list_filter(${TextFns.tokensSql("text")},
             t -> t NOT IN ('the','a','of','and','to','in','is','that','it','for'))) AS n_removed
       FROM documents ORDER BY doc_id"""))
 
@@ -311,20 +300,8 @@ object TextVector {
       exact AS (
         SELECT doc_id, t FROM norm
         QUALIFY row_number() OVER (PARTITION BY md5(t) ORDER BY doc_id) = 1),
-      tok AS (SELECT doc_id, regexp_split_to_array(t, '\\s+') AS toks FROM exact),
-      sh AS (
-        SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-        FROM tok, UNNEST(generate_series(1, len(toks)-2)) AS u(i)
-        WHERE len(toks) >= 3),
+      ${Dedup.affineSignatureSql("exact", "doc_id", "t", 16)},
       shsz AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY 1),
-      seeds(seed, a, b) AS (VALUES ${graft.operators.Dedup.affineSeedsSqlValues(16)}),
-      xv AS (
-        SELECT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(shingle), 1, 8)) AS BIGINT) AS x
-        FROM sh),
-      sig AS (SELECT doc_id, seed,
-        MIN((CAST(a AS BIGINT) * x + b) % 4294967311) AS mh
-        FROM xv CROSS JOIN seeds GROUP BY 1, 2),
       banded AS (
         SELECT doc_id, CAST(seed // 4 AS INT) AS band,
           array_to_string(list(CAST(mh AS VARCHAR) ORDER BY seed), ',') AS bkey
@@ -388,7 +365,7 @@ object TextVector {
             .as("dup_bigram_frac"))
         .orderBy("doc_id")
     },
-    Some("""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+    Some(s"""WITH t AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
         FROM documents),
       b AS (SELECT doc_id, len(toks) AS n_tokens, len(list_distinct(toks)) AS n_distinct,
           unnest(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS bigram
@@ -407,8 +384,7 @@ object TextVector {
     * identical on any engine). */
   val d13 = QueryDef("d13_stratified_sample",
     (s, dir) => {
-      val bucket = conv(substring(md5(col("doc_id").cast(StringType)), 1, 8), 16, 10)
-        .cast(LongType) % 100
+      val bucket = TextFns.hash32(col("doc_id").cast(StringType)) % 100
       val rate = when(col("lang") === "en", 40)
         .when(col("lang") === "zh", 80)
         .otherwise(100)
@@ -418,9 +394,9 @@ object TextVector {
         .select(col("doc_id"), col("lang"), col("source"), col("bucket"))
         .orderBy("doc_id")
     },
-    Some("""SELECT doc_id, lang, source, bucket FROM (
+    Some(s"""SELECT doc_id, lang, source, bucket FROM (
         SELECT doc_id, lang, source,
-          CAST(CONCAT('0x', SUBSTR(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket,
+          ${TextFns.hash32Sql("CAST(doc_id AS VARCHAR)")} % 100 AS bucket,
           CASE WHEN lang = 'en' THEN 40 WHEN lang = 'zh' THEN 80 ELSE 100 END AS rate
         FROM documents) t
       WHERE bucket < rate ORDER BY doc_id"""))
@@ -446,8 +422,8 @@ object TextVector {
           round(sum(col("n")).cast(DoubleType) / budget, 6).as("fill_ratio"))
         .orderBy("lang", "seq_id")
     },
-    Some("""WITH t AS (SELECT doc_id, lang,
-        len(regexp_split_to_array(trim(text), '\s+')) AS n FROM documents),
+    Some(s"""WITH t AS (SELECT doc_id, lang,
+        len(${TextFns.tokensSql("text")}) AS n FROM documents),
       c AS (SELECT doc_id, lang, n,
         SUM(n) OVER (PARTITION BY lang ORDER BY doc_id
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t)
@@ -477,10 +453,10 @@ object TextVector {
           countDistinct(col("bench_id")).as("n_bench_docs"))
         .orderBy("doc_id")
     },
-    Some("""WITH sh AS (SELECT doc_id,
+    Some(s"""WITH sh AS (SELECT doc_id,
         unnest(list_distinct(list_transform(range(1, greatest(len(t) - 3, 1)),
           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4]))) AS shingle
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents)
+        FROM (SELECT doc_id, ${TextFns.tokensSql("text")} AS t FROM documents)
         WHERE len(t) >= 5),
       bench AS (SELECT DISTINCT shingle, doc_id AS bench_id FROM sh WHERE doc_id < 20)
       SELECT s.doc_id,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.core.Tables
 import graft.operators.Bpe
+import graft.functions.TextFns
 
 /** Thirteenth coverage batch: the BPE subword tokenizer
   * ([[graft.operators.Bpe]], Sennrich et al. 2016) judged end to end —
@@ -180,8 +181,8 @@ object TextVector10 {
   /** The shared oracle prefix: word counts from `documents`, then K
     * chained merge iterations. */
   private def chain: String = Bpe.oracleMergeChain(
-    """SELECT word, CAST(count(*) AS BIGINT) AS cnt
-      |      FROM (SELECT UNNEST(regexp_split_to_array(trim(text), '\s+')) AS word
+    s"""SELECT word, CAST(count(*) AS BIGINT) AS cnt
+      |      FROM (SELECT UNNEST(${TextFns.tokensSql("text")}) AS word
       |            FROM documents)
       |      WHERE word <> '' AND strpos(word, chr(31)) = 0
       |      GROUP BY 1""".stripMargin, K)
@@ -239,7 +240,7 @@ object TextVector10 {
     Some(s"""WITH $chain,
       dw AS (SELECT doc_id, word
         FROM (SELECT doc_id,
-            UNNEST(regexp_split_to_array(trim(text), '\\s+')) AS word
+            UNNEST(${TextFns.tokensSql("text")}) AS word
           FROM documents)
         WHERE word <> '' AND strpos(word, chr(31)) = 0),
       nn AS (SELECT word,
@@ -287,13 +288,13 @@ object TextVector10 {
         SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
         UNION ALL
         SELECT doc_id + 4000000000, array_to_string(t[1:10], ' ') AS text
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+        FROM (SELECT doc_id, ${TextFns.tokensSql("text")} AS t
               FROM documents WHERE doc_id % 2 = 0)
         WHERE doc_id % 40 = 0 AND len(t) >= 15),
-      tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+      tok AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS t
         FROM docs),
       sh AS (SELECT DISTINCT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 8)) AS BIGINT) AS sh
+          ${TextFns.hash32Sql("t[i] || ' ' || t[i+1] || ' ' || t[i+2]")} AS sh
         FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
         WHERE len(t) >= 3),
       kept AS (SELECT doc_id, sh, count(*) OVER (PARTITION BY doc_id) AS n

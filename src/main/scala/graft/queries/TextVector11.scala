@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.VectorExprs
+import graft.functions.TextFns
 
 /** Fourteenth coverage batch: bounded-memory frequency sketching —
   * Count-Min heavy-hitter estimation (d70, [[graft.operators.CountMin]])
@@ -126,27 +127,24 @@ object TextVector11 {
           (col("cms_est") > col("exact_cnt")).as("overestimated"))
         .orderBy("token")
     },
-    Some("""WITH toks AS (
+    Some(s"""WITH toks AS (
         SELECT word AS token FROM (
-          SELECT UNNEST(regexp_split_to_array(trim(text), '\s+')) AS word
+          SELECT UNNEST(${TextFns.tokensSql("text")}) AS word
           FROM documents)
         WHERE word <> ''),
       exact AS (SELECT token, CAST(count(*) AS BIGINT) AS exact_cnt
         FROM toks GROUP BY 1),
       top AS (SELECT token, exact_cnt FROM exact
         ORDER BY exact_cnt DESC, token ASC LIMIT 20),
-      cms AS (SELECT seed, CAST(CONCAT('0x',
-            SUBSTR(md5(CAST(seed AS VARCHAR) || ':' || token), 1, 8))
-            AS BIGINT) % 1024 AS bucket,
+      cms AS (SELECT seed,
+          ${TextFns.hash32Sql("CAST(seed AS VARCHAR) || ':' || token")} % 1024 AS bucket,
           CAST(count(*) AS BIGINT) AS cnt
         FROM toks, UNNEST(generate_series(0, 3)) AS sd(seed)
         GROUP BY 1, 2),
       est AS (SELECT t.token,
           CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS cms_est
         FROM (SELECT token, seed,
-            CAST(CONCAT('0x',
-              SUBSTR(md5(CAST(seed AS VARCHAR) || ':' || token), 1, 8))
-              AS BIGINT) % 1024 AS bucket
+            ${TextFns.hash32Sql("CAST(seed AS VARCHAR) || ':' || token")} % 1024 AS bucket
           FROM top, UNNEST(generate_series(0, 3)) AS sd(seed)) t
         LEFT JOIN cms c ON t.seed = c.seed AND t.bucket = c.bucket
         GROUP BY 1)

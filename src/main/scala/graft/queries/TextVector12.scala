@@ -79,9 +79,9 @@ object TextVector12 {
           round(col("score"), 4).as("score_r"))
         .orderBy("term", "rank")
     },
-    Some("""WITH tf AS (SELECT term, doc_id, COUNT(*) AS tf
+    Some(s"""WITH tf AS (SELECT term, doc_id, COUNT(*) AS tf
         FROM (SELECT doc_id,
-            unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+            unnest(${TextFns.tokensSql("text")}) AS term
           FROM documents) GROUP BY 1, 2),
       dl AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
       stats AS (SELECT COUNT(*) AS n, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
@@ -202,12 +202,12 @@ object TextVector12 {
             (col("c1") * col("c2")).cast(DoubleType), 6).as("score_r"))
         .orderBy("w1", "w2")
     },
-    Some("""WITH docs AS (
+    Some(s"""WITH docs AS (
         SELECT doc_id, text FROM documents
         UNION ALL
         SELECT doc_id + 5000000000, 'new_york city new_york city new_york city'
         FROM documents WHERE doc_id % 25 = 0),
-      toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM docs),
+      toks AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS t FROM docs),
       uni AS (SELECT w, COUNT(*) AS c
         FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
       nt AS (SELECT COUNT(*) AS n FROM (SELECT unnest(t) AS w FROM toks)),
@@ -282,7 +282,7 @@ object TextVector12 {
           round(avg(log(col("p"))), 6).as("avg_logp_kn"))
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+    Some(s"""WITH toks AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS t
         FROM documents),
       big AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2
         FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS u(i)

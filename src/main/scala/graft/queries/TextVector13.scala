@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.core.Tables
 import graft.functions.VectorExprs
 import graft.operators.Bpe
+import graft.functions.TextFns
 
 /** Sixteenth coverage batch: serving-efficiency and governance operators —
   *
@@ -158,15 +159,15 @@ object TextVector13 {
     },
     Some {
       val chain = Bpe.oracleMergeChain(
-        """SELECT word, CAST(count(*) AS BIGINT) AS cnt
-          |      FROM (SELECT UNNEST(regexp_split_to_array(trim(text), '\s+')) AS word
+        s"""SELECT word, CAST(count(*) AS BIGINT) AS cnt
+          |      FROM (SELECT UNNEST(${TextFns.tokensSql("text")}) AS word
           |            FROM documents)
           |      WHERE word <> '' AND strpos(word, chr(31)) = 0
           |      GROUP BY 1""".stripMargin, K)
       s"""WITH $chain,
       dw AS (SELECT lang, word
         FROM (SELECT lang,
-            UNNEST(regexp_split_to_array(trim(text), '\\s+')) AS word
+            UNNEST(${TextFns.tokensSql("text")}) AS word
           FROM documents)
         WHERE word <> '' AND strpos(word, chr(31)) = 0),
       nn AS (SELECT word,

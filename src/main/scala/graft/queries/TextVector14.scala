@@ -71,8 +71,8 @@ object TextVector14 {
               (n * col("syy") - col("sy") * col("sy"))), 6).as("r2_r"))
         .orderBy("n_vocab")
     },
-    Some("""WITH vocab AS (SELECT token, COUNT(*) AS cnt
-        FROM (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS token
+    Some(s"""WITH vocab AS (SELECT token, COUNT(*) AS cnt
+        FROM (SELECT unnest(${TextFns.tokensSql("text")}) AS token
               FROM documents)
         WHERE token <> '' GROUP BY 1),
       ranked AS (SELECT cnt,
@@ -116,8 +116,8 @@ object TextVector14 {
         .select(col("doc_id"), col("n"), col("n_spans"), col("seg_len"),
           explode(sequence(lit(1L), col("n_spans"))).as("span_idx"))
         .withColumn("off",
-          conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
-            col("span_idx").cast("string"))), 1, 8), 16, 10).cast(LongType)
+          TextFns.hash32(concat(col("doc_id").cast("string"), lit(":"),
+            col("span_idx").cast("string")))
             % (col("seg_len") - 2))
         .select(col("doc_id"), col("span_idx"), col("n").as("n_tokens"),
           col("n_spans"),
@@ -126,8 +126,8 @@ object TextVector14 {
           round(col("n_spans") * lit(3.0) / col("n"), 6).as("mask_frac_r"))
         .orderBy("doc_id", "span_idx")
     },
-    Some("""WITH base AS (SELECT doc_id,
-        CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n
+    Some(s"""WITH base AS (SELECT doc_id,
+        CAST(len(${TextFns.tokensSql("text")}) AS BIGINT) AS n
         FROM documents),
       spans AS (SELECT doc_id, n,
         greatest(1, (n + 10) // 20) AS n_spans,
@@ -137,8 +137,8 @@ object TextVector14 {
         unnest(generate_series(1, n_spans)) AS span_idx FROM spans)
       SELECT doc_id, span_idx, n AS n_tokens, n_spans,
         (span_idx - 1) * seg_len + 1 +
-          (CAST(CONCAT('0x', SUBSTR(md5(CAST(doc_id AS VARCHAR) || ':' ||
-            CAST(span_idx AS VARCHAR)), 1, 8)) AS BIGINT) % (seg_len - 2))
+          (${TextFns.hash32Sql(
+            "CAST(doc_id AS VARCHAR) || ':' || CAST(span_idx AS VARCHAR)")} % (seg_len - 2))
           AS span_start,
         ROUND(n_spans * 3.0 / n, 6) AS mask_frac_r
       FROM ex ORDER BY doc_id, span_idx"""))
@@ -194,9 +194,9 @@ object TextVector14 {
           round(col("cos"), 4).as("cos_r"))
         .orderBy("query_id", "rank")
     },
-    Some("""WITH tf AS (SELECT doc_id, term, COUNT(*) AS tf
+    Some(s"""WITH tf AS (SELECT doc_id, term, COUNT(*) AS tf
         FROM (SELECT doc_id,
-            unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+            unnest(${TextFns.tokensSql("text")}) AS term
           FROM documents)
         WHERE term <> '' GROUP BY 1, 2),
       nd AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents),
@@ -247,24 +247,21 @@ object TextVector14 {
           (col("cms_est") > col("exact_cnt")).as("overestimated"))
         .orderBy("user_key")
     },
-    Some("""WITH toks AS (SELECT CAST(user_id AS VARCHAR) AS user_key
+    Some(s"""WITH toks AS (SELECT CAST(user_id AS VARCHAR) AS user_key
         FROM events),
       exact AS (SELECT user_key, CAST(count(*) AS BIGINT) AS exact_cnt
         FROM toks GROUP BY 1),
       top AS (SELECT user_key, exact_cnt FROM exact
         ORDER BY exact_cnt DESC, user_key ASC LIMIT 10),
-      cms AS (SELECT seed, CAST(CONCAT('0x',
-            SUBSTR(md5(CAST(seed AS VARCHAR) || ':' || user_key), 1, 8))
-            AS BIGINT) % 256 AS bucket,
+      cms AS (SELECT seed,
+          ${TextFns.hash32Sql("CAST(seed AS VARCHAR) || ':' || user_key")} % 256 AS bucket,
           CAST(count(*) AS BIGINT) AS cnt
         FROM toks, UNNEST(generate_series(0, 3)) AS sd(seed)
         GROUP BY 1, 2),
       est AS (SELECT t.user_key,
           CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS cms_est
         FROM (SELECT user_key, seed,
-            CAST(CONCAT('0x',
-              SUBSTR(md5(CAST(seed AS VARCHAR) || ':' || user_key), 1, 8))
-              AS BIGINT) % 256 AS bucket
+            ${TextFns.hash32Sql("CAST(seed AS VARCHAR) || ':' || user_key")} % 256 AS bucket
           FROM top, UNNEST(generate_series(0, 3)) AS sd(seed)) t
         LEFT JOIN cms c ON t.seed = c.seed AND t.bucket = c.bucket
         GROUP BY 1)

@@ -98,7 +98,7 @@ object TextVector15 {
     Some(s"""WITH base AS (SELECT doc_id, text FROM documents
         WHERE doc_id % 20 = 0 AND doc_id < 5000),
       toked AS (SELECT doc_id, text,
-          regexp_split_to_array(trim(text), '\\s+') AS t
+          ${TextFns.tokensSql("text")} AS t
         FROM base),
       long_docs AS (SELECT * FROM toked WHERE len(t) >= 15),
       docs AS (
@@ -110,23 +110,12 @@ object TextVector15 {
         SELECT doc_id + 7000000000,
           array_to_string(t[1:greatest(len(t)*2//5, 3)], ' ')
         FROM long_docs WHERE doc_id % 40 <> 0),
-      tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM docs),
-      sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-        FROM tok, UNNEST(generate_series(1, len(toks)-2)) AS t(i)
-        WHERE len(toks) >= 3),
+      ${Dedup.affineSignatureSql("docs", "doc_id", "text", 16)},
       sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
       inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
           CAST(COUNT(*) AS BIGINT) AS n_int
         FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2),
-      seeds(seed, a, b) AS (VALUES ${Dedup.affineSeedsSqlValues(16)}),
-      xv AS (SELECT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(shingle), 1, 8)) AS BIGINT) AS x
-        FROM sh),
-      sig AS (SELECT doc_id, seed,
-          MIN((CAST(a AS BIGINT) * x + b) % 4294967311) AS mh
-        FROM xv CROSS JOIN seeds GROUP BY 1, 2),
       banded AS (SELECT doc_id, CAST(seed // 4 AS INT) AS band,
           array_to_string(list(CAST(mh AS VARCHAR) ORDER BY seed), ',') AS bkey
         FROM sig GROUP BY 1, 2),
@@ -205,8 +194,8 @@ object TextVector15 {
           round(col("w_new"), 6).as("w_new_r"))
         .orderBy("source")
     },
-    Some("""WITH big AS (SELECT source, t[i] AS w1, t[i+1] AS w2
-        FROM (SELECT source, regexp_split_to_array(trim(text), '\s+') AS t
+    Some(s"""WITH big AS (SELECT source, t[i] AS w1, t[i+1] AS w2
+        FROM (SELECT source, ${TextFns.tokensSql("text")} AS t
               FROM documents),
           UNNEST(generate_series(1, len(t) - 1)) AS u(i)
         WHERE len(t) >= 2),
@@ -288,7 +277,7 @@ object TextVector15 {
     Some(s"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents
         WHERE doc_id % 20 = 0 AND doc_id < 5000),
       toked AS (SELECT doc_id, text,
-          regexp_split_to_array(trim(text), '\\s+') AS t
+          ${TextFns.tokensSql("text")} AS t
         FROM base),
       long_docs AS (SELECT * FROM toked WHERE len(t) >= 15),
       docs AS (
@@ -300,23 +289,12 @@ object TextVector15 {
         SELECT doc_id + 7000000000,
           array_to_string(t[1:greatest(len(t)*2//5, 3)], ' ')
         FROM long_docs WHERE doc_id % 40 <> 0),
-      tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM docs),
-      sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-        FROM tok, UNNEST(generate_series(1, len(toks)-2)) AS t(i)
-        WHERE len(toks) >= 3),
+      ${Dedup.affineSignatureSql("docs", "doc_id", "text", 16)},
       sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
       inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
           CAST(COUNT(*) AS BIGINT) AS n_int
         FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2),
-      seeds(seed, a, b) AS (VALUES ${Dedup.affineSeedsSqlValues(16)}),
-      xv AS (SELECT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(shingle), 1, 8)) AS BIGINT) AS x
-        FROM sh),
-      sig AS (SELECT doc_id, seed,
-          MIN((CAST(a AS BIGINT) * x + b) % 4294967311) AS mh
-        FROM xv CROSS JOIN seeds GROUP BY 1, 2),
       banded AS (SELECT doc_id, CAST(seed // 4 AS INT) AS band,
           array_to_string(list(CAST(mh AS VARCHAR) ORDER BY seed), ',') AS bkey
         FROM sig GROUP BY 1, 2),
@@ -389,14 +367,9 @@ object TextVector15 {
         .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         .agg(count(lit(1)).as("n_int"))
         .filter(col("n_int") >= 2)
-      val bits = sh
-        .select(col("doc_id"), explode(col("sh")).as("shingle"))
-        .select(col("doc_id"), Dedup.baseHash32(col("shingle")).as("x"))
-        .select(col("doc_id"), col("x"),
-          explode(sequence(lit(0L), lit(15L))).as("seed"))
-        .select(col("doc_id"), col("seed"),
-          Dedup.affineHash(col("seed"), col("x"), 16).as("h"))
-        .groupBy("doc_id", "seed").agg((min(col("h")) % 2).as("bit"))
+      val bits = Dedup.affineSignature(
+          sh.select(col("doc_id"), explode(col("sh")).as("shingle")), Seq("doc_id"), 16)
+        .select(col("doc_id"), col("seed"), (col("mh") % 2).as("bit"))
       inter
         .join(bits.select(col("doc_id").as("id_a"), col("seed"),
           col("bit").as("bit_a")), Seq("id_a"))
@@ -417,7 +390,7 @@ object TextVector15 {
     Some(s"""WITH base AS (SELECT doc_id, text FROM documents
         WHERE doc_id % 20 = 0 AND doc_id < 5000),
       toked AS (SELECT doc_id, text,
-          regexp_split_to_array(trim(text), '\\s+') AS t
+          ${TextFns.tokensSql("text")} AS t
         FROM base),
       long_docs AS (SELECT * FROM toked WHERE len(t) >= 15),
       docs AS (
@@ -429,23 +402,13 @@ object TextVector15 {
         SELECT doc_id + 7000000000,
           array_to_string(t[1:greatest(len(t)*2//5, 3)], ' ')
         FROM long_docs WHERE doc_id % 40 <> 0),
-      tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM docs),
-      sh AS (SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
-        FROM tok, UNNEST(generate_series(1, len(toks)-2)) AS t(i)
-        WHERE len(toks) >= 3),
+      ${Dedup.affineSignatureSql("docs", "doc_id", "text", 16)},
       sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
       inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
           CAST(COUNT(*) AS BIGINT) AS n_int
         FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-      seeds(seed, a, b) AS (VALUES ${Dedup.affineSeedsSqlValues(16)}),
-      xv AS (SELECT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(shingle), 1, 8)) AS BIGINT) AS x
-        FROM sh),
-      bits AS (SELECT doc_id, CAST(seed AS BIGINT) AS seed,
-          MIN((CAST(a AS BIGINT) * x + b) % 4294967311) % 2 AS bit
-        FROM xv CROSS JOIN seeds GROUP BY 1, 2)
+      bits AS (SELECT doc_id, seed, mh % 2 AS bit FROM sig)
       SELECT i.id_a, i.id_b,
         ROUND(CAST(i.n_int AS DOUBLE) / (na.n + nb.n - i.n_int), 6) AS jaccard_r,
         CAST(SUM(CASE WHEN ba.bit = bb.bit THEN 1 ELSE 0 END) AS BIGINT) AS agree16,

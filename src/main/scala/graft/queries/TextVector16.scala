@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.core.Tables
 import graft.operators.Classifier
+import graft.functions.TextFns
 
 /** Nineteenth coverage batch: embedding linear algebra + classifier
   * diagnostics —
@@ -153,11 +154,11 @@ object TextVector16 {
           round(col("ece"), 6).as("ece_r"))
         .orderBy("bin")
     },
-    Some("""WITH tokd AS (SELECT doc_id, (source IN ('src0','src1','src2')) AS pos,
-          unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+    Some(s"""WITH tokd AS (SELECT doc_id, (source IN ('src0','src1','src2')) AS pos,
+          unnest(${TextFns.tokensSql("text")}) AS tok
         FROM documents),
       feats AS (SELECT DISTINCT doc_id, pos,
-          CAST(CONCAT('0x', SUBSTR(md5(tok), 1, 8)) AS BIGINT) % 4096 AS bucket
+          ${TextFns.hash32Sql("tok")} % 4096 AS bucket
         FROM tokd),
       tot AS (SELECT count(*) FILTER (WHERE pos) AS np,
           count(*) FILTER (WHERE NOT pos) AS nn
@@ -218,11 +219,11 @@ object TextVector16 {
           (col("n_hit") * 10 >= col("n_8grams") * 7).as("dirty"))
         .orderBy("doc_id")
     },
-    Some("""WITH sh AS (SELECT doc_id,
+    Some(s"""WITH sh AS (SELECT doc_id,
         unnest(list_distinct(list_transform(range(1, greatest(len(t) - 6, 1)),
           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' '
             || t[i+4] || ' ' || t[i+5] || ' ' || t[i+6] || ' ' || t[i+7]))) AS g
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+        FROM (SELECT doc_id, ${TextFns.tokensSql("text")} AS t
               FROM documents)
         WHERE len(t) >= 8),
       train AS (SELECT DISTINCT g FROM sh WHERE doc_id >= 20)

@@ -56,8 +56,8 @@ object TextVector2 {
   val d26 = QueryDef("d26_tfidf",
     (s, dir) => tfidfTop(Tables.documents(s, dir), topK = 3)
       .orderBy("doc_id", "rank"),
-    Some("""WITH tf AS (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+    Some(s"""WITH tf AS (
+        SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS term
         FROM documents),
       tfc AS (SELECT doc_id, term, COUNT(*) AS tf FROM tf GROUP BY 1, 2),
       df AS (SELECT term, COUNT(*) AS df FROM tfc GROUP BY 1),
@@ -83,10 +83,10 @@ object TextVector2 {
   val d27 = QueryDef("d27_inverted_index",
     (s, dir) => invertedIndex(Tables.documents(s, dir), postingCap = 8)
       .orderBy("term"),
-    Some("""WITH tfc AS (
+    Some(s"""WITH tfc AS (
         SELECT doc_id, term, COUNT(*) AS tf
         FROM (SELECT doc_id,
-                unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+                unnest(${TextFns.tokensSql("text")}) AS term
               FROM documents) t
         GROUP BY 1, 2)
       SELECT term, COUNT(*) AS df, CAST(SUM(tf) AS BIGINT) AS total_tf,

@@ -258,10 +258,10 @@ object TextVector3 {
     * can't flip the gate (d26's lesson). */
   val d29 = QueryDef("d29_token_entropy",
     (s, dir) => tokenEntropy(Tables.documents(s, dir)).orderBy("doc_id"),
-    Some("""WITH cnt AS (
+    Some(s"""WITH cnt AS (
         SELECT doc_id, tok, COUNT(*) AS c
         FROM (SELECT doc_id,
-                unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+                unnest(${TextFns.tokensSql("text")}) AS tok
               FROM documents) t
         GROUP BY 1, 2),
       agg AS (

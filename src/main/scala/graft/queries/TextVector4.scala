@@ -49,7 +49,7 @@ object TextVector4 {
             round(col("n_dup_segments") / col("n_segments"), 9)).as("dup_frac"))
         .orderBy("doc_id")
     },
-    Some("""WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+    Some(s"""WITH tok AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
         FROM documents),
       seg AS (SELECT doc_id,
           md5(array_to_string(toks[(i-1)*20+1:(i-1)*20+20], ' ')) AS h
@@ -100,10 +100,10 @@ object TextVector4 {
           "short_frac", "quality_rank")
         .orderBy("source")
     },
-    Some("""WITH per AS (SELECT source, COUNT(*) AS n_docs,
-        CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS total_words,
+    Some(s"""WITH per AS (SELECT source, COUNT(*) AS n_docs,
+        CAST(SUM(len(${TextFns.tokensSql("text")})) AS BIGINT) AS total_words,
         COUNT(DISTINCT lang) AS n_langs,
-        COUNT(*) FILTER (WHERE len(regexp_split_to_array(trim(text), '\s+')) < 30) AS n_short
+        COUNT(*) FILTER (WHERE len(${TextFns.tokensSql("text")}) < 30) AS n_short
         FROM documents GROUP BY source)
       SELECT source, n_docs, total_words, n_langs,
         round(total_words::DOUBLE / n_docs::DOUBLE, 9) AS avg_words,
@@ -138,7 +138,7 @@ object TextVector4 {
           round(col("n_shared") / col("n_grams"), 9).as("coverage"))
         .orderBy("doc_id")
     },
-    Some("""WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
+    Some(s"""WITH tok AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS toks
         FROM documents),
       g AS (SELECT DISTINCT doc_id, md5(array_to_string(toks[i:i+4], ' ')) AS h
         FROM tok, UNNEST(generate_series(1, len(toks)-4)) AS t(i)
@@ -196,14 +196,7 @@ object TextVector4 {
           concat_ws(" ", slice(col("toks"), col("i"), lit(3))).as("shingle"))
         .distinct()
         .localCheckpoint(false)
-      val mh = sh
-        .select(col("doc_id"), col("lang"),
-          graft.operators.Dedup.baseHash32(col("shingle")).as("x"))
-        .select(col("doc_id"), col("lang"), col("x"),
-          explode(sequence(lit(0L), lit(15L))).as("seed"))
-        .select(col("doc_id"), col("lang"), col("seed"),
-          graft.operators.Dedup.affineHash(col("seed"), col("x"), 16).as("h"))
-        .groupBy("doc_id", "lang", "seed").agg(min(col("h")).as("mh"))
+      val mh = graft.operators.Dedup.affineSignature(sh, Seq("doc_id", "lang"), 16)
       val est = mh.alias("a")
         .join(mh.alias("b"),
           col("a.lang") === col("b.lang") && col("a.seed") === col("b.seed") &&
@@ -241,22 +234,10 @@ object TextVector4 {
         UNION ALL
         SELECT doc_id + 1000000000, lang, text || ' twindupmarker'
         FROM documents WHERE doc_id % 100 = 0),
-      tok AS (SELECT doc_id, lang,
-        regexp_split_to_array(trim(text), '\\s+') AS toks
-        FROM base),
-      sh AS (SELECT DISTINCT doc_id, lang, array_to_string(toks[i:i+2], ' ') AS shingle
-        FROM tok, UNNEST(generate_series(1, len(toks)-2)) AS t(i)
-        WHERE len(toks) >= 3),
-      seeds(seed, a, b) AS (VALUES ${graft.operators.Dedup.affineSeedsSqlValues(16)}),
-      mh AS (SELECT doc_id, lang, s.seed,
-          MIN((CAST(s.a AS BIGINT) *
-            CAST(CONCAT('0x', SUBSTR(md5(shingle), 1, 8)) AS BIGINT) + s.b)
-            % 4294967311) AS mh
-        FROM sh CROSS JOIN seeds s
-        GROUP BY doc_id, lang, s.seed),
+      ${graft.operators.Dedup.affineSignatureSql("base", "doc_id, lang", "text", 16)},
       est AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
           round(AVG(CASE WHEN a.mh = b.mh THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END), 9) AS est_jaccard
-        FROM mh a JOIN mh b ON a.lang = b.lang AND a.seed = b.seed AND a.doc_id < b.doc_id
+        FROM sig a JOIN sig b ON a.lang = b.lang AND a.seed = b.seed AND a.doc_id < b.doc_id
         GROUP BY 1, 2 HAVING AVG(CASE WHEN a.mh = b.mh THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END) > 0),
       sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
       inter AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS n_int
@@ -299,12 +280,12 @@ object TextVector4 {
         .select(col("doc_id"), col("lang"), col("n_tokens"), col("n_stop"))
         .orderBy("doc_id")
     },
-    Some("""WITH norm AS (SELECT doc_id, lang,
-          regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
+    Some(s"""WITH norm AS (SELECT doc_id, lang,
+          regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm
         FROM documents),
       keep AS (SELECT MIN(doc_id) AS doc_id FROM norm GROUP BY md5(norm)),
       toks AS (SELECT n.doc_id, n.lang,
-          regexp_split_to_array(trim(n.norm), '\s+') AS t
+          ${TextFns.tokensSql("n.norm")} AS t
         FROM norm n JOIN keep k ON n.doc_id = k.doc_id)
       SELECT doc_id, lang,
         CAST(len(t) AS BIGINT) AS n_tokens,
@@ -341,8 +322,7 @@ object TextVector4 {
             math.floor(quota.toDouble / total * 10000.0).toLong))
         }.toDF("lang", "rate_bp")
       }
-      val bucket = conv(substring(md5(col("doc_id").cast(StringType)), 1, 8), 16, 10)
-        .cast(LongType) % 10000
+      val bucket = TextFns.hash32(col("doc_id").cast(StringType)) % 10000
       toks.join(broadcast(rates), Seq("lang"))
         .withColumn("bucket", bucket)
         .filter(col("bucket") < col("rate_bp"))
@@ -351,8 +331,8 @@ object TextVector4 {
           max(col("rate_bp")).as("rate_bp"))
         .orderBy("lang")
     },
-    Some("""WITH toks AS (SELECT doc_id, lang,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tok
+    Some(s"""WITH toks AS (SELECT doc_id, lang,
+          CAST(len(${TextFns.tokensSql("text")}) AS BIGINT) AS n_tok
         FROM documents),
       per AS (SELECT lang, CAST(SUM(n_tok) AS BIGINT) AS total_tok FROM toks GROUP BY lang),
       q AS (SELECT MIN(total_tok) AS quota FROM per),
@@ -362,7 +342,7 @@ object TextVector4 {
       SELECT t.lang, COUNT(*) AS n_docs_kept,
         CAST(SUM(t.n_tok) AS BIGINT) AS tokens_kept, MAX(r.rate_bp) AS rate_bp
       FROM toks t JOIN rates r ON t.lang = r.lang
-      WHERE CAST(CONCAT('0x', SUBSTR(md5(CAST(t.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 < r.rate_bp
+      WHERE ${TextFns.hash32Sql("CAST(t.doc_id AS VARCHAR)")} % 10000 < r.rate_bp
       GROUP BY t.lang ORDER BY t.lang"""))
 
   /** Character-coverage signal (the SentencePiece `character_coverage`

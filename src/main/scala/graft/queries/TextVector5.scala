@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.operators.{Dedup, Mixture}
+import graft.functions.TextFns
 
 /** Eighth coverage batch — the training-corpus curation moves the pipeline
   * layer still lacked, each judged end-to-end: SemDeDup (cluster-blocked
@@ -104,7 +105,7 @@ object TextVector5 {
           coalesce(col("chars_kept"), lit(0L)).as("chars_kept"))
         .orderBy("lang")
     },
-    Some("""WITH per AS (SELECT lang, count(*) AS n FROM documents
+    Some(s"""WITH per AS (SELECT lang, count(*) AS n FROM documents
         WHERE lang IS NOT NULL GROUP BY lang),
       den AS (SELECT list_sum(list(sqrt(CAST(n AS DOUBLE)) ORDER BY lang)) AS d,
                      CAST(sum(n) AS BIGINT) AS total
@@ -115,7 +116,7 @@ object TextVector5 {
               / d / CAST(p.n AS DOUBLE)) * 10000.0) AS BIGINT) AS rate_bp
         FROM per p CROSS JOIN den),
       sel AS (SELECT lang, n_chars,
-          CAST(CONCAT('0x', SUBSTR(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+          ${TextFns.hash32Sql("CAST(doc_id AS VARCHAR)")}
             % 10000 AS bucket
         FROM documents),
       keptagg AS (SELECT s.lang, count(*) AS n_kept,
@@ -143,11 +144,11 @@ object TextVector5 {
           round(col("log_weight"), 6).as("log_weight_r"))
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS (SELECT doc_id, lang,
-          regexp_split_to_array(trim(text), '\s+') AS t
+    Some(s"""WITH toks AS (SELECT doc_id, lang,
+          ${TextFns.tokensSql("text")} AS t
         FROM documents),
       occ AS (SELECT doc_id, (lang = 'en') AS tgt,
-          CAST(CONCAT('0x', SUBSTR(md5(t[i] || ' ' || t[i+1]), 1, 8)) AS BIGINT)
+          ${TextFns.hash32Sql("t[i] || ' ' || t[i+1]")}
             % 8192 AS bucket
         FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS u(i)
         WHERE len(t) >= 2),
@@ -177,7 +178,7 @@ object TextVector5 {
       .withColumnRenamed("id", "doc_id")
       .orderBy("doc_id"),
     Some(s"""WITH tok AS (SELECT doc_id,
-        regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+        ${TextFns.tokensSql("text")} AS t FROM documents),
       win AS (SELECT doc_id, i, md5(array_to_string(t[i:i+19], ' ')) AS h
         FROM tok, UNNEST(generate_series(1, len(t) - 19)) AS u(i)
         WHERE len(t) >= 20),
@@ -219,7 +220,7 @@ object TextVector5 {
         .filter(size(col("toks")) >= 3)
         .select(col("doc_id"), explode(col("toks")).as("tok"))
         .select(col("doc_id"),
-          conv(substring(md5(col("tok")), 1, 8), 16, 10).cast(LongType).as("h"))
+          TextFns.hash32(col("tok")).as("h"))
       val votes = tok
         .select(col("doc_id"), col("h"),
           explode(sequence(lit(0), lit(31))).as("b"))
@@ -234,11 +235,11 @@ object TextVector5 {
         .orderBy("doc_id")
     },
     Some(s"""WITH tok AS (SELECT doc_id, unnest(t) AS tok
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
+        FROM (SELECT doc_id, ${TextFns.tokensSql("text")} AS t
               FROM documents WHERE doc_id % 20 = 0)
         WHERE len(t) >= 3),
       hv AS (SELECT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(tok), 1, 8)) AS BIGINT) AS h
+          ${TextFns.hash32Sql("tok")} AS h
         FROM tok),
       votes AS (SELECT doc_id, b,
           SUM(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS sgn
@@ -309,7 +310,7 @@ object TextVector5 {
         CAST(len(list_filter(['the','be','to','of','and','that','have','with'],
           w -> list_contains(t, w))) AS BIGINT) AS n_stop_words
       FROM (SELECT doc_id, text,
-          regexp_split_to_array(trim(text), '\\s+') AS t FROM documents))
+          ${TextFns.tokensSql("text")} AS t FROM documents))
       SELECT doc_id, n_words, n_chars_tok, n_alpha, n_hash, n_ellipsis, n_stop_words,
         (n_words BETWEEN 50 AND 100000) AS r_word_count,
         (n_chars_tok >= n_words * 3 AND n_chars_tok <= n_words * 10) AS r_mean_word_len,

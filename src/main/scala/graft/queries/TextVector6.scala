@@ -70,9 +70,9 @@ object TextVector6 {
           col("budget"), col("n_kept"), col("tokens_kept"), col("n_buckets_kept"))
         .orderBy("source")
     },
-    Some("""WITH d AS (SELECT doc_id, source,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-          CAST(CONCAT('0x', SUBSTR(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+    Some(s"""WITH d AS (SELECT doc_id, source,
+          CAST(len(${TextFns.tokensSql("text")}) AS BIGINT) AS n_tokens,
+          ${TextFns.hash32Sql("CAST(doc_id AS VARCHAR)")}
             % 1000 AS bucket
         FROM documents),
       tot AS (SELECT source, count(*) AS n_docs_in,
@@ -107,11 +107,11 @@ object TextVector6 {
         alpha = 9, numBuckets = 4096)
       .withColumnRenamed("id", "doc_id")
       .orderBy("doc_id"),
-    Some("""WITH tokd AS (SELECT doc_id, (source IN ('src0','src1','src2')) AS pos,
-          unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+    Some(s"""WITH tokd AS (SELECT doc_id, (source IN ('src0','src1','src2')) AS pos,
+          unnest(${TextFns.tokensSql("text")}) AS tok
         FROM documents),
       feats AS (SELECT DISTINCT doc_id, pos,
-          CAST(CONCAT('0x', SUBSTR(md5(tok), 1, 8)) AS BIGINT) % 4096 AS bucket
+          ${TextFns.hash32Sql("tok")} % 4096 AS bucket
         FROM tokd),
       tot AS (SELECT count(*) FILTER (WHERE pos) AS np,
           count(*) FILTER (WHERE NOT pos) AS nn
@@ -128,8 +128,7 @@ object TextVector6 {
         FROM feats JOIN w USING (bucket) GROUP BY 1),
       pr AS (SELECT doc_id, n_feat, score_r,
           round(1.0 / (1.0 + exp(-score_r)), 6) AS prob_r,
-          CAST(CAST(CONCAT('0x',
-              SUBSTR(md5(CAST(doc_id AS VARCHAR) || '|u'), 1, 8)) AS BIGINT)
+          CAST(${TextFns.hash32Sql("CAST(doc_id AS VARCHAR) || '|u'")}
             % 1000000 AS DOUBLE) / 1000000.0 AS u
         FROM sc),
       c1 AS (SELECT *, (2.0 - prob_r) AS p FROM pr),
@@ -193,7 +192,7 @@ object TextVector6 {
             .otherwise("tail").as("bucket"))
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+    Some(s"""WITH toks AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS t
         FROM documents),
       big AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2
         FROM toks, UNNEST(generate_series(1, len(t) - 1)) AS u(i)

@@ -103,8 +103,8 @@ object TextVector7 {
         // pathological-corpus class) would otherwise order differently
         .orderBy(col("source").asc_nulls_first, col("lang").asc_nulls_first)
     },
-    Some("""WITH d AS (SELECT source, lang, n_chars,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_toks,
+    Some(s"""WITH d AS (SELECT source, lang, n_chars,
+          CAST(len(${TextFns.tokensSql("text")}) AS BIGINT) AS n_toks,
           md5(text) AS h
         FROM documents),
       c AS (SELECT h, count(*) AS n_same FROM d GROUP BY 1)
@@ -185,8 +185,7 @@ object TextVector7 {
           alpha = 0.5, targetFraction = 0.5)
         .select(col("doc_id"), lit(true).as("mix_keep"))
         .localCheckpoint(false)
-      val hkey = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast(LongType)
+      val hkey = TextFns.hash32(col("doc_id").cast("string"))
       val keyed = mixFlag.select(col("doc_id")).withColumn("hkey", hkey)
       val sh = graft.core.Indexing.globalRowIds(keyed, "hkey", "position",
           tieBreak = Seq("doc_id"))
@@ -233,9 +232,9 @@ object TextVector7 {
       s2 AS (SELECT s1.doc_id, s1.lang, s1.source, s1.text
         FROM s1 JOIN c4g USING (doc_id) WHERE c4g.c4_pass),
       tokd AS (SELECT doc_id, (source IN ('src0','src1','src2')) AS pos,
-          unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok FROM s2),
+          unnest(${TextFns.tokensSql("text")}) AS tok FROM s2),
       feats AS (SELECT DISTINCT doc_id, pos,
-          CAST(CONCAT('0x', SUBSTR(md5(tok), 1, 8)) AS BIGINT) % 4096 AS bucket
+          ${TextFns.hash32Sql("tok")} % 4096 AS bucket
         FROM tokd),
       tot AS (SELECT count(*) FILTER (WHERE pos) AS np,
           count(*) FILTER (WHERE NOT pos) AS nn
@@ -251,8 +250,7 @@ object TextVector7 {
         FROM feats JOIN w USING (bucket) GROUP BY 1),
       pr AS (SELECT doc_id,
           round(1.0 / (1.0 + exp(-score_r)), 6) AS prob_r,
-          CAST(CAST(CONCAT('0x',
-              SUBSTR(md5(CAST(doc_id AS VARCHAR) || '|u'), 1, 8)) AS BIGINT)
+          CAST(${TextFns.hash32Sql("CAST(doc_id AS VARCHAR) || '|u'")}
             % 1000000 AS DOUBLE) / 1000000.0 AS u
         FROM sc),
       cc1 AS (SELECT *, (2.0 - prob_r) AS p FROM pr),
@@ -272,10 +270,10 @@ object TextVector7 {
               / dsum / CAST(p.nl AS DOUBLE)) * 10000.0) AS BIGINT) AS rate_bp
         FROM per p CROSS JOIN den),
       s4 AS (SELECT s3.doc_id FROM s3 JOIN rates r ON r.lang = s3.lang
-        WHERE CAST(CONCAT('0x', SUBSTR(md5(CAST(s3.doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+        WHERE ${TextFns.hash32Sql("CAST(s3.doc_id AS VARCHAR)")}
           % 10000 < r.rate_bp),
       keyed AS (SELECT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS hkey
+          ${TextFns.hash32Sql("CAST(doc_id AS VARCHAR)")} AS hkey
         FROM s4),
       sh AS (SELECT doc_id,
           row_number() OVER (ORDER BY hkey ASC, doc_id ASC) - 1 AS position
@@ -353,7 +351,7 @@ object TextVector7 {
       .select(col("doc_id"),
         explode(array_distinct(TextFns.shinglesOf(col("toks"), 3))).as("sh"))
       .select(col("doc_id"),
-        conv(substring(md5(col("sh")), 1, 8), 16, 10).cast(LongType).as("sh"))
+        TextFns.hash32(col("sh")).as("sh"))
       .distinct()
 
   /** Stop-shingle cut (df ≤ 20) and per-doc set sizes as PARTITIONED
@@ -389,17 +387,17 @@ object TextVector7 {
   val d55 = QueryDef("d55_ngram_containment",
     (s, dir) => d55Pairs(
       d55Kept(d55Shingles(d55Docs(s, dir))).localCheckpoint(false)),
-    Some("""WITH docs AS (
+    Some(s"""WITH docs AS (
         SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
         UNION ALL
         SELECT doc_id + 4000000000, array_to_string(t[1:10], ' ') AS text
-        FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+        FROM (SELECT doc_id, ${TextFns.tokensSql("text")} AS t
               FROM documents WHERE doc_id % 2 = 0)
         WHERE doc_id % 40 = 0 AND len(t) >= 15),
-      tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+      tok AS (SELECT doc_id, ${TextFns.tokensSql("text")} AS t
         FROM docs),
       sh AS (SELECT DISTINCT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2]), 1, 8)) AS BIGINT) AS sh
+          ${TextFns.hash32Sql("t[i] || ' ' || t[i+1] || ' ' || t[i+2]")} AS sh
         FROM tok, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
         WHERE len(t) >= 3),
       kept AS (SELECT doc_id, sh, count(*) OVER (PARTITION BY doc_id) AS n
@@ -426,8 +424,7 @@ object TextVector7 {
     * row-identical to. */
   val d52 = QueryDef("d52_shuffle_shards",
     (s, dir) => {
-      val hkey = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast(LongType)
+      val hkey = TextFns.hash32(col("doc_id").cast("string"))
       val keyed = Tables.documents(s, dir)
         .select(col("doc_id"), hkey.as("hkey"))
       graft.core.Indexing.globalRowIds(keyed, "hkey", "position",
@@ -437,8 +434,8 @@ object TextVector7 {
           expr("position DIV 8").as("pos_in_shard"))
         .orderBy("doc_id")
     },
-    Some("""WITH k AS (SELECT doc_id,
-        CAST(CONCAT('0x', SUBSTR(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+    Some(s"""WITH k AS (SELECT doc_id,
+        ${TextFns.hash32Sql("CAST(doc_id AS VARCHAR)")}
           AS hkey
         FROM documents),
       p AS (SELECT doc_id, hkey,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 import graft.core.Tables
 import graft.functions.TextFns
 import graft.operators.{Mixture, Similarity}
@@ -172,8 +171,7 @@ object TextVector8 {
               trim(element_at(col("sents"), i + 1)),
               trim(element_at(col("sents"), i + 2))))))
         .select(col("doc_id"), (col("pos") + 1).as("span_idx"),
-          conv(substring(md5(col("col")), 1, 8), 16, 10)
-            .cast(LongType).as("span_h"))
+          TextFns.hash32(col("col")).as("span_h"))
       spans
         .withColumn("dup_count",
           count(lit(1)).over(Window.partitionBy("span_h")))
@@ -182,15 +180,13 @@ object TextVector8 {
             .orderBy(col("doc_id").asc, col("span_idx").asc)) === 1)
         .orderBy("doc_id", "span_idx")
     },
-    Some("""WITH t AS (SELECT doc_id,
+    Some(s"""WITH t AS (SELECT doc_id,
         regexp_extract_all(text || '. Unique anchor ' || CAST(doc_id AS VARCHAR)
           || ' ends here! Shared tail one. Shared tail two? Shared tail three.',
           '[^.!?]*[.!?]') AS s
         FROM documents WHERE doc_id % 10 = 0),
       sp AS (SELECT doc_id, CAST(i AS INT) AS span_idx,
-          CAST(CONCAT('0x', SUBSTR(md5(
-            trim(s[i]) || ' ' || trim(s[i+1]) || ' ' || trim(s[i+2])), 1, 8))
-            AS BIGINT) AS span_h
+          ${TextFns.hash32Sql("trim(s[i]) || ' ' || trim(s[i+1]) || ' ' || trim(s[i+2])")} AS span_h
         FROM t, UNNEST(generate_series(1, len(s) - 2)) AS u(i)
         WHERE len(s) >= 3)
       SELECT doc_id, span_idx, span_h,
@@ -288,10 +284,10 @@ object TextVector8 {
       s2 AS (SELECT s1.doc_id, s1.lang, s1.text FROM s1 JOIN c4g USING (doc_id)
         WHERE c4g.c4_pass),
       sttok AS (SELECT doc_id, (source IN ('src0','src1','src2')) AS pos,
-          unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+          unnest(${TextFns.tokensSql("text")}) AS tok
         FROM store),
       stfeat AS (SELECT DISTINCT doc_id, pos,
-          CAST(CONCAT('0x', SUBSTR(md5(tok), 1, 8)) AS BIGINT) % 4096 AS bucket
+          ${TextFns.hash32Sql("tok")} % 4096 AS bucket
         FROM sttok),
       sttot AS (SELECT count(*) FILTER (WHERE pos) AS np,
           count(*) FILTER (WHERE NOT pos) AS nn
@@ -301,9 +297,9 @@ object TextVector8 {
             - ln((count(*) FILTER (WHERE NOT pos) + 1)::DOUBLE / (nn + 2)::DOUBLE) AS w
         FROM stfeat CROSS JOIN sttot GROUP BY bucket, np, nn),
       bfeat AS (SELECT DISTINCT doc_id,
-          CAST(CONCAT('0x', SUBSTR(md5(tok), 1, 8)) AS BIGINT) % 4096 AS bucket
+          ${TextFns.hash32Sql("tok")} % 4096 AS bucket
         FROM (SELECT doc_id,
-            unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok
+            unnest(${TextFns.tokensSql("text")}) AS tok
           FROM s2)),
       sc AS (SELECT f.doc_id, count(w.w) AS n_feat,
           CASE WHEN count(w.w) > 0
@@ -311,8 +307,7 @@ object TextVector8 {
         FROM bfeat f LEFT JOIN w USING (bucket) GROUP BY f.doc_id),
       pr AS (SELECT doc_id,
           round(1.0 / (1.0 + exp(-score_r)), 6) AS prob_r,
-          CAST(CAST(CONCAT('0x',
-              SUBSTR(md5(CAST(doc_id AS VARCHAR) || '|u'), 1, 8)) AS BIGINT)
+          CAST(${TextFns.hash32Sql("CAST(doc_id AS VARCHAR) || '|u'")}
             % 1000000 AS DOUBLE) / 1000000.0 AS u
         FROM sc),
       cls AS (SELECT doc_id,
@@ -333,7 +328,7 @@ object TextVector8 {
               / dsum / CAST(p.nl AS DOUBLE)) * 10000.0) AS BIGINT) AS rate_bp
         FROM per p CROSS JOIN den),
       mix AS (SELECT s3.doc_id FROM s3 JOIN rates r ON r.lang = s3.lang
-        WHERE CAST(CONCAT('0x', SUBSTR(md5(CAST(s3.doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+        WHERE ${TextFns.hash32Sql("CAST(s3.doc_id AS VARCHAR)")}
           % 10000 < r.rate_bp)
       SELECT s1.doc_id,
         CASE WHEN NOT s1.dedup_keep THEN 'dedup'
@@ -342,7 +337,7 @@ object TextVector8 {
              WHEN mix.doc_id IS NULL THEN 'mix'
              ELSE 'kept' END AS stage,
         CASE WHEN mix.doc_id IS NOT NULL THEN
-          CAST(CONCAT('0x', SUBSTR(md5(CAST(s1.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8
+          ${TextFns.hash32Sql("CAST(s1.doc_id AS VARCHAR)")} % 8
         END AS shard
       FROM s1
       LEFT JOIN c4g USING (doc_id)
@@ -385,7 +380,7 @@ object TextVector8 {
         "cookie policy", "uses cookies", "use of cookies", "use cookies")
       val verdicts = lines.select(
         col("doc_id"), col("line_no"),
-        size(split(trim(col("line")), "\\s+")).cast("long").as("n_words"),
+        size(TextFns.tokens(col("line"))).cast("long").as("n_words"),
         substring(rtrim(col("line")), -1, 1).isin(".", "!", "?", "\"")
           .as("ends_terminal"),
         lowered.contains("javascript").as("has_js"),
@@ -397,7 +392,7 @@ object TextVector8 {
             !col("has_js") && !col("has_policy"))
         .orderBy("doc_id", "line_no")
     },
-    Some("""WITH m AS (SELECT doc_id,
+    Some(s"""WITH m AS (SELECT doc_id,
         CASE WHEN doc_id % 10 = 0 THEN text
           || chr(10) || 'short line'
           || chr(10) || 'This appended sentence definitely contains more than five words.'
@@ -409,7 +404,7 @@ object TextVector8 {
       l AS (SELECT doc_id, CAST(i AS INT) AS line_no, ln[i] AS line
         FROM sp, UNNEST(generate_series(1, len(ln))) AS u(i)),
       v AS (SELECT doc_id, line_no,
-        CAST(len(regexp_split_to_array(trim(line), '\s+')) AS BIGINT) AS n_words,
+        CAST(len(${TextFns.tokensSql("line")}) AS BIGINT) AS n_words,
         right(rtrim(line), 1) IN ('.', '!', '?', '"') AS ends_terminal,
         contains(lower(line), 'javascript') AS has_js,
         (contains(lower(line), 'terms of use')

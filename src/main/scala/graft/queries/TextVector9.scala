@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.Similarity
+import graft.functions.TextFns
 
 /** Twelfth coverage batch (round 8, continued): the IVFADC search
   * composition — [[graft.operators.Similarity.ivfAdcTopK]], Jégou, Douze
@@ -40,8 +41,7 @@ object TextVector9 {
       import org.apache.spark.sql.types.LongType
       val keyed = Tables.documents(s, dir)
         .select(col("doc_id"),
-          conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast(LongType).as("hkey"),
+          TextFns.hash32(col("doc_id").cast("string")).as("hkey"),
           size(graft.functions.TextFns.tokens(col("text"))).cast(LongType)
             .as("n_toks"))
         .localCheckpoint(false)
@@ -52,10 +52,10 @@ object TextVector9 {
         .withColumn("n_seqs", col("seq_end") - col("seq_start") + 1L)
         .orderBy("doc_id")
     },
-    Some("""WITH k AS (SELECT doc_id,
-        CAST(CONCAT('0x', SUBSTR(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+    Some(s"""WITH k AS (SELECT doc_id,
+        ${TextFns.hash32Sql("CAST(doc_id AS VARCHAR)")}
           AS hkey,
-        CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_toks
+        CAST(len(${TextFns.tokensSql("text")}) AS BIGINT) AS n_toks
         FROM documents),
       p AS (SELECT doc_id, hkey, n_toks,
           CAST(COALESCE(SUM(n_toks) OVER (ORDER BY hkey ASC, doc_id ASC
@@ -102,8 +102,8 @@ object TextVector9 {
         .withColumn("budget", lit(budget))
         .orderBy("source")
     },
-    Some("""WITH d AS (SELECT source, md5(text) AS h,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_toks
+    Some(s"""WITH d AS (SELECT source, md5(text) AS h,
+          CAST(len(${TextFns.tokensSql("text")}) AS BIGINT) AS n_toks
         FROM documents
         WHERE doc_id % (CAST(substr(source, 4) AS INT) + 1) = 0),
       u AS (SELECT source, h, max(n_toks) AS n_toks FROM d GROUP BY 1, 2),
@@ -196,7 +196,7 @@ object TextVector9 {
       h AS (SELECT doc_id, md5(norm) AS grp_h FROM n),
       c AS (SELECT grp_h, count(*) AS n_in_group FROM h GROUP BY 1),
       b AS (SELECT doc_id, grp_h, n_in_group,
-          CAST(CAST(CONCAT('0x', SUBSTR(md5(grp_h || '|split'), 1, 8)) AS BIGINT)
+          CAST(${TextFns.hash32Sql("grp_h || '|split'")}
             % 100 AS INT) AS split_bucket
         FROM h JOIN c USING (grp_h))
       SELECT doc_id, grp_h, n_in_group, split_bucket,
@@ -252,8 +252,8 @@ object TextVector9 {
           col("target_tokens") - col("allocated_tokens"))
         .orderBy("source")
     },
-    Some("""WITH d AS (SELECT source, md5(text) AS h,
-          CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_toks
+    Some(s"""WITH d AS (SELECT source, md5(text) AS h,
+          CAST(len(${TextFns.tokensSql("text")}) AS BIGINT) AS n_toks
         FROM documents
         WHERE doc_id % (CAST(substr(source, 4) AS INT) + 1) = 0),
       u AS (SELECT source, h, max(n_toks) AS n_toks FROM d GROUP BY 1, 2),

@@ -167,4 +167,23 @@ class PipelineSpec extends SparkSpec {
     assert(ohe.schema.fields.filter(_.name != "ticker")
       .forall(_.dataType.typeName == "float"))
   }
+
+  test("p1 yearly statement inputs do not depend on join strategy or partitioning") {
+    // the orders⨝liAgg join feeding p1's yearly aggregate runs as a
+    // broadcast or a sort-merge join; each delivers rows to the sums in a
+    // different order, and p1's violations text prints the ratios built
+    // from those sums at full precision
+    val dir = s"${sys.props("user.home")}/testdata/sf0.001"
+    def statements(conf: (String, String)*) = {
+      val s = spark.newSession()
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      val in = graft.queries.Pipeline.inputsForProbe(s, dir)
+      in.statements.get.orderBy("ticker", "date").collect().toSeq
+    }
+    val broadcast = statements("spark.sql.shuffle.partitions" -> "3")
+    val sortMerge = statements("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "7")
+    assert(broadcast.nonEmpty)
+    assert(broadcast == sortMerge)
+  }
 }

@@ -112,13 +112,13 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("property: kmv sketch is exact below k, partition-invariant, and duplicate-blind") {
-    import graft.functions.KmvAgg
+    import graft.functions.{KmvAgg, TextFns}
     val gen = Gen.zip(Gen.choose(1, 120), Gen.choose(1, 4))
     for ((n, reps) <- samples(gen, 5)) {
       // n distinct values, each repeated `reps` times, k = 64
       val df = (1 to n).flatMap(i => Seq.fill(reps)(("g", i.toLong))).toDF("g", "v")
       def est(parts: Int): Double = df.repartition(parts).groupBy("g")
-        .agg(KmvAgg.kmvDistinct(KmvAgg.hash32(col("v")), 64).as("e"))
+        .agg(KmvAgg.kmvDistinct(TextFns.hash32(col("v").cast("string")), 64).as("e"))
         .select("e").as[Double].head()
       val one = est(1)
       assert(est(7) == one, s"n=$n reps=$reps: merge path diverged")

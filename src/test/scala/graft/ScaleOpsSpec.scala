@@ -166,16 +166,16 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("kmv sketch: exact below k, estimator formula at k, partition-invariant merge") {
-    import graft.functions.KmvAgg
+    import graft.functions.{KmvAgg, TextFns}
     val df = (1 to 1000).map(i => ("g", i.toLong)).toDF("g", "v")
     def est(d: org.apache.spark.sql.DataFrame): Double = d.groupBy("g")
-      .agg(KmvAgg.kmvDistinct(KmvAgg.hash32(col("v")), 64).as("est"))
+      .agg(KmvAgg.kmvDistinct(TextFns.hash32(col("v").cast("string")), 64).as("est"))
       .select("est").as[Double].head()
     val one = est(df)
     // merge path: many partitions -> partial sketches -> union+trim
     assert(est(df.repartition(13)) == one)
     // the estimate is exactly (k-1) * 2^32 / kth-smallest distinct hash
-    val hs = df.select(KmvAgg.hash32(col("v")).as("h")).as[Long]
+    val hs = df.select(TextFns.hash32(col("v").cast("string")).as("h")).as[Long]
       .collect().distinct.sorted
     assert(one == 63.0 * 4294967296.0 / hs(63).toDouble)
     // sanity: within 30% of the true cardinality at k=64
