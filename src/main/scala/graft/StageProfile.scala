@@ -9,10 +9,10 @@ package graft
   *     spill, GC, callsite). Rep 1 pays JIT/codegen; later reps time the
   *     plan.
   *   StageProfile streamsf10 <sfDir>
-  *     drives the four AvailableNow stream drivers over a real file stream
-  *     on both state-store providers and prints rows/s, micro-batches and
-  *     state-store rows/bytes from the engines' progress metrics, which a
-  *     job trace cannot see.
+  *     drives the four stream transforms through `EventStreams.runAvailableNow`
+  *     over a real file stream on both state-store providers and prints
+  *     rows/s, micro-batches and state-store rows/bytes from the engines'
+  *     progress metrics, which a job trace cannot see.
   *
   * Run with `tools/jrun.sh graft.StageProfile <mode> ...` (SPARK_GRAFT_CPUS
   * sets the local cores, default 32).
@@ -68,16 +68,19 @@ object StageProfile {
         val providers = Seq(
           "hdfs" -> "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
           "rocksdb" -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val drivers: Seq[(String, (String, String) => org.apache.spark.sql.streaming.StreamingQuery)] = Seq(
-          ("s1_hourly", (out, ck) => graft.streaming.EventStreams
-            .runHourlyAvailableNow(spark, inDir, out, ck, schema, slice)),
-          ("s3_dedup", (out, ck) => graft.streaming.EventStreams
-            .firstPerKeyAvailableNow(spark, inDir, out, ck, schema, slice)),
-          ("s5_sliding", (out, ck) => graft.streaming.EventStreams
-            .slidingByTypeAvailableNow(spark, inDir, out, ck, schema, slice)),
-          ("sessions_fmgws", (out, ck) => graft.streaming.EventStreams
-            .closedSessionsAvailableNow(spark, inDir, out, ck,
-              gapMinutes = 30, readOptions = slice)))
+        import graft.streaming.EventStreams
+        val transforms: Seq[(String, org.apache.spark.sql.DataFrame =>
+            org.apache.spark.sql.Dataset[_])] = Seq(
+          ("s1_hourly", EventStreams.hourlyByType(_, withWatermark = true)),
+          ("s3_dedup", EventStreams.firstPerKeyStream),
+          ("s5_sliding", EventStreams.slidingByType(_, withWatermark = true)),
+          ("sessions_fmgws", df => EventStreams.closedSessions(
+            df.as(org.apache.spark.sql.Encoders.product[EventStreams.EventIn]),
+            gapMinutes = 30)))
+        val drivers = transforms.map { case (name, transform) =>
+          (name, (out: String, ck: String) => EventStreams.runAvailableNow(
+            spark, inDir, out, ck, schema, slice)(transform))
+        }
         for ((provName, provClass) <- providers) {
           spark.conf.set("spark.sql.streaming.stateStore.providerClass", provClass)
           for ((name, drive) <- drivers) {

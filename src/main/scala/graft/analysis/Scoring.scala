@@ -137,6 +137,9 @@ object Scoring {
         col("adj_yield") * 0.5 + col("div_growth") * 0.3 + col("stability") * 0.2)
   }
 
+  private def perGroupCap(n: Int, maxPerGroup: Double): Int =
+    math.max(1, math.floor(maxPerGroup * n).toInt)
+
   /** Phase 5: equal-weight top-N portfolio under a per-group weight cap.
     * Pre-filter: cut_prob < maxCutProb (README: 0.25). Declarative: rank
     * within each group, keep at most floor(maxPerGroup*N) per group, then
@@ -145,7 +148,6 @@ object Scoring {
                          groupCols: Seq[String] = Seq("sector"),
                          maxPerGroup: Double = 0.2,
                          maxCutProb: Double = 0.25): DataFrame = {
-    val perGroupCap = math.max(1, math.floor(maxPerGroup * n).toInt)
     val eligible = scored.filter(col("cut_prob") < maxCutProb)
     val wGroup = Window.partitionBy(groupCols.map(col): _*)
       .orderBy(col("final_score").desc, col("ticker"))
@@ -159,10 +161,49 @@ object Scoring {
     // global but sits above the N-row limit, so it sorts N rows.
     eligible
       .withColumn("__grp_rank", row_number().over(wGroup))
-      .filter(col("__grp_rank") <= perGroupCap)
+      .filter(col("__grp_rank") <= perGroupCap(n, maxPerGroup))
       .orderBy(col("final_score").desc, col("ticker"))
       .limit(n)
       .withColumn("weight", lit(1.0) / count(lit(1)).over(wAll))
       .drop("__grp_rank")
+  }
+
+  /** The DuckDB twin of [[score]] (default growth cap) followed by
+    * [[constructPortfolio]], as the CTEs `scored`, `final`, `grp`, `ranked`
+    * and `port` (the selected rows with their `weight`). `feat` names a CTE
+    * with ticker, the `groupCols`, cut_prob and the score's feature columns
+    * (dividend_yield, dividend_cagr_3y, max_drawdown_1y, volatility,
+    * payout_ratio, net_debt_to_ebitda); every other `feat` column passes
+    * through, as the Spark form's `withColumn` keeps it. */
+  def portfolioSql(feat: String, n: Int, groupCols: Seq[String],
+                   maxPerGroup: Double, maxCutProb: Double): String = {
+    def clamp01(x: String) = s"least(greatest($x, 0.0), 1.0)"
+    val cagr = "CASE WHEN dividend_cagr_3y IS NOT NULL AND NOT isnan(dividend_cagr_3y)" +
+      " THEN dividend_cagr_3y ELSE 0.0 END"
+    s"""scored AS (
+        SELECT *,
+          COALESCE(dividend_yield, 0.0) * (1.0 - cut_prob) AS adj_yield,
+          ln(1.0 + ${clamp01(s"$cagr / 0.30")} * 0.30) / ln(1.0 + 0.30) AS div_growth,
+          ((1.0 - cut_prob)
+           + (1.0 - ${clamp01("COALESCE(max_drawdown_1y, 1.0)")})
+           + (1.0 - ${clamp01("COALESCE(volatility, 3.0) / 3.0")})
+           + (1.0 - ${clamp01("COALESCE(payout_ratio, 2.0) / 2.0")})
+           + (1.0 - ${clamp01("COALESCE(net_debt_to_ebitda, 20.0) / 20.0")})) / 5.0
+            AS stability
+        FROM $feat),
+      final AS (
+        SELECT *, adj_yield * 0.5 + div_growth * 0.3 + stability * 0.2
+          AS final_score
+        FROM scored WHERE cut_prob < $maxCutProb),
+      grp AS (
+        SELECT *, row_number() OVER (PARTITION BY ${groupCols.mkString(", ")}
+            ORDER BY final_score DESC, ticker) AS gr
+        FROM final),
+      ranked AS (
+        SELECT *, row_number() OVER (ORDER BY final_score DESC, ticker) AS rk
+        FROM grp WHERE gr <= ${perGroupCap(n, maxPerGroup)}),
+      port AS (
+        SELECT *, 1.0 / COUNT(*) OVER () AS weight
+        FROM (SELECT * FROM ranked WHERE rk <= $n))"""
   }
 }

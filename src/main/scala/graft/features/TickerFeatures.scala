@@ -478,26 +478,27 @@ object TickerFeatures {
     }
 
   /** Price, fundamentals, growth, ratios and dividend blocks over ONE grid
-    * slice and ONE (ticker, as_of) exchange: the three inputs (returns-enriched
-    * prices, enriched statements, split-adjusted dividends) union into a
+    * slice and ONE (ticker, as_of) exchange: the three inputs (prices,
+    * enriched statements, split-adjusted dividends) union into a
     * source-tagged relation, slice through a single [[gridAsOfJoin]], and
     * every per-cell window and aggregate is SOURCE-GUARDED — each block's
     * end-date anchor, validity window, count, and pick sees only its own
     * source's rows, so column-for-column the output equals the separate
     * blocks (equivalence pinned by TickerFeaturesSpec). The per-source
-    * PRE-slice work (the returns lag over prices, the split-adjustment
-    * as-of join over dividends) keeps its own per-ticker exchange — a lag
-    * cannot skip interleaved foreign rows — but those run over unreplicated
-    * series, not the grid-multiplied slice. Aggregation-order-sensitive
-    * values (volatility's stddev, the SMA means) may differ from the
-    * separate form in final ulps — same class as the grid-vs-series price
-    * form note above; both reach judged surfaces only through round(). */
+    * PRE-slice work (the split-adjustment as-of join over dividends) keeps
+    * its own per-ticker exchange, over the unreplicated series, not the
+    * grid-multiplied slice; daily returns need none, since the cell's
+    * date-sorted price array holds every close at or before as_of.
+    * Volatility and the SMA means fold that array in date order, so they
+    * do not depend on the join strategy or partitioning, but may differ
+    * from the separate form's aggregates in final ulps — same class as the
+    * grid-vs-series price form note above; both reach judged surfaces only
+    * through round(). */
   private def fusedCellBlocks(grid: DataFrame, prices: DataFrame,
                               statements: DataFrame, dividends: DataFrame,
                               splits: DataFrame,
                               rawSector: Option[DataFrame] = None): DataFrame = {
     // per-source pre-slice enrichment (shared with the separate blocks)
-    val p = dailyReturns(prices)
     val st = enrichStatements(statements)
     val adjusted = SeriesOps.adjustForSplits(dividends, splits, Seq(T),
       "date", "dividend", "split_ratio")
@@ -507,21 +508,21 @@ object TickerFeatures {
     val nb = lit(null).cast(BooleanType)
     def stCol(name: String): Column =
       (if (statements.columns.contains(name)) col(name).cast(DoubleType) else nd).as(name)
-    val u = p.select(col(T), col("date"), lit("p").as("__src"),
-        col("close").cast(DoubleType).as("close"), col("__ret").cast(DoubleType).as("__ret"),
+    val u = prices.select(col(T), col("date"), lit("p").as("__src"),
+        col("close").cast(DoubleType).as("close"),
         nd.as("dividendYield"), nd.as("priceEarningsRatio"),
         nd.as("priceToFreeCashFlowsRatio"), nd.as("payoutRatio"),
         nd.as("freeCashFlowPerShare"), nd.as("eps"),
         nd.as("__nde"), nd.as("__eic"), nb.as("__eic_capped"), nd.as("dividend"))
       .unionByName(st.select(col(T), col("date"), lit("f").as("__src"),
-        nd.as("close"), nd.as("__ret"),
+        nd.as("close"),
         stCol("dividendYield"), stCol("priceEarningsRatio"),
         stCol("priceToFreeCashFlowsRatio"), stCol("payoutRatio"),
         stCol("freeCashFlowPerShare"), stCol("eps"),
         col("__nde").cast(DoubleType).as("__nde"), col("__eic").cast(DoubleType).as("__eic"),
         col("__eic_capped"), nd.as("dividend")))
       .unionByName(adjusted.select(col(T), col("date"), lit("d").as("__src"),
-        nd.as("close"), nd.as("__ret"),
+        nd.as("close"),
         nd.as("dividendYield"), nd.as("priceEarningsRatio"),
         nd.as("priceToFreeCashFlowsRatio"), nd.as("payoutRatio"),
         nd.as("freeCashFlowPerShare"), nd.as("eps"),
@@ -530,7 +531,7 @@ object TickerFeatures {
     val u2 = rawSector match {
       case Some(x) => u.unionByName(x.select(col(T), col("date"),
         lit("x").as("__src"), col("close").cast(DoubleType).as("close"),
-        nd.as("__ret"), nd.as("dividendYield"), nd.as("priceEarningsRatio"),
+        nd.as("dividendYield"), nd.as("priceEarningsRatio"),
         nd.as("priceToFreeCashFlowsRatio"), nd.as("payoutRatio"),
         nd.as("freeCashFlowPerShare"), nd.as("eps"),
         nd.as("__nde"), nd.as("__eic"), nb.as("__eic_capped"), nd.as("dividend")))
@@ -563,11 +564,10 @@ object TickerFeatures {
         when(isP && col("date") <= add_months(col("as_of"), -6), col("date"))).as("__p_6m"),
       max_by(when(isP && col("date") <= add_months(col("as_of"), -12), col("close")),
         when(isP && col("date") <= add_months(col("as_of"), -12), col("date"))).as("__p_12m"),
-      stddev_samp(when(isP, col("__ret"))).as("__ret_sd"),
       // date-sorted (date, close) array per cell for the order-dependent
-      // price stats (running drawdown peak, trailing SMAs) — computed by
-      // array fold in the post-agg projection instead of an ordered
-      // window. Entity-history-bounded buffer: the same contract the
+      // price stats (volatility, running drawdown peak, trailing SMAs) —
+      // computed by array fold in the post-agg projection instead of an
+      // ordered window. Entity-history-bounded buffer: the same contract the
       // __y_med percentile below already carries (one ticker's history),
       // and the fold order is DATE order — deterministic, where the old
       // window+avg accumulated in shuffle-arrival order.
@@ -604,11 +604,11 @@ object TickerFeatures {
       nullif(count(when(isX && in365, 1)), lit(0L)).as("__x_n"))
 
     // order-dependent price stats by array fold over the date-sorted cell
-    // history: the drawdown peak walk and the trailing SMAs. Fold order is
-    // date order (ties by close — fully deterministic); the per-row dd
-    // arithmetic is bit-identical to the window form's (same greatest/
-    // divide), the SMA sums differ from the old avg() only in
-    // accumulation order (round(6) downstream, as before).
+    // history: volatility, the drawdown peak walk and the trailing SMAs.
+    // Fold order is date order (ties by close — fully deterministic); the
+    // per-row dd arithmetic is bit-identical to the window form's (same
+    // greatest/divide), the stddev and SMA sums differ from the separate
+    // form's aggregates only in accumulation order (round(6) downstream).
     def smaSql(k: Int) =
       s"""CASE WHEN size(__parr) > 0 THEN
           aggregate(slice(__parr, greatest(size(__parr) - ${k - 1}, 1), $k),
@@ -631,6 +631,16 @@ object TickerFeatures {
           a -> a.m)"""))
       .withColumn("__sma50", expr(smaSql(50)))
       .withColumn("__sma200", expr(smaSql(200)))
+      // sample stddev of the consecutive-close returns by stddev_samp's own
+      // running update (n, mean, m2); NULL below two returns
+      .withColumn("__ret_sd", expr("""aggregate(
+          filter(transform(slice(__parr, 2, greatest(size(__parr) - 1, 0)),
+            (x, i) -> x.c / __parr[i].c - 1), r -> r IS NOT NULL),
+          named_struct('n', 0L, 'mu', CAST(0.0 AS DOUBLE), 'm2', CAST(0.0 AS DOUBLE)),
+          (a, r) -> named_struct('n', a.n + 1,
+            'mu', a.mu + (r - a.mu) / (a.n + 1),
+            'm2', a.m2 + (r - a.mu) * ((r - a.mu) - (r - a.mu) / (a.n + 1))),
+          a -> CASE WHEN a.n >= 2 THEN sqrt(a.m2 / (a.n - 1)) END)"""))
       // fundamentals picks: latest row's fields; grace-window starts = the
       // latest in-window row (identical to the old max_by-by-date picks —
       // the array is date-sorted); the valid-yield median replays Spark's

@@ -107,15 +107,8 @@ object TickerFeaturePipeline {
     hash
   }
 
-  /** Order-independent content hash: xor of per-row xxhash64 over all
-    * columns (stringified). */
-  def contentHash(df: DataFrame): String = {
-    val h = df.select(
-      xxhash64(df.columns.map(c => col(c).cast("string")).toSeq: _*).as("h"))
-      .agg(sum(col("h")).as("s"))
-      .collect()(0)
-    String.valueOf(h.get(0))
-  }
+  /** The store's order-independent content hash, [[graft.sinks.Sinks.contentHash]]. */
+  def contentHash(df: DataFrame): String = graft.sinks.Sinks.contentHash(df)
 
   /** B6-ish static upsert: keep-last per ticker with fresh rows winning. */
   def mergeStatic(store: DataFrame, fresh: DataFrame): DataFrame = {

@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.features.TickerFeatures
 import graft.pipeline.TickerValidation
-import QueryDef.{moneySum, priceBlockCtes}
+import QueryDef.{cagrSql, dividendBlockCtes, moneySum, priceBlockCtes,
+  priceOutputsSql, ratiosOutputsSql, statementBlockCtes}
 
 /** w4: the COMPOSED dynamic feature row, end-to-end — the flagship p1 path
   * (`TickerFeatures.dynamicFeatures`: the one-shuffle cell layer over price,
@@ -261,38 +262,7 @@ object DynamicRow {
             ELSE CAST('Infinity' AS DOUBLE) END AS eic_row,
           (ibt / ie >= 1000.0) AS cap_row
         FROM stm),
-      fsliced AS (
-        SELECT g.ticker, g.as_of, r.date, r.dy, r.pe, r.pfcf, r.po, r.fcf,
-               r.eps, r.nde_row, r.eic_row, r.cap_row
-        FROM grid g LEFT JOIN enr r ON r.ticker = g.ticker AND r.date <= g.as_of),
-      fmarked AS (
-        SELECT *,
-          (dy IS NOT NULL AND dy > 0 AND
-           date >= ((end_date - INTERVAL 60 MONTH) - INTERVAL 90 DAY)::DATE) AS yv,
-          (pe > 0 AND pfcf > 0) AS pv,
-          (po IS NOT NULL AND po > 0) AS pov,
-          (date BETWEEN ((end_date - INTERVAL 1095 DAY) - INTERVAL 90 DAY)::DATE
-                    AND ((end_date - INTERVAL 1095 DAY) + INTERVAL 90 DAY)::DATE) AS fw
-        FROM (SELECT *, max(date) OVER (PARTITION BY ticker, as_of) AS end_date
-              FROM fsliced)),
-      fund AS (
-        SELECT ticker, as_of,
-          count(date) AS fn,
-          arg_max(nde_row, date) AS nde_l,
-          arg_max(eic_row, date) AS eic_l,
-          arg_max(cap_row, date) AS cap_l,
-          arg_max(eps, date) AS eps_end,
-          arg_max(CASE WHEN fw THEN eps END, CASE WHEN fw THEN date END) AS eps_start,
-          arg_max(dy, date) AS dy_last,
-          arg_max(CASE WHEN yv THEN dy END, CASE WHEN yv THEN date END) AS y_cur,
-          quantile_cont(CASE WHEN yv THEN dy END, 0.5) AS y_med,
-          count(CASE WHEN yv THEN 1 END) AS y_n,
-          arg_max(CASE WHEN pv THEN pe END, CASE WHEN pv THEN date END) AS pe_l,
-          arg_max(CASE WHEN pv THEN pfcf END, CASE WHEN pv THEN date END) AS pfcf_l,
-          arg_max(CASE WHEN pov THEN po END, CASE WHEN pov THEN date END) AS po_l,
-          arg_max(fcf, date) AS fcf_end,
-          arg_max(CASE WHEN fw THEN fcf END, CASE WHEN fw THEN date END) AS fcf_start
-        FROM fmarked GROUP BY 1, 2),
+      ${statementBlockCtes("enr", "grid", withFundamentals = true)},
       divs AS (
         SELECT ticker, date,
           CAST(1.0 AS DOUBLE) + (b % 300) / CAST(100.0 AS DOUBLE) AS dividend
@@ -303,71 +273,21 @@ object DynamicRow {
         UNION ALL
         SELECT DISTINCT ticker, DATE '1996-06-01', CAST(1.5 AS DOUBLE)
         FROM base WHERE sk % 20 = 0),
-      adj AS (
-        SELECT v.ticker, v.date,
-          v.dividend / COALESCE((SELECT product(s.ratio) FROM splits s
-            WHERE s.ticker = v.ticker AND s.date <= v.date), 1.0) AS dividend
-        FROM divs v),
-      dsliced AS (
-        SELECT g.ticker, g.as_of, a.date, a.dividend
-        FROM grid g LEFT JOIN adj a ON a.ticker = g.ticker AND a.date <= g.as_of),
-      dmarked AS (
-        SELECT *,
-          (date BETWEEN ((end_date - INTERVAL 1095 DAY) - INTERVAL 3 MONTH)::DATE
-                    AND ((end_date - INTERVAL 1095 DAY) + INTERVAL 3 MONTH)::DATE) AS w3,
-          (date BETWEEN ((end_date - INTERVAL 1825 DAY) - INTERVAL 3 MONTH)::DATE
-                    AND ((end_date - INTERVAL 1825 DAY) + INTERVAL 3 MONTH)::DATE) AS w5
-        FROM (SELECT *, max(date) OVER (PARTITION BY ticker, as_of) AS end_date
-              FROM dsliced)),
-      dagg AS (
-        SELECT ticker, as_of,
-          arg_max(dividend, date) AS d_end,
-          arg_max(CASE WHEN w3 THEN dividend END, CASE WHEN w3 THEN date END) AS s3,
-          arg_max(CASE WHEN w5 THEN dividend END, CASE WHEN w5 THEN date END) AS s5,
-          count(date) AS dn
-        FROM dmarked GROUP BY 1, 2),
+      ${dividendBlockCtes("divs", "splits", "grid")},
       feat AS (
-        SELECT p.ticker, p.as_of,
-          CASE WHEN p6 IS NOT NULL AND p_now IS NOT NULL
-            THEN (p_now - p6) / p6 ELSE 0.0 END AS ret6,
-          CASE WHEN p12 IS NOT NULL AND p_now IS NOT NULL
-            THEN (p_now - p12) / p12 ELSE 0.0 END AS ret12,
-          COALESCE(sd * sqrt(CAST(252.0 AS DOUBLE)), 0.0) AS vol,
-          CASE WHEN pn < 2 OR n_dd < 2 THEN 0.0 ELSE COALESCE(max_dd, 0.0) END AS mdd,
+        SELECT p.ticker, p.as_of, $priceOutputsSql,
           CASE WHEN x_n IS NULL THEN CAST('NaN' AS DOUBLE)
                WHEN s_n < 2 OR x_n < 2 THEN 0.0
                WHEN s_first <= 0 OR s_last <= 0 OR x_first <= 0 OR x_last <= 0 THEN 0.0
                ELSE (s_last / s_first - 1) - (x_last / x_first - 1) END AS srel,
-          CASE WHEN pn >= 200 THEN
-            CASE WHEN sma200 <> 0 THEN (sma50 - sma200) / sma200 ELSE 0.0 END
-          END AS smad,
           CASE WHEN fn > 0 THEN nde_l ELSE 0.0 END AS nde,
           CASE WHEN fn > 0 THEN eic_l ELSE 0.0 END AS eic0,
           CASE WHEN fn > 0 THEN COALESCE(cap_l, FALSE) ELSE FALSE END AS eic_capped,
-          CASE WHEN fn >= 2 AND eps_start IS NOT NULL AND eps_start > 0
-                 AND eps_end IS NOT NULL AND eps_end > 0
-            THEN pow(eps_end / eps_start, CAST(1.0 AS DOUBLE) / 3) - 1
-            ELSE CAST('NaN' AS DOUBLE) END AS eps_cagr,
-          CASE WHEN fn >= 2 AND fcf_start IS NOT NULL AND fcf_start > 0
-                 AND fcf_end IS NOT NULL AND fcf_end > 0
-            THEN pow(fcf_end / fcf_start, CAST(1.0 AS DOUBLE) / 3) - 1
-            ELSE CAST('NaN' AS DOUBLE) END AS fcf_cagr,
-          CASE WHEN fn > 0 THEN COALESCE(dy_last, 0.0) ELSE 0.0 END AS divy,
-          CASE WHEN fn < 2 THEN CAST('NaN' AS DOUBLE)
-               WHEN y_n = 0 THEN CAST('NaN' AS DOUBLE)
-               WHEN y_med = 0 THEN 0.0
-               ELSE (y_cur - y_med) / y_med END AS yvm,
-          COALESCE(pe_l, 0.0) AS pe_r,
-          COALESCE(pfcf_l, 0.0) AS pfcf_r,
-          COALESCE(po_l, 0.0) AS po_r,
-          CASE WHEN dn >= 2 AND s3 IS NOT NULL AND s3 > 0
-                 AND d_end IS NOT NULL AND d_end > 0
-            THEN pow(d_end / s3, CAST(1.0 AS DOUBLE) / 3) - 1
-            ELSE CAST('NaN' AS DOUBLE) END AS dcagr3,
-          CASE WHEN dn >= 2 AND s5 IS NOT NULL AND s5 > 0
-                 AND d_end IS NOT NULL AND d_end > 0
-            THEN pow(d_end / s5, CAST(1.0 AS DOUBLE) / 5) - 1
-            ELSE CAST('NaN' AS DOUBLE) END AS dcagr5
+          ${cagrSql("fn", "eps_start", "eps_end", 3)} AS eps_cagr,
+          ${cagrSql("fn", "fcf_start", "fcf_end", 3)} AS fcf_cagr,
+          $ratiosOutputsSql,
+          ${cagrSql("dn", "s3", "d_end", 3)} AS dcagr3,
+          ${cagrSql("dn", "s5", "d_end", 5)} AS dcagr5
         FROM pagg p
         LEFT JOIN xagg x ON x.ticker = p.ticker AND x.as_of = p.as_of
         LEFT JOIN fund f ON f.ticker = p.ticker AND f.as_of = p.as_of

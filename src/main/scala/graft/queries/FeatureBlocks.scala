@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.features.TickerFeatures
-import QueryDef.{moneySum, priceBlockCtes}
+import QueryDef.{cagrSql, dividendBlockCtes, moneySum, priceBlockCtes,
+  priceOutputsSql, ratiosOutputsSql, statementBlockCtes}
 
 /** Oracle conversions for the ticker-feature blocks that were previously
   * pinned only by golden specs (SURVEY §2.6 W6/W9/W10/W11/W14): the judged
@@ -87,45 +88,19 @@ object FeatureBlocks {
         SELECT ticker, date, b/10000 AS dy, b/100 AS pe, b/50 - 1500 AS pfcf,
                b/10000 AS po, b/10 AS fcf FROM base),
       $oracleGrid,
-      sliced AS (
-        SELECT g.ticker, g.as_of, r.date, r.dy, r.pe, r.pfcf, r.po, r.fcf
-        FROM grid g LEFT JOIN ratios r ON r.ticker = g.ticker AND r.date <= g.as_of),
-      marked AS (
-        SELECT *,
-          (dy IS NOT NULL AND dy > 0 AND
-           date >= ((end_date - INTERVAL 60 MONTH) - INTERVAL 90 DAY)::DATE) AS yv,
-          (pe > 0 AND pfcf > 0) AS pv,
-          (po IS NOT NULL AND po > 0) AS pov,
-          (date BETWEEN ((end_date - INTERVAL 1095 DAY) - INTERVAL 90 DAY)::DATE
-                    AND ((end_date - INTERVAL 1095 DAY) + INTERVAL 90 DAY)::DATE) AS fw
-        FROM (SELECT *, max(date) OVER (PARTITION BY ticker, as_of) AS end_date
-              FROM sliced)),
-      agg AS (
-        SELECT ticker, as_of,
-          count(date) AS n,
-          arg_max(dy, date) AS dy_last,
-          arg_max(CASE WHEN yv THEN dy END, CASE WHEN yv THEN date END) AS y_cur,
-          quantile_cont(CASE WHEN yv THEN dy END, 0.5) AS y_med,
-          count(CASE WHEN yv THEN 1 END) AS y_n,
-          arg_max(CASE WHEN pv THEN pe END, CASE WHEN pv THEN date END) AS pe_l,
-          arg_max(CASE WHEN pv THEN pfcf END, CASE WHEN pv THEN date END) AS pfcf_l,
-          arg_max(CASE WHEN pov THEN po END, CASE WHEN pov THEN date END) AS po_l,
-          arg_max(fcf, date) AS fcf_end,
-          arg_max(CASE WHEN fw THEN fcf END, CASE WHEN fw THEN date END) AS fcf_start
-        FROM marked GROUP BY 1, 2)
+      ${statementBlockCtes("ratios", "grid", withFundamentals = false)},
+      feat AS (
+        SELECT ticker, as_of, $ratiosOutputsSql,
+          ${cagrSql("fn", "fcf_start", "fcf_end", 3)} AS fcf_cagr
+        FROM fund)
       SELECT ticker, as_of,
-        round(CASE WHEN n > 0 THEN COALESCE(dy_last, 0.0) ELSE 0.0 END, 6) AS dividend_yield,
-        round(CASE WHEN n < 2 THEN 'NaN'::DOUBLE
-              WHEN y_n = 0 THEN 'NaN'::DOUBLE
-              WHEN y_med = 0 THEN 0.0
-              ELSE (y_cur - y_med) / y_med END, 6) AS yield_vs_5y_median,
-        round(COALESCE(pe_l, 0.0), 6) AS pe_ratio,
-        round(COALESCE(pfcf_l, 0.0), 6) AS pfcf_ratio,
-        round(COALESCE(po_l, 0.0), 6) AS payout_ratio,
-        round(CASE WHEN n >= 2 AND fcf_start IS NOT NULL AND fcf_start > 0
-                   AND fcf_end IS NOT NULL AND fcf_end > 0
-              THEN pow(fcf_end / fcf_start, 1.0/3) - 1 ELSE 'NaN'::DOUBLE END, 6) AS fcf_cagr_3y
-      FROM agg ORDER BY ticker, as_of"""))
+        round(divy, 6) AS dividend_yield,
+        round(yvm, 6) AS yield_vs_5y_median,
+        round(pe_r, 6) AS pe_ratio,
+        round(pfcf_r, 6) AS pfcf_ratio,
+        round(po_r, 6) AS payout_ratio,
+        round(fcf_cagr, 6) AS fcf_cagr_3y
+      FROM feat ORDER BY ticker, as_of"""))
 
   /** W1/W3/W5/W8 + A1/A3/A5 as COMPOSED in the pipeline: the full price
     * block — global prefix-stable daily returns (lag), 6m/12m
@@ -160,19 +135,15 @@ object FeatureBlocks {
       grid AS (
         SELECT DISTINCT l_suppkey::VARCHAR AS ticker, t.as_of
         FROM lineitem CROSS JOIN (VALUES (DATE '1997-06-30'), (DATE '1998-06-30')) t(as_of)),
-      ${priceBlockCtes("base", "grid", sector365 = false)}
+      ${priceBlockCtes("base", "grid", sector365 = false)},
+      feat AS (SELECT ticker, as_of, $priceOutputsSql FROM pagg)
       SELECT ticker, as_of,
-        round(CASE WHEN p6 IS NOT NULL AND p_now IS NOT NULL
-              THEN (p_now - p6) / p6 ELSE 0.0 END, 6) AS ret_6m,
-        round(CASE WHEN p12 IS NOT NULL AND p_now IS NOT NULL
-              THEN (p_now - p12) / p12 ELSE 0.0 END, 6) AS ret_12m,
-        round(COALESCE(sd * sqrt(252.0), 0.0), 6) AS volatility,
-        round(CASE WHEN pn < 2 OR n_dd < 2 THEN 0.0
-              ELSE COALESCE(max_dd, 0.0) END, 6) AS max_drawdown_1y,
-        round(CASE WHEN pn >= 200 THEN
-              CASE WHEN sma200 <> 0 THEN (sma50 - sma200) / sma200 ELSE 0.0 END
-              END, 6) AS sma_50_200_delta
-      FROM pagg ORDER BY ticker, as_of"""))
+        round(ret6, 6) AS ret_6m,
+        round(ret12, 6) AS ret_12m,
+        round(vol, 6) AS volatility,
+        round(mdd, 6) AS max_drawdown_1y,
+        round(smad, 6) AS sma_50_200_delta
+      FROM feat ORDER BY ticker, as_of"""))
 
   /** W6/W14: split-adjusted dividend CAGR at 3y and 5y horizons — the
     * dividends ride `SeriesOps.adjustForSplits` (divide by the cumulative
@@ -208,36 +179,10 @@ object FeatureBlocks {
         UNION ALL
         SELECT DISTINCT o_custkey::VARCHAR, DATE '1996-06-01', 1.5
         FROM orders WHERE o_custkey % 20 = 0),
-      adj AS (
-        SELECT d.ticker, d.date,
-          d.dividend / COALESCE((SELECT product(s.ratio) FROM splits s
-            WHERE s.ticker = d.ticker AND s.date <= d.date), 1.0) AS dividend
-        FROM divs d),
       $oracleGrid,
-      sliced AS (
-        SELECT g.ticker, g.as_of, a.date, a.dividend
-        FROM grid g LEFT JOIN adj a ON a.ticker = g.ticker AND a.date <= g.as_of),
-      marked AS (
-        SELECT *,
-          (date BETWEEN ((end_date - INTERVAL 1095 DAY) - INTERVAL 3 MONTH)::DATE
-                    AND ((end_date - INTERVAL 1095 DAY) + INTERVAL 3 MONTH)::DATE) AS w3,
-          (date BETWEEN ((end_date - INTERVAL 1825 DAY) - INTERVAL 3 MONTH)::DATE
-                    AND ((end_date - INTERVAL 1825 DAY) + INTERVAL 3 MONTH)::DATE) AS w5
-        FROM (SELECT *, max(date) OVER (PARTITION BY ticker, as_of) AS end_date
-              FROM sliced)),
-      agg AS (
-        SELECT ticker, as_of,
-          arg_max(dividend, date) AS d_end,
-          arg_max(CASE WHEN w3 THEN dividend END, CASE WHEN w3 THEN date END) AS s3,
-          arg_max(CASE WHEN w5 THEN dividend END, CASE WHEN w5 THEN date END) AS s5,
-          count(date) AS n
-        FROM marked GROUP BY 1, 2)
+      ${dividendBlockCtes("divs", "splits", "grid")}
       SELECT ticker, as_of,
-        round(CASE WHEN n >= 2 AND s3 IS NOT NULL AND s3 > 0
-                   AND d_end IS NOT NULL AND d_end > 0
-              THEN pow(d_end / s3, 1.0/3) - 1 ELSE 'NaN'::DOUBLE END, 6) AS dividend_cagr_3y,
-        round(CASE WHEN n >= 2 AND s5 IS NOT NULL AND s5 > 0
-                   AND d_end IS NOT NULL AND d_end > 0
-              THEN pow(d_end / s5, 1.0/5) - 1 ELSE 'NaN'::DOUBLE END, 6) AS dividend_cagr_5y
-      FROM agg ORDER BY ticker, as_of"""))
+        round(${cagrSql("dn", "s3", "d_end", 3)}, 6) AS dividend_cagr_3y,
+        round(${cagrSql("dn", "s5", "d_end", 5)}, 6) AS dividend_cagr_5y
+      FROM dagg ORDER BY ticker, as_of"""))
 }

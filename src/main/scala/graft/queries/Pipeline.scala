@@ -176,7 +176,11 @@ object Pipeline {
       "w5_validation_stats", "p2_static_encoding", "q40_global_merge",
       "q42_merge_with_existing"))
 
-  private def p1Plan(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private def p1Plan(s: org.apache.spark.sql.SparkSession, dir: String) =
+    TickerFeaturePipeline.normalize(p1Validated(s, dir)).orderBy("ticker", "as_of")
+
+  /** p1's validated feature rows, before normalize's rounding. */
+  private[graft] def p1Validated(s: org.apache.spark.sql.SparkSession, dir: String) = {
       val in = inputsFrom(s, dir)
       // one distinct-tickers pass feeds BOTH the grid and the ticker→etf
       // map: prices is ticker-partitioned (checkpointPartitioned), so the
@@ -197,9 +201,7 @@ object Pipeline {
       val features = TickerFeatures.dynamicFeaturesSharedIndex(grid, in,
         tickerEtf, etfIndex, minPriceRows = 5,
         seriesPriceBlock = TickerFeatures.choosePriceForm(grid, in.prices))
-      val validated = TickerValidation.validate(features)
-      TickerFeaturePipeline.normalize(validated)
-        .orderBy("ticker", "as_of")
+      TickerValidation.validate(features)
   }
 
   /** A12 graduated to an oracle row (r8 verdict task 3 — the e10
@@ -306,11 +308,12 @@ object Pipeline {
     * columns stay rows-only inside p1 (their p1-fixture derivations ride
     * decimal-division scale rules that no engine pair replays bit-stably;
     * the same FORMULAS are value-judged by w4's oracle on the dynamic-row
-    * fixture). Engine-parity notes: Spark computes daily returns by
-    * DECIMAL division (scale-18 HALF_UP) where the twin divides doubles —
-    * a ~1e-16 relative difference that cannot move a round(2) Float32
-    * except at engineered half-way values, which o_totalprice-derived
-    * statistics never land on (swept at 3 SFs on registration). */
+    * fixture). Engine-parity notes: both engines compute daily returns by
+    * dividing double closes; Spark's volatility folds them in date order
+    * (the sample-variance update of `stddev_samp`) where the twin's
+    * `stddev_samp` accumulates in its own order — a last-ulp difference
+    * that cannot move a round(2) Float32 except at engineered half-way
+    * values, which o_totalprice-derived statistics never land on. */
   val p8 = QueryDef("p8_store_price_slice",
     (s, dir) => p1Materialized(s, dir).select(
         col("ticker"), col("as_of"), col("6m_return"), col("12m_return"),
@@ -327,16 +330,7 @@ object Pipeline {
           (DATE '1999-12-31'), (DATE '2000-12-31')) t(as_of)),
       ${QueryDef.priceBlockCtes("px", "grid", sector365 = false)},
       feat AS (
-        SELECT ticker, as_of,
-          CASE WHEN p6 IS NOT NULL AND p_now IS NOT NULL
-            THEN (p_now - p6) / p6 ELSE 0.0 END AS ret6,
-          CASE WHEN p12 IS NOT NULL AND p_now IS NOT NULL
-            THEN (p_now - p12) / p12 ELSE 0.0 END AS ret12,
-          COALESCE(sd * sqrt(CAST(252.0 AS DOUBLE)), 0.0) AS vol,
-          CASE WHEN pn < 2 OR n_dd < 2 THEN 0.0 ELSE COALESCE(max_dd, 0.0) END AS mdd,
-          CASE WHEN pn >= 200 THEN
-            CASE WHEN sma200 <> 0 THEN (sma50 - sma200) / sma200 ELSE 0.0 END
-          END AS smad
+        SELECT ticker, as_of, ${QueryDef.priceOutputsSql}
         FROM pagg WHERE pn >= 5)
       SELECT ticker, as_of,
         CAST(round(TRY_CAST(ret6 AS DECIMAL(28,8)), 2) AS FLOAT) AS "6m_return",
@@ -426,46 +420,22 @@ object Pipeline {
     Some(s"""WITH feat AS (
         SELECT CAST(c_custkey AS VARCHAR) AS ticker, c_mktsegment AS sector,
           CASE WHEN c_custkey % 23 = 0 THEN NULL
-               ELSE CAST(c_custkey % 80 AS DOUBLE) / 1000.0 END AS dy,
+               ELSE CAST(c_custkey % 80 AS DOUBLE) / 1000.0 END AS dividend_yield,
           CASE WHEN c_custkey % 7 = 0 THEN NULL
-               ELSE (CAST(c_custkey % 60 AS DOUBLE) - 10.0) / 100.0 END AS cagr,
+               ELSE (CAST(c_custkey % 60 AS DOUBLE) - 10.0) / 100.0 END AS dividend_cagr_3y,
           CASE WHEN c_custkey % 17 = 0 THEN NULL
-               ELSE CAST(c_custkey % 100 AS DOUBLE) / 100.0 END AS dd,
+               ELSE CAST(c_custkey % 100 AS DOUBLE) / 100.0 END AS max_drawdown_1y,
           CASE WHEN c_custkey % 11 = 0 THEN NULL
-               ELSE CAST(c_custkey % 35 AS DOUBLE) / 10.0 END AS vol,
+               ELSE CAST(c_custkey % 35 AS DOUBLE) / 10.0 END AS volatility,
           CASE WHEN c_custkey % 13 = 0 THEN NULL
-               ELSE CAST(c_custkey % 25 AS DOUBLE) / 10.0 END AS pr,
+               ELSE CAST(c_custkey % 25 AS DOUBLE) / 10.0 END AS payout_ratio,
           CASE WHEN c_custkey % 19 = 0 THEN NULL
-               ELSE CAST(c_custkey % 22 AS DOUBLE) END AS nde,
+               ELSE CAST(c_custkey % 22 AS DOUBLE) END AS net_debt_to_ebitda,
           CAST(${TextFns.hash32Sql("CAST(c_custkey AS VARCHAR)")} % 10000 AS DOUBLE)
             / 10000.0 AS cut_prob
         FROM customer),
-      scored AS (
-        SELECT ticker, sector, cut_prob,
-          COALESCE(dy, 0.0) * (1.0 - cut_prob) AS adj_yield,
-          ln(1.0 + least(greatest(COALESCE(cagr, 0.0) / 0.30, 0.0), 1.0) * 0.30)
-            / ln(1.0 + 0.30) AS div_growth,
-          ((1.0 - cut_prob)
-           + (1.0 - least(greatest(COALESCE(dd, 1.0), 0.0), 1.0))
-           + (1.0 - least(greatest(COALESCE(vol, 3.0) / 3.0, 0.0), 1.0))
-           + (1.0 - least(greatest(COALESCE(pr, 2.0) / 2.0, 0.0), 1.0))
-           + (1.0 - least(greatest(COALESCE(nde, 20.0) / 20.0, 0.0), 1.0))) / 5.0
-            AS stability
-        FROM feat),
-      final AS (
-        SELECT *, adj_yield * 0.5 + div_growth * 0.3 + stability * 0.2
-          AS final_score
-        FROM scored WHERE cut_prob < 0.25),
-      grp AS (
-        SELECT *, row_number() OVER
-            (PARTITION BY sector ORDER BY final_score DESC, ticker) AS gr
-        FROM final),
-      ranked AS (
-        SELECT *, row_number() OVER (ORDER BY final_score DESC, ticker) AS rk
-        FROM grp WHERE gr <= 4),
-      port AS (
-        SELECT *, 1.0 / COUNT(*) OVER () AS weight
-        FROM (SELECT * FROM ranked WHERE rk <= 20))
+      ${graft.analysis.Scoring.portfolioSql("feat", n = 20,
+        groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.25)}
       SELECT ticker, sector,
         round(adj_yield, 6) AS adj_yield,
         round(div_growth, 6) AS div_growth,
@@ -582,50 +552,26 @@ object Pipeline {
           round(col("weight"), 6).as("weight"))
         .orderBy("ticker")
     },
-    Some("""WITH feat AS (
+    Some(s"""WITH feat AS (
         SELECT CAST(c_custkey AS VARCHAR) AS ticker, c_mktsegment AS sector,
           DATE '2000-01-01' + CAST(c_custkey % 7 AS INT) AS as_of,
           CASE WHEN c_custkey % 10 >= 5 THEN 1.0 ELSE 0.0 END AS cut_prob,
           CASE WHEN c_custkey % 23 = 0 THEN NULL
-               ELSE CAST(c_custkey % 80 AS DOUBLE) / 1000.0 END AS dy,
+               ELSE CAST(c_custkey % 80 AS DOUBLE) / 1000.0 END AS dividend_yield,
           CASE WHEN c_custkey % 29 = 0 THEN NULL
-               ELSE (CAST(c_custkey % 60 AS DOUBLE) - 10.0) / 100.0 END AS cagr,
+               ELSE (CAST(c_custkey % 60 AS DOUBLE) - 10.0) / 100.0 END AS dividend_cagr_3y,
           CASE WHEN c_custkey % 17 = 0 THEN NULL
-               ELSE CAST(c_custkey % 100 AS DOUBLE) / 100.0 END AS dd,
+               ELSE CAST(c_custkey % 100 AS DOUBLE) / 100.0 END AS max_drawdown_1y,
           CASE WHEN c_custkey % 11 = 0 THEN NULL
-               ELSE CAST(c_custkey % 35 AS DOUBLE) / 10.0 END AS vol,
+               ELSE CAST(c_custkey % 35 AS DOUBLE) / 10.0 END AS volatility,
           CASE WHEN c_custkey % 13 = 0 THEN NULL
-               ELSE CAST(c_custkey % 25 AS DOUBLE) / 10.0 END AS pr,
+               ELSE CAST(c_custkey % 25 AS DOUBLE) / 10.0 END AS payout_ratio,
           CASE WHEN c_custkey % 19 = 0 THEN NULL
-               ELSE CAST(c_custkey % 22 AS DOUBLE) END AS nde
+               ELSE CAST(c_custkey % 22 AS DOUBLE) END AS net_debt_to_ebitda
         FROM customer
         WHERE c_custkey % 7 IN (3, 4, 5, 6)),
-      scored AS (
-        SELECT ticker, sector, as_of, cut_prob,
-          COALESCE(dy, 0.0) * (1.0 - cut_prob) AS adj_yield,
-          ln(1.0 + least(greatest(COALESCE(cagr, 0.0) / 0.30, 0.0), 1.0) * 0.30)
-            / ln(1.0 + 0.30) AS div_growth,
-          ((1.0 - cut_prob)
-           + (1.0 - least(greatest(COALESCE(dd, 1.0), 0.0), 1.0))
-           + (1.0 - least(greatest(COALESCE(vol, 3.0) / 3.0, 0.0), 1.0))
-           + (1.0 - least(greatest(COALESCE(pr, 2.0) / 2.0, 0.0), 1.0))
-           + (1.0 - least(greatest(COALESCE(nde, 20.0) / 20.0, 0.0), 1.0))) / 5.0
-            AS stability
-        FROM feat),
-      final AS (
-        SELECT *, adj_yield * 0.5 + div_growth * 0.3 + stability * 0.2
-          AS final_score
-        FROM scored WHERE cut_prob < 0.25),
-      grp AS (
-        SELECT *, row_number() OVER
-            (PARTITION BY sector ORDER BY final_score DESC, ticker) AS gr
-        FROM final),
-      ranked AS (
-        SELECT *, row_number() OVER (ORDER BY final_score DESC, ticker) AS rk
-        FROM grp WHERE gr <= 4),
-      port AS (
-        SELECT *, 1.0 / COUNT(*) OVER () AS weight
-        FROM (SELECT * FROM ranked WHERE rk <= 20))
+      ${graft.analysis.Scoring.portfolioSql("feat", n = 20,
+        groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.25)}
       SELECT ticker, sector, as_of,
         round(adj_yield, 6) AS adj_yield,
         round(div_growth, 6) AS div_growth,

@@ -132,4 +132,119 @@ object QueryDef {
           max(dd) AS max_dd$sectorAggs
         FROM pdd GROUP BY 1, 2)"""
   }
+
+  /** The five price outputs of `TickerFeatures.priceOutputs` over the
+    * `pagg` columns of [[priceBlockCtes]], as select items ret6, ret12,
+    * vol, mdd and smad. */
+  val priceOutputsSql: String =
+    """CASE WHEN p6 IS NOT NULL AND p_now IS NOT NULL
+            THEN (p_now - p6) / p6 ELSE 0.0 END AS ret6,
+          CASE WHEN p12 IS NOT NULL AND p_now IS NOT NULL
+            THEN (p_now - p12) / p12 ELSE 0.0 END AS ret12,
+          COALESCE(sd * sqrt(CAST(252.0 AS DOUBLE)), 0.0) AS vol,
+          CASE WHEN pn < 2 OR n_dd < 2 THEN 0.0 ELSE COALESCE(max_dd, 0.0) END AS mdd,
+          CASE WHEN pn >= 200 THEN
+            CASE WHEN sma200 <> 0 THEN (sma50 - sma200) / sma200 ELSE 0.0 END
+          END AS smad"""
+
+  /** `TickerFeatures.cagr` as a SQL expression: the CAGR over `years` from
+    * `start` to `end`, NaN when the count `n` is below 2 or either value
+    * is missing or <= 0. */
+  def cagrSql(n: String, start: String, end: String, years: Int): String =
+    s"""CASE WHEN $n >= 2 AND $start IS NOT NULL AND $start > 0
+                 AND $end IS NOT NULL AND $end > 0
+            THEN pow($end / $start, CAST(1.0 AS DOUBLE) / $years) - 1
+            ELSE CAST('NaN' AS DOUBLE) END"""
+
+  /** The statement-block CTE chain of the DuckDB oracles, the SQL form of
+    * `TickerFeatures.ratiosBlock` (and, with `withFundamentals`, of
+    * `fundamentalsBlock` and `incomeGrowthBlock`): `fsliced` (grid ⟕
+    * statement rows at or before as_of), `fmarked` (the yield, P/E-P/FCF,
+    * payout and ±90-day CAGR-start validity flags against the cell's end
+    * date) and `fund`, one row per cell with the row count fn and the
+    * picks dy_last, y_cur, y_med, y_n, pe_l, pfcf_l, po_l, fcf_end and
+    * fcf_start. `stm` names a (ticker, date, dy, pe, pfcf, po, fcf) CTE;
+    * `withFundamentals` also reads its eps, nde_row, eic_row and cap_row
+    * and adds the picks nde_l, eic_l, cap_l, eps_end and eps_start. */
+  def statementBlockCtes(stm: String, grid: String, withFundamentals: Boolean): String = {
+    val fundCols = if (!withFundamentals) "" else ", r.eps, r.nde_row, r.eic_row, r.cap_row"
+    val fundAggs = if (!withFundamentals) "" else """
+          arg_max(nde_row, date) AS nde_l,
+          arg_max(eic_row, date) AS eic_l,
+          arg_max(cap_row, date) AS cap_l,
+          arg_max(eps, date) AS eps_end,
+          arg_max(CASE WHEN fw THEN eps END, CASE WHEN fw THEN date END) AS eps_start,"""
+    s"""fsliced AS (
+        SELECT g.ticker, g.as_of, r.date, r.dy, r.pe, r.pfcf, r.po, r.fcf$fundCols
+        FROM $grid g LEFT JOIN $stm r ON r.ticker = g.ticker AND r.date <= g.as_of),
+      fmarked AS (
+        SELECT *,
+          (dy IS NOT NULL AND dy > 0 AND
+           date >= ((end_date - INTERVAL 60 MONTH) - INTERVAL 90 DAY)::DATE) AS yv,
+          (pe > 0 AND pfcf > 0) AS pv,
+          (po IS NOT NULL AND po > 0) AS pov,
+          (date BETWEEN ((end_date - INTERVAL 1095 DAY) - INTERVAL 90 DAY)::DATE
+                    AND ((end_date - INTERVAL 1095 DAY) + INTERVAL 90 DAY)::DATE) AS fw
+        FROM (SELECT *, max(date) OVER (PARTITION BY ticker, as_of) AS end_date
+              FROM fsliced)),
+      fund AS (
+        SELECT ticker, as_of,
+          count(date) AS fn,$fundAggs
+          arg_max(dy, date) AS dy_last,
+          arg_max(CASE WHEN yv THEN dy END, CASE WHEN yv THEN date END) AS y_cur,
+          quantile_cont(CASE WHEN yv THEN dy END, 0.5) AS y_med,
+          count(CASE WHEN yv THEN 1 END) AS y_n,
+          arg_max(CASE WHEN pv THEN pe END, CASE WHEN pv THEN date END) AS pe_l,
+          arg_max(CASE WHEN pv THEN pfcf END, CASE WHEN pv THEN date END) AS pfcf_l,
+          arg_max(CASE WHEN pov THEN po END, CASE WHEN pov THEN date END) AS po_l,
+          arg_max(fcf, date) AS fcf_end,
+          arg_max(CASE WHEN fw THEN fcf END, CASE WHEN fw THEN date END) AS fcf_start
+        FROM fmarked GROUP BY 1, 2)"""
+  }
+
+  /** The ratio outputs of `TickerFeatures.ratiosOutputs` over the `fund`
+    * columns of [[statementBlockCtes]], as select items divy, yvm, pe_r,
+    * pfcf_r and po_r. */
+  val ratiosOutputsSql: String =
+    """CASE WHEN fn > 0 THEN COALESCE(dy_last, 0.0) ELSE 0.0 END AS divy,
+          CASE WHEN fn < 2 THEN CAST('NaN' AS DOUBLE)
+               WHEN y_n = 0 THEN CAST('NaN' AS DOUBLE)
+               WHEN y_med = 0 THEN 0.0
+               ELSE (y_cur - y_med) / y_med END AS yvm,
+          COALESCE(pe_l, 0.0) AS pe_r,
+          COALESCE(pfcf_l, 0.0) AS pfcf_r,
+          COALESCE(po_l, 0.0) AS po_r"""
+
+  /** The dividend-block CTE chain of the DuckDB oracles, the SQL form of
+    * `TickerFeatures.dividendBlock`: `adj` (each dividend divided by the
+    * product of the split ratios at or before its date, the twin of
+    * `SeriesOps.adjustForSplits`), `dsliced` (grid ⟕ adjusted dividends at
+    * or before as_of), `dmarked` (the ±3-month start windows 3 and 5 years
+    * before the cell's end date) and `dagg`, one row per cell with d_end,
+    * s3, s5 and the row count dn. `divs` names a (ticker, date, dividend)
+    * CTE and `splits` a (ticker, date, ratio) CTE. */
+  def dividendBlockCtes(divs: String, splits: String, grid: String): String =
+    s"""adj AS (
+        SELECT v.ticker, v.date,
+          v.dividend / COALESCE((SELECT product(s.ratio) FROM $splits s
+            WHERE s.ticker = v.ticker AND s.date <= v.date), 1.0) AS dividend
+        FROM $divs v),
+      dsliced AS (
+        SELECT g.ticker, g.as_of, a.date, a.dividend
+        FROM $grid g LEFT JOIN adj a ON a.ticker = g.ticker AND a.date <= g.as_of),
+      dmarked AS (
+        SELECT *,
+          (date BETWEEN ((end_date - INTERVAL 1095 DAY) - INTERVAL 3 MONTH)::DATE
+                    AND ((end_date - INTERVAL 1095 DAY) + INTERVAL 3 MONTH)::DATE) AS w3,
+          (date BETWEEN ((end_date - INTERVAL 1825 DAY) - INTERVAL 3 MONTH)::DATE
+                    AND ((end_date - INTERVAL 1825 DAY) + INTERVAL 3 MONTH)::DATE) AS w5
+        FROM (SELECT *, max(date) OVER (PARTITION BY ticker, as_of) AS end_date
+              FROM dsliced)),
+      dagg AS (
+        SELECT ticker, as_of,
+          arg_max(dividend, date) AS d_end,
+          arg_max(CASE WHEN w3 THEN dividend END, CASE WHEN w3 THEN date END) AS s3,
+          arg_max(CASE WHEN w5 THEN dividend END, CASE WHEN w5 THEN date END) AS s5,
+          count(date) AS dn
+        FROM dmarked GROUP BY 1, 2)"""
 }

@@ -73,6 +73,48 @@ object TextVector15 {
     (sizes, inter, predicted)
   }
 
+  /** The DuckDB twin of [[d80Docs]] and of the sizes and intersections of
+    * [[d80Relations]]: `base` -> `toked` -> `long_docs` -> `docs` (the
+    * panel with its strong and weak twins), the `tok`/`sh`/`seeds`/`xv`/
+    * `sig` CTEs of `Dedup.affineSignatureSql` over it, `sizes` (distinct
+    * shingles per doc) and `inter` (shared shingles per doc pair, kept when
+    * at least `minShared`). Starts after the `WITH`, so it also opens a
+    * `WITH RECURSIVE`. */
+  private def d80PanelSql(minShared: Int): String =
+    s"""base AS (SELECT doc_id, text FROM documents
+        WHERE doc_id % 20 = 0 AND doc_id < 5000),
+      toked AS (SELECT doc_id, text,
+          ${TextFns.tokensSql("text")} AS t
+        FROM base),
+      long_docs AS (SELECT * FROM toked WHERE len(t) >= 15),
+      docs AS (
+        SELECT doc_id, text FROM base
+        UNION ALL
+        SELECT doc_id + 6000000000, array_to_string(t[1:len(t)-5], ' ')
+        FROM long_docs WHERE doc_id % 40 = 0
+        UNION ALL
+        SELECT doc_id + 7000000000,
+          array_to_string(t[1:greatest(len(t)*2//5, 3)], ' ')
+        FROM long_docs WHERE doc_id % 40 <> 0),
+      ${Dedup.affineSignatureSql("docs", "doc_id", "text", 16)},
+      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
+      inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+          CAST(COUNT(*) AS BIGINT) AS n_int
+        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY 1, 2 HAVING COUNT(*) >= $minShared)"""
+
+  /** The predicted pairs of [[d80Relations]] over the `sig` CTE of
+    * [[d80PanelSql]]: `banded` (4 bands of 4 minhashes per doc, the twin of
+    * `Dedup.md5Bands`) and `pred` (doc pairs sharing a band key, the twin
+    * of `Dedup.pairCandidates`). */
+  private val lshPairsSql: String =
+    """banded AS (SELECT doc_id, CAST(seed // 4 AS INT) AS band,
+          array_to_string(list(CAST(mh AS VARCHAR) ORDER BY seed), ',') AS bkey
+        FROM sig GROUP BY 1, 2),
+      pred AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM banded a JOIN banded b
+          ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)"""
+
   val d80 = QueryDef("d80_lsh_pr_eval",
     (s, dir) => {
       val (sizes, inter, predicted0) = d80Relations(d80Docs(s, dir))
@@ -95,33 +137,8 @@ object TextVector15 {
             .as("jaccard_r"))
         .orderBy("id_a", "id_b")
     },
-    Some(s"""WITH base AS (SELECT doc_id, text FROM documents
-        WHERE doc_id % 20 = 0 AND doc_id < 5000),
-      toked AS (SELECT doc_id, text,
-          ${TextFns.tokensSql("text")} AS t
-        FROM base),
-      long_docs AS (SELECT * FROM toked WHERE len(t) >= 15),
-      docs AS (
-        SELECT doc_id, text FROM base
-        UNION ALL
-        SELECT doc_id + 6000000000, array_to_string(t[1:len(t)-5], ' ')
-        FROM long_docs WHERE doc_id % 40 = 0
-        UNION ALL
-        SELECT doc_id + 7000000000,
-          array_to_string(t[1:greatest(len(t)*2//5, 3)], ' ')
-        FROM long_docs WHERE doc_id % 40 <> 0),
-      ${Dedup.affineSignatureSql("docs", "doc_id", "text", 16)},
-      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-      inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          CAST(COUNT(*) AS BIGINT) AS n_int
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      banded AS (SELECT doc_id, CAST(seed // 4 AS INT) AS band,
-          array_to_string(list(CAST(mh AS VARCHAR) ORDER BY seed), ',') AS bkey
-        FROM sig GROUP BY 1, 2),
-      pred AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+    Some(s"""WITH ${d80PanelSql(1)},
+      $lshPairsSql,
       surface AS (
         SELECT id_a, id_b FROM inter WHERE n_int >= 2
         UNION
@@ -274,33 +291,8 @@ object TextVector15 {
         .toDF("n_docs", "n_pairs", "pair_tp", "pair_fp", "pair_fn",
           "rand_r", "precision_r", "recall_r")
     },
-    Some(s"""WITH RECURSIVE base AS (SELECT doc_id, text FROM documents
-        WHERE doc_id % 20 = 0 AND doc_id < 5000),
-      toked AS (SELECT doc_id, text,
-          ${TextFns.tokensSql("text")} AS t
-        FROM base),
-      long_docs AS (SELECT * FROM toked WHERE len(t) >= 15),
-      docs AS (
-        SELECT doc_id, text FROM base
-        UNION ALL
-        SELECT doc_id + 6000000000, array_to_string(t[1:len(t)-5], ' ')
-        FROM long_docs WHERE doc_id % 40 = 0
-        UNION ALL
-        SELECT doc_id + 7000000000,
-          array_to_string(t[1:greatest(len(t)*2//5, 3)], ' ')
-        FROM long_docs WHERE doc_id % 40 <> 0),
-      ${Dedup.affineSignatureSql("docs", "doc_id", "text", 16)},
-      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-      inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          CAST(COUNT(*) AS BIGINT) AS n_int
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2),
-      banded AS (SELECT doc_id, CAST(seed // 4 AS INT) AS band,
-          array_to_string(list(CAST(mh AS VARCHAR) ORDER BY seed), ',') AS bkey
-        FROM sig GROUP BY 1, 2),
-      pred AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM banded a JOIN banded b
-          ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+    Some(s"""WITH RECURSIVE ${d80PanelSql(1)},
+      $lshPairsSql,
       truth AS (SELECT i.id_a, i.id_b
         FROM inter i
         JOIN sizes na ON na.doc_id = i.id_a
@@ -387,27 +379,7 @@ object TextVector15 {
           round(lit(2.0) * col("agree16") / 16 - 1.0, 6).as("jhat_r"))
         .orderBy("id_a", "id_b")
     },
-    Some(s"""WITH base AS (SELECT doc_id, text FROM documents
-        WHERE doc_id % 20 = 0 AND doc_id < 5000),
-      toked AS (SELECT doc_id, text,
-          ${TextFns.tokensSql("text")} AS t
-        FROM base),
-      long_docs AS (SELECT * FROM toked WHERE len(t) >= 15),
-      docs AS (
-        SELECT doc_id, text FROM base
-        UNION ALL
-        SELECT doc_id + 6000000000, array_to_string(t[1:len(t)-5], ' ')
-        FROM long_docs WHERE doc_id % 40 = 0
-        UNION ALL
-        SELECT doc_id + 7000000000,
-          array_to_string(t[1:greatest(len(t)*2//5, 3)], ' ')
-        FROM long_docs WHERE doc_id % 40 <> 0),
-      ${Dedup.affineSignatureSql("docs", "doc_id", "text", 16)},
-      sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY 1),
-      inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          CAST(COUNT(*) AS BIGINT) AS n_int
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+    Some(s"""WITH ${d80PanelSql(2)},
       bits AS (SELECT doc_id, seed, mh % 2 AS bit FROM sig)
       SELECT i.id_a, i.id_b,
         ROUND(CAST(i.n_int AS DOUBLE) / (na.n + nb.n - i.n_int), 6) AS jaccard_r,

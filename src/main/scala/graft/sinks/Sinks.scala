@@ -157,7 +157,8 @@ object Sinks {
     else { writeParquet(df, path); (true, h) }
   }
 
-  /** Order-independent content hash (sum of per-row xxhash64). */
+  /** Order-independent content hash: the sum of per-row xxhash64 over all
+    * columns (stringified), "empty" for a frame without rows. */
   def contentHash(df: DataFrame): String = {
     val row = df.select(
       xxhash64(df.columns.map(c => col(c).cast("string")).toSeq: _*).as("h"))

@@ -210,17 +210,25 @@ object EventStreams {
         coalesce(col("p.user_id"), col("c.user_id")).as("user_id"))
   }
 
-  /** File-source stream over an events directory (parquet), processing all
-    * available data then stopping — the `Trigger.AvailableNow` incremental
-    * pattern that replaces the reference's mtime-staleness checks. */
-  def runHourlyAvailableNow(spark: SparkSession, inputDir: String,
-                            outputDir: String, checkpoint: String,
-                            schema: StructType,
-                            readOptions: Map[String, String] = Map.empty)
-      : StreamingQuery = {
-    val stream = spark.readStream.schema(schema).options(readOptions)
-      .parquet(inputDir)
-    hourlyByType(stream, withWatermark = true)
+  /** File-source drive of a streaming transform with `Trigger.AvailableNow`
+    * — the incremental pattern that replaces the reference's
+    * mtime-staleness checks: `transform` runs over the parquet files under
+    * `inputDir` (read with `schema` and `readOptions`, e.g.
+    * maxFilesPerTrigger to slice the input into micro-batches), its rows
+    * are appended to the parquet sink at `outputDir`, and the query stops
+    * once all available data is processed. State (watermarks, dedup keys,
+    * open windows and sessions) lives under `checkpoint`, so a later run
+    * over newly arrived files resumes it; MicroBatchExecution runs one
+    * extra batch after the last data batch when the watermark advanced, so
+    * timeouts and windows pending at end of input fire before the stop.
+    * Drives [[hourlyByType]] (s1), [[firstPerKeyStream]] (s3),
+    * [[slidingByType]] (s5) and [[closedSessions]]. */
+  def runAvailableNow(spark: SparkSession, inputDir: String,
+                      outputDir: String, checkpoint: String,
+                      schema: StructType,
+                      readOptions: Map[String, String] = Map.empty)
+                     (transform: DataFrame => Dataset[_]): StreamingQuery =
+    transform(spark.readStream.schema(schema).options(readOptions).parquet(inputDir))
       .writeStream
       .format("parquet")
       .option("path", outputDir)
@@ -228,78 +236,6 @@ object EventStreams {
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
-
-  /** File-source drive of [[firstPerKeyStream]] (the s3 transform) with
-    * Trigger.AvailableNow — dedup state lives in the checkpoint's state
-    * store and is evicted as the watermark passes (the
-    * dropDuplicatesWithinWatermark contract); `readOptions` lets a scale
-    * probe slice the input into micro-batches (maxFilesPerTrigger). */
-  def firstPerKeyAvailableNow(spark: SparkSession, inputDir: String,
-                              outputDir: String, checkpoint: String,
-                              schema: StructType,
-                              readOptions: Map[String, String] = Map.empty)
-      : StreamingQuery = {
-    val stream = spark.readStream.schema(schema).options(readOptions)
-      .parquet(inputDir)
-    firstPerKeyStream(stream)
-      .writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** File-source drive of [[slidingByType]] (the s5 transform) with
-    * Trigger.AvailableNow — every event updates 4 overlapping windows;
-    * watermark-bounded window state, Append emission on window close. */
-  def slidingByTypeAvailableNow(spark: SparkSession, inputDir: String,
-                                outputDir: String, checkpoint: String,
-                                schema: StructType,
-                                readOptions: Map[String, String] = Map.empty)
-      : StreamingQuery = {
-    val stream = spark.readStream.schema(schema).options(readOptions)
-      .parquet(inputDir)
-    slidingByType(stream, withWatermark = true)
-      .writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** File-source drive of [[closedSessions]] with Trigger.AvailableNow —
-    * the restartable form: state (open sessions) lives in the checkpoint's
-    * state store, so a later run over newly-arrived files RESTORES the
-    * open sessions and closes them when the new data's watermark passes
-    * their gap deadline (MicroBatchExecution runs one extra batch after
-    * the last data batch when the watermark advanced, so event-time
-    * timeouts pending at end-of-input fire before the query stops). The
-    * r12 degenerate sweep drives this across runs and state-store
-    * providers. */
-  def closedSessionsAvailableNow(spark: SparkSession, inputDir: String,
-                                 outputDir: String, checkpoint: String,
-                                 gapMinutes: Int = 30,
-                                 readOptions: Map[String, String] = Map.empty)
-      : StreamingQuery = {
-    import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[EventIn].schema
-    val stream = spark.readStream.schema(schema)
-      .option("recursiveFileLookup", "true").options(readOptions)
-      .parquet(inputDir).as[EventIn]
-    closedSessions(stream, gapMinutes)
-      .writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** Streaming keyed upsert into a parquet store via foreachBatch — the
     * incremental-maintenance sink: each micro-batch merges into the store

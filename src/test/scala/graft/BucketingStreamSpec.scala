@@ -254,8 +254,8 @@ class BucketingStreamSpec extends SparkSpec {
       (java.sql.Timestamp.valueOf("2024-01-01 06:20:00"), 2L, "view", 5.0))
       .toDF("ts", "user_id", "event_type", "value")
     events.write.parquet(input)
-    val q = EventStreams.runHourlyAvailableNow(spark, input, output, ckpt,
-      events.schema)
+    val q = EventStreams.runAvailableNow(spark, input, output, ckpt,
+      events.schema)(EventStreams.hourlyByType(_, withWatermark = true))
     q.awaitTermination(60000)
     // append-mode windows flush when the stream ends (AvailableNow finalizes)
     val out = spark.read.parquet(output)
@@ -263,8 +263,8 @@ class BucketingStreamSpec extends SparkSpec {
       Set("window_start", "event_type", "n", "sum_value"))
     // rerun with same checkpoint: no new data, no duplicate output
     val n1 = out.count()
-    val q2 = EventStreams.runHourlyAvailableNow(spark, input, output, ckpt,
-      events.schema)
+    val q2 = EventStreams.runAvailableNow(spark, input, output, ckpt,
+      events.schema)(EventStreams.hourlyByType(_, withWatermark = true))
     q2.awaitTermination(60000)
     assert(spark.read.parquet(output).count() == n1)
   }

@@ -172,18 +172,28 @@ class PipelineSpec extends SparkSpec {
     // the orders⨝liAgg join feeding p1's yearly aggregate runs as a
     // broadcast or a sort-merge join; each delivers rows to the sums in a
     // different order, and p1's violations text prints the ratios built
-    // from those sums at full precision
+    // from those sums at full precision. The same holds for the built
+    // features' volatility, which violations also prints when out of range.
     val dir = s"${sys.props("user.home")}/testdata/sf0.001"
-    def statements(conf: (String, String)*) = {
+    def build(conf: (String, String)*) = {
       val s = spark.newSession()
       conf.foreach { case (k, v) => s.conf.set(k, v) }
       val in = graft.queries.Pipeline.inputsForProbe(s, dir)
-      in.statements.get.orderBy("ticker", "date").collect().toSeq
+      val features = graft.queries.Pipeline.p1Validated(s, dir)
+        .select("ticker", "as_of", "volatility", "violations")
+      (in.statements.get.orderBy("ticker", "date").collect().toSeq,
+        features.orderBy("ticker", "as_of").collect().toSeq)
     }
-    val broadcast = statements("spark.sql.shuffle.partitions" -> "3")
-    val sortMerge = statements("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    val (broadcast, broadcastFeatures) = build("spark.sql.shuffle.partitions" -> "3")
+    val (sortMerge, sortMergeFeatures) = build(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "7")
     assert(broadcast.nonEmpty)
     assert(broadcast == sortMerge)
+    assert(broadcastFeatures.nonEmpty &&
+      broadcastFeatures.size == sortMergeFeatures.size)
+    val differing = broadcastFeatures.zip(sortMergeFeatures).filter { case (a, b) => a != b }
+    assert(differing.isEmpty,
+      s"${differing.size} feature rows differ, e.g. ${differing.take(2).mkString("; ")}")
   }
 }

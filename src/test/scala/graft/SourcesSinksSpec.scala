@@ -157,6 +157,12 @@ class SourcesSinksSpec extends SparkSpec {
     // different content -> different hash -> rewrite
     val (changed3, _) = Sinks.writeIfChanged(df.withColumn("v", lit("x")), dir, Some(h1))
     assert(changed3)
+    // an empty frame has its own hash, stable across writes
+    val empty = df.filter(lit(false))
+    val (changed4, h4) = Sinks.writeIfChanged(empty, dir, Some(h1))
+    assert(changed4 && h4 == "empty")
+    val (changed5, _) = Sinks.writeIfChanged(empty, dir, Some(h4))
+    assert(!changed5)
   }
 
   test("audit sidecar writes one line per flagged row") {

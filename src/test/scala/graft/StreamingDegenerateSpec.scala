@@ -207,12 +207,16 @@ class StreamingDegenerateSpec extends SparkSpec {
       try {
         val base = Files.createTempDirectory("graft_sess_restart").toString
         val (in, out, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
+        val eventSchema = org.apache.spark.sql.Encoders.product[EventIn].schema
+        def sessions(df: org.apache.spark.sql.DataFrame) =
+          EventStreams.closedSessions(df.as[EventIn])
         // run 1: user 1's session opens (deadline 05:35); max event time
         // 05:05 → watermark 04:55 — nothing can close in this run
         Seq(EventIn(1L, ts("2024-01-01 05:00:00"), "click", 1.0),
           EventIn(1L, ts("2024-01-01 05:05:00"), "click", 1.0))
           .toDS().write.parquet(s"$in/b1")
-        val q1 = EventStreams.closedSessionsAvailableNow(spark, in, out, ckpt)
+        val q1 = EventStreams.runAvailableNow(spark, in, out, ckpt,
+          eventSchema, Map("recursiveFileLookup" -> "true"))(sessions)
         q1.awaitTermination()
         val afterRun1 = spark.read.schema(
             org.apache.spark.sql.Encoders.product[EventStreams.SessionOut].schema)
@@ -224,7 +228,8 @@ class StreamingDegenerateSpec extends SparkSpec {
         // close with run 1's counts, proving the state survived the restart
         Seq(EventIn(2L, ts("2024-01-01 09:00:00"), "click", 1.0))
           .toDS().write.parquet(s"$in/b2")
-        val q2 = EventStreams.closedSessionsAvailableNow(spark, in, out, ckpt)
+        val q2 = EventStreams.runAvailableNow(spark, in, out, ckpt,
+          eventSchema, Map("recursiveFileLookup" -> "true"))(sessions)
         q2.awaitTermination()
         val closed = spark.read.parquet(out).as[EventStreams.SessionOut]
           .collect().toSeq

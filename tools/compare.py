@@ -4,6 +4,7 @@ against DuckDB oracles and diff values. Dev tool only (driver-side python);
 the shipped library is pure Scala/Spark.
 
 Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
+Exits 1 when any query fails (an `XX` line), else 0.
 """
 import sys, os, json, math
 import duckdb
@@ -108,8 +109,10 @@ def main(sf_dir, out_dir):
     for k, v in sorted(results.items()):
         flag = "  " if v.startswith(("OK", "rows-only")) else "XX"
         print(f"{flag} {k}: {v}")
+    n_failing = len(results) - n_ok - n_rows_only
     print(f"\n{n_ok} OK, {n_rows_only} rows-only, "
-          f"{len(results) - n_ok - n_rows_only} failing, {len(results)} total")
+          f"{n_failing} failing, {len(results)} total")
+    return n_failing
 
 
 def quote(c):
@@ -117,4 +120,4 @@ def quote(c):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(1 if main(sys.argv[1], sys.argv[2]) else 0)
