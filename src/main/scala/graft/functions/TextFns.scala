@@ -140,10 +140,6 @@ object TextFns {
   def vocabTokenCountOf(t: Column, vocab: Seq[String]): Column =
     size(filter(t, x => x.isin(vocab.map(lit(_)): _*)))
 
-  /** Count of tokens found in `vocab`. */
-  def vocabTokenCount(text: Column, vocab: Seq[String]): Column =
-    vocabTokenCountOf(tokens(text), vocab)
-
   /** Mean token length (non-whitespace chars / token count). */
   def meanTokenLen(text: Column): Column = {
     val nTok = size(tokens(text))
@@ -174,7 +170,9 @@ object TextFns {
     "fr" -> Seq("le", "la", "les", "et", "un", "une", "dans", "est", "pour", "que"),
     "zh" -> Seq("的", "是", "了", "在", "我", "有", "和", "就", "不", "人"))
 
-  /** Heuristic language ID over a PRE-BOUND token column. */
+  /** Heuristic language ID over a PRE-BOUND token column: argmax of
+    * per-language stopword hits with a fixed tie-break order (list order
+    * above); "und" when no list scores > 0. */
   def langIdHeuristicOf(t: Column): Column = {
     val scores = langStopwords.map { case (lang, words) =>
       lang -> vocabTokenCountOf(t, words)
@@ -185,16 +183,6 @@ object TextFns {
     }
   }
 
-  /** Heuristic language ID: argmax of per-language stopword hits with a fixed
-    * tie-break order (list order above); "und" when no list scores > 0. */
-  def langIdHeuristic(text: Column): Column = {
-    val scores = langStopwords.map { case (lang, words) =>
-      lang -> vocabTokenCount(text, words)
-    }
-    // score of the winner
-    val best = greatest(scores.map(_._2): _*)
-    scores.reverse.foldLeft(lit("und")) { case (acc, (lang, score)) =>
-      when(score > 0 && score === best, lit(lang)).otherwise(acc)
-    }
-  }
+  /** [[langIdHeuristicOf]] over `text`'s [[tokens]]. */
+  def langIdHeuristic(text: Column): Column = langIdHeuristicOf(tokens(text))
 }

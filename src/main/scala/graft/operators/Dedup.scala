@@ -166,7 +166,7 @@ object Dedup {
                                shingleK: Int = 3, numHashes: Int = 16,
                                numBands: Int = 4,
                                jaccardThreshold: Double = 0.8): DataFrame = {
-    val (sh, banded) = md5Bands(df, idCol, textCol, shingleK, numHashes, numBands)
+    val (sh, _, banded) = md5Bands(df, idCol, textCol, shingleK, numHashes, numBands)
     verifyJaccard(pairCandidates(banded, Seq("band", "bkey")), sh, jaccardThreshold)
   }
 
@@ -179,7 +179,7 @@ object Dedup {
                                    textCol: String, shingleK: Int = 3,
                                    numHashes: Int = 16, numBands: Int = 4,
                                    jaccardThreshold: Double = 0.8): DataFrame = {
-    val (sh, banded) = md5Bands(df, idCol, textCol, shingleK, numHashes, numBands)
+    val (sh, _, banded) = md5Bands(df, idCol, textCol, shingleK, numHashes, numBands)
     verifyJaccard(starCandidates(banded, Seq("band", "bkey")), sh, jaccardThreshold)
   }
 
@@ -253,16 +253,18 @@ object Dedup {
           MIN((CAST(a AS BIGINT) * x + b) % $AffineP) AS mh
         FROM xv CROSS JOIN seeds GROUP BY ALL)"""
 
-  /** Shingle sets + (id, band, band-signature) rows for the md5-seeded
-    * affine family: one md5 per distinct shingle, numHashes affine
-    * rehashes per occurrence (cheap multiply-mods), min-reduce per seed.
-    * Band key = ordered minhash values of the band's seeds: sort_array on
-    * (seed, mh) structs makes the key deterministic under shuffle order. */
+  /** Shingle sets, the (id, seed, mh) signature of [[affineSignature]], and
+    * (id, band, band-signature) rows for the md5-seeded affine family: one
+    * md5 per distinct shingle, numHashes affine rehashes per occurrence
+    * (cheap multiply-mods), min-reduce per seed. Band key = ordered minhash
+    * values of the band's seeds: sort_array on (seed, mh) structs makes the
+    * key deterministic under shuffle order. */
   private[graft] def md5Bands(df: DataFrame, idCol: String, textCol: String,
                        shingleK: Int, numHashes: Int,
-                       numBands: Int): (DataFrame, DataFrame) = {
+                       numBands: Int): (DataFrame, DataFrame, DataFrame) = {
     val rowsPerBand = numHashes / numBands
-    // same multi-consumer checkpoints as jvmBands (r8 sf10 profile)
+    // checkpointed like jvmBands: `sh` feeds the signature and the callers'
+    // sizes and verify joins, `banded` both sides of the band self-join
     val sh = df.select(col(idCol).as("id"),
         TextFns.tokens(col(textCol)).as("toks"))
       .select(col("id"), TextExprs.distinctShingles(col("toks"), shingleK).as("sh"))
@@ -277,7 +279,7 @@ object Dedup {
         array_sort(collect_list(struct(col("seed"), col("mh")))),
         x => x.getField("mh").cast("string")), ",").as("bkey"))
       .localCheckpoint(false)
-    (sh, banded)
+    (sh, sig, banded)
   }
 
   /** SimHash near-duplicates: 64-bit sketch, block on 4 × 16-bit sub-keys
@@ -287,8 +289,8 @@ object Dedup {
                             maxHamming: Int = 3): DataFrame = {
     // checkpoint: the simhash sketch feeds the 4-way quarter union and
     // then BOTH sides of the bucket self-join — un-checkpointed, the
-    // full-text sketch expression re-evaluates up to 8x (r8 sf10 probe;
-    // the quarter projections above it are cheap and stay lazy)
+    // full-text sketch expression re-evaluates up to 8x (the quarter
+    // projections above it are cheap and stay lazy)
     val sk = df.select(col(idCol).as("id"),
       SimHash.simhash64(TextFns.tokens(col(textCol))).as("sk"))
       .localCheckpoint(false)
@@ -317,8 +319,8 @@ object Dedup {
                           blockCols: Seq[String], shingleK: Int = 3,
                           threshold: Double = 0.5): DataFrame = {
     // checkpoint: the shingle-set construction feeds both self-join sides
-    // (same multi-consumer class as simHashNearDuplicates — r8).
-    // fanOut BEFORE the checkpoint (r13): the probe side of the block
+    // (same multi-consumer class as simHashNearDuplicates).
+    // fanOut BEFORE the checkpoint: the probe side of the block
     // self-join inherits the checkpoint's partitioning, and a one-split
     // corpus would run the whole quadratic jaccard verify on ONE task.
     val sh = graft.core.Par.fanOut(df.select(

@@ -112,12 +112,12 @@ object MacroPipeline {
     else out.filter(!anyNan)
   }
 
-  /** U6 replace-year append: delete store rows matching fresh
-    * (country, as_of_year) keys, union fresh, sort. */
-  def replaceYears(store: DataFrame, fresh: DataFrame): DataFrame = {
-    val cleaned = store.join(fresh.select("country", "as_of_year").distinct(),
-      Seq("country", "as_of_year"), "left_anti")
+  /** U6 replace-year append: delete store rows matching fresh `keys`
+    * (`country, as_of_year` for the macro store), union fresh, sort by
+    * `keys`. */
+  def replaceYears(store: DataFrame, fresh: DataFrame, keys: Seq[String]): DataFrame = {
+    val cleaned = store.join(fresh.select(keys.map(col): _*).distinct(), keys, "left_anti")
     SchemaOps.unionHarmonized(Seq(cleaned, fresh), sortColumns = false)
-      .orderBy("country", "as_of_year")
+      .orderBy(keys.map(col): _*)
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * hashes the oracle engine cannot replay, ML fits, the full-store build),
   * the names of the ORACLE-GATED queries that sandwich its construction
   * (an md5-basis twin of the same pipeline, or value-judges of its
-  * output). Machine-checked (r12 verdict task 6): the registry refuses a
+  * output). Machine-checked: the registry refuses a
   * no-oracle query with no declared twins or a twin that is missing /
   * itself oracle-less, and the compare gate fails the rows-only query
   * when a declared twin fails — the sandwich argument stops living in
@@ -28,8 +28,7 @@ object QueryDef {
   /** Registry invariants, enforced on every SparkEntry.allDefs evaluation
     * (so Verify and every registry-touching spec fail loudly): unique
     * names; every no-oracle (rows-only) query declares ≥1 sandwich twin;
-    * every declared twin exists and is itself oracle-gated (r12 verdict
-    * task 6 — the sandwich argument is machine-checked, not prose). */
+    * every declared twin exists and is itself oracle-gated. */
   def validate(defs: Seq[QueryDef]): Unit = {
     val dups = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
     require(dups.isEmpty, s"duplicate query names would shadow registry entries: $dups")

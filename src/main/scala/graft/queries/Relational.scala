@@ -7,7 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import graft.core.{Tables, AsOf, SeriesOps}
 import graft.operators.Validation
 import graft.operators.Validation.{RangeRule, JumpRule, ConsistencyRule}
-import graft.features.Encoding
+import graft.features.{Encoding, TickerFeatures}
+import graft.sources.Sources
 import QueryDef.{dec, moneySum, ONE}
 
 /** Relational operator coverage (SURVEY §2.3-§2.9, §2.10, §2.12) expressed
@@ -53,11 +54,12 @@ object Relational {
   // NB: (l_orderkey, l_linenumber) is NOT unique in this synthetic data —
   // the unique composite is (orderkey, linenumber, suppkey, shipdate), so
   // every row-level lineitem query sorts (and emits) all four.
+  // The ship-date window is S3's slice: [1996-03-01, 1996-10-31] with two
+  // months' grace each side is exactly calendar 1996.
   val q2 = QueryDef("q2_filter_project",
-    (s, dir) => Tables.lineitem(s, dir)
-      .filter(col("l_shipdate").between(lit("1996-01-01").cast(DateType),
-        lit("1996-12-31").cast(DateType)) &&
-        col("l_quantity") > 40 && col("l_discount") >= 0.05)
+    (s, dir) => Sources.sliceWithGrace(Tables.lineitem(s, dir), "l_shipdate",
+        "1996-03-01", "1996-10-31", graceMonths = 2)
+      .filter(col("l_quantity") > 40 && col("l_discount") >= 0.05)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"),
         col("l_shipdate").cast(DateType).as("ship_date"),
         col("l_partkey"), col("l_extendedprice"))
@@ -459,7 +461,7 @@ object Relational {
       ORDER BY o_custkey, o_orderkey"""))
 
   /** W13: YoY growth over year buckets (reference macro pipeline). The
-    * lag goes through the distributed form (r12, PlanLint check 3): a
+    * lag goes through the distributed form (PlanLint check 3): a
     * global row id per year via [[graft.core.Indexing.globalRowIds]],
     * then a self-join on rid−1 — exactly lag(1) over the year order (the
     * previous EXISTING year, gap or not), with no single-partition
@@ -569,7 +571,9 @@ object Relational {
       GROUP BY g.c_custkey, g.as_of ORDER BY g.c_custkey, g.as_of"""))
 
   /** W7: group-relative return — first/last of each group's series vs the
-    * global series (reference sector-relative return). */
+    * global series (reference sector-relative return), through
+    * `TickerFeatures.sectorRelativeExpr` over the group's (`__s_*`) and the
+    * global (`__x_*`) first, last and count. */
   val q29 = QueryDef("q29_relative_return",
     (s, dir) => {
       val o = Tables.orders(s, dir)
@@ -578,17 +582,15 @@ object Relational {
         .groupBy(col("c_mktsegment").as("seg"),
           date_trunc("month", col("o_orderdate")).as("mon"))
         .agg(moneySum(col("o_totalprice")).as("rev"))
-      val perSeg = monthly.groupBy("seg")
-        .agg(min_by(col("rev"), col("mon")).as("f"), max_by(col("rev"), col("mon")).as("l"))
-      val overallMonthly = o
+      val perSeg = monthly.groupBy("seg").agg(min_by(col("rev"), col("mon")).as("__s_first"),
+        max_by(col("rev"), col("mon")).as("__s_last"), count(lit(1)).as("__s_n"))
+      val overall = o
         .groupBy(date_trunc("month", col("o_orderdate")).as("mon"))
         .agg(moneySum(col("o_totalprice")).as("rev"))
-      val overall = overallMonthly
-        .agg(min_by(col("rev"), col("mon")).as("of"), max_by(col("rev"), col("mon")).as("ol"))
+        .agg(min_by(col("rev"), col("mon")).as("__x_first"),
+          max_by(col("rev"), col("mon")).as("__x_last"), count(lit(1)).as("__x_n"))
       perSeg.crossJoin(overall)
-        .withColumn("relative_return",
-          (col("l") / col("f") - 1) - (col("ol") / col("of") - 1))
-        .select("seg", "relative_return")
+        .select(col("seg"), TickerFeatures.sectorRelativeExpr.as("relative_return"))
         .orderBy("seg")
     },
     Some("""WITH m AS (SELECT c_mktsegment AS seg, date_trunc('month', o_orderdate) AS mon,

@@ -6,6 +6,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Tables, SchemaOps}
 import graft.features.Encoding
+import graft.pipeline.MacroPipeline
+import graft.sources.Sources
 import QueryDef.{dec, moneySum, ONE}
 
 /** Second coverage batch: the SURVEY §2 operator rows not exercised by the
@@ -125,7 +127,7 @@ object Relational2 {
       ORDER BY key"""))
 
   /** U6: replace-partition semantics — recompute one year and swap it into
-    * the store (delete matching keys, append, sort). */
+    * the store (delete matching keys, append, sort; `MacroPipeline.replaceYears`). */
   val q37 = QueryDef("q37_replace_partition",
     (s, dir) => {
       val yearly = Tables.orders(s, dir)
@@ -135,9 +137,7 @@ object Relational2 {
         .filter(year(col("o_orderdate")) === 1998)
         .groupBy(year(col("o_orderdate")).as("yr"))
         .agg((sum(dec(col("o_totalprice"))) * 2).cast(DoubleType).as("rev"))
-      yearly.join(fresh.select("yr"), Seq("yr"), "left_anti")
-        .unionByName(fresh)
-        .orderBy("yr")
+      MacroPipeline.replaceYears(yearly, fresh, Seq("yr"))
     },
     Some("""WITH yearly AS (SELECT CAST(year(o_orderdate) AS INT) AS yr,
         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev FROM orders GROUP BY 1),
@@ -382,9 +382,8 @@ object Relational2 {
       val spend = Tables.orders(s, dir)
         .groupBy("o_custkey")
         .agg(moneySum(col("o_totalprice")).as("ltv"))
-        // globalNtile's three passes (count, histogram, pick) re-ran the
-        // orders scan+aggregate each time (r14 — the d49/d83 rule);
-        // customer-sized relation, cheap to hold once
+        // globalNtile's three passes (count, histogram, pick) would each
+        // re-run the orders scan+aggregate; customer-sized, cheap to hold
         .localCheckpoint(false)
       graft.core.Indexing.globalNtile(spend, 10, "ltv", "decile",
         descending = true, tieBreak = Seq("o_custkey"))
@@ -400,16 +399,11 @@ object Relational2 {
       ORDER BY o_custkey"""))
 
   /** S2: source coverage assertion — actual min/max dates vs a requested
-    * range with grace days, as a per-entity flag. */
+    * range with grace days, as a per-entity flag (`Sources.coverage`). */
   val q44 = QueryDef("q44_coverage_check",
-    (s, dir) => Tables.lineitem(s, dir)
-      .groupBy("l_suppkey")
-      .agg(min(col("l_shipdate")).cast(DateType).as("actual_start"),
-        max(col("l_shipdate")).cast(DateType).as("actual_end"))
-      .withColumn("covered",
-        when(col("actual_start") <= date_add(lit("1995-01-01").cast(DateType), 7) &&
-          col("actual_end") >= date_sub(lit("2001-06-30").cast(DateType), 7), 1)
-          .otherwise(0))
+    (s, dir) => Sources.coverage(Tables.lineitem(s, dir), Seq("l_suppkey"),
+        "l_shipdate", "1995-01-01", "2001-06-30", 7)
+      .withColumn("covered", when(col("covered"), 1).otherwise(0))
       .orderBy("l_suppkey"),
     Some("""SELECT l_suppkey,
       CAST(MIN(l_shipdate) AS DATE) AS actual_start,
@@ -420,18 +414,14 @@ object Relational2 {
       FROM lineitem GROUP BY l_suppkey ORDER BY l_suppkey"""))
 
   /** S5: top-k-most-recent source semantics — sort desc, head(k), re-sort
-    * asc (the reference's fundamentals/ratios fetch). */
+    * asc (the reference's fundamentals/ratios fetch; `Sources.topKMostRecent`). */
   val q45 = QueryDef("q45_topk_recent_asc",
-    (s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-      Tables.orders(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
+    (s, dir) =>
+      Sources.topKMostRecent(Tables.orders(s, dir), 5, Seq("o_custkey"),
+          "o_orderdate", Seq("o_orderkey"))
         .select(col("o_custkey"), col("o_orderkey"),
           col("o_orderdate").cast(DateType).as("o_date"))
-        .orderBy(col("o_custkey"), col("o_date"), col("o_orderkey"))
-    },
+        .orderBy(col("o_custkey"), col("o_date"), col("o_orderkey")),
     Some("""SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS o_date
       FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
         ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn FROM orders) t

@@ -55,12 +55,12 @@ object TextVector15 {
     base.unionByName(strong).unionByName(weak)
   }
 
-  /** (sizes, exact pair intersections, LSH-predicted pairs) over the
-    * panel — the three relations both d80 and d82 consume. */
+  /** (sizes, exact pair intersections, LSH-predicted pairs, 16-hash
+    * signature) over the panel — the relations d80, d82 and d84 consume. */
   private[graft] def d80Relations(docs: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame) = {
-    val (sh, banded) = Dedup.md5Bands(docs, "doc_id", "text",
+         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val (sh, sig, banded) = Dedup.md5Bands(docs, "doc_id", "text",
       shingleK = 3, numHashes = 16, numBands = 4)
     val predicted = Dedup.pairCandidates(banded, Seq("band", "bkey"))
     val sizes = sh.select(col("id"), size(col("sh")).cast(LongType).as("n"))
@@ -70,7 +70,7 @@ object TextVector15 {
         col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_int"))
-    (sizes, inter, predicted)
+    (sizes, inter, predicted, sig)
   }
 
   /** The DuckDB twin of [[d80Docs]] and of the sizes and intersections of
@@ -117,7 +117,7 @@ object TextVector15 {
 
   val d80 = QueryDef("d80_lsh_pr_eval",
     (s, dir) => {
-      val (sizes, inter, predicted0) = d80Relations(d80Docs(s, dir))
+      val (sizes, inter, predicted0, _) = d80Relations(d80Docs(s, dir))
       val predicted = predicted0.withColumn("predicted", lit(true))
       val surface = inter.filter(col("n_int") >= 2).select("id_a", "id_b")
         .unionByName(predicted.select("id_a", "id_b")).distinct()
@@ -184,7 +184,7 @@ object TextVector15 {
           log(col("c12").cast(DoubleType) / col("c1").cast(DoubleType))
             .as("logp"))
       // cross-source reductions via 1-row keyless aggregates broadcast
-      // back over the rollup (r12: PlanLint check 3 no longer exempts
+      // back over the rollup (PlanLint check 3 does not exempt
       // grouped aggregates, and this is the d26/q29/q98 pattern — a
       // keyless agg bounds its own broadcast by construction). The rollup
       // is checkpointed once so the totals pass re-reads |sources| rows,
@@ -252,7 +252,7 @@ object TextVector15 {
     * and replays every sum. */
   val d82 = QueryDef("d82_rand_index",
     (s, dir) => {
-      val (sizes, inter, predicted) = d80Relations(d80Docs(s, dir))
+      val (sizes, inter, predicted, _) = d80Relations(d80Docs(s, dir))
       val truth = inter
         .join(sizes.select(col("id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
         .join(sizes.select(col("id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
@@ -343,35 +343,18 @@ object TextVector15 {
     * the b-bit table is what ships to the dedup join: 2 bytes/doc. */
   val d84 = QueryDef("d84_bbit_minhash",
     (s, dir) => {
-      val docs = d80Docs(s, dir)
-      val sh = docs
-        .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
-        .select(col("doc_id"),
-          graft.functions.TextExprs.distinctShingles(col("toks"), 3).as("sh"))
-        .filter(size(col("sh")) > 0)
-        .localCheckpoint(false) // sizes, inter, and the signature consume it
-      val sizes = sh.select(col("doc_id"), size(col("sh")).cast(LongType).as("n"))
-      val inter = sh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-        .alias("a")
-        .join(sh.select(col("doc_id"), explode(col("sh")).as("shingle")).alias("b"),
-          col("a.shingle") === col("b.shingle") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("n_int"))
-        .filter(col("n_int") >= 2)
-      val bits = Dedup.affineSignature(
-          sh.select(col("doc_id"), explode(col("sh")).as("shingle")), Seq("doc_id"), 16)
-        .select(col("doc_id"), col("seed"), (col("mh") % 2).as("bit"))
-      inter
-        .join(bits.select(col("doc_id").as("id_a"), col("seed"),
+      val (sizes, inter, _, sig) = d80Relations(d80Docs(s, dir))
+      val bits = sig.select(col("id"), col("seed"), (col("mh") % 2).as("bit"))
+      inter.filter(col("n_int") >= 2)
+        .join(bits.select(col("id").as("id_a"), col("seed"),
           col("bit").as("bit_a")), Seq("id_a"))
-        .join(bits.select(col("doc_id").as("id_b"), col("seed"),
+        .join(bits.select(col("id").as("id_b"), col("seed"),
           col("bit").as("bit_b")), Seq("id_b", "seed"))
         .groupBy("id_a", "id_b", "n_int")
         .agg(sum(when(col("bit_a") === col("bit_b"), 1L).otherwise(0L))
           .as("agree16"))
-        .join(sizes.select(col("doc_id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
-        .join(sizes.select(col("doc_id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
+        .join(sizes.select(col("id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
+        .join(sizes.select(col("id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
         .select(col("id_a"), col("id_b"),
           round(col("n_int").cast(DoubleType) /
             (col("n_a") + col("n_b") - col("n_int")), 6).as("jaccard_r"),

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,37 +40,49 @@ object Sources {
       spark.read.parquet(path).select(schema.fieldNames.map(col): _*)
   }
 
-  /** S2: coverage assertion — actual [min,max] date must cover the
-    * requested range within `graceDays`, else the source errors
-    * (`prices.py:8-46`). Distributed form: one tiny agg, then a driver
-    * check. */
+  /** S2: per-key coverage (`prices.py:8-46`): each key's actual
+    * [min, max] date, and whether it spans the requested range within
+    * `graceDays` (actual_start <= wantStart + grace and actual_end >=
+    * wantEnd - grace). Returns keys…, actual_start, actual_end, covered;
+    * no keys gives one row over the whole frame. */
+  def coverage(df: DataFrame, keys: Seq[String], dateCol: String,
+               wantStart: String, wantEnd: String, graceDays: Int): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(min(col(dateCol)).cast(DateType).as("actual_start"),
+        max(col(dateCol)).cast(DateType).as("actual_end"))
+      .withColumn("covered",
+        col("actual_start") <= date_add(lit(wantStart).cast(DateType), graceDays) &&
+          col("actual_end") >= date_sub(lit(wantEnd).cast(DateType), graceDays))
+
+  /** S2: [[coverage]] over the whole frame as an assertion — the source
+    * errors when it has no rows or does not cover the range. */
   def assertCoverage(df: DataFrame, dateCol: String, wantStart: String,
                      wantEnd: String, graceDays: Int = 7): Unit = {
-    val row = df.agg(min(col(dateCol)).cast(DateType).as("lo"),
-      max(col(dateCol)).cast(DateType).as("hi")).head
+    val row = coverage(df, Nil, dateCol, wantStart, wantEnd, graceDays).head
     if (row.isNullAt(0)) throw NotFound(s"no rows in source for coverage check")
-    val lo = row.getDate(0).toLocalDate
-    val hi = row.getDate(1).toLocalDate
-    val ws = java.time.LocalDate.parse(wantStart)
-    val we = java.time.LocalDate.parse(wantEnd)
-    if (lo.isAfter(ws.plusDays(graceDays)) || hi.isBefore(we.minusDays(graceDays)))
-      throw ServerError(0,
-        s"coverage [$lo, $hi] does not span requested [$ws, $we] (+/- $graceDays d)")
+    if (!row.getBoolean(2))
+      throw ServerError(0, s"coverage [${row.getDate(0)}, ${row.getDate(1)}] " +
+        s"does not span requested [$wantStart, $wantEnd] (+/- $graceDays d)")
   }
 
   /** S5: top-k most-recent rows per entity, re-sorted ascending (the
-    * fundamentals/ratios fetch shape: sort desc -> head(k) -> sort asc). */
-  def topKMostRecent(df: DataFrame, k: Int, by: Seq[String],
-                     dateCol: String = "date"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(by.map(col): _*).orderBy(col(dateCol).desc)
+    * fundamentals/ratios fetch shape: sort desc -> head(k) -> sort asc).
+    * `tieBreak` makes the order total: among rows with the same date, the
+    * larger tie-break values count as more recent. The output is sorted by
+    * `by`, `dateCol`, `tieBreak`, all ascending. */
+  def topKMostRecent(df: DataFrame, k: Int, by: Seq[String], dateCol: String,
+                     tieBreak: Seq[String]): DataFrame = {
+    val recency = (dateCol +: tieBreak).map(col)
+    val w = Window.partitionBy(by.map(col): _*).orderBy(recency.map(_.desc): _*)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)
       .drop("__rn")
+      .orderBy(by.map(col) ++ recency: _*)
   }
 
   /** S3: window slice with grace — the dividend fetcher's cached-full-
-    * history + slice pattern: cache once, slice per request. */
+    * history + slice pattern: cache once, slice per request. Keeps rows
+    * with dateCol in [lo - graceMonths, hi + graceMonths]. */
   def sliceWithGrace(df: DataFrame, dateCol: String, lo: String, hi: String,
                      graceMonths: Int = 3): DataFrame =
     df.filter(col(dateCol).between(

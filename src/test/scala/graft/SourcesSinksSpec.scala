@@ -20,6 +20,19 @@ class SourcesSinksSpec extends SparkSpec {
     intercept[Sources.NotFound] {
       Sources.assertCoverage(df.filter(lit(false)), "date", "1995-01-01", "1995-02-01")
     }
+    // two keys: A covers the range within grace, B starts two months late
+    val two = df.unionByName(Seq(("B", d("1995-03-01")), ("B", d("2001-06-30")))
+      .toDF("k", "date"))
+    val perKey = Sources.coverage(two, Seq("k"), "date", "1995-01-01", "2001-06-30", 7)
+      .orderBy("k").select("k", "actual_start", "covered")
+      .as[(String, java.sql.Date, Boolean)].collect()
+    assert(perKey.toSeq == Seq(("A", d("1995-01-05"), true), ("B", d("1995-03-01"), false)))
+    // the throwing form is the no-key frame: the union spans the range,
+    // B alone does not
+    Sources.assertCoverage(two, "date", "1995-01-01", "2001-06-30")
+    intercept[Sources.ServerError] {
+      Sources.assertCoverage(two.filter(col("k") === "B"), "date", "1995-01-01", "2001-06-30")
+    }
   }
 
   test("defaultDateRange: quarter snap to last completed quarter, day clamp") {
@@ -39,9 +52,16 @@ class SourcesSinksSpec extends SparkSpec {
     val df = Seq(("A", d("2024-01-01"), 1), ("A", d("2024-02-01"), 2),
       ("A", d("2024-03-01"), 3), ("B", d("2024-01-01"), 9))
       .toDF("k", "date", "v")
-    val out = Sources.topKMostRecent(df, 2, Seq("k"))
-      .orderBy("k", "date").select("v").as[Int].collect()
+    val out = Sources.topKMostRecent(df, 2, Seq("k"), "date", Seq("v"))
+      .select("v").as[Int].collect()
     assert(out.toSeq == Seq(2, 3, 9))
+    // two rows on B's latest date: the larger tie-break value is the more
+    // recent, whatever the input order
+    val tied = df.unionByName(Seq(("B", d("2024-05-01"), 7), ("B", d("2024-05-01"), 8))
+      .toDF("k", "date", "v")).repartition(3)
+    val top1 = Sources.topKMostRecent(tied, 1, Seq("k"), "date", Seq("v"))
+      .select("k", "v").as[(String, Int)].collect()
+    assert(top1.toSeq == Seq(("A", 3), ("B", 8)))
   }
 
   test("sliceWithGrace keeps rows within [lo-grace, hi+grace] (S3)") {

@@ -152,7 +152,7 @@ class StreamingMacroSpec extends SparkSpec {
     val store = Seq(("DEU", 2023, 0.1), ("DEU", 2024, 0.2), ("FRA", 2024, 0.3))
       .toDF("country", "as_of_year", "gdp_yoy_backfilled")
     val fresh = Seq(("DEU", 2024, 0.9)).toDF("country", "as_of_year", "gdp_yoy_backfilled")
-    val out = MacroPipeline.replaceYears(store, fresh)
+    val out = MacroPipeline.replaceYears(store, fresh, Seq("country", "as_of_year"))
       .orderBy("country", "as_of_year")
       .select("country", "as_of_year", "gdp_yoy_backfilled")
       .as[(String, Int, Double)].collect()
