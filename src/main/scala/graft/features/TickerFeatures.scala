@@ -22,7 +22,10 @@ import graft.core.SeriesOps
   */
 object TickerFeatures {
 
-  /** Long-form inputs, all keyed by `ticker` with day-level `date`.
+  /** Long-form per-ticker inputs, all keyed by `ticker` with day-level
+    * `date`. The sector side is not one of them: it arrives beside them as
+    * a ticker→ETF map and one compact ETF index
+    * ([[dynamicFeaturesSharedIndex]]), so no series is copied per ticker.
     *
     * `statements`: set when income, balance, and ratios are projections of
     * ONE statement table sharing the same (ticker, date) rows (one column
@@ -37,7 +40,6 @@ object TickerFeatures {
   final case class Inputs(prices: DataFrame, dividends: DataFrame,
                           splits: DataFrame, ratios: DataFrame,
                           income: DataFrame, balance: DataFrame,
-                          sectorIndex: DataFrame,
                           statements: Option[DataFrame] = None)
 
   private val T = "ticker"
@@ -163,17 +165,6 @@ object TickerFeatures {
     coalesce(col("__pe"), lit(0.0)).as("pe_ratio"),
     coalesce(col("__pfcf"), lit(0.0)).as("pfcf_ratio"),
     coalesce(col("__po"), lit(0.0)).as("payout_ratio"))
-
-  /** All 18 dynamic features + 6 `has_` flags for every (ticker, as_of)
-    * grid cell. Grid: (ticker DATE-typed as_of). */
-  def dynamicFeatures(grid: DataFrame, in: Inputs): DataFrame =
-    // priceBlock also emits the stock-side 365d first/last/count used by
-    // the sector-relative feature, so grid⨝prices shuffles exactly once.
-    // The per-ticker sector index rides the fused union as its own source
-    // (rawSector), so the fused path has NO separate etfSideAgg chain or
-    // etfSide join at all.
-    assembleFeatures(grid, in, etfSideAgg(grid, in.sectorIndex),
-      rawSector = Some(in.sectorIndex))
 
   private def finalProjection(joined: DataFrame): DataFrame = {
     def hasFlag(c: Column): Column =
@@ -367,8 +358,8 @@ object TickerFeatures {
     * model: series wins when `avgHist × asOfs > avgHist + asOfs × 400 +
     * slack` — i.e. histories long relative to the bounded slice AND more
     * than one as_of. Calibration (graft.ProbeDeep over GenScale deep
-    * tilings, round 5 — computation forced via sum(hash), not count, which
-    * the optimizer prunes):
+    * tilings, grid form timed as [[priceBlock]]; computation forced via
+    * sum(hash), not count, which the optimizer prunes):
     *
     *   avgHist × asOfs × tickers   grid s   series s   winner
     *   10   × 5  × 15k (sf0.1)      3.5       3.5      tie → grid
@@ -401,25 +392,30 @@ object TickerFeatures {
     }
   }
 
-  /** All features with the SHARED-INDEX sector form: instead of a
-    * per-ticker copy of the sector series (which multiplies a daily index
-    * by the universe size — a 36M-row blowup at sf0.1, unbounded at 100
-    * TB), the ETF side aggregates once per (etf, as_of) over the compact
-    * (etf, date, close) table and broadcasts back through the ticker→etf
-    * map. Identical semantics to [[dynamicFeatures]]. */
-  /** @param minPriceRows when > 0, fuse the min-history gate into the
-    *   price aggregation: cells with fewer than this many price rows at or
-    *   before as_of are dropped HERE, from the already-computed __price_n —
-    *   identical predicate to `hasEnoughPriceData`, one fewer grid⨝prices
-    *   shuffle for pipelines that would gate anyway. Trade-off: the other
-    *   blocks then compute over the ungated grid — fuse when the gate keeps
-    *   most cells; gate FIRST (`hasEnoughPriceData` + the gated grid) when
-    *   it drops most of them. */
+  /** All 18 dynamic features + 6 `has_` flags for every (ticker, as_of)
+    * grid cell (grid: ticker, DATE-typed as_of) — the one entry into the
+    * engine.
+    *
+    * The sector side (S7) is a ticker→ETF map `tickerEtf` (ticker, etf) and
+    * ONE compact ETF index `etfIndex` (etf, date, close): the ETF side
+    * aggregates once per (etf, as_of) and broadcasts back through the map,
+    * so a daily index is never multiplied by the universe size. A ticker
+    * missing from the map, or whose ETF has no index rows in the cell's 365
+    * days, gets the reference's NaN `sector_relative_6m`.
+    *
+    * @param minPriceRows the min-history gate: cells with fewer than this
+    *   many price rows at or before as_of are dropped, read off the price
+    *   aggregation's own `__price_n` (no separate grid⨝prices pass). The
+    *   other blocks compute over the ungated grid; only surviving cells
+    *   reach the output. 0 keeps every cell.
+    * @param seriesPriceBlock the price-block physical form
+    *   ([[priceBlockSeries]] when true, else the grid form); pick it with
+    *   [[choosePriceForm]]. */
   def dynamicFeaturesSharedIndex(grid: DataFrame, in: Inputs,
                                  tickerEtf: DataFrame,
                                  etfIndex: DataFrame,
-                                 minPriceRows: Int = 0,
-                                 seriesPriceBlock: Boolean = false): DataFrame = {
+                                 minPriceRows: Int,
+                                 seriesPriceBlock: Boolean): DataFrame = {
     val etfCells = grid.join(tickerEtf, Seq(T)).select(col("etf"), col("as_of")).distinct()
     val perEtf = etfCells.join(etfIndex, Seq("etf")).filter(in365)
       .groupBy(col("etf"), col("as_of")).agg(
@@ -432,29 +428,23 @@ object TickerFeatures {
     assembleFeatures(grid, in, etfSide, minPriceRows, seriesPriceBlock)
   }
 
-  /** Per-ticker-series form (the reference's own shape). */
+  /** The feature blocks joined with the per-cell ETF side (`__x_*`). */
   private def assembleFeatures(grid: DataFrame, in: Inputs,
                                etfSide: DataFrame,
-                               minPriceRows: Int = 0,
-                               seriesPriceBlock: Boolean = false,
-                               rawSector: Option[DataFrame] = None): DataFrame =
+                               minPriceRows: Int,
+                               seriesPriceBlock: Boolean): DataFrame =
     in.statements match {
       case Some(st) if !seriesPriceBlock =>
-        // ONE-EXCHANGE form (r9 verdict task 4): all per-cell blocks ride
-        // a single (ticker, as_of) shuffle over a source-tagged union
-        // instead of per-block slice+window+agg chains plus block-output
-        // joins — same values (every aggregate is source-guarded; pinned
-        // by TickerFeaturesSpec's fused-vs-separate equivalence). When the
-        // sector side is the PER-TICKER index (rawSector — the
-        // dynamicFeatures path), it is a fourth union source and the
-        // etfSide join disappears too; the shared-ETF-index path keeps the
-        // per-ETF aggregate + join (its grain is etf, not ticker).
-        val all0 = fusedCellBlocks(grid, in.prices, st, in.dividends,
-          in.splits, rawSector)
+        // ONE-EXCHANGE form: all per-cell blocks ride a single (ticker,
+        // as_of) shuffle over a source-tagged union instead of per-block
+        // slice+window+agg chains plus block-output joins — same values
+        // (every aggregate is source-guarded; pinned by TickerFeaturesSpec's
+        // fused-vs-separate equivalence).
+        val all0 = fusedCellBlocks(grid, in.prices, st, in.dividends, in.splits)
         val all = if (minPriceRows > 0) all0.filter(col("__price_n") >= minPriceRows)
                   else all0
-        val withX = if (rawSector.isDefined) all else all.join(etfSide, K, "left")
-        finalProjection(withX.withColumn("sector_relative_6m", sectorRelativeExpr))
+        finalProjection(all.join(etfSide, K, "left")
+          .withColumn("sector_relative_6m", sectorRelativeExpr))
       case _ =>
         val price0 = if (seriesPriceBlock) priceBlockSeries(grid, in.prices)
                      else priceBlock(grid, in.prices)
@@ -496,8 +486,7 @@ object TickerFeatures {
     * through round(). */
   private def fusedCellBlocks(grid: DataFrame, prices: DataFrame,
                               statements: DataFrame, dividends: DataFrame,
-                              splits: DataFrame,
-                              rawSector: Option[DataFrame] = None): DataFrame = {
+                              splits: DataFrame): DataFrame = {
     // per-source pre-slice enrichment (shared with the separate blocks)
     val st = enrichStatements(statements)
     val adjusted = SeriesOps.adjustForSplits(dividends, splits, Seq(T),
@@ -528,21 +517,11 @@ object TickerFeatures {
         nd.as("freeCashFlowPerShare"), nd.as("eps"),
         nd.as("__nde"), nd.as("__eic"), nb.as("__eic_capped"),
         col("dividend").cast(DoubleType).as("dividend")))
-    val u2 = rawSector match {
-      case Some(x) => u.unionByName(x.select(col(T), col("date"),
-        lit("x").as("__src"), col("close").cast(DoubleType).as("close"),
-        nd.as("dividendYield"), nd.as("priceEarningsRatio"),
-        nd.as("priceToFreeCashFlowsRatio"), nd.as("payoutRatio"),
-        nd.as("freeCashFlowPerShare"), nd.as("eps"),
-        nd.as("__nde"), nd.as("__eic"), nb.as("__eic_capped"), nd.as("dividend")))
-      case None => u
-    }
 
-    val sliced = gridAsOfJoin(grid, u2)
+    val sliced = gridAsOfJoin(grid, u)
     val isP = col("__src") === "p"
     val isF = col("__src") === "f"
     val isD = col("__src") === "d"
-    val isX = col("__src") === "x"
 
     // ONE aggregation job and NO post-slice window or second slice pass:
     // each source contributes (a) order-free aggregates that stay in
@@ -592,16 +571,7 @@ object TickerFeatures {
       // --- dividends: count + date-sorted (date, value) history
       count(when(isD, col("date"))).as("__dn"),
       array_sort(collect_list(when(isD,
-        struct(col("date").as("d"), col("dividend").as("v"))))).as("__darr"),
-      // --- sector index (only populated on the rawSector path): 365d
-      // first/last/count; nullif(count, 0) reproduces etfSideAgg's
-      // absent-group semantics (inner join + filter → missing cell → null
-      // after the left join; the expr below sees null and yields NaN)
-      min_by(when(isX && in365, col("close")), when(isX && in365, col("date")))
-        .as("__x_first"),
-      max_by(when(isX && in365, col("close")), when(isX && in365, col("date")))
-        .as("__x_last"),
-      nullif(count(when(isX && in365, 1)), lit(0L)).as("__x_n"))
+        struct(col("date").as("d"), col("dividend").as("v"))))).as("__darr"))
 
     // order-dependent price stats by array fold over the date-sorted cell
     // history: volatility, the drawdown peak walk and the trailing SMAs.
@@ -691,10 +661,6 @@ object TickerFeatures {
         expr("CASE WHEN size(__dw3) = 0 THEN NULL ELSE element_at(__dw3, -1).v END"))
       .withColumn("__d_s5",
         expr("CASE WHEN size(__dw5) = 0 THEN NULL ELSE element_at(__dw5, -1).v END"))
-    // __x_* ship only on the rawSector path — otherwise the caller joins
-    // etfSide, which brings its own __x_* columns
-    val xCols = if (rawSector.isDefined)
-      Seq(col("__x_first"), col("__x_last"), col("__x_n")) else Seq.empty[Column]
     withPrice.select((
       Seq(col("ticker"), col("as_of"), col("__s_first"), col("__s_last"), col("__s_n"),
         col("__pn").as("__price_n")) ++
@@ -704,22 +670,14 @@ object TickerFeatures {
       ratiosOutputs(col("__fn")) ++
       Seq(cagr(col("__fn"), col("__fcf_start"), col("__fcf_end"), 3).as("fcf_cagr_3y"),
         cagr(col("__dn"), col("__d_s3"), col("__d_end"), 3).as("dividend_cagr_3y"),
-        cagr(col("__dn"), col("__d_s5"), col("__d_end"), 5).as("dividend_cagr_5y")) ++
-      xCols): _*)
+        cagr(col("__dn"), col("__d_s5"), col("__d_end"), 5).as("dividend_cagr_5y"))): _*)
   }
 
-  /** ETF-side 365d window aggregates for the sector-relative feature. */
-  private[graft] def etfSideAgg(grid: DataFrame, sectorIndex: DataFrame): DataFrame = {
-    grid.join(sectorIndex, Seq(T)).filter(in365)
-      .groupBy(gcols: _*).agg(
-        min_by(col("close"), col("date")).as("__x_first"),
-        max_by(col("close"), col("date")).as("__x_last"),
-        count(lit(1)).as("__x_n"))
-  }
-
-  /** The sector-relative expression over joined stock (__s_*) and ETF
-    * (__x_*) window aggregates — reference semantics: NaN when no sector
-    * series, 0.0 guards on <2 rows or non-positive closes. */
+  /** Stock-vs-sector-ETF relative return over joined stock (__s_*) and ETF
+    * (__x_*) window aggregates — the reference's `sector_relative_6m`
+    * (named 6m, computed over 365 days; the quirk is contract, SURVEY
+    * §7.5): NaN when no sector series, 0.0 guards on <2 rows or
+    * non-positive closes. */
   private[graft] def sectorRelativeExpr: Column =
     when(col("__x_n").isNull, nan)
       .when(col("__s_n") < 2 || col("__x_n") < 2, 0.0)
@@ -727,20 +685,6 @@ object TickerFeatures {
         col("__x_first") <= 0 || col("__x_last") <= 0, 0.0)
       .otherwise((col("__s_last") / col("__s_first") - 1) -
         (col("__x_last") / col("__x_first") - 1))
-
-  /** Stock-vs-sector-ETF relative return over a 365-day window — the
-    * reference's `sector_relative_6m` (named 6m, computed over 365 days;
-    * the quirk is contract, SURVEY §7.5). */
-  def sectorRelativeBlock(grid: DataFrame, prices: DataFrame,
-                          sectorIndex: DataFrame): DataFrame = {
-    val stock = grid.join(prices, Seq(T)).filter(in365)
-      .groupBy(gcols: _*).agg(
-        min_by(col("close"), col("date")).as("__s_first"),
-        max_by(col("close"), col("date")).as("__s_last"),
-        count(lit(1)).as("__s_n"))
-    stock.join(etfSideAgg(grid, sectorIndex), K, "left").select(
-      col("ticker"), col("as_of"), sectorRelativeExpr.as("sector_relative_6m"))
-  }
 
   /** Net-debt/EBITDA + EBIT interest cover triple on the latest
     * income⨝balance row at or before as_of — `fundamental_features.py`.
@@ -788,10 +732,9 @@ object TickerFeatures {
         max_by(col("dividendYield"), col("date")).as("__dy_last"),
         max_by(when(col("__y_valid"), col("dividendYield")),
           when(col("__y_valid"), col("date"))).as("__y_cur"),
-        // percentile-family audit (r9): this aggregate's value buffer is
-        // ONE ticker's valid-yield history — entity-history-bounded, the
-        // safe side of the d53 contract (corpus-sized groups moved to
-        // Indexing.groupQuantiles in r8; this one stays an aggregate).
+        // this aggregate's value buffer is ONE ticker's valid-yield
+        // history — entity-history-bounded, so it stays an aggregate
+        // (corpus-sized groups go through Indexing.groupQuantiles).
         percentile(when(col("__y_valid"), col("dividendYield")), lit(0.5)).as("__y_med"),
         count(when(col("__y_valid"), 1)).as("__y_n"),
         max_by(when(pvValid, col("priceEarningsRatio")), when(pvValid, col("date"))).as("__pe"),

@@ -47,20 +47,13 @@ object TickerStatics {
   }
 
   /** ETF symbol per ticker for the sector-index source (S7): lookup with
-    * SPY fallback, as a codegen'd when-chain (broadcast-free). */
+    * SPY fallback, as a codegen'd when-chain (broadcast-free). The output
+    * (ticker, etf) is the `tickerEtf` map of
+    * [[TickerFeatures.dynamicFeaturesSharedIndex]]. */
   def etfSymbol(profile: DataFrame): DataFrame = {
     val expr = sectorToEtf.foldLeft(lit("SPY")) { case (acc, (sec, etf)) =>
       when(col("sector") === sec, lit(etf)).otherwise(acc)
     }
     profile.select(col("ticker"), expr.as("etf"))
   }
-
-  /** Complete S7 flow: per-ticker sector-index series — profile -> ETF
-    * symbol (SPY fallback) joined to the ETF price table (etf, date,
-    * close). The ETF dimension is broadcast; the output is the
-    * `sectorIndex` input of TickerFeatures. */
-  def sectorIndexFor(profile: DataFrame, etfPrices: DataFrame): DataFrame =
-    etfSymbol(profile)
-      .join(org.apache.spark.sql.functions.broadcast(etfPrices), Seq("etf"))
-      .select(col("ticker"), col("date"), col("close"))
 }

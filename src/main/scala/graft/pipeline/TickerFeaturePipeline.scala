@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{SchemaOps, SeriesOps}
-import graft.features.{TickerFeatures, TickerStatics}
+import graft.features.TickerFeatures
 
 /** End-to-end ticker feature pipeline — the Spark rebuild of the reference's
   * `ticker_batch_runner.main()` (SURVEY §3.1): grid generation (B1),
@@ -34,29 +34,23 @@ object TickerFeaturePipeline {
     tickers.select(col("ticker")).distinct().crossJoin(dates)
   }
 
-  /** ≥260 price rows at or before as_of — the reference's min-history gate
-    * (`has_enough_price_data`, `ticker_batch_runner.py:502-506`). */
-  def hasEnoughPriceData(grid: DataFrame, prices: DataFrame,
-                         requiredDays: Int = 260): DataFrame = {
-    grid.join(prices, Seq("ticker"))
-      .filter(col("date") <= col("as_of"))
-      .groupBy("ticker", "as_of").agg(count(lit(1)).as("__n"))
-      .filter(col("__n") >= requiredDays)
-      .select("ticker", "as_of")
-  }
-
-  /** Full run: build features for grid cells that pass the history gate and
-    * aren't already in the store (B2), validate, normalize, merge. Returns
-    * the merged store frame (caller writes it via [[writeStore]]). */
+  /** Full run: build features for grid cells that aren't already in the
+    * store (B2) and pass the reference's min-history gate — ≥260 price rows
+    * at or before as_of (`has_enough_price_data`,
+    * `ticker_batch_runner.py:502-506`), fused into the price aggregation —
+    * then validate, normalize, merge. The sector side is the S7 ticker→ETF
+    * map and ETF index. Returns the merged store frame (caller writes it
+    * via [[writeStore]]). */
   def run(spark: SparkSession, gridDf: DataFrame, in: TickerFeatures.Inputs,
+          tickerEtf: DataFrame, etfIndex: DataFrame,
           existing: Option[DataFrame]): DataFrame = {
-    val gated = hasEnoughPriceData(gridDf, in.prices)
     val todo = existing match {
-      case Some(store) => gated.join(store.select("ticker", "as_of"),
+      case Some(store) => gridDf.join(store.select("ticker", "as_of"),
         Seq("ticker", "as_of"), "left_anti") // B2 skip-existing
-      case None => gated
+      case None => gridDf
     }
-    val features = TickerFeatures.dynamicFeatures(todo, in)
+    val features = TickerFeatures.dynamicFeaturesSharedIndex(todo, in,
+      tickerEtf, etfIndex, minPriceRows = 260, seriesPriceBlock = false)
     val validated = TickerValidation.validate(features)
     val normalized = normalize(validated)
     existing match {

@@ -47,9 +47,9 @@ object TickerValidation {
     c.isNotNull && !isnan(c) && c =!= Double.PositiveInfinity && c =!= Double.NegativeInfinity
 
   /** Validate a feature frame with columns from
-    * TickerFeatures.dynamicFeatures. `prev` ordering for jump checks is
-    * per-ticker by as_of. Appends validation_status + violations; nullifies
-    * unstable ratio columns in place. */
+    * TickerFeatures.dynamicFeaturesSharedIndex. `prev` ordering for jump
+    * checks is per-ticker by as_of. Appends validation_status + violations;
+    * nullifies unstable ratio columns in place. */
   def validate(df: DataFrame): DataFrame = {
     val hasCol = df.columns.toSet
 

@@ -10,8 +10,9 @@ import QueryDef.{cagrSql, dividendBlockCtes, moneySum, priceBlockCtes,
   priceOutputsSql, ratiosOutputsSql, statementBlockCtes}
 
 /** w4: the COMPOSED dynamic feature row, end-to-end — the flagship p1 path
-  * (`TickerFeatures.dynamicFeatures`: the one-shuffle cell layer over price,
-  * statement, dividend and sector rows, has_ flags) followed by the full V1-V5 validation
+  * (`TickerFeatures.dynamicFeaturesSharedIndex`: the one-shuffle cell layer
+  * over price, statement and dividend rows, the sector-ETF side, has_ flags)
+  * followed by the full V1-V5 validation
   * (`TickerValidation.validate`: nullification, range checks, relative-jump
   * checks, consistency, status + ";"-joined violations) — oracle-gated: the
   * DuckDB twin recomputes every block AND the validation tag strings
@@ -74,29 +75,23 @@ object DynamicRow {
           sess.sparkContext, coalesceTo = 8)(validatedRow(sess, d))
       })
 
-  /** The real pipeline drive: synthesize Inputs from lineitem, run
-    * dynamicFeatures (fused-statements path) + validate. */
-  private[graft] def validatedRow(s: SparkSession, dir: String): DataFrame = {
-    val (in, grid) = buildInputs(s, dir)
-    TickerValidation.validate(TickerFeatures.dynamicFeatures(grid, in))
-  }
+  /** The real pipeline drive: synthesize Inputs from lineitem, run the
+    * engine (fused-statements path, no history gate) + validate. */
+  private[graft] def validatedRow(s: SparkSession, dir: String): DataFrame =
+    TickerValidation.validate(features(s, dir))
 
-  /** Input synthesis split out so the stage profiler can time blocks
-    * independently of the full drive. */
-  private[graft] def buildInputs(s: SparkSession,
-                                 dir: String): (TickerFeatures.Inputs, DataFrame) = {
+  private def features(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
     val base = li.groupBy(col("l_suppkey").as("sk"), col("l_shipdate").as("date"))
       .agg(moneySum(col("l_extendedprice")).as("b"))
       .withColumn("ticker", col("sk").cast(StringType))
       .withColumn("d", datediff(col("date"), to_date(lit("1992-01-01"))).cast(DoubleType))
       // feeds six input frames + the grid: one aggregation pays for all.
-      // (eager localCheckpoint, not lazy persist: measured r10, the lazy
-      // cache made the warm drive 10.6 s vs 6.9 — concurrent consumers
-      // (broadcast builds) race the un-materialized cache and recompute)
+      // (eager localCheckpoint, not lazy persist: the lazy cache made the
+      // warm drive 10.6 s vs 6.9 — concurrent consumers (broadcast builds)
+      // race the un-materialized cache and recompute)
       //
-      // TICKER-partitioned before the checkpoint (r11 — the r10 verdict's
-      // pre-slice-enrichment fold): localCheckpoint preserves
+      // TICKER-partitioned before the checkpoint: localCheckpoint preserves
       // outputPartitioning, so every per-ticker window downstream — the
       // returns lag, the split cum-product, grid/sks distincts — reuses
       // this ONE exchange instead of each paying its own. One tiny extra
@@ -104,14 +99,17 @@ object DynamicRow {
       // full-relation exchanges (and their AQE jobs) from the drive; at
       // 100 TB the returns lag alone re-shuffled the whole price series.
       .repartition(col("ticker"))
-      // checkpointPartitioned, not a bare localCheckpoint (r12): under AQE
-      // the bare form stores UnknownPartitioning in the LogicalRDD and the
-      // whole fold above silently stops working — the warm drive paid ~6
+      // checkpointPartitioned, not a bare localCheckpoint: under AQE the
+      // bare form stores UnknownPartitioning in the LogicalRDD and the
+      // reuse above silently stops working — the warm drive paid ~6
       // re-planned exchanges (= 6 AQE stage jobs) the static plan avoids.
       .transform(graft.core.RoundCheckpointer.checkpointPartitioned)
     val prices = base.select(col("ticker"), col("date"),
       (lit(100.0) + col("d") * 0.05 + (col("sk") % 13).cast(DoubleType)).as("close"))
-    val sectorIndex = base.select(col("ticker"), col("date"),
+    // each ticker's sector series is its own index, keyed by the ticker
+    // (ticker → etf = ticker); its dates are the supplier's own ship
+    // dates, so it is not one shared series
+    val etfIndex = base.select(col("ticker").as("etf"), col("date"),
       (lit(100.0) + col("d") * 0.04).as("close"))
     val statements = base.select(col("ticker"), col("date"),
       (lit(0.1) + (col("b") % 100) / 2500.0).as("dividendYield"),
@@ -139,7 +137,7 @@ object DynamicRow {
     val dividends = base.select(col("ticker"), col("date"),
       (lit(1.0) + (col("b") % 300) / 100.0).as("dividend"))
     val sks = base.select(col("ticker"), col("sk")).distinct()
-    // explode-not-union (r11): the union form produced UnknownPartitioning,
+    // explode-not-union: the union form produced UnknownPartitioning,
     // forcing the split cum-product window to re-exchange; the exploded
     // form keeps base's ticker partitioning (values identical — same
     // (ticker, date, ratio) set, order irrelevant to the as-of join)
@@ -153,11 +151,14 @@ object DynamicRow {
       .filter(col("s").isNotNull)
       .select(col("ticker"), col("s.date").as("date"),
         col("s.split_ratio").as("split_ratio"))
-    val grid = base.select(col("ticker")).distinct()
+    val tickers = base.select(col("ticker")).distinct()
+    val grid = tickers
       .withColumn("as_of", explode(array(asOfDates.map(d => to_date(lit(d))): _*)))
     val in = TickerFeatures.Inputs(prices, dividends, splits, ratios, income,
-      balance, sectorIndex, statements = Some(statements))
-    (in, grid)
+      balance, statements = Some(statements))
+    val tickerEtf = tickers.withColumn("etf", col("ticker"))
+    TickerFeatures.dynamicFeaturesSharedIndex(grid, in, tickerEtf, etfIndex,
+      minPriceRows = 0, seriesPriceBlock = false)
   }
 
   // ---------------------------------------------------------------- oracle

@@ -39,11 +39,11 @@ object Pipeline {
       .groupBy("ticker", "date").agg(max("close").as("close"),
         max(when(col("status") === "F", col("close") / 1000)).as("__div"))
       // reused by three feature blocks + the history gate: materialize once.
-      // Ticker-partitioned before the checkpoint (the w4 fold, r11): the
-      // returns lag and the ticker distinct reuse this exchange.
-      // checkpointPartitioned (r12): a bare localCheckpoint under AQE
-      // stores UnknownPartitioning and silently undoes the fold. This
-      // build is a scan+aggregate (no join), so losing AQE for the one
+      // Ticker-partitioned before the checkpoint: the returns lag and the
+      // ticker distinct reuse this exchange.
+      // checkpointPartitioned: a bare localCheckpoint under AQE stores
+      // UnknownPartitioning and silently undoes that reuse. This build is
+      // a scan+aggregate (no join), so losing AQE for the one
       // materialization costs nothing; yearly below keeps the plain form
       // because ITS build contains the orders⨝liAgg join AQE converts.
       .repartition(col("ticker"))
@@ -57,7 +57,7 @@ object Pipeline {
     // per-order frame, then combine partials per (ticker, year). avg and
     // stddev_samp decompose into (Σx, Σx², n) moments; every output lands
     // behind normalize's round-to-2-decimals, where the reordering's
-    // last-ulp differences vanish (P1Probe2: 2.8 s -> 1.9 s for this stage).
+    // last-ulp differences vanish (2.8 s -> 1.9 s for this stage).
     // Every non-integral term is summed EXACTLY, in fixed point (QueryDef.
     // moneySum's rule): rounded once per row to a long count of 1e-9 units,
     // summed as longs at both levels, and turned back into a double only
@@ -100,11 +100,12 @@ object Pipeline {
         (total("__sd") / sum(col("__n")) * 10).as("payoutRatio"))
     // the aggregate feeds income/balance/ratios — without a checkpoint each
     // block re-executes the join. PLAIN checkpoint, deliberately not
-    // checkpointPartitioned (r12 A/B): the AQE-off build loses the runtime
-    // broadcast conversion of the orders⨝liAgg join above, and that costs
-    // more than the preserved clustering saves downstream (the priceDiv
-    // build is join-free, so IT keeps the partition-preserving form).
-    // OVERLAPPED (r13, guide §2.6): the two input materializations are
+    // checkpointPartitioned (measured A/B): the AQE-off build loses the
+    // runtime broadcast conversion of the orders⨝liAgg join above, and that
+    // costs more than the preserved clustering saves downstream (the
+    // priceDiv build is join-free, so IT keeps the partition-preserving
+    // form).
+    // OVERLAPPED: the two input materializations are
     // independent jobs, and sequential submission left the cluster idle
     // through each one's tail — yearly's plain checkpoint runs on a pool
     // thread while priceDiv's partitioned checkpoint runs here. Values are
@@ -131,10 +132,6 @@ object Pipeline {
     val ratios = yearly.select("ticker", "date", "priceEarningsRatio",
       "priceToFreeCashFlowsRatio", "payoutRatio", "dividendYield",
       "freeCashFlowPerShare")
-    // every "ticker" tracks the market index — kept as ONE compact series
-    // (etf, date, close) + a ticker→etf map; the per-ticker replicated
-    // form multiplies the index by the universe size (36M rows at sf0.1).
-    val emptySectorIndex = prices.filter(lit(false))
     // income/balance/ratios are all projections of `yearly` — hand the
     // assembly the column superset so the grid price form computes every
     // per-cell block over one slice + aggregation (shared (ticker, date)
@@ -143,16 +140,18 @@ object Pipeline {
       .withColumn("cashAndShortTermInvestments", col("incomeBeforeTax") / 10)
       .withColumn("totalDebt", col("incomeBeforeTax") / 5)
     TickerFeatures.Inputs(prices, dividends, splits, ratios, income, balance,
-      emptySectorIndex, statements = Some(statements))
+      statements = Some(statements))
   }
 
-  /** Shared market index for the S7 flow: one series, all tickers map to
-    * it (SPY-style fallback). `tickers` is the caller's distinct-ticker
-    * frame (r13 fold): the ticker set in the checkpointed price series IS
-    * the distinct o_custkey set (priceDiv groups every orders row by
-    * (ticker, date)), and deriving the map from the ticker-partitioned
-    * checkpoint replaces a second orders scan + distinct exchange with a
-    * map-side-only pass. */
+  /** The S7 flow over testdata: the ticker→ETF map is
+    * [[TickerStatics.etfSymbol]] over a profile of the tickers, and the
+    * index is one compact (etf, date, close) series — the daily mean order
+    * price as the market ETF. Customers carry no sector, so the profile's
+    * sector is NULL and every ticker takes the lookup's SPY fallback (the
+    * optimizer folds the when-chain to that literal). `tickers` is the
+    * caller's distinct-ticker frame: the ticker set in the checkpointed
+    * price series IS the distinct o_custkey set (priceDiv groups every
+    * orders row by (ticker, date)), so no second orders scan is needed. */
   private def indexFrom(s: org.apache.spark.sql.SparkSession, dir: String,
                         tickers: org.apache.spark.sql.DataFrame) = {
     val orders = Tables.orders(s, dir)
@@ -160,15 +159,15 @@ object Pipeline {
       .groupBy(col("o_orderdate").cast(DateType).as("date"))
       .agg(avg(col("o_totalprice")).as("close"))
       .select(lit("SPY").as("etf"), col("date"), col("close"))
-    val tickerEtf = tickers.withColumn("etf", lit("SPY"))
-    (tickerEtf, etfIndex)
+    val profile = tickers.select(col("ticker"), lit(null).cast(StringType).as("sector"))
+    (TickerStatics.etfSymbol(profile), etfIndex)
   }
 
   /** Full pipeline: grid -> gate -> features -> validation -> round2f32. */
   val p1 = QueryDef("p1_ticker_pipeline",
     (s, dir) => p1Materialized(s, dir),
     None,
-    // sandwich (r12 task 6): the store's price-block VALUES are judged by
+    // sandwich: the store's price-block VALUES are judged by
     // p8 over p1's own materialized output; the identical feature builds
     // are judged row-wise by w4/w5 (dynamic-row + validation stats), the
     // static/OHE layer by p2, and the merge semantics by q40/q42.
@@ -184,28 +183,25 @@ object Pipeline {
       val in = inputsFrom(s, dir)
       // one distinct-tickers pass feeds BOTH the grid and the ticker→etf
       // map: prices is ticker-partitioned (checkpointPartitioned), so the
-      // distinct is exchange-free, and the old second orders scan is gone
+      // distinct is exchange-free
       val tickers = in.prices.select("ticker").distinct()
       val grid = TickerFeaturePipeline.grid(s, tickers, "1997-12-31", 4)
       val (tickerEtf, etfIndex) = indexFrom(s, dir, tickers)
       // testdata customers have ~10 orders, not 260 trading days — gate at 5.
-      // The gate is FUSED into the price aggregation (minPriceRows): same
-      // predicate as hasEnoughPriceData, one fewer grid⨝prices shuffle.
       // The price-block physical form is chosen from the data shape
       // (choosePriceForm): at this shape (~10-row histories × 5 as_ofs)
-      // the cost model picks the grid form — matching both the round-4
-      // wall measurement and the round-5 ProbeDeep calibration (grid and
-      // series tie at 3.5 s here; series wins 2-4× only once histories ×
-      // as_ofs outgrow its flat enrichment cost — the 100 TB shape). The
-      // probe reads the checkpointed series: ~ms.
+      // the cost model picks the grid form — matching the measured wall
+      // time and the ProbeDeep calibration (grid and series tie at 3.5 s
+      // here; series wins 2-4× only once histories × as_ofs outgrow its
+      // flat enrichment cost — the 100 TB shape). The probe reads the
+      // checkpointed series: ~ms.
       val features = TickerFeatures.dynamicFeaturesSharedIndex(grid, in,
         tickerEtf, etfIndex, minPriceRows = 5,
         seriesPriceBlock = TickerFeatures.choosePriceForm(grid, in.prices))
       TickerValidation.validate(features)
   }
 
-  /** A12 graduated to an oracle row (r8 verdict task 3 — the e10
-    * unique-optimum trick): the RF fit's importances are engine-internal,
+  /** A12 as an oracle row (the e10 unique-optimum trick): the RF fit's importances are engine-internal,
     * but the RANKING they induce on a planted-signal fixture is not.
     * Features derive from lineitem keys with strictly ordered signal
     * strengths — y = 1000·f_strong + 10·f_mid; the key modulus 840 is a
@@ -288,14 +284,13 @@ object Pipeline {
       // few partitions: the feature table is ~1 row per grid cell; boosting
       // re-scans it many times and per-task overhead dominates at 32 slices.
       // materializeFinal frees the build's interior checkpoints (priceDiv,
-      // the fused cell layer) once the feature bytes exist — the round-10
-      // orphaned-checkpoint hygiene.
+      // the fused cell layer) once the feature bytes exist, instead of
+      // orphaning them to the ContextCleaner.
       graft.core.RoundCheckpointer.materializeFinal(
         sess.sparkContext, coalesceTo = 8)(p1Plan(sess, d))
     })
 
-  /** p1's merged-store output, VALUE-JUDGED (r10 verdict task 4 — the last
-    * sandwichable gap): a deterministic slice of the p1 store — the keys
+  /** p1's merged-store output, VALUE-JUDGED: a deterministic slice of the p1 store — the keys
     * plus every price-block feature — with a DuckDB twin that replays the
     * WHOLE derivation from the base tables: the keep-last price series
     * (max close per ticker-day from orders), the 4-year as-of grid, the
@@ -366,7 +361,7 @@ object Pipeline {
         .orderBy("ticker", "as_of")
     },
     None,
-    // sandwich (r12 task 6): p5 judges the score formula, p6 the GBT's
+    // sandwich: p5 judges the score formula, p6 the GBT's
     // confusion surface on a planted fixture, p7 the portfolio
     // construction — together the full phase-3..5 chain minus the
     // non-oracle-able ensemble fit itself.
@@ -444,8 +439,8 @@ object Pipeline {
         round(weight, 6) AS weight
       FROM port ORDER BY ticker"""))
 
-  /** The GBT fit's verdict surface, oracle-gated (r8 verdict task 3 — the
-    * e10 trick applied to p4's unjudged interior): a planted perfectly
+  /** The GBT fit's verdict surface, oracle-gated (the e10 trick applied to
+    * p4's unjudged interior): a planted perfectly
     * separable fixture (label = f_sig ≥ 5 on a 10-valued key-derived
     * feature; 10 distinct values sit under MLlib's 32-bin split budget,
     * so the exact boundary is an available split) run through the REAL
@@ -489,8 +484,7 @@ object Pipeline {
         CAST(count(*) FILTER (WHERE c_custkey % 10 < 5) AS BIGINT) AS tn
       FROM customer WHERE c_custkey % 7 IN (3, 4, 5, 6)"""))
 
-  /** p4's judged verdict surface (r9 verdict task 2 — the last
-    * graduation): the FULL composed pipeline — real
+  /** p4's judged verdict surface: the FULL composed pipeline — real
     * [[graft.analysis.Scoring.fitCutProbability]] (walk-forward GBT on
     * p6's planted perfectly-separable fixture, seed 42) → real
     * [[graft.analysis.Scoring.score]] → real

@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Pins the w4/w5 composed-row drive (DynamicRow): the full
-  * dynamicFeatures → validate chain over the lineitem-derived inputs must
-  * produce both statuses, fire every violation family the construction
-  * promises, and keep the has_ flag quirk (flags computed PRE-validation,
-  * so a nullified eic still reads has_=1). Value-level parity is the
-  * DuckDB oracle's job; these pin the structural contract at sf0.001.
+  * dynamicFeaturesSharedIndex → validate chain over the lineitem-derived
+  * inputs must produce both statuses, fire every violation family the
+  * construction promises, and keep the has_ flag quirk (flags computed
+  * PRE-validation, so a nullified eic still reads has_=1). Value-level
+  * parity is the DuckDB oracle's job; these pin the structural contract at
+  * sf0.001.
   */
 class DynamicRowSpec extends SparkSpec {
 

@@ -39,13 +39,14 @@ class PipelineSpec extends SparkSpec {
       ("AAA", d("2022-12-31"), 100.0, 400.0),
       ("BBB", d("2022-12-31"), 150.0, 300.0))
       .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt")
-    val sectorIndex = days.zipWithIndex.flatMap { case (day, i) =>
-      Seq(("AAA", java.sql.Date.valueOf(day), 50.0 + i * 0.01),
-        ("BBB", java.sql.Date.valueOf(day), 50.0 + i * 0.01))
-    }.toDF("ticker", "date", "close")
-    TickerFeatures.Inputs(prices, dividends, splits, ratios, income, balance,
-      sectorIndex)
+    TickerFeatures.Inputs(prices, dividends, splits, ratios, income, balance)
   }
+
+  /** Both tickers track one market ETF, a daily series over the price days. */
+  private val spyMap = Seq(("AAA", "SPY"), ("BBB", "SPY")).toDF("ticker", "etf")
+  private def spyIndex = (0 until 300).map { i =>
+    ("SPY", java.sql.Date.valueOf(java.time.LocalDate.of(2022, 6, 1).plusDays(i)), 50.0 + i * 0.01)
+  }.toDF("etf", "date", "close")
 
   test("full pipeline run, partitioned store write, incremental no-op rerun") {
     val in = mkInputs
@@ -53,7 +54,8 @@ class PipelineSpec extends SparkSpec {
     val grid = TickerFeaturePipeline.grid(spark, tickers, "2023-03-31", 1)
 
     // first run: empty store
-    val first = TickerFeaturePipeline.run(spark, grid, in, existing = None)
+    val first = TickerFeaturePipeline.run(spark, grid, in, spyMap, spyIndex,
+      existing = None)
     val rows = first.collect()
     assert(rows.length == 2) // both tickers pass the 260-day gate
     assert(first.columns.contains("validation_status"))
@@ -75,7 +77,7 @@ class PipelineSpec extends SparkSpec {
     assert(pruned.count() == 1)
 
     // second run against the store: B2 anti-join leaves nothing to compute
-    val second = TickerFeaturePipeline.run(spark, grid, in,
+    val second = TickerFeaturePipeline.run(spark, grid, in, spyMap, spyIndex,
       existing = Some(readBack))
     assert(second.count() == 2) // merged store is unchanged
     val hash2 = TickerFeaturePipeline.contentHash(
@@ -83,20 +85,6 @@ class PipelineSpec extends SparkSpec {
     val hash1Again = TickerFeaturePipeline.contentHash(
       readBack.select(first.columns.map(col): _*))
     assert(hash2 == hash1Again)
-  }
-
-  test("typed Dataset[FeatureRow] view of the pipeline output") {
-    import graft.features.FeatureRow
-    val in = mkInputs
-    val tickers = Seq("AAA", "BBB").toDF("ticker")
-    val grid = TickerFeaturePipeline.grid(spark, tickers, "2023-03-31", 1)
-    val out = TickerFeaturePipeline.run(spark, grid, in, existing = None)
-    val ds = FeatureRow.toDataset(out)
-    val rows = ds.collect().sortBy(_.ticker)
-    assert(rows.length == 2)
-    assert(rows.head.ticker == "AAA")
-    assert(rows.head.return_6m.isDefined)
-    assert(rows.head.has_dividend_yield == 1)
   }
 
   test("merge: new rows win over store rows per (ticker, as_of)") {
@@ -134,13 +122,24 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("S7 flow: per-ticker sector index series via ETF lookup join") {
+    // profile -> etfSymbol -> the engine's ticker→ETF map over one compact
+    // ETF index: XLE gains 10% over the window, SPY 100%
     val profile = Seq(("AAA", "Energy", "USA"), ("BBB", "Nonsense", "UK"))
       .toDF("ticker", "sector", "country")
-    val etfPrices = Seq(("XLE", d("2024-01-01"), 10.0), ("SPY", d("2024-01-01"), 99.0))
+    val tickerEtf = TickerStatics.etfSymbol(profile)
+    assert(tickerEtf.orderBy("ticker").as[(String, String)].collect().toSeq ==
+      Seq(("AAA", "XLE"), ("BBB", "SPY"))) // unknown sector -> SPY fallback
+    val etfIndex = Seq(
+      ("XLE", d("2022-06-01"), 10.0), ("XLE", d("2023-03-31"), 11.0),
+      ("SPY", d("2022-06-01"), 99.0), ("SPY", d("2023-03-31"), 198.0))
       .toDF("etf", "date", "close")
-    val out = TickerStatics.sectorIndexFor(profile, etfPrices)
-      .orderBy("ticker").select("ticker", "close").as[(String, Double)].collect()
-    assert(out.toSeq == Seq(("AAA", 10.0), ("BBB", 99.0))) // SPY fallback
+    val grid = Seq(("AAA", d("2023-03-31")), ("BBB", d("2023-03-31"))).toDF("ticker", "as_of")
+    val out = TickerFeatures.dynamicFeaturesSharedIndex(grid, mkInputs, tickerEtf, etfIndex,
+        minPriceRows = 0, seriesPriceBlock = false)
+      .orderBy("ticker").select("sector_relative_6m").as[Double].collect()
+    // stock legs: the first and last of 300 daily closes 100 + i*0.05 (+20 for BBB)
+    assert(out(0) ~= ((100.0 + 299 * 0.05) / 100.0 - 1 - 0.1, 1e-9))  // vs XLE
+    assert(out(1) ~= ((120.0 + 299 * 0.05) / 120.0 - 1 - 1.0, 1e-9)) // vs SPY
   }
 
   test("static upsert + OHE projection") {

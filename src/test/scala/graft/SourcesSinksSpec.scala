@@ -195,27 +195,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(lines.length == 1 && lines(0).startsWith("T | 2024-01-01"))
   }
 
-  test("retry schedule: exponential capped backoff, Retry-After override, budget") {
-    import graft.pipeline.RunPolicies
-    assert(RunPolicies.retryDelaySeconds(0) == Some(2))
-    assert(RunPolicies.retryDelaySeconds(1) == Some(4))
-    assert(RunPolicies.retryDelaySeconds(2, retryAfter = Some(7)) == Some(7))
-    assert(RunPolicies.retryDelaySeconds(10) == None) // budget exhausted
-    assert(RunPolicies.retryDelaySeconds(2, maxRetries = 10) == Some(8))
-    assert(RunPolicies.retryDelaySeconds(9, maxRetries = 10) == Some(30)) // cap
-  }
-
-  test("sliding-window ETA and exit policy") {
-    import graft.pipeline.RunPolicies
-    import graft.sinks.Sinks.RunStats
-    // 6 completions in the last 120 s -> rate 0.05/s -> 40 remaining = 800 s
-    val times = (0 until 6).map(i => 1000.0 - i * 10)
-    assert(RunPolicies.etaSeconds(times, 1000.0, 40).exists(e => math.abs(e - 800.0) < 1e-9))
-    assert(RunPolicies.etaSeconds(Seq(100.0), 1000.0, 40).isEmpty) // stale window
-    assert(RunPolicies.exitCode(RunStats(10, 8, 0, 2, 0, "", "")) == 0) // flags never fail
-    assert(RunPolicies.exitCode(RunStats(10, 8, 0, 1, 1, "", "")) == 1)
-  }
-
   test("format matrix: parquet/orc/csv/json roundtrip values, types via supplied schema") {
     val df = Seq(
       (1L, "alpha,with comma", 2.5, java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456")),

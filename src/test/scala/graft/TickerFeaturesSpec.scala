@@ -22,6 +22,28 @@ class TickerFeaturesSpec extends SparkSpec {
   private def priceRow(name: String, grid: DataFrame, p: DataFrame): Double =
     TickerFeatures.priceBlock(grid, p).select(name).as[Double].head()
 
+  /** The S7 sector side of the single-ticker specs: T is measured against
+    * ETF X, whose index rows are `rows` (date, close). */
+  private def etfX(rows: (String, Double)*): DataFrame =
+    rows.map { case (dt, c) => ("X", d(dt), c) }.toDF("etf", "date", "close")
+
+  /** The engine entry with T → X, no history gate, grid price form. */
+  private def features(grid: DataFrame, in: TickerFeatures.Inputs,
+                       etfIndex: DataFrame): DataFrame =
+    TickerFeatures.dynamicFeaturesSharedIndex(grid, in,
+      Seq(("T", "X")).toDF("ticker", "etf"), etfIndex,
+      minPriceRows = 0, seriesPriceBlock = false)
+
+  /** Inputs with T's price series `p` and every other input empty. */
+  private def priceOnly(p: DataFrame): TickerFeatures.Inputs = TickerFeatures.Inputs(
+    prices = p,
+    dividends = Seq.empty[(String, java.sql.Date, Double)].toDF("ticker", "date", "dividend"),
+    splits = Seq.empty[(String, java.sql.Date, Double)].toDF("ticker", "date", "split_ratio"),
+    ratios = ratios(),
+    income = Seq.empty[(String, java.sql.Date, Double, Double)]
+      .toDF("ticker", "date", "eps", "incomeBeforeTax"),
+    balance = Seq.empty[(String, java.sql.Date, Double)].toDF("ticker", "date", "totalDebt"))
+
   test("6m return: 100 -> 120 = 0.2 (test_compute_6m_return)") {
     val p = prices("2024-01-01" -> 100.0, "2024-07-01" -> 120.0)
     assert(priceRow("6m_return", gridAt("2024-07-01"), p) ~= (0.2, 1e-9))
@@ -116,17 +138,16 @@ class TickerFeaturesSpec extends SparkSpec {
 
   test("sector relative return (365d window): (120/100) - (210/200) = 0.15") {
     val stock = prices("2023-07-05" -> 100.0, "2024-01-01" -> 120.0)
-    val etf = Seq(("T", d("2023-07-05"), 200.0), ("T", d("2024-01-01"), 210.0))
-      .toDF("ticker", "date", "close")
-    val out = TickerFeatures.sectorRelativeBlock(gridAt("2024-01-01"), stock, etf)
+    val etf = etfX("2023-07-05" -> 200.0, "2024-01-01" -> 210.0)
+    val out = features(gridAt("2024-01-01"), priceOnly(stock), etf)
       .select("sector_relative_6m").as[Double].head()
     assert(out ~= (0.15, 1e-9))
   }
 
   test("sector relative return with <2 sector rows is 0.0") {
     val stock = prices("2023-07-05" -> 100.0, "2024-01-01" -> 120.0)
-    val etf = Seq(("T", d("2024-01-01"), 210.0)).toDF("ticker", "date", "close")
-    val out = TickerFeatures.sectorRelativeBlock(gridAt("2024-01-01"), stock, etf)
+    val etf = etfX("2024-01-01" -> 210.0)
+    val out = features(gridAt("2024-01-01"), priceOnly(stock), etf)
       .select("sector_relative_6m").as[Double].head()
     assert(out ~= 0.0)
   }
@@ -326,8 +347,7 @@ class TickerFeaturesSpec extends SparkSpec {
         .toDF("ticker", "date", "eps", "incomeBeforeTax", "interestExpense",
           "depreciationAndAmortization"),
       balance = Seq(("T", d("2023-06-01"), 0.0, 100.0))
-        .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt"),
-      sectorIndex = Seq(("T", d("2023-01-01"), 100.0)).toDF("ticker", "date", "close"))
+        .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt"))
     val expected = Set("ticker", "as_of", "6m_return", "12m_return",
       "volatility", "max_drawdown_1y", "sector_relative_6m", "sma_50_200_delta",
       "net_debt_to_ebitda", "ebit_interest_cover", "ebit_interest_cover_capped",
@@ -335,7 +355,7 @@ class TickerFeaturesSpec extends SparkSpec {
       "dividend_cagr_5y", "yield_vs_5y_median", "pe_ratio", "pfcf_ratio",
       "payout_ratio", "has_eps_cagr_3y", "has_fcf_cagr_3y", "has_dividend_yield",
       "has_dividend_cagr_3y", "has_dividend_cagr_5y", "has_ebit_interest_cover")
-    assert(TickerFeatures.dynamicFeatures(grid, in).columns.toSet == expected)
+    assert(features(grid, in, etfX("2023-01-01" -> 100.0)).columns.toSet == expected)
   }
 
   test("cell survives with reference defaults when every input row is dated after as_of") {
@@ -394,10 +414,8 @@ class TickerFeaturesSpec extends SparkSpec {
         .toDF("ticker", "date", "eps", "incomeBeforeTax", "interestExpense",
           "depreciationAndAmortization"),
       balance = Seq(("T", d("2023-06-01"), 0.0, 100.0))
-        .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt"),
-      sectorIndex = Seq(("T", d("2023-01-01"), 100.0), ("T", d("2024-01-01"), 110.0))
-        .toDF("ticker", "date", "close"))
-    val row = TickerFeatures.dynamicFeatures(grid, in)
+        .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt"))
+    val row = features(grid, in, etfX("2023-01-01" -> 100.0, "2024-01-01" -> 110.0))
       .select("has_eps_cagr_3y", "has_dividend_yield", "has_dividend_cagr_3y")
       .collect()(0)
     assert(row.getInt(0) == 0) // single-point eps -> NaN -> 0
@@ -406,10 +424,10 @@ class TickerFeaturesSpec extends SparkSpec {
   }
 
   test("fused path equals the separate blocks (exact; vol/sma to ulp tolerance)") {
-    // two tickers x three as_of dates; statements span 6 years with edge
+    // three tickers x three as_of dates; statements span 6 years with edge
     // cases on every branch: zero EBITDA (inf nde), zero interest, negative
     // eps, zero dividendYield rows, non-positive pe rows.
-    val tickers = Seq("A", "B")
+    val tickers = Seq("A", "B", "C")
     val years = 2018 to 2023
     val stRows = for (t <- tickers; y <- years) yield {
       val i = y - 2018
@@ -445,29 +463,37 @@ class TickerFeaturesSpec extends SparkSpec {
       income = st.select("ticker", "date", "eps", "incomeBeforeTax",
         "interestExpense", "depreciationAndAmortization"),
       balance = st.select("ticker", "date", "cashAndShortTermInvestments", "totalDebt"),
-      sectorIndex = px.limit(0),
       statements = statements)
-    def rows(in: TickerFeatures.Inputs): Seq[org.apache.spark.sql.Row] =
-      TickerFeatures.dynamicFeatures(grid, in)
-        .orderBy("ticker", "as_of").collect().toSeq
-    val separate = rows(inputs(None))
-    val fused = rows(inputs(Some(st)))
+    // sector side: A and B track two ETFs with different index cadences;
+    // C's ETF has no index rows (NaN sector_relative_6m). The 2024 as_of
+    // has fewer than 2 stock rows in its 365 days (0.0).
+    val tickerEtf = Seq(("A", "XA"), ("B", "XB"), ("C", "XC")).toDF("ticker", "etf")
+    val etfIndex = ((0 until 78).map(k =>
+        ("XA", d(java.time.LocalDate.of(2018, 1, 15).plusMonths(k).toString), 100.0 + k * 1.5)) ++
+      (0 until 26).map(k =>
+        ("XB", d(java.time.LocalDate.of(2018, 2, 1).plusMonths(3L * k).toString), 80.0 - k * 0.7)))
+      .toDF("etf", "date", "close")
+    def frame(in: TickerFeatures.Inputs, seriesPriceBlock: Boolean): DataFrame =
+      TickerFeatures.dynamicFeaturesSharedIndex(grid, in, tickerEtf, etfIndex,
+        minPriceRows = 0, seriesPriceBlock = seriesPriceBlock)
+    def rows(df: DataFrame): Seq[org.apache.spark.sql.Row] =
+      df.orderBy("ticker", "as_of").collect().toSeq
+    val separate = rows(frame(inputs(None), seriesPriceBlock = false))
+    val fused = rows(frame(inputs(Some(st)), seriesPriceBlock = false))
     // the series price form assembles from the separate statement blocks
-    // even when `statements` is set; an empty ETF index gives the same NaN
-    // sector feature as the empty per-ticker index above
-    val tickerEtf = tickers.map(t => (t, "X")).toDF("ticker", "etf")
-    val emptyEtfIndex = Seq.empty[(String, java.sql.Date, Double)].toDF("etf", "date", "close")
-    val series = TickerFeatures.dynamicFeaturesSharedIndex(grid, inputs(Some(st)),
-      tickerEtf, emptyEtfIndex, seriesPriceBlock = true)
-      .orderBy("ticker", "as_of").collect().toSeq
+    // even when `statements` is set
+    val series = rows(frame(inputs(Some(st)), seriesPriceBlock = true))
     assert(separate.nonEmpty && separate.size == fused.size && separate.size == series.size)
+    val cols = frame(inputs(None), seriesPriceBlock = false).columns
+    // the sector feature takes every branch: a value, the <2-rows 0.0 and NaN
+    val sr = separate.map(_.getDouble(cols.indexOf("sector_relative_6m")))
+    assert(sr.exists(_.isNaN) && sr.contains(0.0) && sr.exists(v => !v.isNaN && v != 0.0))
     // volatility and the SMA delta accumulate in DIFFERENT orders between
     // the forms (shuffle-arrival avg/stddev vs the fused path's date-order
     // fold or the series form's running window) — last-ulp differences by
     // design, absorbed by the pipeline's round(6); every other column is
     // exact picks/counts/IEEE arithmetic on identical inputs and must match
     // bit-for-bit.
-    val cols = TickerFeatures.dynamicFeatures(grid, inputs(None)).columns
     val ulpCols = Set("volatility", "sma_50_200_delta")
     (separate.zip(fused) ++ separate.zip(series)).foreach { case (a, b) =>
       cols.zipWithIndex.foreach { case (c, i) =>
