@@ -21,8 +21,7 @@ import org.apache.spark.sql.types._
   *
   * `merge(partialize(a), partialize(b))` ≡ `partialize(a ∪ b)` by
   * construction; q93 proves the equivalence against the plain one-shot
-  * GROUP BY oracle, and the streaming upsert sink (EventStreams.
-  * upsertAvailableNow) is the keyed-state cousin of the same idea.
+  * GROUP BY oracle.
   */
 object IncrementalAgg {
 

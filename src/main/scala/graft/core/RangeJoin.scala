@@ -3,56 +3,23 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Binned range join: point-in-interval joins as equi-joins.
+/** Point-in-interval aggregation without a range join.
   *
   * Spark plans a bare `p BETWEEN start AND end` join as a broadcast
   * nested-loop (or worse, a cartesian product) — quadratic work that dies
-  * at scale. The standard fix bins the time axis: each interval is exploded
-  * to the bins it covers, each point belongs to exactly one bin, and the
-  * join becomes a hash equi-join on the bin key refined by the exact
-  * BETWEEN predicate. Work is linear in points + intervals × bins-covered;
-  * the bin shuffle key is high-cardinality (dates), so no skew hot-spot.
-  *
-  * Pick `binDays` near the typical interval length: one interval then
-  * explodes to ~2 rows, and each point meets only the intervals in its own
-  * bin. (DuckDB's IEJoin solves the same problem with a sort-based
-  * algorithm on one node; binning is the shuffle-friendly equivalent.)
+  * at scale. When the downstream is an additive per-interval aggregate,
+  * no join over the pairs is needed at all: prefix sums over a daily
+  * rollup answer it (DuckDB's IEJoin answers the pair join with a
+  * sort-based algorithm on one node).
   */
 object RangeJoin {
 
-  private def binOf(d: Column, binDays: Int): Column =
-    floor(datediff(d, lit("1970-01-01")) / binDays)
-
-  /** Join each row of `points` to every row of `intervals` whose
-    * [startCol, endCol] contains its `pointCol` (dates, inclusive both
-    * ends). Returns points columns + intervals columns. Intervals with
-    * end < start yield no matches. */
-  def pointInInterval(points: DataFrame, intervals: DataFrame,
-                      pointCol: String, startCol: String, endCol: String,
-                      binDays: Int = 16): DataFrame = {
-    val binned = intervals
-      .filter(col(endCol) >= col(startCol))
-      .withColumn("__bin",
-        explode(sequence(binOf(col(startCol), binDays),
-          binOf(col(endCol), binDays))))
-    points
-      .withColumn("__bin", binOf(col(pointCol), binDays))
-      .join(binned, Seq("__bin"))
-      .filter(col(pointCol).between(col(startCol), col(endCol)))
-      .drop("__bin")
-  }
-
   /** Additive per-interval aggregation WITHOUT materializing the
-    * point×interval pairs — the shape that survives a second decade.
-    *
-    * [[pointInInterval]] is optimal when the caller needs the matched
-    * PAIRS: its work is linear in the output. But when the downstream is
-    * an additive per-interval aggregate (count, sum), the output-bound
-    * cost is avoidable — over a FIXED time domain the matched-pair mass
-    * grows quadratically in corpus size (points/day × intervals both grow
-    * linearly; the round-8 sf10 probe measured d17's binned form at 61×
-    * per 10× data, exactly this), while the aggregate itself only needs
-    * prefix sums: agg(interval) = cum(end) − cum(start−1).
+    * point×interval pairs. Any pair-producing form is bound by its
+    * output, and over a FIXED time domain the matched-pair mass grows
+    * quadratically in corpus size (points/day × intervals both grow
+    * linearly), while the aggregate itself only needs prefix sums:
+    * agg(interval) = cum(end) − cum(start−1).
     *
     * Plan: one groupBy(day) over the points (the only data-scale
     * shuffle), a dense calendar spanning the observed domain, one
@@ -61,12 +28,14 @@ object RangeJoin {
     * count (thousands of rows at any corpus size; PlanLint's
     * post-aggregation-bounded rule), then two broadcast-sized equi-joins
     * keyed on the interval endpoints, clamped to the domain. Intervals
-    * that contain no point are dropped (inner-join semantics, matching
-    * pointInInterval + groupBy).
+    * that contain no point are dropped (inner-join semantics, matching a
+    * BETWEEN join + groupBy).
     *
     * `sums`: output name → expression over the points columns; each must
     * be associative under addition at the day rollup (decimal casts keep
-    * sums exact and order-independent — the QueryDef.dec convention).
+    * sums exact and order-independent — the QueryDef.dec convention). A
+    * sum is NULL when every matched point's value is NULL, like SQL `SUM`:
+    * a cumulative non-NULL count per sum tells it apart from a real 0.
     * Output: intervals columns + `n_points` + one column per `sums` key.
     */
   def intervalPrefixAgg(points: DataFrame, intervals: DataFrame,
@@ -77,7 +46,8 @@ object RangeJoin {
     val daily = points
       .groupBy(col(pointCol).as("__day"))
       .agg(count(lit(1)).as("__n"),
-        sums.map { case (n, c) => sum(c).as(s"__s_$n") }: _*)
+        sums.flatMap { case (n, c) =>
+          Seq(sum(c).as(s"__s_$n"), count(c).as(s"__k_$n")) }: _*)
     // domain bounds: a 1-row driver reduction (bounded at any scale)
     val b = daily.agg(min(col("__day")).as("lo"), max(col("__day")).as("hi"))
       .collect()(0)
@@ -97,17 +67,20 @@ object RangeJoin {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = calendar.select(
       Seq(col("__day"), sum(coalesce(col("__n"), lit(0L))).over(w).as("__cn")) ++
-        sums.map { case (n, _) =>
-          sum(col(s"__s_$n")).over(w).as(s"__c_$n") }: _*)
+        sums.flatMap { case (n, _) =>
+          Seq(sum(col(s"__s_$n")).over(w).as(s"__c_$n"),
+            sum(coalesce(col(s"__k_$n"), lit(0L))).over(w).as(s"__ck_$n")) }: _*)
       .localCheckpoint(false) // consumed by both endpoint joins
     def key(c: Column): Column =
       when(c >= lit(lo), least(c, lit(hi))) // < lo → NULL key → cum 0
     val endCum = cum.select(Seq(col("__day").as("__ek"),
       col("__cn").as("__cn_e")) ++
-      sums.map { case (n, _) => col(s"__c_$n").as(s"__ce_$n") }: _*)
+      sums.flatMap { case (n, _) =>
+        Seq(col(s"__c_$n").as(s"__ce_$n"), col(s"__ck_$n").as(s"__cke_$n")) }: _*)
     val startCum = cum.select(Seq(col("__day").as("__sk"),
       col("__cn").as("__cn_s")) ++
-      sums.map { case (n, _) => col(s"__c_$n").as(s"__cs_$n") }: _*)
+      sums.flatMap { case (n, _) =>
+        Seq(col(s"__c_$n").as(s"__cs_$n"), col(s"__ck_$n").as(s"__cks_$n")) }: _*)
     val joined = intervals
       .filter(col(endCol) >= col(startCol))
       .withColumn("__ek", key(col(endCol)))
@@ -118,12 +91,14 @@ object RangeJoin {
         coalesce(col("__cn_e"), lit(0L)) - coalesce(col("__cn_s"), lit(0L)))
       .filter(col("n_points") > 0)
     val withSums = sums.foldLeft(joined) { case (df, (n, _)) =>
+      val zero = lit(0).cast(daily.schema(s"__s_$n").dataType)
       df.withColumn(n,
-        coalesce(col(s"__ce_$n"), lit(0).cast(daily.schema(s"__s_$n").dataType))
-          - coalesce(col(s"__cs_$n"), lit(0).cast(daily.schema(s"__s_$n").dataType)))
+        when(coalesce(col(s"__cke_$n"), lit(0L)) - coalesce(col(s"__cks_$n"), lit(0L)) > 0,
+          coalesce(col(s"__ce_$n"), zero) - coalesce(col(s"__cs_$n"), zero)))
     }
     withSums.drop(
       Seq("__ek", "__sk", "__cn_e", "__cn_s") ++
-        sums.flatMap { case (n, _) => Seq(s"__ce_$n", s"__cs_$n") }: _*)
+        sums.flatMap { case (n, _) =>
+          Seq(s"__ce_$n", s"__cs_$n", s"__cke_$n", s"__cks_$n") }: _*)
   }
 }

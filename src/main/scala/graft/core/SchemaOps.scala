@@ -91,8 +91,4 @@ object SchemaOps {
     }
     df.select(cols.toSeq: _*)
   }
-
-  /** Exact money arithmetic: cast to decimal so sums are order-independent
-    * (double sums vary with shuffle arrival order at scale). */
-  def dec(c: Column, scale: Int = 2): Column = c.cast(DecimalType(28, scale))
 }

@@ -26,14 +26,6 @@ object VectorFns {
     when(na > 0 && nb > 0, d / (na * nb))
   }
 
-  /** Unit-normalize a vector (null when the norm is 0) — pre-normalizing
-    * the corpus turns cosine top-k into dot-product top-k, saving the two
-    * norms per pair in brute-force scans. */
-  def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n > 0, transform(a, x => x.cast("double") / n))
-  }
-
   /** Squared euclidean distance. */
   def sqDist(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => {

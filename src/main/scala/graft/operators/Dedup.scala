@@ -63,24 +63,6 @@ object Dedup {
     verifyJaccard(pairCandidates(banded, Seq("band")), sh, jaccardThreshold)
   }
 
-  /** STAR-reduced LSH near-duplicates — the 100 TB form of the pair miner
-    * above for cluster consumption: each band bucket emits edges only to
-    * its HUB (the bucket's min id), so a B-doc bucket costs B−1 edges and
-    * B−1 verifies instead of B(B−1)/2 — linear where the pair contract is
-    * quadratic in true-dup cluster size. Connectivity is preserved for
-    * every member whose similarity TO THE HUB clears the threshold; the
-    * documented recall trade is a member that is near-dup to another
-    * member but not to the hub (mitigated by multiple bands: each of its
-    * bands offers a different hub). Consume with [[connectedComponents]]
-    * exactly like the pair form. */
-  def minHashNearDuplicatesStar(df: DataFrame, idCol: String, textCol: String,
-                                shingleK: Int = 3, numHashes: Int = 32,
-                                numBands: Int = 4,
-                                jaccardThreshold: Double = 0.8): DataFrame = {
-    val (sh, banded) = jvmBands(df, idCol, textCol, shingleK, numHashes, numBands)
-    verifyJaccard(starCandidates(banded, Seq("band")), sh, jaccardThreshold)
-  }
-
   /** Shingle sets + (id, band-key) rows for the fast JVM hash family.
     * JVM-native expressions (TextExprs) do the per-row shingle/minhash
     * work in one tight loop — the interpreted transform/concat_ws column
@@ -170,11 +152,17 @@ object Dedup {
     verifyJaccard(pairCandidates(banded, Seq("band", "bkey")), sh, jaccardThreshold)
   }
 
-  /** [[minHashNearDuplicatesStar]] with the md5 hash family — every step
-    * reproducible in plain SQL, which is what lets the star contract be
-    * ORACLE-GATED (d40): per (band, signature) bucket, edges only to the
-    * bucket's min-id hub — B−1 edges instead of B(B−1)/2 for a B-doc
-    * true-dup bucket, the linear shape for cluster consumption. */
+  /** STAR-reduced LSH near-duplicates on the md5 hash family — the
+    * linear form of [[minHashNearDuplicatesMd5]] for cluster consumption:
+    * per (band, signature) bucket, edges only to the bucket's min-id hub,
+    * so a B-doc true-dup bucket costs B−1 edges and B−1 verifies instead
+    * of B(B−1)/2. Connectivity is preserved for every member whose
+    * similarity TO THE HUB clears the threshold; the recall trade is a
+    * member that is near-dup to another member but not to the hub
+    * (mitigated by multiple bands: each of its bands offers a different
+    * hub). Consume with [[connectedComponents]] like the pair form. Every
+    * step is reproducible in plain SQL, which is what lets d40 be
+    * oracle-gated. */
   def minHashNearDuplicatesMd5Star(df: DataFrame, idCol: String,
                                    textCol: String, shingleK: Int = 3,
                                    numHashes: Int = 16, numBands: Int = 4,

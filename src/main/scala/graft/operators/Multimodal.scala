@@ -547,26 +547,6 @@ object Multimodal {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** Resize plumbing: emits a new binary whose length matches the target
-    * geometry (stub: truncate/pad), preserving the partition-local batch
-    * shape a real resampler would use. */
-  def resizeStub(assets: DataFrame, targetW: Int, targetH: Int,
-                 contentCol: String = "content"): DataFrame = {
-    val spark = assets.sparkSession
-    val cIdx = assets.schema.fieldIndex(contentCol)
-    val targetLen = targetW * targetH
-    val rdd = assets.rdd.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](cIdx)
-        // NULL content passes through as NULL (no geometry to resize)
-        val out = if (bytes == null) null
-                  else java.util.Arrays.copyOf(bytes, targetLen)
-        Row.fromSeq(row.toSeq.updated(cIdx, out))
-      }
-    }
-    spark.createDataFrame(rdd, assets.schema)
-  }
-
   /** Frame sampling for video assets: every nth "frame" (stub: fixed-size
     * byte windows) exploded to one row per sampled frame — the one-to-many
     * expansion shape of a real frame sampler. */
@@ -614,8 +594,7 @@ object Multimodal {
     b.array()
   }
 
-  /** REAL 24-bit BMP pixel decode (the r8 verdict's "make one family
-    * real"): parses the actual headers (data offset from bfOffBits, not
+  /** REAL 24-bit BMP pixel decode: parses the actual headers (data offset from bfOffBits, not
     * assumed; biHeight sign selects bottom-up vs top-down), strips the
     * 4-byte row padding, and returns row-major TOP-DOWN R,G,B triplets —
     * the exact inverse of [[encodeBmp]] and, per the MultimodalSpec
@@ -705,9 +684,9 @@ object Multimodal {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** REAL 16-bit PCM WAV writer (r9 verdict task 6 — the second
-    * self-decodable media family beside BMP): RIFF container with a
-    * 16-byte "fmt " chunk (audioFormat 1 = PCM) and a "data" chunk of
+  /** REAL 16-bit PCM WAV writer (the second self-decodable media family
+    * beside BMP): RIFF container with a 16-byte "fmt " chunk
+    * (audioFormat 1 = PCM) and a "data" chunk of
     * little-endian int16 interleaved samples — pure header + byte math,
     * no codec. `samples` is frame-major: [ch0_t0, ch1_t0, ch0_t1, ...]. */
   def encodeWavPcm16(sampleRate: Int, channels: Int,
@@ -822,9 +801,8 @@ object Multimodal {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** REAL uncompressed-AVI writer (r11 verdict task 5 — the third
-    * self-decodable media family, closing the "video is header-only"
-    * gap with pure byte math): a RIFF 'AVI ' container whose single
+  /** REAL uncompressed-AVI writer (the third self-decodable media family,
+    * closing the "video is header-only" gap with pure byte math): a RIFF 'AVI ' container whose single
     * 'vids'/'DIB ' stream carries one '00db' chunk per frame, each frame
     * the BMP pixel format ([[encodeBmp]]'s bottom-up BGR rows with 4-byte
     * padding) — the WAV-style chunk walk around the BMP pixel math the
@@ -1037,10 +1015,7 @@ object Multimodal {
   /** REAL nearest-neighbor resize over decoded row-major RGB pixels: the
     * index-map form out(i,j) = src(⌊i·h/th⌋, ⌊j·w/tw⌋) — pure integer
     * arithmetic, works for down- AND up-sampling (th > h repeats rows),
-    * which the 7×h→8×8 aHash path below exercises in both axes at once.
-    * Companion to [[resizeStub]]: the stub stays for codec formats whose
-    * pixels this container can't reach; BMP pixels are real, so their
-    * resize is too. */
+    * which the 7×h→8×8 aHash path below exercises in both axes at once. */
   def resizeNearest(w: Int, h: Int, rgb: Array[Byte], tw: Int, th: Int): Array[Byte] = {
     require(w > 0 && h > 0 && tw > 0 && th > 0 && rgb.length == w * h * 3,
       s"need ${w * h * 3} RGB bytes for ${w}x$h, got ${rgb.length}")

@@ -41,7 +41,7 @@ object TickerFeaturePipeline {
     * then validate, normalize, merge. The sector side is the S7 ticker→ETF
     * map and ETF index. Returns the merged store frame (caller writes it
     * via [[writeStore]]). */
-  def run(spark: SparkSession, gridDf: DataFrame, in: TickerFeatures.Inputs,
+  def run(gridDf: DataFrame, in: TickerFeatures.Inputs,
           tickerEtf: DataFrame, etfIndex: DataFrame,
           existing: Option[DataFrame]): DataFrame = {
     val todo = existing match {

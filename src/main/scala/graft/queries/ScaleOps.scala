@@ -7,9 +7,9 @@ import graft.core.{RangeJoin, RuntimeFilters, Tables}
 import graft.operators.Chunking
 import graft.functions.TextFns
 
-/** Scale-machinery queries added in round 3: runtime-filtered joins,
-  * binned range joins, chunking, PII masking, and the stream-dedup batch
-  * twin — every one oracle-gated (the operators are deterministic
+/** Scale-machinery queries: runtime-filtered joins, the
+  * point-in-interval aggregate, chunking, PII masking, and the stream-dedup
+  * batch twin — every one oracle-gated (the operators are deterministic
   * relational plans; only their EXECUTION strategy is scale-specific).
   */
 object ScaleOps {
@@ -551,9 +551,9 @@ object ScaleOps {
         WHERE o_orderpriority = '1-URGENT')
       GROUP BY l_returnflag ORDER BY l_returnflag"""))
 
-  /** Point-in-interval range join, binned to a hash equi-join (DuckDB
-    * answers the same BETWEEN join with its IEJoin): shipments falling in
-    * 14-day windows anchored at a deterministic order subsample. */
+  /** Point-in-interval aggregate (DuckDB answers it with a BETWEEN join
+    * through its IEJoin): shipments falling in 14-day windows anchored at
+    * a deterministic order subsample. */
   val d17 = QueryDef("d17_range_join",
     (s, dir) => {
       val iv = Tables.orders(s, dir)
@@ -563,13 +563,9 @@ object ScaleOps {
           date_add(col("o_orderdate").cast(DateType), 14).as("win_end"))
       val pts = Tables.lineitem(s, dir)
         .select(col("l_shipdate").cast(DateType).as("ship"), col("l_quantity"))
-      // prefix-sum form (round 8): the binned pair join is linear in
-      // MATCHED PAIRS, which over a fixed date domain grow quadratically
-      // in corpus size — the sf10 probe measured 61× for 10× data. The
-      // additive per-interval aggregate needs no pairs at all:
-      // cum(end) − cum(start−1) over a daily rollup, O(points+intervals).
-      // Decimal cum-sums keep the difference bit-identical to the direct
-      // decimal sum, so the oracle is unchanged.
+      // prefix-sum form: no matched pairs, cum(end) − cum(start−1) over a
+      // daily rollup, O(points+intervals). Decimal cum-sums keep the
+      // difference bit-identical to the direct decimal sum.
       RangeJoin.intervalPrefixAgg(pts, iv, "ship", "win_start", "win_end",
           Seq("sum_qty" -> QueryDef.dec(col("l_quantity"))))
         .select(col("interval_id"), col("n_points").as("n_shipments"),

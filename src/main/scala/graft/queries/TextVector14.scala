@@ -17,8 +17,8 @@ import graft.functions.TextFns
   *  - d79: sparse TF-IDF cosine retrieval doc→doc through the inverted
   *    index — the sparse-vector complement to d71's term→doc BM25 and
   *    e2's dense cosine.
-  *  - s10: the Count-Min sketch's streaming face over the event feed
-  *    (EventStreams.userCmsSketch), judged in batch mode like s1–s9.
+  *  - s10: the Count-Min sketch over the event feed's user ids, judged in
+  *    batch mode; the same `CountMin.sketch` runs unchanged on a stream.
   */
 object TextVector14 {
 
@@ -27,7 +27,7 @@ object TextVector14 {
   /** Zipf rank-frequency fit: rank the vocabulary by count, regress
     * ln(freq) on ln(rank), report slope (alpha = −slope), intercept, and
     * r². The rank goes through the distributed two-pass
-    * [[graft.core.Indexing.globalRowIds]] (r12, verdict task 2): the
+    * [[graft.core.Indexing.globalRowIds]]: the
     * vocabulary is an AGGREGATE but it GROWS with the corpus (Heaps' law
     * still puts a web-scale vocab at 10⁸–10⁹ noise tokens), so a naked
     * `row_number().over(Window.orderBy(...))` would plan a
@@ -222,14 +222,15 @@ object TextVector14 {
         ROUND(cos, 4) AS cos_r
       FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""))
 
-  /** Batch twin of the streaming Count-Min sketch
-    * ([[graft.streaming.EventStreams.userCmsSketch]] — same transform,
-    * two execution modes, the s1–s9 guarantee): the event feed's user
-    * frequencies sketched into 4×256 counters, the top-10 users by exact
-    * count estimated back off the sketch with the one-sided error as a
-    * judged column (d70's surface over the event stream — 150+ users
-    * into 256 buckets/row makes collisions, and the judged estimates,
-    * real). */
+  /** Count-Min sketch over the event feed (the sketch build is a
+    * groupBy on the bounded (seed, bucket) domain, so it also runs as a
+    * streaming aggregation, and counter addition makes micro-batching
+    * commute with it — TextVector14Spec pins streamed ≡ batch): the
+    * event feed's user frequencies sketched into 4×256 counters, the
+    * top-10 users by exact count estimated back off the sketch with the
+    * one-sided error as a judged column (d70's surface over the event
+    * stream — 150+ users into 256 buckets/row makes collisions, and the
+    * judged estimates, real). */
   val s10 = QueryDef("s10_event_cms",
     (s, dir) => {
       val toks = Tables.events(s, dir)

@@ -18,135 +18,6 @@ object Sinks {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
 
-  /** K6 format-matrix batch write: parquet+zstd is the default store, ORC the
-    * columnar alternative, CSV/JSON the interchange escapes. One code
-    * path, format picked by name — at scale the columnar pair keeps
-    * predicate pushdown + column pruning; the text pair exists for
-    * hand-off, never for re-reading at volume (no pushdown, full parse).
-    * CSV writes a header so the roundtrip keeps column names; timestamps
-    * are written as ISO micros in UTC on every format. */
-  def writeFormat(df: DataFrame, path: String, format: String): Unit = {
-    val w = df.write.mode("overwrite")
-    format match {
-      case "parquet" => w.option("compression", "zstd").parquet(path)
-      case "orc"     => w.option("compression", "zstd").orc(path)
-      case "csv"     => w.option("header", "true")
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").csv(path)
-      case "json"    => w
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").json(path)
-      case other     => throw new IllegalArgumentException(
-        s"unsupported sink format: $other (parquet|orc|csv|json)")
-    }
-  }
-
-  /** Read back what `writeFormat` wrote. CSV/JSON lose type information in
-    * transit — the caller supplies the schema to restore it (schema-less
-    * inference is non-deterministic at scale: it samples). */
-  def readFormat(spark: org.apache.spark.sql.SparkSession, path: String,
-                 format: String,
-                 schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val r = spark.read
-    format match {
-      case "parquet" => r.parquet(path)
-      case "orc"     => r.orc(path)
-      case "csv"     =>
-        val base = r.option("header", "true")
-          .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-        schema.map(base.schema).getOrElse(base).csv(path)
-      case "json"    =>
-        val base = r.option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-        schema.map(base.schema).getOrElse(base).json(path)
-      case other     => throw new IllegalArgumentException(
-        s"unsupported source format: $other (parquet|orc|csv|json)")
-    }
-  }
-
-  /** Dynamic partition overwrite: replace ONLY the partitions present in
-    * `df`, leaving every other partition's files untouched — the physical
-    * form of U6 replace-partition (q37 is the logical form). With static
-    * overwrite (the default) this write would TRUNCATE the whole store;
-    * at 100 TB that difference is the job. Session conf is set per-write
-    * and restored, so the sink can't silently change other writers'
-    * semantics. */
-  def overwritePartitionsDynamic(df: DataFrame, path: String,
-                                 partitionBy: Seq[String]): Unit = {
-    require(partitionBy.nonEmpty, "dynamic overwrite needs partition columns")
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy(partitionBy: _*).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Small-files compaction for a partitioned parquet store — the standing
-    * maintenance job every streaming/incremental sink accumulates toward:
-    * each micro-batch appends a file per partition, and a year of
-    * 5-minute batches is 100k tiny files whose open/footer cost dwarfs the
-    * data. Strategy: count files per partition directory (driver-side
-    * listing, O(partitions)), and rewrite ONLY partitions exceeding
-    * `maxFilesPerPartition` — each coalesced to `targetFiles` — through
-    * dynamic partition overwrite, so healthy partitions keep their files
-    * byte-for-byte. Returns the rewritten partition values.
-    *
-    * @param partitionCol single partition column (the common case; the
-    *   pattern extends to nested partitioning by listing deeper) */
-  def compactPartitions(spark: org.apache.spark.sql.SparkSession, path: String,
-                        partitionCol: String, maxFilesPerPartition: Int = 8,
-                        targetFiles: Int = 1): Seq[String] = {
-    // Hadoop FileSystem API, not java.io.File: the store is an object-store
-    // or HDFS path at scale, and listStatus can't return null the way
-    // File.listFiles does on races/permissions (it throws instead).
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(root) && fs.getFileStatus(root).isDirectory,
-      s"no store at $path")
-    def dataFiles(dir: org.apache.hadoop.fs.Path): Int =
-      if (!fs.exists(dir)) 0
-      else fs.listStatus(dir).count { st =>
-        val n = st.getPath.getName
-        st.isFile && n.endsWith(".parquet") && !n.startsWith(".")
-      }
-    val fragmented = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partitionCol="))
-      .filter(st => dataFiles(st.getPath) > maxFilesPerPartition)
-      .map(_.getPath.getName.stripPrefix(s"$partitionCol="))
-      .toSeq
-    fragmented.foreach { escaped =>
-      // directory names carry Hive path-escaping (":" -> "%3A", null ->
-      // the default-partition sentinel) — unescape before comparing to
-      // COLUMN values or the filter silently matches nothing
-      val pred =
-        if (escaped == "__HIVE_DEFAULT_PARTITION__") col(partitionCol).isNull
-        else col(partitionCol) ===
-          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(escaped)
-      // read THROUGH the store root (not the partition dir) so the
-      // partition column survives; filter prunes to the one partition.
-      // localCheckpoint materializes the partition BEFORE the overwrite —
-      // without it Spark rejects writing a path that the plan still reads
-      // (and the write would otherwise race its own input)
-      val part = spark.read.parquet(path)
-        .filter(pred)
-        .coalesce(targetFiles)
-        .localCheckpoint()
-      overwritePartitionsDynamic(part, path, Seq(partitionCol))
-      // a value/dir mismatch would make the overwrite a silent no-op —
-      // fail loudly instead of reporting a partition as compacted
-      val after = dataFiles(
-        new org.apache.hadoop.fs.Path(root, s"$partitionCol=$escaped"))
-      require(after <= targetFiles,
-        s"compaction of $partitionCol=$escaped left $after files " +
-          s"(expected <= $targetFiles) — partition filter matched nothing?")
-    }
-    fragmented
-  }
-
   /** K2: write-if-changed. Spark parquet bytes aren't stable run-to-run, so
     * change detection hashes content (order-independent) instead of
     * comparing file bytes; returns true when the store changed. */

@@ -6,12 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Source layer (SURVEY §2.1). The reference's sources are HTTP fetchers;
-  * the judged environment has zero egress, so the engine models a source as
-  * "something that yields a DataFrame with a declared schema", with the
-  * HTTP error taxonomy kept as a sealed trait for fidelity (S1) and
-  * parquet/fixture implementations doing the actual reading. The semantic
-  * transforms the fetchers applied (coverage check S2, top-k-most-recent
-  * S5, window slice S3) are plan helpers here.
+  * the judged environment has zero egress, so tables are read as parquet
+  * (`core.Tables`) and the HTTP error taxonomy stays as a sealed trait
+  * (S1) that the coverage assertion throws. The semantic transforms the
+  * fetchers applied (coverage check S2, top-k-most-recent S5, window
+  * slice S3) are plan helpers here.
   */
 object Sources {
 
@@ -24,21 +23,6 @@ object Sources {
   final case class NotFound(msg: String) extends SourceError           // 404 -> empty
   final case class RateLimited(retryAfterSec: Option[Int]) extends SourceError // 429
   final case class ServerError(code: Int, msg: String) extends SourceError     // 5xx
-
-  /** A source of one logical table. */
-  trait Source {
-    def name: String
-    def schema: StructType
-    def load(spark: SparkSession): DataFrame
-  }
-
-  /** Parquet-backed source (S11) with schema projection: reading declares
-    * the expected columns so pruning reaches the scan. */
-  final case class ParquetSource(name: String, path: String,
-                                 schema: StructType) extends Source {
-    def load(spark: SparkSession): DataFrame =
-      spark.read.parquet(path).select(schema.fieldNames.map(col): _*)
-  }
 
   /** S2: per-key coverage (`prices.py:8-46`): each key's actual
     * [min, max] date, and whether it spans the requested range within

@@ -54,7 +54,7 @@ class PipelineSpec extends SparkSpec {
     val grid = TickerFeaturePipeline.grid(spark, tickers, "2023-03-31", 1)
 
     // first run: empty store
-    val first = TickerFeaturePipeline.run(spark, grid, in, spyMap, spyIndex,
+    val first = TickerFeaturePipeline.run(grid, in, spyMap, spyIndex,
       existing = None)
     val rows = first.collect()
     assert(rows.length == 2) // both tickers pass the 260-day gate
@@ -77,7 +77,7 @@ class PipelineSpec extends SparkSpec {
     assert(pruned.count() == 1)
 
     // second run against the store: B2 anti-join leaves nothing to compute
-    val second = TickerFeaturePipeline.run(spark, grid, in, spyMap, spyIndex,
+    val second = TickerFeaturePipeline.run(grid, in, spyMap, spyIndex,
       existing = Some(readBack))
     assert(second.count() == 2) // merged store is unchanged
     val hash2 = TickerFeaturePipeline.contentHash(

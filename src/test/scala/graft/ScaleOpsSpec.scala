@@ -5,8 +5,8 @@ import graft.core.{RangeJoin, RuntimeFilters}
 import graft.operators.Chunking
 import graft.streaming.EventStreams
 
-/** Round-3 scale operators: bloom-prefiltered joins, binned range joins,
-  * chunking, and the stream/batch dedup agreement. */
+/** Scale operators: bloom-prefiltered joins, the point-in-interval
+  * aggregate, chunking, and the stream/batch dedup agreement. */
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -78,37 +78,16 @@ class ScaleOpsSpec extends SparkSpec {
       .as[Long].collect().toSeq == Seq(1L))
   }
 
-  test("binned range join equals the naive BETWEEN join at any bin size") {
-    val pts = Seq(("2024-01-01", 1), ("2024-01-15", 2), ("2024-02-10", 3),
-      ("2024-03-01", 4),
-      ("2024-02-19", 5), ("2024-03-06", 6),  // a day outside f, either side
-      ("2024-02-20", 7), ("2024-03-05", 8),  // f's own ends (inclusive)
-      (null, 9))                             // null point: no matches
-      .toDF("d", "pid")
-      .select(col("d").cast("date").as("d"), col("pid"))
-    val iv = Seq(("a", "2024-01-01", "2024-01-20"),
-      ("b", "2024-01-10", "2024-02-15"),
-      ("c", "2024-05-01", "2024-05-02"),    // matches nothing
-      ("d", "2024-02-01", "2024-01-01"),    // end < start: no matches
-      ("e", null, "2024-03-05"),            // null bound: no matches
-      ("f", "2024-02-20", "2024-03-05"))    // ends inclusive, neighbors out
-      .toDF("iid", "s", "e")
-      .select(col("iid"), col("s").cast("date").as("s"),
-        col("e").cast("date").as("e"))
-    val naive = pts.crossJoin(iv).filter(col("d").between(col("s"), col("e")))
-      .select("pid", "iid").orderBy("pid", "iid").collect().toSeq
-    assert(naive.map(r => (r.getInt(0), r.getString(1))) == Seq(
-      1 -> "a", 2 -> "a", 2 -> "b", 3 -> "b", 4 -> "f", 7 -> "f", 8 -> "f"))
-    for (bin <- Seq(1, 7, 16, 365)) {
-      val got = RangeJoin.pointInInterval(pts, iv, "d", "s", "e", bin)
-        .select("pid", "iid").orderBy("pid", "iid").collect().toSeq
-      assert(got == naive, s"binDays=$bin")
-    }
-  }
-
   test("intervalPrefixAgg equals the naive BETWEEN aggregate (pairs never materialized)") {
-    val pts = Seq(("2024-01-01", 1.5), ("2024-01-15", 2.25), ("2024-01-15", 4.0),
-      ("2024-02-10", 3.0), ("2024-03-01", 4.5)).toDF("d", "v")
+    val pts = Seq[(String, Option[Double])](
+      ("2024-01-01", Some(1.5)), ("2024-01-15", Some(2.25)),
+      ("2024-01-15", Some(4.0)), ("2024-02-10", Some(3.0)),
+      ("2024-03-01", Some(4.5)),
+      ("2024-02-19", Some(1.0)), ("2024-03-06", Some(2.0)), // a day outside g
+      ("2024-02-20", Some(7.0)), ("2024-03-05", Some(8.0)), // g's own ends
+      (null, Some(9.0)),                                     // null point
+      ("2024-04-09", Some(5.0)), ("2024-04-10", None))       // NULL value
+      .toDF("d", "v")
       .select(col("d").cast("date").as("d"),
         col("v").cast("decimal(18,2)").as("v"))
     val iv = Seq(("a", "2024-01-01", "2024-01-20"),
@@ -116,35 +95,29 @@ class ScaleOpsSpec extends SparkSpec {
       ("c", "2024-05-01", "2024-05-02"),    // matches nothing: dropped
       ("d", "2024-02-01", "2024-01-01"),    // end < start: dropped
       ("e", "2023-01-01", "2024-01-01"),    // clamps below the domain
-      ("f", "2024-02-20", "2026-01-01"))    // clamps above the domain
+      ("f", "2024-02-20", "2026-01-01"),    // clamps above the domain
+      ("g", "2024-02-20", "2024-03-05"),    // ends inclusive, neighbors out
+      ("h", null, "2024-03-05"),            // null bound: dropped
+      ("i", "2024-04-10", "2024-04-10"),    // only a NULL value: sum is NULL
+      ("j", "2024-04-09", "2024-04-10"))    // NULL value beside a real one
       .toDF("iid", "s", "e")
       .select(col("iid"), col("s").cast("date").as("s"),
         col("e").cast("date").as("e"))
-    val naive = pts.crossJoin(iv).filter(col("d").between(col("s"), col("e")))
-      .groupBy("iid").agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
-      .orderBy("iid")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        r.getDecimal(2).doubleValue)).toSeq
-    val got = graft.core.RangeJoin.intervalPrefixAgg(pts, iv, "d", "s", "e",
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("iid").collect().map(r => (r.getString(0), r.getLong(1),
+        Option(r.getDecimal(2)).map(_.doubleValue))).toSeq
+    val naive = rows(pts.crossJoin(iv).filter(col("d").between(col("s"), col("e")))
+      .groupBy("iid").agg(count(lit(1)).as("n"), sum(col("v")).as("sv")))
+    assert(naive == Seq(("a", 3L, Some(7.75)), ("b", 3L, Some(9.25)),
+      ("e", 1L, Some(1.5)), ("f", 6L, Some(26.5)), ("g", 3L, Some(19.5)),
+      ("i", 1L, None), ("j", 2L, Some(5.0))))
+    val got = rows(RangeJoin.intervalPrefixAgg(pts, iv, "d", "s", "e",
         Seq("sv" -> col("v")))
-      .select("iid", "n_points", "sv").orderBy("iid")
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        r.getDecimal(2).doubleValue)).toSeq
+      .select("iid", "n_points", "sv"))
     assert(got == naive)
     // empty points: full-schema empty result, no crash
-    assert(graft.core.RangeJoin.intervalPrefixAgg(
+    assert(RangeJoin.intervalPrefixAgg(
       pts.limit(0), iv, "d", "s", "e", Seq("sv" -> col("v"))).count() == 0)
-  }
-
-  test("range join plans an equi-join on the bin, not a nested loop") {
-    val pts = (1 to 100).map(i => (java.sql.Date.valueOf("2024-01-01"), i))
-      .toDF("d", "pid")
-    val iv = Seq(("a", java.sql.Date.valueOf("2024-01-01"),
-      java.sql.Date.valueOf("2024-01-20"))).toDF("iid", "s", "e")
-    val plan = RangeJoin.pointInInterval(pts, iv, "d", "s", "e")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin") &&
-      !plan.contains("CartesianProduct"), plan)
   }
 
   test("chunkByTokens golden: window 3, stride 2 over 7 tokens") {

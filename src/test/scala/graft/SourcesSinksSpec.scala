@@ -195,93 +195,6 @@ class SourcesSinksSpec extends SparkSpec {
     assert(lines.length == 1 && lines(0).startsWith("T | 2024-01-01"))
   }
 
-  test("format matrix: parquet/orc/csv/json roundtrip values, types via supplied schema") {
-    val df = Seq(
-      (1L, "alpha,with comma", 2.5, java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456")),
-      (2L, "beta \"quoted\"", -0.75, java.sql.Timestamp.valueOf("2024-06-30 23:59:59.999999")))
-      .toDF("id", "name", "score", "ts")
-    val base = Files.createTempDirectory("graft-fmt").toString
-    for (fmt <- Seq("parquet", "orc", "csv", "json")) {
-      Sinks.writeFormat(df, s"$base/$fmt", fmt)
-      val schema = if (fmt == "csv" || fmt == "json") Some(df.schema) else None
-      val back = Sinks.readFormat(spark, s"$base/$fmt", fmt, schema)
-      // file sources surface every column nullable — compare name/type only
-      assert(back.schema.map(f => (f.name, f.dataType)) ==
-        df.schema.map(f => (f.name, f.dataType)), s"$fmt schema drifted")
-      val got = back.orderBy("id")
-        .as[(Long, String, Double, java.sql.Timestamp)].collect().toSeq
-      val want = df.orderBy("id")
-        .as[(Long, String, Double, java.sql.Timestamp)].collect().toSeq
-      assert(got == want, s"$fmt roundtrip changed values")
-    }
-    intercept[IllegalArgumentException](Sinks.writeFormat(df, s"$base/x", "avro"))
-  }
-
-  test("dynamic partition overwrite replaces only the touched partition") {
-    val base = Files.createTempDirectory("graft-dynpart").toString
-    val full = Seq((1996, "a", 1.0), (1996, "b", 2.0), (1997, "c", 3.0))
-      .toDF("yr", "k", "v")
-    Sinks.overwritePartitionsDynamic(full, base, Seq("yr"))
-    // rewrite ONLY 1997 with new content
-    val patch = Seq((1997, "c2", 30.0)).toDF("yr", "k", "v")
-    Sinks.overwritePartitionsDynamic(patch, base, Seq("yr"))
-    val back = spark.read.parquet(base)
-      .select("yr", "k", "v").as[(Int, String, Double)].collect().toSet
-    assert(back == Set((1996, "a", 1.0), (1996, "b", 2.0), (1997, "c2", 30.0)),
-      "1996 partition must survive the 1997 overwrite untouched")
-    // static overwrite of the same patch would have dropped 1996 — prove
-    // the conf was restored afterwards (no leak into other writers)
-    assert(!spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      .contains("dynamic"))
-  }
-
-  test("compaction rewrites only fragmented partitions, data intact, healthy files untouched") {
-    val base = Files.createTempDirectory("graft-compact").toString
-    // healthy partition: one file; fragmented partition: 12 appended files
-    Seq((1996, "a", 1.0)).toDF("yr", "k", "v")
-      .coalesce(1).write.mode("overwrite").partitionBy("yr").parquet(base)
-    for (i <- 0 until 12)
-      Seq((1997, s"f$i", i.toDouble)).toDF("yr", "k", "v")
-        .coalesce(1).write.mode("append").partitionBy("yr").parquet(base)
-    def files(p: String): Seq[String] =
-      new java.io.File(s"$base/yr=$p").listFiles()
-        .map(_.getName).filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSeq
-    val healthyBefore = files("1996")
-    assert(files("1997").size == 12)
-    val before = spark.read.parquet(base)
-      .select("yr", "k", "v").as[(Int, String, Double)].collect().toSet
-
-    val rewritten = Sinks.compactPartitions(spark, base, "yr",
-      maxFilesPerPartition = 8, targetFiles = 1)
-    assert(rewritten == Seq("1997"))
-    assert(files("1997").size == 1, "fragmented partition must coalesce")
-    assert(files("1996") == healthyBefore, "healthy partition files must be untouched")
-    val after = spark.read.parquet(base)
-      .select("yr", "k", "v").as[(Int, String, Double)].collect().toSet
-    assert(after == before, "compaction must not change the data")
-  }
-
-  test("compaction handles Hive-escaped string partition values") {
-    val base = Files.createTempDirectory("graft-compact-esc").toString
-    // ":" is path-escaped to %3A in the partition directory name — the
-    // compactor must unescape before filtering or it rewrites nothing
-    for (i <- 0 until 10)
-      Seq(("12:30", s"f$i", i.toDouble)).toDF("slot", "k", "v")
-        .coalesce(1).write.mode("append").partitionBy("slot").parquet(base)
-    val dir = new java.io.File(base).listFiles().filter(_.isDirectory).head
-    assert(dir.getName.contains("%3A"), s"expected escaped dir, got ${dir.getName}")
-    val before = spark.read.parquet(base)
-      .select("slot", "k", "v").as[(String, String, Double)].collect().toSet
-    val rewritten = Sinks.compactPartitions(spark, base, "slot",
-      maxFilesPerPartition = 4, targetFiles = 1)
-    assert(rewritten.size == 1)
-    assert(dir.listFiles().count(f =>
-      f.getName.endsWith(".parquet") && !f.getName.startsWith(".")) == 1)
-    val after = spark.read.parquet(base)
-      .select("slot", "k", "v").as[(String, String, Double)].collect().toSet
-    assert(after == before)
-  }
-
   test("status JSON sink writes atomic parseable stats") {
     val validated = Seq(("T", "ok"), ("U", "flagged"), ("V", "ok"))
       .toDF("ticker", "validation_status")

@@ -13,11 +13,10 @@ final case class NEv(user_id: Option[Long], ts: java.sql.Timestamp,
 final case class SEv(event_id: Long, user_id: Option[Long],
                      ts: java.sql.Timestamp)
 
-/** Degenerate-input sweep for the streaming face (r11 verdict task 7 — the
-  * m2/ML sweep pattern's next surface): zero-row micro-batches, all-late
-  * data beyond the watermark, NULL keys on the untyped stateful surfaces,
-  * and a state-store restart mid-stream (including on the RocksDB
-  * provider). The typed mapGroupsWithState/flatMapGroupsWithState key is
+/** Degenerate-input sweep for the streaming face: zero-row micro-batches,
+  * all-late data beyond the watermark, NULL keys on the untyped stateful
+  * surfaces, and a state-store restart mid-stream (including on the
+  * RocksDB provider). The typed flatMapGroupsWithState key is
   * `user_id: Long` — non-nullable BY CONSTRUCTION (the product encoder
   * rejects a null primitive at ingest), so the NULL-key cases target the
   * untyped surfaces where a null CAN arrive: streaming dedup, windowed
@@ -86,31 +85,6 @@ class StreamingDegenerateSpec extends SparkSpec {
       q.stop()
       spark.conf.set(noDataKey, noDataPrev)
     }
-  }
-
-  test("mapGroupsWithState: zero-row micro-batches between data batches " +
-    "leave per-key state exactly where it was") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[EventIn]
-    val q = EventStreams.userProfiles(stream.toDS())
-      .writeStream.format("memory").queryName("degen_profiles")
-      .outputMode(OutputMode.Update).start()
-    try {
-      stream.addData(EventIn(1L, ts("2024-01-01 05:00:00"), "purchase", 10.0))
-      q.processAllAvailable()
-      stream.addData(Seq.empty[EventIn])
-      q.processAllAvailable()
-      stream.addData(Seq.empty[EventIn])
-      q.processAllAvailable()
-      stream.addData(EventIn(1L, ts("2024-01-01 05:10:00"), "click", 2.0))
-      q.processAllAvailable()
-      val last = spark.table("degen_profiles")
-        .orderBy(col("n_events").desc).as[EventStreams.UserProfile].head()
-      assert(last.n_events == 2L && last.n_purchases == 1L &&
-        math.abs(last.total_value - 12.0) < 1e-9,
-        s"state must survive empty batches unchanged: $last")
-    } finally q.stop()
   }
 
   test("NULL keys on the untyped surfaces: dedup keeps a null-keyed row as " +

@@ -41,20 +41,6 @@ class StreamingMacroSpec extends SparkSpec {
     assert(streamed.toSeq == batch.toSeq)
   }
 
-  test("session windows group by 30-minute gaps") {
-    val events = Seq(
-      Ev(ts("2024-01-01 05:00:00"), 1, "a", 1.0),
-      Ev(ts("2024-01-01 05:10:00"), 1, "a", 1.0),
-      Ev(ts("2024-01-01 06:30:00"), 1, "a", 1.0), // > 30 min gap: new session
-      Ev(ts("2024-01-01 05:00:00"), 2, "a", 1.0))
-    val out = EventStreams.sessionWindows(events.toDF(), withWatermark = false)
-      .orderBy("user_id", "session_start").collect()
-    assert(out.length == 3)
-    assert(out(0).getLong(3) == 2) // user 1 first session: 2 events
-    assert(out(1).getLong(3) == 1)
-    assert(out(2).getLong(3) == 1)
-  }
-
   private def macroRow(country: String, dt: String, gdp: Double, gdpPc: Double,
                        infl: Double, unemp: Double, cons: Double, exp: Double) =
     (country, d(dt), gdp, gdpPc, infl, unemp, cons, exp)
@@ -106,24 +92,6 @@ class StreamingMacroSpec extends SparkSpec {
     assert(MacroPipeline.features(grid, raw, todayYear = 2026).count() == 0)
     val kept = MacroPipeline.features(grid, raw, todayYear = 2026, keepInvalid = true)
     assert(kept.filter(col("__invalid")).count() == 1)
-  }
-
-  test("session_window sessionizer agrees with the cumulative-gap form on real events") {
-    val events = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
-    // session_window path (streaming-native)
-    val native = EventStreams.sessionWindows(events, withWatermark = false)
-      .groupBy("user_id").count().orderBy("user_id")
-      .as[(Long, Long)].collect().toSeq
-    // manual cumulative-gap path (the s2 batch query logic)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("ts", "event_id")
-    val manual = events
-      .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("new_s", when(col("prev_us").isNull ||
-        unix_micros(col("ts")) - col("prev_us") > 1800000000L, 1).otherwise(0))
-      .groupBy("user_id").agg(sum("new_s").cast("long").as("n"))
-      .orderBy("user_id").as[(Long, Long)].collect().toSeq
-    assert(native == manual)
   }
 
   test("date normalization: clean casts pass, messy strings salvage via regex") {

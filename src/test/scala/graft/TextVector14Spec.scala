@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.operators.CountMin
 import graft.queries.TextVector14
-import graft.streaming.EventStreams
 
 /** Construction pins for the Zipf / span-corruption / sparse-retrieval /
   * streaming-CMS batch. */
@@ -88,11 +88,13 @@ class TextVector14Spec extends SparkSpec {
   test("s10: the CMS streamed over micro-batches equals the batch sketch " +
     "(counter addition IS the merge)") {
     implicit val sqlCtx = spark.sqlContext
+    def userKeys(events: org.apache.spark.sql.DataFrame) =
+      events.select(col("user_id").cast("string").as("user_key"))
     val ev = (1 to 200).map(i =>
       Ev(java.sql.Timestamp.valueOf("2024-01-01 05:00:00"), (i % 17).toLong,
         "click", 1.0))
     val stream = MemoryStream[Ev]
-    val q = EventStreams.userCmsSketch(stream.toDF(), depth = 4, width = 8)
+    val q = CountMin.sketch(userKeys(stream.toDF()), "user_key", 4, 8)
       .writeStream.format("memory").queryName("cms_test")
       .outputMode(OutputMode.Complete).start()
     try {
@@ -103,7 +105,7 @@ class TextVector14Spec extends SparkSpec {
     } finally q.stop()
     val streamed = spark.table("cms_test").orderBy("seed", "bucket")
       .collect().map(_.toSeq)
-    val batch = EventStreams.userCmsSketch(ev.toDF(), depth = 4, width = 8)
+    val batch = CountMin.sketch(userKeys(ev.toDF()), "user_key", 4, 8)
       .orderBy("seed", "bucket").collect().map(_.toSeq)
     assert(streamed.toSeq == batch.toSeq,
       "two-delivery streamed counters must equal the one-shot batch sketch")

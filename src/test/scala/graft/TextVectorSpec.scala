@@ -62,19 +62,6 @@ class TextVectorSpec extends SparkSpec {
     assert(kept.toSeq == Seq(2L, 9L))
   }
 
-  test("l2Normalize: unit norm, cosine equals dot product on normalized vectors") {
-    val df = Seq((Array(3.0f, 4.0f), Array(1.0f, 0.0f), Array(0.0f, 0.0f)))
-      .toDF("a", "b", "z")
-    val r = df.select(
-      VectorFns.l2Norm(VectorFns.l2Normalize(col("a"))).as("unit"),
-      VectorFns.dot(VectorFns.l2Normalize(col("a")), VectorFns.l2Normalize(col("b"))).as("dotn"),
-      VectorFns.cosine(col("a"), col("b")).as("cos"),
-      VectorFns.l2Normalize(col("z")).as("zeron")).collect()(0)
-    assert(r.getDouble(0) ~= (1.0, 1e-12))
-    assert(r.getDouble(1) ~= (r.getDouble(2), 1e-12))
-    assert(r.isNullAt(3)) // zero vector -> null
-  }
-
   test("cosine similarity: parallel vectors 1.0, orthogonal 0.0") {
     val df = Seq((Array(1.0f, 0f), Array(2.0f, 0f), Array(0f, 3.0f)))
       .toDF("a", "b", "c")
@@ -540,7 +527,7 @@ class TextVectorSpec extends SparkSpec {
     val docs = (cluster ++ distinct).toDF("doc_id", "text")
     val pairs = Dedup.minHashNearDuplicates(docs, "doc_id", "text",
       jaccardThreshold = 0.7).collect()
-    val star = Dedup.minHashNearDuplicatesStar(docs, "doc_id", "text",
+    val star = Dedup.minHashNearDuplicatesMd5Star(docs, "doc_id", "text",
       jaccardThreshold = 0.7).collect()
     // pair contract is quadratic in the cluster (40*39/2 = 780 pairs);
     // star is linear (39 edges per shared bucket, deduped across bands)
@@ -554,10 +541,6 @@ class TextVectorSpec extends SparkSpec {
     assert(pairs.flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet == starIds)
     // hubs are bucket minima: every star edge points away from the min id
     assert(star.forall(r => r.getLong(0) < r.getLong(1)))
-    // md5-family star agrees with the JVM-family star on connectivity
-    val md5Star = Dedup.minHashNearDuplicatesMd5Star(docs, "doc_id", "text",
-      jaccardThreshold = 0.7).collect()
-    assert(md5Star.flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet == starIds)
   }
 
   test("planeCoef inlines exactly the murmur coefficient the column " +
