@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.features.TickerFeatures
+import graft.operators.Validation
 import graft.pipeline.TickerValidation
 import QueryDef.{cagrSql, dividendBlockCtes, moneySum, priceBlockCtes,
   priceOutputsSql, ratiosOutputsSql, statementBlockCtes}
@@ -13,10 +14,12 @@ import QueryDef.{cagrSql, dividendBlockCtes, moneySum, priceBlockCtes,
   * (`TickerFeatures.dynamicFeaturesSharedIndex`: the one-shuffle cell layer
   * over price, statement and dividend rows, the sector-ETF side, has_ flags)
   * followed by the full V1-V5 validation
-  * (`TickerValidation.validate`: nullification, range checks, relative-jump
-  * checks, consistency, status + ";"-joined violations) — oracle-gated: the
-  * DuckDB twin recomputes every block AND the validation tag strings
-  * byte-for-byte. Reference: `ticker_row_builder.py:26-97` +
+  * (`TickerValidation.validate` through the one engine,
+  * `operators.Validation.validate`: nullification, range checks,
+  * relative-jump checks, consistency, status + ";"-joined violations) —
+  * oracle-gated: the DuckDB twin recomputes every block, and splices the
+  * same rules' SQL tags, so the violation strings compare byte-for-byte.
+  * Reference: `ticker_row_builder.py:26-97` +
   * `validate_dynamic_row.py:145-156`.
   *
   * Input design (all series derive from lineitem per (suppkey, shipdate),
@@ -25,18 +28,16 @@ import QueryDef.{cagrSql, dividendBlockCtes, moneySum, priceBlockCtes,
   *   - Any feature that can go OUT of a V2 range — and therefore gets its
   *     raw double printed into `violations` via CAST AS STRING — is built
   *     from exact IEEE arithmetic (+,-,*,/ and picks) on DECIMAL-summed
-  *     inputs, with magnitude inside [1e-3, 1e7): in that envelope Spark's
-  *     Java `Double.toString` and DuckDB's `::VARCHAR` produce the SAME
-  *     shortest-repr string (probed on 400k values, 0 mismatches); outside
-  *     it Java switches to E-notation and DuckDB does not.
+  *     inputs, with magnitude inside the shortest-repr envelope [1e-3, 1e7)
+  *     of [[graft.operators.Validation]].
   *   - Order-sensitive aggregates (volatility's stddev, the SMA means, the
   *     yield median) and libm pow (CAGRs) stay IN-bounds by construction,
   *     so they are never printed raw — they reach the judged surface only
   *     through round(6).
-  *   - Values reaching a V3 jump tag go through %.4f, so their divisors
-  *     keep b's cent-precision within 4 decimals (b/100, b/50, b/500):
-  *     a 5th-decimal-terminating value would be an exact round-half tie
-  *     where Java (HALF_UP) and C printf (half-even) disagree.
+  *   - Values reaching a V3 jump tag are rounded to 4 decimals, so their
+  *     divisors keep b's cent-precision within 4 decimals (b/100, b/50,
+  *     b/500): a 5th-decimal-terminating value could be a decimal tie the
+  *     engines round apart.
   *
   * Which tags actually fire: pe_ratio (b/100 vs [0,300)) and pfcf_ratio
   * (b/50+1 vs [0,500)) on roughly half the cells, net_debt_to_ebitda > 20
@@ -87,9 +88,8 @@ object DynamicRow {
       .withColumn("ticker", col("sk").cast(StringType))
       .withColumn("d", datediff(col("date"), to_date(lit("1992-01-01"))).cast(DoubleType))
       // feeds six input frames + the grid: one aggregation pays for all.
-      // (eager localCheckpoint, not lazy persist: the lazy cache made the
-      // warm drive 10.6 s vs 6.9 — concurrent consumers (broadcast builds)
-      // race the un-materialized cache and recompute)
+      // (eager localCheckpoint, not lazy persist: concurrent consumers
+      // (broadcast builds) race an un-materialized cache and recompute)
       //
       // TICKER-partitioned before the checkpoint: localCheckpoint preserves
       // outputPartitioning, so every per-ticker window downstream — the
@@ -101,8 +101,8 @@ object DynamicRow {
       .repartition(col("ticker"))
       // checkpointPartitioned, not a bare localCheckpoint: under AQE the
       // bare form stores UnknownPartitioning in the LogicalRDD and the
-      // reuse above silently stops working — the warm drive paid ~6
-      // re-planned exchanges (= 6 AQE stage jobs) the static plan avoids.
+      // reuse above silently stops working (each consumer re-plans its own
+      // exchange).
       .transform(graft.core.RoundCheckpointer.checkpointPartitioned)
     val prices = base.select(col("ticker"), col("date"),
       (lit(100.0) + col("d") * 0.05 + (col("sk") % 13).cast(DoubleType)).as("close"))
@@ -122,7 +122,7 @@ object DynamicRow {
       // multiples of 3 keep eic = b/(4*ie) NON-terminating in decimal: a
       // 2^a*5^b divisor (e.g. ie=40 -> c/16000) terminates at digit 7 and
       // round(6) hits the exact half-way case where Spark's BigDecimal
-      // HALF_UP and DuckDB's rounding disagree (caught at sf0.1, row 69)
+      // HALF_UP and DuckDB's rounding disagree
       (lit(30.0) + (col("sk") % 7).cast(DoubleType) * 30.0).as("interestExpense"),
       (col("b") / 10.0).as("depreciationAndAmortization"),
       (col("b") * (lit(1) + lit(3) * (col("sk") % 4)).cast(DoubleType)).as("totalDebt"),
@@ -175,35 +175,10 @@ object DynamicRow {
     "dividend_cagr_5y" -> "dcagr5", "yield_vs_5y_median" -> "yvm",
     "pe_ratio" -> "pe_r", "pfcf_ratio" -> "pfcf_r", "payout_ratio" -> "po_r")
 
-  /** V2 range tags generated FROM the production config, so the twin can
-    * never drift from `TickerValidation.featureRanges`. */
-  private def rangeTagSql: Seq[String] =
-    TickerValidation.featureRanges.map { case (name, lo, hi) =>
-      val c = sqlName(name)
-      val inc = TickerValidation.lowerInclusive.contains(name)
-      val loOk = if (inc) s"$c >= $lo" else s"$c > $lo"
-      val rng = if (inc) s"[$lo, $hi)" else s"($lo, $hi)"
-      s"""CASE WHEN isfinite($c) AND NOT ($loOk AND $c < $hi)
-         THEN '$name out-of-bounds: ' || CAST($c AS VARCHAR) || ' not in $rng' END"""
-    }
-
-  /** V3 jump tags from `TickerValidation.jumpConfig` (lag columns are
-    * `<alias>_prev` in the `lagged` CTE). */
-  private def jumpTagSql: Seq[String] =
-    TickerValidation.jumpConfig.map { case (name, limit, floor) =>
-      val c = sqlName(name)
-      val f = math.max(floor, TickerValidation.tiny)
-      // round-before-format mirrors TickerValidation: DuckDB round() is
-      // half-away (= Spark/Java HALF_UP) while printf ties half-even
-      s"""CASE WHEN isfinite($c) AND isfinite(${c}_prev)
-           AND abs(${c}_prev) >= $f AND abs($c / ${c}_prev) > $limit
-         THEN printf('$name abnormal change: %.4f → %.4f (×%.2f)',
-           round(${c}_prev, 4), round($c, 4), round(abs($c / ${c}_prev), 2)) END"""
-    }
-
+  /** V3 lag columns: `<alias>_prev` in the `lagged` CTE. */
   private val jumpLagCols: Seq[String] =
-    TickerValidation.jumpConfig.map { case (name, _, _) =>
-      val c = sqlName(name)
+    TickerValidation.jumpRules.map { r =>
+      val c = sqlName(r.colName)
       s"lag($c) OVER (PARTITION BY ticker ORDER BY as_of) AS ${c}_prev"
     }
 
@@ -215,7 +190,13 @@ object DynamicRow {
       """CASE WHEN eic IS NOT NULL
            AND (CASE WHEN eic_capped THEN 1.0 ELSE 0.0 END) > eic + 1e-9
          THEN 'eic_capped_gt_raw' END"""
-    val allTags = (Seq(nullifyTag) ++ rangeTagSql ++ jumpTagSql ++ Seq(consistencyTag))
+    // V2/V3 tags from the production rules, so the twin cannot drift
+    val rangeTags = TickerValidation.rangeRules.map(r => r.tagSql(sqlName(r.colName)))
+    val jumpTags = TickerValidation.jumpRules.map { r =>
+      val c = sqlName(r.colName)
+      r.tagSql(c, s"${c}_prev")
+    }
+    val allTags = (Seq(nullifyTag) ++ rangeTags ++ jumpTags ++ Seq(consistencyTag))
       .mkString(",\n          ")
     s"""base AS (
         SELECT l_suppkey AS sk, CAST(l_suppkey AS VARCHAR) AS ticker,
@@ -349,7 +330,7 @@ object DynamicRow {
       // divergence: round(6) of a quotient whose decimal expansion
       // terminates at digit 7 (e.g. eic = c/48000 after a factor cancels)
       // is an exact round-half case where the engines' rounding modes
-      // differ — caught twice at sf0.1, so those columns ship raw.
+      // differ, so those columns ship raw.
       def r6(n: String): Column = round(col(n), 6).as(n)
       v.select(col("ticker"), col("as_of"),
         col("6m_return"), col("12m_return"), r6("volatility"),
@@ -381,8 +362,6 @@ object DynamicRow {
       SELECT validation_status,
         count(*) AS n,
         count(DISTINCT ticker) AS n_tickers,
-        count(CASE WHEN violations LIKE '%out-of-bounds%' THEN 1 END) AS n_range,
-        count(CASE WHEN violations LIKE '%abnormal change%' THEN 1 END) AS n_jump,
-        count(CASE WHEN violations LIKE '%nullified%' THEN 1 END) AS n_nullified
+        ${Validation.familyCountsSql("violations")}
       FROM rows GROUP BY 1 ORDER BY 1"""))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Tables, AsOf, SeriesOps}
 import graft.operators.Validation
-import graft.operators.Validation.{RangeRule, JumpRule, ConsistencyRule}
+import graft.operators.Validation.{ConsistencyRule, JumpRule, RangeRule}
 import graft.features.{Encoding, TickerFeatures}
 import graft.sources.Sources
 import QueryDef.{dec, moneySum, ONE}
@@ -415,47 +415,53 @@ object Relational {
     Some("""SELECT o_orderkey, o_totalprice FROM orders
       ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10"""))
 
-  /** V2/V5: range-check validation pass with ";"-joined violations. */
+  /** V2/V4/V5: range checks and a consistency rule through the one
+    * validation engine; the oracle splices the same rules' SQL tags. */
+  private val q23Ranges = Seq(
+    RangeRule("l_quantity", 1, 45, lowerInclusive = true),
+    RangeRule("l_discount", 0, 0.09, lowerInclusive = true))
+  private val q23Nonpositive = "l_extendedprice: nonpositive"
+
+  private[graft] def q23Validate(lineitem: DataFrame): DataFrame =
+    Validation.validate(lineitem, ranges = q23Ranges,
+      consistencies = Seq(ConsistencyRule(col("l_extendedprice") <= 0, q23Nonpositive)))
+
   val q23 = QueryDef("q23_validate_ranges",
     (s, dir) => {
-      Validation.validate(Tables.lineitem(s, dir),
-        ranges = Seq(
-          RangeRule("l_quantity", 1, 45),
-          RangeRule("l_discount", 0, 0.08, hiInclusive = true)),
-        consistencies = Seq(
-          ConsistencyRule(col("l_extendedprice") <= 0, "l_extendedprice: nonpositive")))
+      q23Validate(Tables.lineitem(s, dir))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"),
           col("l_shipdate").cast(DateType).as("ship_date"),
           col("validation_status"), col("violations"))
         .orderBy("l_orderkey", "l_linenumber", "l_suppkey", "ship_date")
     },
-    Some("""SELECT l_orderkey, l_linenumber, l_suppkey,
+    Some(s"""SELECT l_orderkey, l_linenumber, l_suppkey,
       CAST(l_shipdate AS DATE) AS ship_date,
       CASE WHEN v = '' THEN 'ok' ELSE 'flagged' END AS validation_status,
       v AS violations
       FROM (SELECT l_orderkey, l_linenumber, l_suppkey, l_shipdate, concat_ws(';',
-        CASE WHEN l_quantity IS NOT NULL AND (l_quantity < 1 OR l_quantity >= 45) THEN 'l_quantity: out-of-bounds' END,
-        CASE WHEN l_discount IS NOT NULL AND (l_discount < 0 OR l_discount > 0.08) THEN 'l_discount: out-of-bounds' END,
-        CASE WHEN l_extendedprice <= 0 THEN 'l_extendedprice: nonpositive' END) AS v
+        ${q23Ranges.map(r => r.tagSql(r.colName)).mkString(",\n        ")},
+        CASE WHEN l_extendedprice <= 0 THEN '$q23Nonpositive' END) AS v
       FROM lineitem) t ORDER BY l_orderkey, l_linenumber, l_suppkey, ship_date"""))
 
-  /** V3/W12: relative-jump validation against the previous row per entity. */
+  /** V3/V5 (W12): a relative-jump rule against the previous order per
+    * customer, through the one validation engine. */
+  private val q24Jump = JumpRule("o_totalprice", limit = 3.0, prevFloor = 100.0)
+
+  private[graft] def q24Validate(orders: DataFrame): DataFrame =
+    Validation.validate(orders, jumps = Seq(q24Jump),
+      entityCols = Seq("o_custkey"), orderCols = Seq("o_orderdate", "o_orderkey"))
+
   val q24 = QueryDef("q24_validate_jumps",
     (s, dir) => {
-      Validation.validate(Tables.orders(s, dir),
-        jumps = Seq(JumpRule("o_totalprice", limit = 3.0, prevFloor = 100.0)),
-        entityCols = Seq("o_custkey"),
-        orderCols = Seq("o_orderdate", "o_orderkey"))
+      q24Validate(Tables.orders(s, dir))
         .select("o_custkey", "o_orderkey", "validation_status", "violations")
         .orderBy("o_custkey", "o_orderkey")
     },
-    Some("""SELECT o_custkey, o_orderkey,
+    Some(s"""SELECT o_custkey, o_orderkey,
       CASE WHEN v = '' THEN 'ok' ELSE 'flagged' END AS validation_status,
       v AS violations
       FROM (SELECT o_custkey, o_orderkey, concat_ws(';',
-        CASE WHEN prev IS NOT NULL AND o_totalprice IS NOT NULL
-               AND abs(prev) >= 100.0 AND abs(o_totalprice / prev) > 3.0
-             THEN 'o_totalprice: abnormal change' END) AS v
+        ${q24Jump.tagSql("o_totalprice", "prev")}) AS v
       FROM (SELECT *, lag(o_totalprice) OVER (PARTITION BY o_custkey
               ORDER BY o_orderdate, o_orderkey) AS prev FROM orders) t) u
       ORDER BY o_custkey, o_orderkey"""))

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import graft.operators.Validation
 
 /** Sink layer (SURVEY §2.2): zstd parquet (K1), atomic write + change
   * detection (K2), status JSON (K3), audit sidecars (K4), ticker list (K5).
@@ -28,13 +29,16 @@ object Sinks {
     else { writeParquet(df, path); (true, h) }
   }
 
-  /** Order-independent content hash: the sum of per-row xxhash64 over all
-    * columns (stringified), "empty" for a frame without rows. */
+  /** Order-independent content hash: the wrapping 64-bit sum of per-row
+    * xxhash64 over all columns (stringified), "empty" for a frame without
+    * rows. The sum runs as two sums that cannot overflow below 2^31 rows,
+    * of the hashes' signed high halves and unsigned low halves, so ANSI
+    * mode never throws; they are recombined modulo 2^64 after collect. */
   def contentHash(df: DataFrame): String = {
     val row = df.select(
       xxhash64(df.columns.map(c => col(c).cast("string")).toSeq: _*).as("h"))
-      .agg(sum(col("h"))).head
-    if (row.isNullAt(0)) "empty" else row.getLong(0).toString
+      .agg(sum(shiftright(col("h"), 32)), sum(col("h").bitwiseAND(0xFFFFFFFFL))).head
+    if (row.isNullAt(0)) "empty" else ((row.getLong(0) << 32) + row.getLong(1)).toString
   }
 
   /** K3: run-status JSON (progress/ETA telemetry analog). Driver-side by
@@ -66,10 +70,7 @@ object Sinks {
     val tick = if (cols("ticker")) col("ticker") else lit(null)
     validated.groupBy("validation_status").agg(
       count(lit(1)).as("n"),
-      countDistinct(tick).as("n_tickers"),
-      count(when(viol.contains("out-of-bounds"), 1)).as("n_range"),
-      count(when(viol.contains("abnormal change"), 1)).as("n_jump"),
-      count(when(viol.contains("nullified"), 1)).as("n_nullified"))
+      countDistinct(tick).as("n_tickers") +: Validation.familyCounts(viol): _*)
   }
 
   /** Stats from a validated feature frame: groupBy(status).count, B4.

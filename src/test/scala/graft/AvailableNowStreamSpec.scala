@@ -4,7 +4,7 @@ import graft.streaming.EventStreams
 import java.nio.file.Files
 
 /** The file-source `Trigger.AvailableNow` driver ([[EventStreams.runAvailableNow]]). */
-class BucketingStreamSpec extends SparkSpec {
+class AvailableNowStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("AvailableNow file-stream processes a parquet directory then stops") {

@@ -59,6 +59,19 @@ class DynamicRowSpec extends SparkSpec {
       "t0", "t1")
     assert(rs.total === byStatus.values.sum)
     assert(rs.flagged === byStatus.getOrElse("flagged", 0L))
+    // one engine-made tag of each family, one flagged row each
+    import spark.implicits._
+    def d(s: String) = java.sql.Date.valueOf(s)
+    val tagged = graft.pipeline.TickerValidation.validate(Seq(
+      ("R", d("2024-01-01"), 999.0, 5.0),
+      ("J", d("2023-01-01"), 0.01, 5.0),
+      ("J", d("2024-01-01"), 0.2, 5.0),
+      ("N", d("2024-01-01"), 0.02, Double.PositiveInfinity))
+      .toDF("ticker", "as_of", "dividend_yield", "ebit_interest_cover"))
+    val families = graft.sinks.Sinks.statusCounts(tagged)
+      .select("validation_status", "n", "n_tickers", "n_range", "n_jump", "n_nullified")
+      .as[(String, Long, Long, Long, Long, Long)].collect().toSet
+    assert(families === Set(("flagged", 3L, 3L, 1L, 1L, 1L), ("ok", 1L, 1L, 0L, 0L, 0L)))
   }
 
   test("memoized-build hygiene: a fresh dynamic-row build leaves only its " +

@@ -185,6 +185,17 @@ class SourcesSinksSpec extends SparkSpec {
     assert(!changed5)
   }
 
+  test("contentHash is the wrapping sum of row hashes and does not overflow under ANSI mode") {
+    def frame(s: org.apache.spark.sql.SparkSession) = s.range(1000).toDF("k")
+    val rowHashSum = frame(spark).select(xxhash64(col("k").cast("string")))
+      .as[Long].collect().sum
+    val ansiOff = Sinks.contentHash(frame(spark))
+    assert(ansiOff == rowHashSum.toString)
+    val ansi = spark.newSession()
+    ansi.conf.set("spark.sql.ansi.enabled", "true")
+    assert(Sinks.contentHash(frame(ansi)) == ansiOff)
+  }
+
   test("audit sidecar writes one line per flagged row") {
     val df = Seq(("T", d("2024-01-01"), "flagged", "x out-of-bounds"),
       ("U", d("2024-01-01"), "ok", ""))

@@ -425,7 +425,7 @@ class TextVectorSpec extends SparkSpec {
     assert(atThree <= atDefault, s"recall should not fall as nProbe rises: $atThree > $atDefault")
   }
 
-  test("IVF recall curve on BOTH corpus classes (r12 verdict task 4): the " +
+  test("IVF recall curve on BOTH corpus classes: the " +
     "clustered planted-blob fixture reaches the 0.9 envelope at nProbe=2 " +
     "where the near-random corpus needs ~6 for 0.8 — the claim e19 judges") {
     import graft.operators.Similarity
@@ -502,8 +502,8 @@ class TextVectorSpec extends SparkSpec {
     val (cleanCC, statsCC) = CorpusPipeline.cleanCorpus(docs,
       jaccardThreshold = 0.5, minTokens = 5, exactClusters = true)
     assert(cleanCC.select("doc_id").as[Long].collect().sorted.toSeq == kept)
-    // field-wise: Stats is no longer a case class (afterQuality is lazy —
-    // the r13 one-scan saving for drivers that never read it)
+    // field-wise: Stats is not a case class (afterQuality is lazy, so a
+    // caller that never reads it pays no extra scan)
     assert((statsCC.input, statsCC.afterExact, statsCC.afterNearDup,
       statsCC.afterQuality) ==
       (stats.input, stats.afterExact, stats.afterNearDup, stats.afterQuality))
