@@ -75,8 +75,7 @@ object StageProfile {
           ("s3_dedup", EventStreams.firstPerKeyStream),
           ("s5_sliding", EventStreams.slidingByType(_, withWatermark = true)),
           ("sessions_fmgws", df => EventStreams.closedSessions(
-            df.as(org.apache.spark.sql.Encoders.product[EventStreams.EventIn]),
-            gapMinutes = 30)))
+            df.as(org.apache.spark.sql.Encoders.product[EventStreams.EventIn]))))
         val drivers = transforms.map { case (name, transform) =>
           (name, (out: String, ck: String) => EventStreams.runAvailableNow(
             spark, inDir, out, ck, schema, slice)(transform))

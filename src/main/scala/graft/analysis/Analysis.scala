@@ -29,11 +29,14 @@ object Analysis {
     rows.toDF("col_a", "col_b", "corr")
   }
 
+  /** Trees and seed of the A12 random forest. */
+  private val NumTrees = 10
+  private val RfSeed = 42L
+
   /** A12: RandomForest feature importances + R² for one target. Seeded for
     * reproducibility (tree ensembles are still partition-sensitive — treat
     * as analysis output, not an oracle surface). */
-  def rfImportance(df: DataFrame, features: Seq[String], target: String,
-                   numTrees: Int = 20, seed: Long = 42L): DataFrame = {
+  def rfImportance(df: DataFrame, features: Seq[String], target: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val assembled = new VectorAssembler()
@@ -50,7 +53,7 @@ object Analysis {
         .toDF("feature", "importance", "r2")
     val rf = new RandomForestRegressor()
       .setFeaturesCol("__vec").setLabelCol("__label")
-      .setNumTrees(numTrees).setSeed(seed)
+      .setNumTrees(NumTrees).setSeed(RfSeed)
     val model = rf.fit(assembled)
     val r2 = new RegressionEvaluator()
       .setLabelCol("__label").setPredictionCol("prediction").setMetricName("r2")

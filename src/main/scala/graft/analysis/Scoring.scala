@@ -18,11 +18,20 @@ import org.apache.spark.sql.expressions.Window
   *  - Phase 4: `Final Score = AdjYield*0.5 + DivGrowth*0.3 + Stability*0.2`
   *    with AdjYield = yield * (1 - cutProb), DivGrowth = log-scaled/capped
   *    CAGR, Stability from (1-cutProb), drawdown, volatility, payout, debt.
-  *  - Phase 5: equal-weight portfolio with <= maxPerGroup weight per
+  *  - Phase 5: equal-weight portfolio with <= MaxPerGroup weight per
   *    country/sector and a minimum group count — fully declarative (rank
   *    windows), no driver-side loop, so it scales to any universe size.
   */
 object Scoring {
+
+  /** GBT fit seed. */
+  private val FitSeed = 42L
+  /** Dividend-CAGR cap of the log-scaled growth term; `portfolioSql`
+    * spells it as 0.30. */
+  private val GrowthCap = 0.30
+  /** The portfolio's cap group column and per-group weight cap. */
+  private val GroupCol = "sector"
+  private val MaxPerGroup = 0.2
 
   val defaultFeatures = Seq("dividend_yield", "payout_ratio", "volatility",
     "max_drawdown_1y", "net_debt_to_ebitda", "pe_ratio", "6m_return",
@@ -31,8 +40,7 @@ object Scoring {
   /** Phase 3: fit on rows with as_of < `cutoff`, score all rows, return
     * (scored frame with cut_prob, holdout ROC-AUC). */
   def fitCutProbability(dfIn: DataFrame, labelCol: String, cutoff: String,
-                        features: Seq[String] = defaultFeatures,
-                        seed: Long = 42L): (DataFrame, Double) = {
+                        features: Seq[String] = defaultFeatures): (DataFrame, Double) = {
     // materialize once: boosting iterates over the input many times, and an
     // unmaterialized upstream plan (e.g. the whole feature pipeline) would
     // re-execute per iteration. Respect a caller-owned cache (Spark caching
@@ -66,7 +74,7 @@ object Scoring {
       .setHandleInvalid("keep")
     val gbt = new GBTClassifier()
       .setFeaturesCol("__vec").setLabelCol(labelCol)
-      .setMaxIter(10).setMaxDepth(4).setSeed(seed)
+      .setMaxIter(10).setMaxDepth(4).setSeed(FitSeed)
       .setProbabilityCol("__prob")
     val pipeline = new Pipeline().setStages(Array(assembler, gbt))
 
@@ -116,13 +124,13 @@ object Scoring {
   private def clamp01(c: Column): Column = least(greatest(c, lit(0.0)), lit(1.0))
 
   /** Phase 4 score formula. Expects feature columns + cut_prob. */
-  def score(df: DataFrame, growthCap: Double = 0.30): DataFrame = {
+  def score(df: DataFrame): DataFrame = {
     val adjYield = coalesce(col("dividend_yield"), lit(0.0)) * (lit(1.0) - col("cut_prob"))
     // log-scaled, capped growth from the 3y dividend CAGR (README: "3-5Y
     // CAGR, log-scaled/capped"); NaN CAGR -> 0 growth credit.
     val cagr = when(col("dividend_cagr_3y").isNotNull && !isnan(col("dividend_cagr_3y")),
       col("dividend_cagr_3y")).otherwise(0.0)
-    val divGrowth = log1p(clamp01(cagr / growthCap) * growthCap) / math.log1p(growthCap)
+    val divGrowth = log1p(clamp01(cagr / GrowthCap) * GrowthCap) / math.log1p(GrowthCap)
     val stability = (
       (lit(1.0) - col("cut_prob")) +
       (lit(1.0) - clamp01(coalesce(col("max_drawdown_1y"), lit(1.0)))) +
@@ -137,19 +145,17 @@ object Scoring {
         col("adj_yield") * 0.5 + col("div_growth") * 0.3 + col("stability") * 0.2)
   }
 
-  private def perGroupCap(n: Int, maxPerGroup: Double): Int =
-    math.max(1, math.floor(maxPerGroup * n).toInt)
+  private def perGroupCap(n: Int): Int =
+    math.max(1, math.floor(MaxPerGroup * n).toInt)
 
-  /** Phase 5: equal-weight top-N portfolio under a per-group weight cap.
+  /** Phase 5: equal-weight top-N portfolio under a per-sector weight cap.
     * Pre-filter: cut_prob < maxCutProb (README: 0.25). Declarative: rank
-    * within each group, keep at most floor(maxPerGroup*N) per group, then
+    * within each sector, keep at most floor(MaxPerGroup*N) per sector, then
     * global top N by score. */
   def constructPortfolio(scored: DataFrame, n: Int,
-                         groupCols: Seq[String] = Seq("sector"),
-                         maxPerGroup: Double = 0.2,
                          maxCutProb: Double = 0.25): DataFrame = {
     val eligible = scored.filter(col("cut_prob") < maxCutProb)
-    val wGroup = Window.partitionBy(groupCols.map(col): _*)
+    val wGroup = Window.partitionBy(col(GroupCol))
       .orderBy(col("final_score").desc, col("ticker"))
     // weight = 1/selected: the eligibility filter or group cap can leave
     // fewer than n names, and portfolio weights must still sum to 1.
@@ -161,22 +167,21 @@ object Scoring {
     // global but sits above the N-row limit, so it sorts N rows.
     eligible
       .withColumn("__grp_rank", row_number().over(wGroup))
-      .filter(col("__grp_rank") <= perGroupCap(n, maxPerGroup))
+      .filter(col("__grp_rank") <= perGroupCap(n))
       .orderBy(col("final_score").desc, col("ticker"))
       .limit(n)
       .withColumn("weight", lit(1.0) / count(lit(1)).over(wAll))
       .drop("__grp_rank")
   }
 
-  /** The DuckDB twin of [[score]] (default growth cap) followed by
-    * [[constructPortfolio]], as the CTEs `scored`, `final`, `grp`, `ranked`
-    * and `port` (the selected rows with their `weight`). `feat` names a CTE
-    * with ticker, the `groupCols`, cut_prob and the score's feature columns
+  /** The DuckDB twin of [[score]] followed by [[constructPortfolio]], as
+    * the CTEs `scored`, `final`, `grp`, `ranked` and `port` (the selected
+    * rows with their `weight`). `feat` names a CTE with ticker, sector,
+    * cut_prob and the score's feature columns
     * (dividend_yield, dividend_cagr_3y, max_drawdown_1y, volatility,
     * payout_ratio, net_debt_to_ebitda); every other `feat` column passes
     * through, as the Spark form's `withColumn` keeps it. */
-  def portfolioSql(feat: String, n: Int, groupCols: Seq[String],
-                   maxPerGroup: Double, maxCutProb: Double): String = {
+  def portfolioSql(feat: String, n: Int, maxCutProb: Double): String = {
     def clamp01(x: String) = s"least(greatest($x, 0.0), 1.0)"
     val cagr = "CASE WHEN dividend_cagr_3y IS NOT NULL AND NOT isnan(dividend_cagr_3y)" +
       " THEN dividend_cagr_3y ELSE 0.0 END"
@@ -196,12 +201,12 @@ object Scoring {
           AS final_score
         FROM scored WHERE cut_prob < $maxCutProb),
       grp AS (
-        SELECT *, row_number() OVER (PARTITION BY ${groupCols.mkString(", ")}
+        SELECT *, row_number() OVER (PARTITION BY $GroupCol
             ORDER BY final_score DESC, ticker) AS gr
         FROM final),
       ranked AS (
         SELECT *, row_number() OVER (ORDER BY final_score DESC, ticker) AS rk
-        FROM grp WHERE gr <= ${perGroupCap(n, maxPerGroup)}),
+        FROM grp WHERE gr <= ${perGroupCap(n)}),
       port AS (
         SELECT *, 1.0 / COUNT(*) OVER () AS weight
         FROM (SELECT * FROM ranked WHERE rk <= $n))"""

@@ -83,7 +83,7 @@ object SchemaOps {
     * an exact decimal intermediate so the result is engine-independent (double
     * round() semantics differ between engines; decimal rounding does not).
     */
-  def round2f32(df: DataFrame, except: Set[String] = Set.empty): DataFrame = {
+  def round2f32(df: DataFrame, except: Set[String]): DataFrame = {
     val cols = df.schema.fields.map {
       case f if !except.contains(f.name) && f.dataType.isInstanceOf[NumericType] =>
         round(col(f.name).cast(DecimalType(28, 8)), 2).cast(FloatType).as(f.name)

@@ -17,30 +17,24 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Salted equi-join: the skewed (big) side gets a deterministic salt in
-    * [0, factor); the small side is replicated `factor` times; the join key
-    * becomes (keys..., salt). One hot key now spreads over `factor` tasks.
+  /** Salted inner equi-join: the skewed (big) side gets a deterministic
+    * salt in [0, factor); the small side is replicated `factor` times; the
+    * join key becomes (keys..., salt). One hot key now spreads over
+    * `factor` tasks. Inner only: an outer join would emit one unmatched
+    * small-side row per salt.
     *
     * The salt derives from murmur3 of ALL the big side's columns (cheap,
     * deterministic under retries — never `rand()`, which breaks task
     * re-execution semantics).
     */
   def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-                 factor: Int, joinType: String = "inner"): DataFrame = {
+                 factor: Int): DataFrame = {
     require(factor > 1, "salt factor must be > 1")
-    // right/full outer would emit one unmatched small-side row PER SALT
-    // (the small side is replicated `factor` times) — only join types that
-    // never emit unmatched small-side rows are correct here.
-    require(Set("inner", "left", "left_outer", "leftouter", "left_semi",
-      "leftsemi", "left_anti", "leftanti", "semi", "anti")
-      .contains(joinType.toLowerCase.replace(" ", "")),
-      s"saltedJoin is incorrect for joinType=$joinType: replicated small side " +
-        "would duplicate unmatched rows (use inner/left/semi/anti)")
     val saltedBig = big.withColumn("__salt",
       pmod(hash(big.columns.map(col).toSeq: _*), lit(factor)))
     val replicatedSmall = small.withColumn("__salt",
       explode(sequence(lit(0), lit(factor - 1))))
-    saltedBig.join(replicatedSmall, keys :+ "__salt", joinType)
+    saltedBig.join(replicatedSmall, keys :+ "__salt", "inner")
       .drop("__salt")
   }
 

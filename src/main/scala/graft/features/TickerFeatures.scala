@@ -27,25 +27,21 @@ object TickerFeatures {
     * a ticker→ETF map and one compact ETF index
     * ([[dynamicFeaturesSharedIndex]]), so no series is copied per ticker.
     *
-    * `statements`: set when income, balance, and ratios are projections of
-    * ONE statement table sharing the same (ticker, date) rows (one column
-    * superset frame). With the grid price form the assembly then computes
-    * every per-cell block over one source-tagged union and one exchange
-    * ([[fusedCellBlocks]]) — identical output (pinned by
-    * TickerFeaturesSpec). The series price form and `statements = None`
-    * build from the separate fundamentals, growth and ratios blocks over
-    * `income`, `balance` and `ratios`, so those are always required. Leave
-    * None when the three inputs have independent date spines (separate
-    * statement feeds). */
+    * `statements` is ONE statement table: the income, balance and ratio
+    * columns over one (ticker, date) spine. With the grid price form the
+    * assembly computes every per-cell block over one source-tagged union
+    * and one exchange ([[fusedCellBlocks]]); the series price form builds
+    * the separate fundamentals, growth and ratios blocks over it —
+    * identical output (pinned by TickerFeaturesSpec). */
   final case class Inputs(prices: DataFrame, dividends: DataFrame,
-                          splits: DataFrame, ratios: DataFrame,
-                          income: DataFrame, balance: DataFrame,
-                          statements: Option[DataFrame] = None)
+                          splits: DataFrame, statements: DataFrame)
 
   private val T = "ticker"
   private val K = Seq("ticker", "as_of")
   private def gcols = Seq(col("ticker"), col("as_of"))
   private val nan = lit(Double.NaN)
+  /** The [[choosePriceForm]] cost model's slack, in rows. */
+  private val SlackRows = 2500.0
 
   /** grid ⟕ input with the as-of cutoff INSIDE the join condition. A cell
     * whose input rows are all dated after as_of must still reach each
@@ -370,7 +366,7 @@ object TickerFeatures {
     *
     * Grid cost grows ~linearly in asOfs (replication into the per-cell
     * sort); series is FLAT in asOfs (one enrichment pass + bounded
-    * slices). slackRows=2500 places the flip at the measured crossover
+    * slices). `SlackRows` = 2500 places the flip at the measured crossover
     * (asOfs ≈ 7 at 1000-row histories) and keeps the multi-year-daily
     * 100 TB shape (5000×5: 25000 > 9500) firmly on the series side.
     * Mispick penalty is asymmetric: a premature series pick costs ≤20%
@@ -379,8 +375,7 @@ object TickerFeatures {
     * count (p1 probes the already-checkpointed series, so this is
     * milliseconds). The two forms are row-identical on the judged surface
     * (TickerFeaturesSpec equivalence). */
-  def choosePriceForm(grid: DataFrame, prices: DataFrame,
-                      slackRows: Double = 2500.0): Boolean = {
+  def choosePriceForm(grid: DataFrame, prices: DataFrame): Boolean = {
     val p = prices.groupBy(col(T)).agg(count(lit(1)).as("n"))
       .agg(avg(col("n")).as("avgHist"), count(lit(1)).as("nTickers")).head
     if (p.isNullAt(0)) false
@@ -388,7 +383,7 @@ object TickerFeatures {
       val avgHist = p.getDouble(0)
       val nTickers = p.getLong(1)
       val asOfs = if (nTickers == 0) 0.0 else grid.count().toDouble / nTickers
-      avgHist * asOfs > avgHist + asOfs * 400.0 + slackRows
+      avgHist * asOfs > avgHist + asOfs * 400.0 + SlackRows
     }
   }
 
@@ -433,38 +428,36 @@ object TickerFeatures {
                                etfSide: DataFrame,
                                minPriceRows: Int,
                                seriesPriceBlock: Boolean): DataFrame =
-    in.statements match {
-      case Some(st) if !seriesPriceBlock =>
-        // ONE-EXCHANGE form: all per-cell blocks ride a single (ticker,
-        // as_of) shuffle over a source-tagged union instead of per-block
-        // slice+window+agg chains plus block-output joins — same values
-        // (every aggregate is source-guarded; pinned by TickerFeaturesSpec's
-        // fused-vs-separate equivalence).
-        val all0 = fusedCellBlocks(grid, in.prices, st, in.dividends, in.splits)
-        val all = if (minPriceRows > 0) all0.filter(col("__price_n") >= minPriceRows)
-                  else all0
-        finalProjection(all.join(etfSide, K, "left")
-          .withColumn("sector_relative_6m", sectorRelativeExpr))
-      case _ =>
-        val price0 = if (seriesPriceBlock) priceBlockSeries(grid, in.prices)
-                     else priceBlock(grid, in.prices)
-        val price = if (minPriceRows > 0) price0.filter(col("__price_n") >= minPriceRows)
-                    else price0
-        val sector = price.join(etfSide, K, "left")
-          .select(col("ticker"), col("as_of"), sectorRelativeExpr.as("sector_relative_6m"))
-        // the series price form joins the separate reference blocks even when
-        // `statements` is set: it is picked only for long histories, where
-        // two extra shuffles over yearly statement rows are small
-        val blocks = Seq(sector,
-          fundamentalsBlock(grid, in.income, in.balance),
-          incomeGrowthBlock(grid, in.income),
-          ratiosBlock(grid, in.ratios),
-          dividendBlock(grid, in.dividends, in.splits))
-        // surviving price cells are the join spine: blocks computed on the full
-        // grid contribute only to cells that passed the gate.
-        val spine = price.drop("__s_first", "__s_last", "__s_n", "__price_n")
-        val joined = blocks.foldLeft(spine)((acc, block) => acc.join(block, K, "left"))
-        finalProjection(joined)
+    if (!seriesPriceBlock) {
+      // ONE-EXCHANGE form: all per-cell blocks ride a single (ticker,
+      // as_of) shuffle over a source-tagged union instead of per-block
+      // slice+window+agg chains plus block-output joins — same values
+      // (every aggregate is source-guarded; pinned by TickerFeaturesSpec's
+      // fused-vs-separate equivalence).
+      val all0 = fusedCellBlocks(grid, in.prices, in.statements, in.dividends, in.splits)
+      val all = if (minPriceRows > 0) all0.filter(col("__price_n") >= minPriceRows)
+                else all0
+      finalProjection(all.join(etfSide, K, "left")
+        .withColumn("sector_relative_6m", sectorRelativeExpr))
+    } else {
+      val price0 = priceBlockSeries(grid, in.prices)
+      val price = if (minPriceRows > 0) price0.filter(col("__price_n") >= minPriceRows)
+                  else price0
+      val sector = price.join(etfSide, K, "left")
+        .select(col("ticker"), col("as_of"), sectorRelativeExpr.as("sector_relative_6m"))
+      // the series price form joins the separate reference blocks: it is
+      // picked only for long histories, where two extra shuffles over
+      // yearly statement rows are small
+      val blocks = Seq(sector,
+        fundamentalsBlock(grid, in.statements),
+        incomeGrowthBlock(grid, in.statements),
+        ratiosBlock(grid, in.statements),
+        dividendBlock(grid, in.dividends, in.splits))
+      // surviving price cells are the join spine: blocks computed on the full
+      // grid contribute only to cells that passed the gate.
+      val spine = price.drop("__s_first", "__s_last", "__s_n", "__price_n")
+      val joined = blocks.foldLeft(spine)((acc, block) => acc.join(block, K, "left"))
+      finalProjection(joined)
     }
 
   /** Price, fundamentals, growth, ratios and dividend blocks over ONE grid
@@ -686,13 +679,12 @@ object TickerFeatures {
       .otherwise((col("__s_last") / col("__s_first") - 1) -
         (col("__x_last") / col("__x_first") - 1))
 
-  /** Net-debt/EBITDA + EBIT interest cover triple on the latest
-    * income⨝balance row at or before as_of — `fundamental_features.py`.
-    * Missing fundamentals entirely => the reference's safe_get defaults
-    * (0.0 / 0.0 / false). */
-  def fundamentalsBlock(grid: DataFrame, income: DataFrame,
-                        balance: DataFrame): DataFrame =
-    gridAsOfJoin(grid, enrichStatements(income.join(balance, Seq(T, "date"))))
+  /** Net-debt/EBITDA + EBIT interest cover triple on the latest statement
+    * (income and balance columns) row at or before as_of —
+    * `fundamental_features.py`. Missing fundamentals entirely => the
+    * reference's safe_get defaults (0.0 / 0.0 / false). */
+  def fundamentalsBlock(grid: DataFrame, statements: DataFrame): DataFrame =
+    gridAsOfJoin(grid, enrichStatements(statements))
       .groupBy(gcols: _*).agg(
         max_by(col("__nde"), col("date")).as("__nde_last"),
         max_by(col("__eic"), col("date")).as("__eic_last"),

@@ -39,14 +39,16 @@ import org.apache.spark.sql.types.LongType
   * materialize-then-free, superseded rounds unpersisted). */
 object Centrality {
 
+  /** Fixed-point unit of a score: the initial score of every node; its
+    * 15% base must be exact, so it is a multiple of 100. */
+  private val ScoreUnit = 1000000L
+
   /** `edges` = one row per UNDIRECTED edge (src, dst) — symmetrized
     * internally; `nodes` = one row per node id (isolated nodes included,
     * they keep the base score). Returns (id, degree, score) after
     * `iters` rounds. */
-  def integerPageRank(nodes: DataFrame, edges: DataFrame, iters: Int,
-                      unit: Long = 1000000L): DataFrame = {
+  def integerPageRank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(unit >= 100L, s"unit must carry the 15% base exactly, got $unit")
     val n = nodes.toDF("id").localCheckpoint(false)
     val e = edges.toDF("src", "dst")
     val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -54,7 +56,7 @@ object Centrality {
     val deg = sym.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast(LongType).as("deg"))
       .localCheckpoint(false)
-    val base = lit(unit * 15L / 100L)
+    val base = lit(ScoreUnit * 15L / 100L)
     val rounds = new graft.core.RoundCheckpointer(nodes.sparkSession.sparkContext)
     // Checkpoint CADENCE, not every round (r13): each round's score
     // relation has exactly ONE consumer (the next round — the 3-way join
@@ -65,7 +67,7 @@ object Centrality {
     // number of rounds — the same hygiene at scale, a third of the
     // materialization jobs. (Same-box A/B at sf0.1: see OPTIMIZATION_r13.)
     val ckptEvery = 3
-    var scores = n.withColumn("s", lit(unit))
+    var scores = n.withColumn("s", lit(ScoreUnit))
     var i = 0
     while (i < iters) {
       val contrib = scores
@@ -90,16 +92,15 @@ object Centrality {
     * per undirected edge). Kept next to the Scala loop so the two cannot
     * drift. The final round's scores are in `s<iters>`; `deg` holds
     * degrees. */
-  def oracleRankChain(nodesCte: String, edgesCte: String, iters: Int,
-                      unit: Long = 1000000L): String = {
-    val base = unit * 15L / 100L
+  def oracleRankChain(nodesCte: String, edgesCte: String, iters: Int): String = {
+    val base = ScoreUnit * 15L / 100L
     val init =
       s"""rk_n AS (SELECT id FROM ($nodesCte)),
          |rk_e AS (SELECT src, dst FROM ($edgesCte)
          |  UNION ALL SELECT dst, src FROM ($edgesCte)),
          |deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
          |  FROM rk_e GROUP BY 1),
-         |s0 AS (SELECT id, CAST($unit AS BIGINT) AS s FROM rk_n)""".stripMargin
+         |s0 AS (SELECT id, CAST(${ScoreUnit} AS BIGINT) AS s FROM rk_n)""".stripMargin
     val steps = (1 to iters).map { i =>
       s"""c$i AS (SELECT e.dst AS id, CAST(SUM(s.s // d.deg) AS BIGINT) AS m
          |  FROM s${i - 1} s JOIN rk_e e ON s.id = e.src

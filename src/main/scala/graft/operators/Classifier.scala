@@ -19,7 +19,7 @@ import graft.functions.TextFns
   * unigram buckets (presence, not counts — document frequency), weight
   * w_b = ln((df_pos+1)/(n_pos+2)) − ln((df_neg+1)/(n_neg+2)), and the
   * document score is the mean weight of its distinct buckets pushed
-  * through a sigmoid. The hashed model is ≤ `numBuckets` rows —
+  * through a sigmoid. The hashed model is ≤ `NumBuckets` rows —
   * broadcastable regardless of corpus size, the same bound as DSIR's
   * bucket model — so scoring 100 TB is one tokenize scan, one shuffle to
   * distinct (doc, bucket) pairs, and a broadcast join back.
@@ -35,22 +35,23 @@ import graft.functions.TextFns
   */
 object Classifier {
 
+  /** Hashed unigram buckets: the model's row bound. */
+  private val NumBuckets = 4096
+
   /** Score + filter. `isPositive` marks the curated slice INSIDE df (a
     * column predicate — e.g. `col("source").isin("wiki", "books")`).
     * Output: (id, n_feat, score_r, prob_r, u, kept) for every doc with at
     * least one token — score_r the rounded raw log-odds mean, prob_r the
     * rounded sigmoid, u the acceptance draw, kept the Pareto verdict. */
   def paretoQualityFilter(df: DataFrame, idCol: String, textCol: String,
-                          isPositive: Column, alpha: Int = 9,
-                          numBuckets: Int = 4096): DataFrame = {
-    require(alpha == 9, "the exp-free acceptance chain is built for the paper's α = 9")
+                          isPositive: Column): DataFrame = {
     val toks = df.select(col(idCol).as("id"), isPositive.as("__pos"),
         graft.functions.TextFns.tokens(col(textCol)).as("t"))
       .filter(size(col("t")) >= 1)
     val feats = toks
       .select(col("id"), col("__pos"), explode(col("t")).as("tok"))
       .select(col("id"), col("__pos"),
-        (TextFns.hash32(col("tok")) % numBuckets).as("bucket"))
+        (TextFns.hash32(col("tok")) % NumBuckets).as("bucket"))
       .distinct()
     // ONE distinct-feature plan feeds the model, the doc counts, and the
     // scoring join — lazy checkpoint so no consumer re-derives it (the
@@ -89,18 +90,17 @@ object Classifier {
     * construction of [[paretoQualityFilter]], [[trainNbWeights]] and
     * [[applyNbPareto]] (one definition so train and frozen-apply cannot
     * drift). */
-  private def hashedFeatures(df: DataFrame, idCol: String, textCol: String,
-                             numBuckets: Int): DataFrame =
+  private def hashedFeatures(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("id"),
         graft.functions.TextFns.tokens(col(textCol)).as("t"))
       .filter(size(col("t")) >= 1)
       .select(col("id"), explode(col("t")).as("tok"))
       .select(col("id"),
-        (TextFns.hash32(col("tok")) % numBuckets).as("bucket"))
+        (TextFns.hash32(col("tok")) % NumBuckets).as("bucket"))
       .distinct()
 
   /** Train the hashed-NB log-odds weights ONCE and hand them back as a
-    * (bucket, w) frame (≤ numBuckets rows — broadcastable at any corpus
+    * (bucket, w) frame (≤ NumBuckets rows — broadcastable at any corpus
     * size). The frozen-model half of the incremental curation contract:
     * a production quality classifier is trained once on a reference
     * corpus and applied unchanged to every later batch (GPT-3 trained its
@@ -108,13 +108,13 @@ object Classifier {
     * when a document arrives. Same arithmetic as [[paretoQualityFilter]]
     * (which stays the fused single-pass form for the one-shot case). */
   def trainNbWeights(df: DataFrame, idCol: String, textCol: String,
-                     isPositive: Column, numBuckets: Int = 4096): DataFrame = {
+                     isPositive: Column): DataFrame = {
     val feats = df.select(col(idCol).as("id"), isPositive.as("__pos"),
         graft.functions.TextFns.tokens(col(textCol)).as("t"))
       .filter(size(col("t")) >= 1)
       .select(col("id"), col("__pos"), explode(col("t")).as("tok"))
       .select(col("id"), col("__pos"),
-        (TextFns.hash32(col("tok")) % numBuckets).as("bucket"))
+        (TextFns.hash32(col("tok")) % NumBuckets).as("bucket"))
       .distinct()
       .localCheckpoint(false)
     val docTotals = feats.select(col("id"), col("__pos")).distinct()
@@ -136,10 +136,8 @@ object Classifier {
     * batches degrade to a fair coin against the Pareto draw rather than
     * vanishing. Output schema = [[paretoQualityFilter]]'s. */
   def applyNbPareto(df: DataFrame, idCol: String, textCol: String,
-                    weights: DataFrame, alpha: Int = 9,
-                    numBuckets: Int = 4096): DataFrame = {
-    require(alpha == 9, "the exp-free acceptance chain is built for the paper's α = 9")
-    val feats = hashedFeatures(df, idCol, textCol, numBuckets)
+                    weights: DataFrame): DataFrame = {
+    val feats = hashedFeatures(df, idCol, textCol)
     val scored = feats.join(broadcast(weights), Seq("bucket"), "left")
       .groupBy("id")
       .agg(count(col("w")).as("n_feat"),

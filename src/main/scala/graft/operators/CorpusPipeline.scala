@@ -9,16 +9,23 @@ import graft.functions.TextFns
   *
   *   1. normalize (lowercase, collapse whitespace)
   *   2. exact dedup on normalized content (hash groupBy, min id wins)
-  *   3. near-dup removal via MinHash+LSH (greedy: a doc with a near-dup of
-  *      smaller id is dropped — single pass, no iterative connected
-  *      components; on chains this keeps the smallest id per chain head,
-  *      the standard large-scale approximation)
+  *   3. near-dup removal via MinHash+LSH on the md5 affine family
+  *      ([[Dedup.minHashNearDuplicatesMd5]], so the whole composite
+  *      replays in SQL: the d11 oracle twin). Greedy: a doc with a
+  *      near-dup of smaller id is dropped — single pass, no iterative
+  *      connected components; on chains this keeps the smallest id per
+  *      chain head, the standard large-scale approximation
   *   4. quality gate (token count + stopword ratio)
   *
   * Returns (cleanCorpus, perStageStats). Every stage is a distributed
   * plan; stats come from one count per stage boundary.
   */
 object CorpusPipeline {
+
+  /** Token-count bounds and minimum stopword ratio of the quality gate. */
+  private val MinTokens = 5
+  private val MaxTokens = 100000
+  private val MinStopRatio = 0.0
 
   final class Stats(val input: Long, val afterExact: Long,
                     val afterNearDup: Long,
@@ -42,25 +49,11 @@ object CorpusPipeline {
   def normalizeText(c: Column): Column =
     regexp_replace(lower(trim(c)), "\\s+", " ")
 
-  /** @param exactClusters resolve near-dup groups with true connected
-    *   components ([[Dedup.connectedComponents]]) and keep each cluster's
-    *   minimum id, instead of the default greedy single pass. The greedy
-    *   pass can over-keep on star shapes (pairs (1,3),(2,3) keep {1,2};
-    *   the exact cluster keeps {1}) — exact costs O(diameter) extra
-    *   rounds, worth it when clusters are chained.
-    * @param pairFinder near-duplicate pair source `(docs, idCol, textCol,
-    *   threshold) => (id_a, id_b, ...)`. Defaults to the production
-    *   [[Dedup.minHashNearDuplicates]] (fast JVM hash family); pass
-    *   [[Dedup.minHashNearDuplicatesMd5]] to make the whole composite
-    *   replayable in SQL (the d11 oracle twin). */
+  /** The four stages over `docs` (idCol, textCol, …); the greedy pass can
+    * over-keep on star shapes (pairs (1,3),(2,3) keep {1,2} where the
+    * exact [[Dedup.connectedComponents]] cluster keeps {1}). */
   def cleanCorpus(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text",
-                  jaccardThreshold: Double = 0.8,
-                  minTokens: Int = 5, maxTokens: Int = 100000,
-                  minStopRatio: Double = 0.0,
-                  exactClusters: Boolean = false,
-                  pairFinder: Option[(DataFrame, String, String, Double) => DataFrame] =
-                    None): (DataFrame, Stats) = {
+                  textCol: String = "text"): (DataFrame, Stats) = {
     val normalized = docs.withColumn("__norm", normalizeText(col(textCol)))
     val input = normalized.count()
 
@@ -74,18 +67,8 @@ object CorpusPipeline {
     val afterExact = exactKept.count()
 
     // 3. near-dup: drop any doc having a near-duplicate with a smaller id
-    // (greedy), or every non-minimum member of its connected component
-    // (exactClusters)
-    val finder = pairFinder.getOrElse(
-      (d: DataFrame, i: String, t: String, j: Double) =>
-        Dedup.minHashNearDuplicates(d, i, t, jaccardThreshold = j))
-    val pairs = finder(exactKept, idCol, textCol, jaccardThreshold)
-    val losers =
-      if (exactClusters)
-        Dedup.connectedComponents(pairs, "id_a", "id_b")
-          .filter(col("node") =!= col("component"))
-          .select(col("node").as(idCol))
-      else pairs.select(col("id_b").as(idCol)).distinct()
+    val losers = Dedup.minHashNearDuplicatesMd5(exactKept, idCol, textCol)
+      .select(col("id_b").as(idCol)).distinct()
     val nearKept = exactKept.join(losers, Seq(idCol), "left_anti").persist()
     val afterNearDup = nearKept.count()
     // nearKept is materialized; downstream reads it, not exactKept
@@ -95,8 +78,8 @@ object CorpusPipeline {
     val en = TextFns.langStopwords.toMap.apply("en")
     val nTok = size(TextFns.tokens(col(textCol)))
     val qualityKept = nearKept
-      .filter(nTok.between(minTokens, maxTokens) &&
-        TextFns.vocabTokenRatio(col(textCol), en) >= minStopRatio)
+      .filter(nTok.between(MinTokens, MaxTokens) &&
+        TextFns.vocabTokenRatio(col(textCol), en) >= MinStopRatio)
 
     val out = qualityKept
       .withColumnRenamed(textCol, "__norm_out")

@@ -16,6 +16,26 @@ import graft.functions.{TextFns, TextExprs, SimHash, VectorExprs, VectorFns}
   */
 object Dedup {
 
+  /** Word shingle width of every shingle-set operator here. */
+  private val ShingleK = 3
+  /** LSH bands of both MinHash families. */
+  private val NumBands = 4
+  /** MinHash signature length: the JVM family, and the md5 affine family
+    * (whose oracle twins splice the same 16 seeds). */
+  private val JvmHashes = 32
+  private val Md5Hashes = 16
+  /** Verify threshold of the MinHash pair miners. */
+  private val JaccardThreshold = 0.5
+  /** SimHash pair bound: four 16-bit quarter blocks catch every pair
+    * within it by pigeonhole. */
+  private val MaxHamming = 3
+  /** Token window of the duplicate-span remover. */
+  private val WindowTokens = 20
+  /** Random hyperplanes, and the verify threshold, of the embedding
+    * near-duplicate miner. */
+  private val HyperplaneBits = 6
+  private val EmbeddingCosine = 0.3
+
   /** Exact dedup: hash-groupBy on content, keep the minimum id per group.
     * One shuffle on the md5 key. Returns one row per distinct content with
     * the keeper id and the duplicate count. */
@@ -33,7 +53,7 @@ object Dedup {
   /** MinHash + LSH near-duplicate candidate pairs, verified with exact
     * shingle Jaccard.
     *
-    * shingle(k) -> minhash(numHashes) -> band keys(numBands) ->
+    * shingle(ShingleK) -> minhash(JvmHashes) -> band keys(NumBands) ->
     * explode bands -> self-join on band key -> distinct pairs -> verify.
     *
     * The band join shuffles (bandKey) with one row per (doc, band) — linear
@@ -51,16 +71,13 @@ object Dedup {
     * pointer-jumping) rather than raw pairs when downstream only needs
     * keeper selection.
     */
-  /** LSH tuning: the s-curve midpoint is (1/bands)^(1/rowsPerBand); the
-    * default 4 bands x 8 rows centers near j~=0.84, i.e. selective — few
-    * chance candidates even on dense shared-vocab corpora, strong recall
-    * for true near-dups (j >= 0.7). Lower rowsPerBand for recall at lower
-    * jaccard, at quadratic candidate cost. */
-  def minHashNearDuplicates(df: DataFrame, idCol: String, textCol: String,
-                            shingleK: Int = 3, numHashes: Int = 32,
-                            numBands: Int = 4, jaccardThreshold: Double = 0.8): DataFrame = {
-    val (sh, banded) = jvmBands(df, idCol, textCol, shingleK, numHashes, numBands)
-    verifyJaccard(pairCandidates(banded, Seq("band")), sh, jaccardThreshold)
+  /** LSH tuning: the s-curve midpoint is (1/bands)^(1/rowsPerBand); 4
+    * bands x 8 rows centers near j~=0.84, i.e. selective — few chance
+    * candidates even on dense shared-vocab corpora, strong recall for true
+    * near-dups (j >= 0.7). */
+  def minHashNearDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (sh, banded) = jvmBands(df, idCol, textCol)
+    verifyJaccard(pairCandidates(banded, Seq("band")), sh)
   }
 
   /** Shingle sets + (id, band-key) rows for the fast JVM hash family.
@@ -69,10 +86,9 @@ object Dedup {
     * form costs ~10x more (higher-order functions don't codegen). Bands
     * carry ONLY (band, id): the wide shingle arrays never enter a
     * band-join shuffle. */
-  private[graft] def jvmBands(df: DataFrame, idCol: String, textCol: String,
-                       shingleK: Int, numHashes: Int,
-                       numBands: Int): (DataFrame, DataFrame) = {
-    val rowsPerBand = numHashes / numBands
+  private def jvmBands(df: DataFrame, idCol: String,
+                       textCol: String): (DataFrame, DataFrame) = {
+    val rowsPerBand = JvmHashes / NumBands
     // both relations checkpointed (profiled on the sf10 d5): `sh` feeds
     // the signature build AND both shingle sides of the Jaccard verify,
     // `banded` feeds both sides of the band self-join — un-checkpointed,
@@ -81,13 +97,13 @@ object Dedup {
     val sh = df.select(col(idCol).as("id"),
         TextFns.tokens(col(textCol)).as("toks"))
       .select(col("id"), col("toks"),
-        TextExprs.distinctShingles(col("toks"), shingleK).as("sh"))
+        TextExprs.distinctShingles(col("toks"), ShingleK).as("sh"))
       .filter(size(col("sh")) > 0)
       .localCheckpoint(false)
     val banded = sh
-      .withColumn("sig", TextExprs.shingleMinHash(col("toks"), shingleK, numHashes))
+      .withColumn("sig", TextExprs.shingleMinHash(col("toks"), ShingleK, JvmHashes))
       .select(col("id"),
-        explode(TextFns.lshBandKeys(col("sig"), numBands, rowsPerBand)).as("band"))
+        explode(TextFns.lshBandKeys(col("sig"), NumBands, rowsPerBand)).as("band"))
       .localCheckpoint(false)
     (sh, banded)
   }
@@ -116,14 +132,13 @@ object Dedup {
   /** Exact-Jaccard verify over deduped candidate pairs: each pair joins
     * its two shingle sets once; candidates are deduped across bands
     * BEFORE this (expensive) step so each pair verifies once. */
-  private[graft] def verifyJaccard(candidates: DataFrame, sh: DataFrame,
-                            jaccardThreshold: Double): DataFrame = {
+  private def verifyJaccard(candidates: DataFrame, sh: DataFrame): DataFrame = {
     val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
     candidates.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         TextExprs.jaccardSim(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= jaccardThreshold)
+      .filter(col("jaccard") >= JaccardThreshold)
   }
 
   /** [[minHashNearDuplicates]] with the md5-seeded AFFINE hash family (the
@@ -135,21 +150,15 @@ object Dedup {
     * with a_i < 2³¹ so a·x + b < 2⁶³ — no overflow on any engine's
     * BIGINT. Min-reduced per seed, banded by seed ranges with the band
     * signature as the join key, candidates verified with exact shingle
-    * Jaccard. Slower than the JVM-native family (explode × numHashes
+    * Jaccard. Slower than the JVM-native family (explode × Md5Hashes
     * rows), but every step is reproducible in plain SQL — this is the
     * variant an independent engine can replay end-to-end, which is what
     * lets the d11 corpus-cleaning composite and the d40 star miner carry
-    * full DuckDB twins. (An earlier form paid numHashes md5 calls per
-    * shingle; the affine rehash computes the same-quality family with one
-    * md5 + numHashes multiply-mods — at corpus scale the difference is
-    * 16× the hashing bill.) Same (id_a, id_b, jaccard) contract as the
-    * production family. */
-  def minHashNearDuplicatesMd5(df: DataFrame, idCol: String, textCol: String,
-                               shingleK: Int = 3, numHashes: Int = 16,
-                               numBands: Int = 4,
-                               jaccardThreshold: Double = 0.8): DataFrame = {
-    val (sh, _, banded) = md5Bands(df, idCol, textCol, shingleK, numHashes, numBands)
-    verifyJaccard(pairCandidates(banded, Seq("band", "bkey")), sh, jaccardThreshold)
+    * full DuckDB twins: one md5 + Md5Hashes multiply-mods per shingle.
+    * Same (id_a, id_b, jaccard) contract as the production family. */
+  def minHashNearDuplicatesMd5(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (sh, _, banded) = md5Bands(df, idCol, textCol)
+    verifyJaccard(pairCandidates(banded, Seq("band", "bkey")), sh)
   }
 
   /** STAR-reduced LSH near-duplicates on the md5 hash family — the
@@ -164,11 +173,9 @@ object Dedup {
     * step is reproducible in plain SQL, which is what lets d40 be
     * oracle-gated. */
   def minHashNearDuplicatesMd5Star(df: DataFrame, idCol: String,
-                                   textCol: String, shingleK: Int = 3,
-                                   numHashes: Int = 16, numBands: Int = 4,
-                                   jaccardThreshold: Double = 0.8): DataFrame = {
-    val (sh, _, banded) = md5Bands(df, idCol, textCol, shingleK, numHashes, numBands)
-    verifyJaccard(starCandidates(banded, Seq("band", "bkey")), sh, jaccardThreshold)
+                                   textCol: String): DataFrame = {
+    val (sh, _, banded) = md5Bands(df, idCol, textCol)
+    verifyJaccard(starCandidates(banded, Seq("band", "bkey")), sh)
   }
 
   /** Modulus of the affine rehash family: the smallest prime above 2³²
@@ -243,23 +250,22 @@ object Dedup {
 
   /** Shingle sets, the (id, seed, mh) signature of [[affineSignature]], and
     * (id, band, band-signature) rows for the md5-seeded affine family: one
-    * md5 per distinct shingle, numHashes affine rehashes per occurrence
+    * md5 per distinct shingle, Md5Hashes affine rehashes per occurrence
     * (cheap multiply-mods), min-reduce per seed. Band key = ordered minhash
     * values of the band's seeds: sort_array on (seed, mh) structs makes the
     * key deterministic under shuffle order. */
-  private[graft] def md5Bands(df: DataFrame, idCol: String, textCol: String,
-                       shingleK: Int, numHashes: Int,
-                       numBands: Int): (DataFrame, DataFrame, DataFrame) = {
-    val rowsPerBand = numHashes / numBands
+  private[graft] def md5Bands(df: DataFrame, idCol: String,
+                              textCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val rowsPerBand = Md5Hashes / NumBands
     // checkpointed like jvmBands: `sh` feeds the signature and the callers'
     // sizes and verify joins, `banded` both sides of the band self-join
     val sh = df.select(col(idCol).as("id"),
         TextFns.tokens(col(textCol)).as("toks"))
-      .select(col("id"), TextExprs.distinctShingles(col("toks"), shingleK).as("sh"))
+      .select(col("id"), TextExprs.distinctShingles(col("toks"), ShingleK).as("sh"))
       .filter(size(col("sh")) > 0)
       .localCheckpoint(false)
     val sig = affineSignature(
-      sh.select(col("id"), explode(col("sh")).as("shingle")), Seq("id"), numHashes)
+      sh.select(col("id"), explode(col("sh")).as("shingle")), Seq("id"), Md5Hashes)
     val banded = sig
       .withColumn("band", (col("seed") / rowsPerBand).cast("int"))
       .groupBy("id", "band")
@@ -271,10 +277,9 @@ object Dedup {
   }
 
   /** SimHash near-duplicates: 64-bit sketch, block on 4 × 16-bit sub-keys
-    * (any pair within hamming distance <= 3 shares at least one exact 16-bit
-    * quarter by pigeonhole), verify with bit_count(xor). */
-  def simHashNearDuplicates(df: DataFrame, idCol: String, textCol: String,
-                            maxHamming: Int = 3): DataFrame = {
+    * (any pair within hamming distance <= MaxHamming shares at least one
+    * exact 16-bit quarter by pigeonhole), verify with bit_count(xor). */
+  def simHashNearDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // checkpoint: the simhash sketch feeds the 4-way quarter union and
     // then BOTH sides of the bucket self-join — un-checkpointed, the
     // full-text sketch expression re-evaluates up to 8x (the quarter
@@ -295,7 +300,7 @@ object Dedup {
       .select(col("id").as("id_a"), col("id_b"),
         SimHash.hamming(col("sk"), col("sk_b")).as("hamming"))
       .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
   }
 
   /** Exact n-gram Jaccard over all pairs within a blocking key — the
@@ -304,8 +309,7 @@ object Dedup {
     * before the O(|A|+|B|) intersection). Block choice is the scale knob:
     * pass a composite (e.g. source x lang) to keep blocks small. */
   def blockedJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                          blockCols: Seq[String], shingleK: Int = 3,
-                          threshold: Double = 0.5): DataFrame = {
+                          blockCols: Seq[String], threshold: Double): DataFrame = {
     // checkpoint: the shingle-set construction feeds both self-join sides
     // (same multi-consumer class as simHashNearDuplicates).
     // fanOut BEFORE the checkpoint: the probe side of the block
@@ -314,7 +318,7 @@ object Dedup {
     val sh = graft.core.Par.fanOut(df.select(
       concat_ws("|", blockCols.map(col): _*).as("block"),
       col(idCol).as("id"), TextFns.tokens(col(textCol)).as("toks")))
-      .withColumn("sh", TextExprs.distinctShingles(col("toks"), shingleK))
+      .withColumn("sh", TextExprs.distinctShingles(col("toks"), ShingleK))
       .select(col("block"), col("id"), col("sh"), size(col("sh")).as("sz"))
       .filter(col("sz") > 0)
       .localCheckpoint(false)
@@ -420,7 +424,7 @@ object Dedup {
 
   /** ExactSubstr-style duplicate-SPAN removal (Lee et al. 2021,
     * "Deduplicating Training Data Makes Language Models Better",
-    * arXiv:2107.06499): find every length-`windowTokens` token run that
+    * arXiv:2107.06499): find every length-`WindowTokens` token run that
     * occurs more than once in the corpus, elect its FIRST occurrence (the
     * minimal (doc_id, position)) as keeper, and cut every other occurrence
     * out of its document. The guarantee is WINDOW-granular, not
@@ -446,10 +450,9 @@ object Dedup {
     * Returns (doc_id from `idCol`, n_tokens, n_removed, cleaned_text) for
     * EVERY input doc — cleaned_text re-joined on single spaces
     * (whitespace normalizes; token content is untouched). */
-  def exactSubstringRemoval(df: DataFrame, idCol: String, textCol: String,
-                            windowTokens: Int = 20): DataFrame = {
+  def exactSubstringRemoval(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val L = windowTokens
+    val L = WindowTokens
     // lazy checkpoint: the tokenize pass feeds window hashing, the
     // positional token explode, AND the final n_tokens join — one regex
     // scan instead of three (cached MEMORY_AND_DISK, spills at scale)
@@ -546,15 +549,14 @@ object Dedup {
   /** Embedding-cosine near-duplicates via random-hyperplane LSH blocking +
     * exact cosine verify inside buckets. */
   def embeddingNearDuplicates(df: DataFrame, idCol: String, vecCol: String,
-                              dim: Int, bits: Int = 12,
-                              cosineThreshold: Double = 0.95): DataFrame = {
+                              dim: Int): DataFrame = {
     val sig = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("bucket", VectorFns.hyperplaneSignature(col("v"), bits, dim))
+      .withColumn("bucket", VectorFns.hyperplaneSignature(col("v"), HyperplaneBits, dim))
     val b = sig.select(col("bucket"), col("id").as("id_b"), col("v").as("v_b"))
     sig.join(b, Seq("bucket"))
       .filter(col("id") < col("id_b"))
       .withColumn("cosine", VectorExprs.cosine(col("v"), col("v_b")))
-      .filter(col("cosine") >= cosineThreshold)
+      .filter(col("cosine") >= EmbeddingCosine)
       .select(col("id").as("id_a"), col("id_b"), col("cosine"))
   }
 }

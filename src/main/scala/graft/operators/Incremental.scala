@@ -32,7 +32,7 @@ import graft.functions.TextFns
   *    freeze time). A language unseen at freeze time has no quota (rate
   *    0) until the state is re-frozen — quota drift is an explicit
   *    re-freeze, never a silent per-batch recomputation.
-  *  - sharding: shard = md5(doc_id) mod nShards — STATELESS, unlike
+  *  - sharding: shard = md5(doc_id) mod NShards — STATELESS, unlike
   *    d52's position-interleave (equal ±1 but a global property: one new
   *    doc would reshuffle every existing shard assignment). Hash sharding
   *    is stable under increments at the cost of binomial (not exact ±1)
@@ -46,6 +46,9 @@ import graft.functions.TextFns
   */
 object Incremental {
 
+  /** Output shards of a kept doc. */
+  private val NShards = 8
+
   /** Frozen curation state. `storeHashes`: one `nh` column — the
     * normalized hash of EVERY doc ever seen (kept or dropped: a dup of a
     * dropped doc is still a dup). `clsWeights`: (bucket, w) from
@@ -54,8 +57,7 @@ object Incremental {
     */
   final case class CurationState(storeHashes: DataFrame,
                                  clsWeights: Option[DataFrame],
-                                 rates: Seq[(String, Long)],
-                                 nShards: Int = 8)
+                                 rates: Seq[(String, Long)])
 
   /** The d51/d54 dedup key: md5 of the CCNet-normalized text, NULL-safe
     * (a NULL text must still be attributed, not vanish through a
@@ -126,6 +128,6 @@ object Incremental {
           .when(col("mix_keep").isNull, "mix")
           .otherwise("kept").as("stage"),
         when(col("mix_keep").isNotNull,
-          hashShard(col("doc_id"), state.nShards)).as("shard"))
+          hashShard(col("doc_id"), NShards)).as("shard"))
   }
 }

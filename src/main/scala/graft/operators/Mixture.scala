@@ -29,6 +29,13 @@ import graft.functions.TextFns
   */
 object Mixture {
 
+  /** Hashed bigram buckets of the DSIR model. */
+  private val DsirBuckets = 8192
+  /** md5 id buckets of the token-budget fill: its overshoot granularity. */
+  private val BudgetBuckets = 1000
+  /** UniMax's per-group epoch ceiling. */
+  private val EpochCap = 4
+
   /** Per-group basis-point keep-rates for temperature resampling.
     *
     * quota_g = targetFraction × N_total × n_g^α / Σ_h n_h^α;
@@ -70,11 +77,11 @@ object Mixture {
     * `isTarget` marks the target-distribution rows INSIDE df (the paper
     * uses an external target corpus; a column predicate covers both — pass
     * e.g. `col("lang") === "en"` or join-derived flags). Bucket hashing is
-    * md5-derived (SQL-replayable, the d21 convention), `numBuckets`
+    * md5-derived (SQL-replayable, the d21 convention), and `DsirBuckets`
     * bounds the model at a broadcastable size regardless of corpus scale.
     *
     * Scale shape: one explode pass over bigram occurrences, one shuffle to
-    * the per-(doc, bucket) counts, and the bucket model (≤ numBuckets
+    * the per-(doc, bucket) counts, and the bucket model (≤ DsirBuckets
     * rows) BROADCASTS back — the per-doc weight sum never shuffles the
     * text. Output: (id, n_bigrams, log_weight), docs with < 2 tokens
     * excluded (no bigrams → no evidence).
@@ -83,8 +90,7 @@ object Mixture {
     * (last-ulp platform-defined) and the per-doc sum is accumulation-order
     * sensitive, the same d24 envelope that has held green since r3. */
   def dsirLogWeights(df: DataFrame, idCol: String, textCol: String,
-                     isTarget: org.apache.spark.sql.Column,
-                     numBuckets: Int = 8192): DataFrame = {
+                     isTarget: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.types.DoubleType
     val toks = df.select(col(idCol).as("id"), isTarget.as("__tgt"),
         graft.functions.TextFns.tokens(col(textCol)).as("t"))
@@ -95,7 +101,7 @@ object Mixture {
       .select(col("id"), col("__tgt"),
         (TextFns.hash32(concat_ws(" ",
             element_at(col("t"), col("i")),
-            element_at(col("t"), col("i") + 1))) % numBuckets).as("bucket"))
+            element_at(col("t"), col("i") + 1))) % DsirBuckets).as("bucket"))
     // ONE tokenize+explode scan feeds both the bucket model and the
     // per-doc counts: a lazy checkpoint truncates the plan so neither
     // consumer re-derives it (the duplicated-lazy-plan trap measured at
@@ -113,9 +119,9 @@ object Mixture {
     val totals = model.agg(sum(col("c_raw")).as("__r"), sum(col("c_tgt")).as("__t"))
     val ratio = model.crossJoin(broadcast(totals)).select(col("bucket"),
       (log((col("c_tgt") + 1).cast(DoubleType) /
-          (col("__t") + numBuckets).cast(DoubleType)) -
+          (col("__t") + DsirBuckets).cast(DoubleType)) -
         log((col("c_raw") + 1).cast(DoubleType) /
-          (col("__r") + numBuckets).cast(DoubleType)))
+          (col("__r") + DsirBuckets).cast(DoubleType)))
         .as("lr"))
     perDocBucket.join(broadcast(ratio), Seq("bucket"))
       .groupBy("id")
@@ -133,14 +139,14 @@ object Mixture {
     * Scale shape (the reason this is NOT a cumulative-sum window over
     * docs): a running sum per group would put one group's entire corpus
     * in one window partition — the single-partition trap. Instead docs
-    * hash into `numBuckets` md5 buckets; one shuffle aggregates
+    * hash into `BudgetBuckets` md5 buckets; one shuffle aggregates
     * per-(group, bucket) token mass; the cumulative fill runs over the
     * BOUNDED (group × bucket) relation; a bucket is kept when the mass
     * before it leaves budget headroom (cum − t < budget). Selection is
     * then a broadcast semi-join on (group, bucket) — one more narrow
     * pass. Budget is honored at bucket granularity: overshoot is bounded
-    * by one bucket's mass (corpus_tokens/numBuckets in expectation —
-    * raise `numBuckets` for tighter tracking), and a doc's fate depends
+    * by one bucket's mass (corpus_tokens/BudgetBuckets in expectation),
+    * and a doc's fate depends
     * only on its id hash and the group's aggregate fill, never on
     * shuffle order.
     *
@@ -155,16 +161,15 @@ object Mixture {
     * budget key. Callers wanting those rows preserved must list the
     * group (or fill NULLs) before selecting. */
   def tokenBudgetSelect(df: DataFrame, groupCol: String, idCol: String,
-                        tokensCol: String, budgets: DataFrame,
-                        numBuckets: Int = 10000): DataFrame = {
+                        tokensCol: String, budgets: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val b = budgets.toDF("__grp", "__budget")
-    val bucket = TextFns.hash32(col(idCol).cast(StringType)) % numBuckets
+    val bucket = TextFns.hash32(col(idCol).cast(StringType)) % BudgetBuckets
     val wb = df.withColumn("__bucket", bucket)
     val perBucket = wb.groupBy(col(groupCol).cast(StringType).as("__grp"),
         col("__bucket"))
       .agg(sum(col(tokensCol)).as("__t"))
-    // window over ≤ numBuckets rows per group — bounded, partitioned
+    // window over ≤ BudgetBuckets rows per group — bounded, partitioned
     val w = Window.partitionBy("__grp").orderBy("__bucket")
     // rename the semi-join keys: kept descends from wb, so a same-name
     // equality would resolve to a trivially-true self-reference
@@ -217,7 +222,7 @@ object Mixture {
     * arXiv:2304.09151 "UniMax: Fairer and More Effective Language
     * Sampling for Large-Scale Multilingual Pretraining"): distribute a
     * global token budget as UNIFORMLY as possible across groups, except
-    * that no group may repeat past `epochCap` epochs — small groups
+    * that no group may repeat past `EpochCap` epochs — small groups
     * saturate at their cap, the leftover spreads evenly over the rest.
     * The d61 rule answers "how many epochs per source given an equal
     * share"; UniMax answers the dual: "what share per group given an
@@ -242,12 +247,11 @@ object Mixture {
     * (cap, group) order; `budgetLeft` is the surplus when EVERY group
     * caps (B ≥ Σcap — reported, not silently vanished), else 0 — the
     * div/mod split allocates the whole remainder by construction. */
-  def unimaxAllocation(counts: Seq[(String, Long)], budget: Long,
-                       epochCap: Int = 4): Seq[(String, Long, Long, Boolean, Long, Long)] = {
+  def unimaxAllocation(counts: Seq[(String, Long)],
+                       budget: Long): Seq[(String, Long, Long, Boolean, Long, Long)] = {
     require(budget >= 0L, s"budget must be >= 0, got $budget")
-    require(epochCap >= 1, s"epochCap must be >= 1, got $epochCap")
     require(counts.forall(_._2 >= 0L), "group token masses must be >= 0")
-    val sorted = counts.map { case (g, n) => (g, n, n * epochCap) }
+    val sorted = counts.map { case (g, n) => (g, n, n * EpochCap) }
       .sortBy { case (g, _, cap) => (cap, g) }
     val k = sorted.size
     // the capped prefix: walk caps ascending while the equal share of the

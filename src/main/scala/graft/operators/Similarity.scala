@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{VectorExprs, VectorFns}
+import graft.functions.VectorExprs
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 
@@ -18,6 +18,16 @@ import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
   *   nCells of the brute cost.
   */
 object Similarity {
+
+  /** KMeans iterations of every fit here: IVF cells and PQ codebooks only
+    * need a reasonable Voronoi partition, not a converged clustering —
+    * recall is governed by nProbe, and each extra iteration is a full
+    * corpus pass. */
+  private val MaxIter = 8
+  /** Fit seeds of the IVF centroids and of the PQ codebooks (subspace s
+    * fits with PqSeed + s). */
+  private val KmeansSeed = 42L
+  private val PqSeed = 7L
 
   /** Exact top-k cosine neighbors for each query vector.
     * Output: (query_id, neighbor_id, cosine, rank), self-pairs excluded.
@@ -62,10 +72,10 @@ object Similarity {
     * The healthy path pays nothing extra. Shared by [[kmeansCentroids]]
     * and [[pqTrain]] — subvector slices collapse to duplicates even more
     * readily than full vectors. */
-  private def fitCenters(assembled: DataFrame, k: Int, seed: Long,
-                         maxIter: Int): Array[Array[Double]] = {
+  private def fitCenters(assembled: DataFrame, k: Int,
+                         seed: Long): Array[Array[Double]] = {
     def fit(kEff: Int) = new KMeans().setK(kEff).setSeed(seed)
-      .setFeaturesCol("__vec").setMaxIter(maxIter).fit(assembled)
+      .setFeaturesCol("__vec").setMaxIter(MaxIter).fit(assembled)
       .clusterCenters.map(_.toArray)
     try fit(k)
     catch {
@@ -91,14 +101,10 @@ object Similarity {
     }
   }
 
-  def kmeansCentroids(corpus: DataFrame, vecCol: String, k: Int,
-                      seed: Long = 42L, maxIter: Int = 8): DataFrame = {
+  def kmeansCentroids(corpus: DataFrame, vecCol: String, k: Int): DataFrame = {
     val assembled = corpus.select(
       array_to_vector(col(vecCol).cast("array<double>")).as("__vec"))
-    // 8 iterations: IVF cells only need a reasonable Voronoi partition, not
-    // a converged clustering — recall is governed by nProbe, and each extra
-    // iteration is a full corpus pass.
-    val centers = fitCenters(assembled, k, seed, maxIter)
+    val centers = fitCenters(assembled, k, KmeansSeed)
     val spark = corpus.sparkSession
     import spark.implicits._
     centers.zipWithIndex
@@ -304,12 +310,12 @@ object Similarity {
     * ([[graft.functions.VectorFns.sqDist]]), argmin ties break to the
     * lowest codeword index (first position of the exact minimum bits),
     * ADC top-k ties to the lowest neighbor id. */
-  def pqTrain(corpus: DataFrame, vecCol: String, dim: Int, m: Int, k: Int,
-              seed: Long = 42L, maxIter: Int = 8): Array[Array[Array[Double]]] = {
+  def pqTrain(corpus: DataFrame, vecCol: String, dim: Int, m: Int,
+              k: Int): Array[Array[Array[Double]]] = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val sub = dim / m
     // The m subspace fits are INDEPENDENT jobs on one SparkContext —
-    // submitted sequentially they serialize m × maxIter small stages and
+    // submitted sequentially they serialize m × MaxIter small stages and
     // leave the cluster idle through every tail (opt guide §2.6: overlap
     // independent jobs so the next fit's tasks back-fill freed executors).
     // A bounded pool keeps a few fits in flight; each fit's input plan,
@@ -324,7 +330,7 @@ object Similarity {
         // per-subspace seed: subspaces must not share a clustering; the
         // guarded fit matters MORE here — low-dim subvector slices collapse
         // to duplicate points far more readily than full vectors
-        fitCenters(slices, k, seed + s, maxIter)
+        fitCenters(slices, k, PqSeed + s)
       }}
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futs),
@@ -341,33 +347,13 @@ object Similarity {
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
                codebooks: Array[Array[Array[Double]]],
                keep: Seq[String] = Nil): DataFrame =
-    // ONE expression node (r14): the m·k sqDist column forest below
-    // ([[pqEncodeColumnForm]], kept as the readable reference and spec
-    // twin) was interpreted per (row, codeword) AND cost seconds of
-    // Catalyst planning per query — the e8/e12 wall was mostly the
-    // driver walking thousands of expression nodes.
+    // ONE expression node, bit-identical to the m·k sqDist column forest
+    // (argmin = first position of the exact minimum): that forest was
+    // interpreted per (row, codeword) and cost seconds of Catalyst
+    // planning per query.
     corpus.select((col(idCol).as("id") +: keep.map(col)) :+
       graft.functions.VectorExprs.pqEncodeCodes(col(vecCol), codebooks)
         .as("codes"): _*)
-
-  /** The replaced column form of the code construction — the readable
-    * reference [[PqEncodeCodes]] must stay bit-identical to (argmin =
-    * first position of the exact minimum, zip_with null padding); pinned
-    * by TextVectorSpec on value/null/short-vector fixtures. */
-  private[graft] def pqEncodeColumnForm(corpus: DataFrame, idCol: String,
-                                        vecCol: String,
-                                        codebooks: Array[Array[Array[Double]]])
-                                       : DataFrame = {
-    val sub = codebooks(0)(0).length
-    val codes = array(codebooks.indices.map { s =>
-      val subv = slice(col(vecCol), s * sub + 1, sub)
-      val dists = array(codebooks(s).map(cw =>
-        VectorFns.sqDist(subv, typedLit(cw.toSeq))): _*)
-      // first position of the exact minimum = argmin with lowest-index ties
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }: _*)
-    corpus.select(col(idCol).as("id"), codes.as("codes"))
-  }
 
   /** The per-query ADC lookup table: m×k exact subspace distances from
     * `vec` to every codeword, as one literal-coded array<array<double>>
@@ -375,19 +361,8 @@ object Similarity {
     * join — the pair scan then never touches the raw vector. */
   private def pqLut(vec: org.apache.spark.sql.Column,
                     codebooks: Array[Array[Array[Double]]]) =
-    // one expression node (r14) — see pqEncode; column twin below for spec
+    // one expression node, bit-identical to the per-subspace sqDist arrays
     graft.functions.VectorExprs.pqLut(vec, codebooks)
-
-  /** The replaced column form of the LUT — spec twin of [[PqLutExpr]]. */
-  private[graft] def pqLutColumnForm(vec: org.apache.spark.sql.Column,
-                                     codebooks: Array[Array[Array[Double]]]) = {
-    val sub = codebooks(0)(0).length
-    array(codebooks.indices.map { s =>
-      val subv = slice(vec, s * sub + 1, sub)
-      array(codebooks(s).map(cw =>
-        VectorFns.sqDist(subv, typedLit(cw.toSeq))): _*)
-    }: _*)
-  }
 
   /** Σ_s lut[s][code_s] in index order — the same sequential s-order sum
     * the oracle replays with list_sum(list(d ORDER BY s)). Native codegen
@@ -485,13 +460,12 @@ object Similarity {
     * queries to pick nProbe for a target recall; the sample cost is
     * |sample| × |corpus| (one brute pass), negligible next to serving. */
   def measureRecall(sampleQueries: DataFrame, corpus: DataFrame, idCol: String,
-                    vecCol: String, k: Int, nCells: Int, nProbe: Int,
-                    seed: Long = 42L): Double = {
+                    vecCol: String, k: Int, nCells: Int, nProbe: Int): Double = {
     def pairs(df: DataFrame): Set[(Any, Any)] =
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.get(0), r.get(1))).toSet
     val brute = pairs(bruteForceTopK(sampleQueries, corpus, idCol, vecCol, k))
-    val centroids = kmeansCentroids(corpus, vecCol, nCells, seed)
+    val centroids = kmeansCentroids(corpus, vecCol, nCells)
     val cells = assignCells(corpus, centroids, idCol, vecCol)
     val q = sampleQueries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val ivf = pairs(ivfTopK(q, cells, centroids, k, nProbe))

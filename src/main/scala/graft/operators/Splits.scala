@@ -17,11 +17,16 @@ import graft.functions.TextFns
   */
 object Splits {
 
+  /** Percent of the 100 buckets that go to train, and to val; md5 salt. */
+  private val TrainPct = 80
+  private val ValPct = 10
+  private val Salt = "split"
+
   /** Deterministic group-atomic split: every row whose `groupCol` agrees
     * lands in the same split, because the split is a pure function of the
     * group key (md5 of key + salt, first 8 hex digits as an integer,
-    * mod 100), never of the row. `trainPct`/`valPct` carve the 100
-    * buckets as [0, trainPct) / [trainPct, trainPct+valPct) / rest.
+    * mod 100), never of the row. The 100 buckets carve as [0, 80) train,
+    * [80, 90) val and [90, 100) test.
     *
     * Scale shape: one narrow projection — no shuffle, no state; the split
     * of any row can be recomputed anywhere (the same stateless-routing
@@ -30,17 +35,12 @@ object Splits {
     * fractions converge to the targets only as GROUP count grows and
     * groups stay small relative to the corpus — group-atomicity trades
     * exact fractions for leakage safety by construction. */
-  def leakageSafeSplit(df: DataFrame, groupCol: Column,
-                       trainPct: Int = 80, valPct: Int = 10,
-                       salt: String = "split"): DataFrame = {
-    require(trainPct >= 1 && valPct >= 0 && trainPct + valPct <= 100,
-      s"split percentages must satisfy 1 <= train, 0 <= val, train+val <= 100; " +
-        s"got $trainPct/$valPct")
-    val bucket = (TextFns.hash32(concat(groupCol, lit("|" + salt))) % 100).cast("int")
+  def leakageSafeSplit(df: DataFrame, groupCol: Column): DataFrame = {
+    val bucket = (TextFns.hash32(concat(groupCol, lit("|" + Salt))) % 100).cast("int")
     df.withColumn("split_bucket", bucket)
       .withColumn("split",
-        when(col("split_bucket") < trainPct, "train")
-          .when(col("split_bucket") < trainPct + valPct, "val")
+        when(col("split_bucket") < TrainPct, "train")
+          .when(col("split_bucket") < TrainPct + ValPct, "val")
           .otherwise("test"))
   }
 }

@@ -17,7 +17,7 @@ import graft.core.SchemaOps
   *  - a current-year as_of downshifts one year (caller passes todayYear —
   *    plans never call now(), SURVEY §7.5);
   *  - rows with any NaN feature are invalid (the reference raises and the
-  *    runner skips that year) — filtered out, or kept tagged via keepInvalid.
+  *    runner skips that year) — filtered out.
   *
   * Scale: one groupBy over the raw table + three co-partitioned joins on
   * (country, year) — country count is small, but the same plan holds for
@@ -58,9 +58,9 @@ object MacroPipeline {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Compute macro features for every (country, as_of_year INT) grid cell. */
-  def features(grid: DataFrame, macroRaw: DataFrame, todayYear: Int,
-               keepInvalid: Boolean = false): DataFrame = {
+  /** Compute macro features for every (country, as_of_year INT) grid cell;
+    * a cell with any NaN or NULL feature is dropped. */
+  def features(grid: DataFrame, macroRaw: DataFrame, todayYear: Int): DataFrame = {
     val firsts = yearlyFirsts(macroRaw)
     def snapshot(alias: String): DataFrame = firsts.select(
       col("country").as(s"__c_$alias"), col("yr").as(s"__y_$alias"),
@@ -108,8 +108,7 @@ object MacroPipeline {
 
     val featureCols = outputCols.drop(3)
     val anyNan = featureCols.map(c => isnan(col(c)) || col(c).isNull).reduce(_ || _)
-    if (keepInvalid) out.withColumn("__invalid", anyNan)
-    else out.filter(!anyNan)
+    out.filter(!anyNan)
   }
 
   /** U6 replace-year append: delete store rows matching fresh `keys`

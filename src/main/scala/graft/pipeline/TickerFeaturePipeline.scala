@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{SchemaOps, SeriesOps}
@@ -94,10 +94,7 @@ object TickerFeaturePipeline {
     * the rows, not the files). */
   def writeStore(df: DataFrame, path: String): String = {
     val hash = contentHash(df)
-    df.write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("ticker")
-      .parquet(path)
+    graft.sinks.Sinks.writeParquet(df, path, Seq("ticker"))
     hash
   }
 

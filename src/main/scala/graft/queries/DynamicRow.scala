@@ -127,13 +127,6 @@ object DynamicRow {
       (col("b") / 10.0).as("depreciationAndAmortization"),
       (col("b") * (lit(1) + lit(3) * (col("sk") % 4)).cast(DoubleType)).as("totalDebt"),
       (col("b") / 4.0).as("cashAndShortTermInvestments"))
-    val income = statements.select("ticker", "date", "incomeBeforeTax",
-      "interestExpense", "depreciationAndAmortization", "eps")
-    val balance = statements.select("ticker", "date", "totalDebt",
-      "cashAndShortTermInvestments")
-    val ratios = statements.select("ticker", "date", "dividendYield",
-      "priceEarningsRatio", "priceToFreeCashFlowsRatio", "payoutRatio",
-      "freeCashFlowPerShare")
     val dividends = base.select(col("ticker"), col("date"),
       (lit(1.0) + (col("b") % 300) / 100.0).as("dividend"))
     val sks = base.select(col("ticker"), col("sk")).distinct()
@@ -154,8 +147,7 @@ object DynamicRow {
     val tickers = base.select(col("ticker")).distinct()
     val grid = tickers
       .withColumn("as_of", explode(array(asOfDates.map(d => to_date(lit(d))): _*)))
-    val in = TickerFeatures.Inputs(prices, dividends, splits, ratios, income,
-      balance, statements = Some(statements))
+    val in = TickerFeatures.Inputs(prices, dividends, splits, statements)
     val tickerEtf = tickers.withColumn("etf", col("ticker"))
     TickerFeatures.dynamicFeaturesSharedIndex(grid, in, tickerEtf, etfIndex,
       minPriceRows = 0, seriesPriceBlock = false)

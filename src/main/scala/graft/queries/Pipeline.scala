@@ -124,23 +124,12 @@ object Pipeline {
     val prices = priceDiv.select("ticker", "date", "close")
     val dividends = priceDiv.filter(col("__div").isNotNull)
       .select(col("ticker"), col("date"), col("__div").as("dividend"))
-    val income = yearly.select("ticker", "date", "incomeBeforeTax",
-      "interestExpense", "depreciationAndAmortization", "eps")
-    val balance = yearly.select(col("ticker"), col("date"),
-      (col("incomeBeforeTax") / 10).as("cashAndShortTermInvestments"),
-      (col("incomeBeforeTax") / 5).as("totalDebt"))
-    val ratios = yearly.select("ticker", "date", "priceEarningsRatio",
-      "priceToFreeCashFlowsRatio", "payoutRatio", "dividendYield",
-      "freeCashFlowPerShare")
-    // income/balance/ratios are all projections of `yearly` — hand the
-    // assembly the column superset so the grid price form computes every
-    // per-cell block over one slice + aggregation (shared (ticker, date)
-    // spine).
+    // income, balance and ratio columns over yearly's one (ticker, date)
+    // spine
     val statements = yearly
       .withColumn("cashAndShortTermInvestments", col("incomeBeforeTax") / 10)
       .withColumn("totalDebt", col("incomeBeforeTax") / 5)
-    TickerFeatures.Inputs(prices, dividends, splits, ratios, income, balance,
-      statements = Some(statements))
+    TickerFeatures.Inputs(prices, dividends, splits, statements)
   }
 
   /** The S7 flow over testdata: the ticker→ETF map is
@@ -232,7 +221,7 @@ object Pipeline {
       // global WindowExec for nothing (PlanLint caught exactly that)
       import s.implicits._
       graft.analysis.Analysis.rfImportance(li,
-          Seq("f_strong", "f_mid", "f_none"), "y", numTrees = 10)
+          Seq("f_strong", "f_mid", "f_none"), "y")
         .collect()
         .sortBy(r => (-r.getDouble(1), r.getString(0)))
         .zipWithIndex
@@ -355,7 +344,7 @@ object Pipeline {
           col("c_mktsegment").as("sector"))
       graft.analysis.Scoring.constructPortfolio(
         withScores.join(sectors, Seq("ticker"), "left"),
-        n = 20, groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.9)
+        n = 20, maxCutProb = 0.9)
         .select(col("ticker"), col("as_of"), col("sector"),
           round(col("final_score"), 4).as("final_score"), col("weight"))
         .orderBy("ticker", "as_of")
@@ -402,8 +391,7 @@ object Pipeline {
           .otherwise((ck % 22).cast(DoubleType)).as("net_debt_to_ebitda"),
         ((TextFns.hash32(ck.cast(StringType)) % 10000).cast(DoubleType) / 10000.0).as("cut_prob"))
       val scored = graft.analysis.Scoring.score(feat)
-      graft.analysis.Scoring.constructPortfolio(scored, n = 20,
-        groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.25)
+      graft.analysis.Scoring.constructPortfolio(scored, n = 20, maxCutProb = 0.25)
         .select(col("ticker"), col("sector"),
           round(col("adj_yield"), 6).as("adj_yield"),
           round(col("div_growth"), 6).as("div_growth"),
@@ -429,8 +417,7 @@ object Pipeline {
           CAST(${TextFns.hash32Sql("CAST(c_custkey AS VARCHAR)")} % 10000 AS DOUBLE)
             / 10000.0 AS cut_prob
         FROM customer),
-      ${graft.analysis.Scoring.portfolioSql("feat", n = 20,
-        groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.25)}
+      ${graft.analysis.Scoring.portfolioSql("feat", n = 20, maxCutProb = 0.25)}
       SELECT ticker, sector,
         round(adj_yield, 6) AS adj_yield,
         round(div_growth, 6) AS div_growth,
@@ -536,8 +523,7 @@ object Pipeline {
         .withColumn("cut_prob",
           when(col("cut_prob") > 0.5, 1.0).otherwise(0.0))
       graft.analysis.Scoring.constructPortfolio(
-          graft.analysis.Scoring.score(verdict), n = 20,
-          groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.25)
+          graft.analysis.Scoring.score(verdict), n = 20, maxCutProb = 0.25)
         .select(col("ticker"), col("sector"), col("as_of"),
           round(col("adj_yield"), 6).as("adj_yield"),
           round(col("div_growth"), 6).as("div_growth"),
@@ -564,8 +550,7 @@ object Pipeline {
                ELSE CAST(c_custkey % 22 AS DOUBLE) END AS net_debt_to_ebitda
         FROM customer
         WHERE c_custkey % 7 IN (3, 4, 5, 6)),
-      ${graft.analysis.Scoring.portfolioSql("feat", n = 20,
-        groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.25)}
+      ${graft.analysis.Scoring.portfolioSql("feat", n = 20, maxCutProb = 0.25)}
       SELECT ticker, sector, as_of,
         round(adj_yield, 6) AS adj_yield,
         round(div_growth, 6) AS div_growth,

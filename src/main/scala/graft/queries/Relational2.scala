@@ -289,12 +289,11 @@ object Relational2 {
             .as(s"corr_${a}_${b}")
         }
         val wide = li.agg(aggs.head, aggs.tail: _*)
-        // long form: one row per pair
-        val rows = pairs.map { case (a, b) =>
-          s"SELECT '$a' AS col_a, '$b' AS col_b, corr_${a}_${b} AS corr FROM __w"
-        }.mkString(" UNION ALL ")
-        wide.createOrReplaceTempView("__w")
-        s.sql(rows).orderBy("col_a", "col_b")
+        // long form: one row per pair, selected from the one-row aggregate
+        pairs.map { case (a, b) =>
+          wide.select(lit(a).as("col_a"), lit(b).as("col_b"),
+            col(s"corr_${a}_${b}").as("corr"))
+        }.reduce(_.union(_)).orderBy("col_a", "col_b")
       },
       Some {
         val pairs = for (a <- cols; b <- cols if a < b) yield (a, b)

@@ -617,8 +617,7 @@ object Relational7 {
     * the same two integers. */
   val d40 = QueryDef("d40_lsh_star",
     (s, dir) => graft.operators.Dedup.minHashNearDuplicatesMd5Star(
-      Tables.documents(s, dir), "doc_id", "text",
-      shingleK = 3, numHashes = 16, numBands = 4, jaccardThreshold = 0.5)
+      Tables.documents(s, dir), "doc_id", "text")
       .orderBy("id_a", "id_b"),
     Some(s"""WITH ${graft.operators.Dedup.affineSignatureSql("documents", "doc_id", "text", 16)},
       banded AS (SELECT doc_id, CAST(seed // 4 AS INT) AS band,

@@ -276,7 +276,7 @@ object ScaleOps {
     (s, dir) => {
       val pairs = graft.operators.Dedup.blockedJaccardPairs(
         Tables.documents(s, dir), "doc_id", "text",
-        blockCols = Seq("source", "lang"), shingleK = 3, threshold = 0.02)
+        blockCols = Seq("source", "lang"), threshold = 0.02)
         .select("id_a", "id_b")
       graft.operators.Dedup.connectedComponents(pairs, "id_a", "id_b")
         .withColumnRenamed("node", "doc_id")

@@ -141,12 +141,10 @@ object TextVector {
   val d5 = QueryDef("d5_minhash_dedup",
     (s, dir) => {
       val docs = Tables.documents(s, dir)
-      val jvm = Dedup.minHashNearDuplicates(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 32, numBands = 4, jaccardThreshold = 0.5)
+      val jvm = Dedup.minHashNearDuplicates(docs, "doc_id", "text")
         .select(lit("jvm").as("family"), col("id_a"), col("id_b"),
           round(col("jaccard"), 6).as("jaccard"))
-      val md5f = Dedup.minHashNearDuplicatesMd5(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 16, numBands = 4, jaccardThreshold = 0.5)
+      val md5f = Dedup.minHashNearDuplicatesMd5(docs, "doc_id", "text")
         .select(lit("md5").as("family"), col("id_a"), col("id_b"),
           round(col("jaccard"), 6).as("jaccard"))
       jvm.union(md5f).orderBy("family", "id_a", "id_b")
@@ -174,8 +172,7 @@ object TextVector {
     * blocked on (source, lang) to bound the quadratic. */
   val d6 = QueryDef("d6_ngram_jaccard",
     (s, dir) => Dedup.blockedJaccardPairs(Tables.documents(s, dir),
-      "doc_id", "text", blockCols = Seq("source", "lang"), shingleK = 3,
-      threshold = 0.05)
+      "doc_id", "text", blockCols = Seq("source", "lang"), threshold = 0.05)
       .withColumn("jaccard", round(col("jaccard"), 6))
       .orderBy("id_a", "id_b"),
     Some(s"""WITH sh AS (SELECT doc_id, source, lang,
@@ -199,7 +196,7 @@ object TextVector {
     * floors against the md5-64 twin, both fixtures). */
   val d7 = QueryDef("d7_simhash_dedup",
     (s, dir) => Dedup.simHashNearDuplicates(Tables.documents(s, dir),
-      "doc_id", "text", maxHamming = 3)
+      "doc_id", "text")
       .orderBy("id_a", "id_b"),
     None,
     // sandwich (r12 task 6): d45 replays the identical pipeline on an
@@ -285,11 +282,8 @@ object TextVector {
     * end to end. */
   val d11 = QueryDef("d11_clean_corpus",
     (s, dir) => {
-      val (clean, stats) = graft.operators.CorpusPipeline.cleanCorpus(
-        Tables.documents(s, dir), jaccardThreshold = 0.5, minTokens = 5,
-        pairFinder = Some((d, i, t, j) =>
-          graft.operators.Dedup.minHashNearDuplicatesMd5(d, i, t,
-            jaccardThreshold = j)))
+      val (clean, stats) =
+        graft.operators.CorpusPipeline.cleanCorpus(Tables.documents(s, dir))
       clean.select(col("doc_id"), lit(stats.input).as("n_input"),
         lit(stats.afterNearDup).as("n_after_neardup"))
         .orderBy("doc_id")
@@ -614,7 +608,7 @@ object TextVector {
     * (TextVectorSpec pins the inlined constants == hash(lit(...)).) */
   val e4 = QueryDef("e4_embedding_neardup",
     (s, dir) => Dedup.embeddingNearDuplicates(Tables.embeddings(s, dir),
-      "vec_id", "embedding", dim = 64, bits = 6, cosineThreshold = 0.3)
+      "vec_id", "embedding", dim = 64)
       .withColumn("cosine", round(col("cosine"), 4))
       .orderBy("id_a", "id_b"),
     Some {

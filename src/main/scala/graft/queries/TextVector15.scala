@@ -60,8 +60,7 @@ object TextVector15 {
   private[graft] def d80Relations(docs: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
          org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val (sh, sig, banded) = Dedup.md5Bands(docs, "doc_id", "text",
-      shingleK = 3, numHashes = 16, numBands = 4)
+    val (sh, sig, banded) = Dedup.md5Bands(docs, "doc_id", "text")
     val predicted = Dedup.pairCandidates(banded, Seq("band", "bkey"))
     val sizes = sh.select(col("id"), size(col("sh")).cast(LongType).as("n"))
     val inter = sh.select(col("id"), explode(col("sh")).as("shingle"))

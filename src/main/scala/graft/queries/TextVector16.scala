@@ -127,8 +127,7 @@ object TextVector16 {
     (s, dir) => {
       val docs = Tables.documents(s, dir)
       val scored = Classifier.paretoQualityFilter(docs, "doc_id", "text",
-          col("source").isin("src0", "src1", "src2"),
-          alpha = 9, numBuckets = 4096)
+          col("source").isin("src0", "src1", "src2"))
         .join(docs.select(col("doc_id").as("id"),
           col("source").isin("src0", "src1", "src2").as("pos")), Seq("id"))
         // globalNtile consumes its input THREE times (count, bucket

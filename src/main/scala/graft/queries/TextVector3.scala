@@ -14,6 +14,9 @@ import graft.functions.TextFns
   */
 object TextVector3 {
 
+  /** Block size above which [[editDistancePairs]] takes the hot path. */
+  private val HotThreshold = 256
+
   def defs: Seq[QueryDef] = Seq(d28, d29, d30, s6, s7)
 
   /** Edit-distance candidate pairs via PassJoin segment matching (Li,
@@ -73,7 +76,7 @@ object TextVector3 {
     * doubles as the completeness check, as before). Measured at sf10:
     * hot-block mass 26.9M → ~0.4–1.1M under a single 7-char complement
     * slice; the probe inflation is ×~25 on hot probe rows only. The
-    * default threshold 256 comes from a measured sf10 sweep (64/256/1024/
+    * threshold 256 (`HotThreshold`) comes from a measured sf10 sweep (64/256/1024/
     * off → 31/29/34/42 s, identical 295,342 output rows at every setting
     * — the output-identity claim checked empirically beyond the oracle
     * SFs): exploded secondary rows price ~an order of magnitude higher
@@ -83,7 +86,7 @@ object TextVector3 {
     * (l − w < 2(k+1)) stay cold — the tiny-string stratum is inherently
     * quadratic (scaladoc above). */
   def editDistancePairs(docs: DataFrame, prefixLen: Int,
-                        maxDist: Int, hotThreshold: Int = 256): DataFrame = {
+                        maxDist: Int): DataFrame = {
     val k = maxDist
     val nSeg = k + 1
     // segmentation of an l-length string (SQL fragments over a length
@@ -140,7 +143,7 @@ object TextVector3 {
     // n/threshold-bounded, consumed by two marking joins -> checkpoint
     val hotKeys = segs.groupBy(pk.map(col): _*)
       .agg(count(lit(1)).as("__c"))
-      .filter(col("__c") > hotThreshold &&
+      .filter(col("__c") > HotThreshold &&
         expr(s"l - ${segLen("l", "j")}") >= 2 * nSeg)
       .select(pk.map(col): _*)
       .withColumn("__hot", lit(true))

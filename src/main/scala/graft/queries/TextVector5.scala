@@ -138,8 +138,7 @@ object TextVector5 {
   val d43 = QueryDef("d43_dsir_weights",
     (s, dir) => {
       val docs = Tables.documents(s, dir)
-      Mixture.dsirLogWeights(docs, "doc_id", "text",
-          col("lang") === "en", numBuckets = 8192)
+      Mixture.dsirLogWeights(docs, "doc_id", "text", col("lang") === "en")
         .select(col("id").as("doc_id"), col("n_bigrams"),
           round(col("log_weight"), 6).as("log_weight_r"))
         .orderBy("doc_id")
@@ -174,7 +173,7 @@ object TextVector5 {
     * lose everything and docs too short to window. */
   val d44 = QueryDef("d44_exact_substring_removal",
     (s, dir) => graft.operators.Dedup.exactSubstringRemoval(
-        Tables.documents(s, dir), "doc_id", "text", windowTokens = 20)
+        Tables.documents(s, dir), "doc_id", "text")
       .withColumnRenamed("id", "doc_id")
       .orderBy("doc_id"),
     Some(s"""WITH tok AS (SELECT doc_id,

@@ -44,7 +44,7 @@ object TextVector6 {
     * division) so no float touches the budget boundary. Judged per
     * source: input mass, budget, kept docs/tokens/buckets — the oracle
     * replays the md5 bucketing, the per-bucket fill, the cum−t < budget
-    * keep rule, and the selection join. numBuckets = 1000 keeps the
+    * keep rule, and the selection join. The 1000 buckets keep the
     * bucket-granularity overshoot visible at every judged SF. */
   val d47 = QueryDef("d47_token_budget_mix",
     (s, dir) => {
@@ -61,7 +61,7 @@ object TextVector6 {
         // budget boundary must stay in exact integers (DuckDB `//`)
         .withColumn("budget", expr("tokens_in * 2 DIV 5"))
       val kept = Mixture.tokenBudgetSelect(docs, "source", "doc_id",
-        "n_tokens", totals.select(col("source"), col("budget")), numBuckets = 1000)
+        "n_tokens", totals.select(col("source"), col("budget")))
       val keptAgg = kept.groupBy("source")
         .agg(count(lit(1)).as("n_kept"), sum(col("n_tokens")).as("tokens_kept"),
           countDistinct(col("__bucket")).as("n_buckets_kept"))
@@ -103,8 +103,7 @@ object TextVector6 {
     * fences bracket the libm calls (ln, exp) exactly as d24/d43. */
   val d48 = QueryDef("d48_quality_pareto",
     (s, dir) => Classifier.paretoQualityFilter(Tables.documents(s, dir),
-        "doc_id", "text", col("source").isin("src0", "src1", "src2"),
-        alpha = 9, numBuckets = 4096)
+        "doc_id", "text", col("source").isin("src0", "src1", "src2"))
       .withColumnRenamed("id", "doc_id")
       .orderBy("doc_id"),
     Some(s"""WITH tokd AS (SELECT doc_id, (source IN ('src0','src1','src2')) AS pos,

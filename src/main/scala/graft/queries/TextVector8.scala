@@ -245,8 +245,7 @@ object TextVector8 {
         clsWeights = Some(graft.operators.Classifier.trainNbWeights(
           store, "doc_id", "text",
           col("source").isin("src0", "src1", "src2"))),
-        rates = Mixture.temperatureRates(counts, alpha = 0.5, targetFraction = 0.5),
-        nShards = 8)
+        rates = Mixture.temperatureRates(counts, alpha = 0.5, targetFraction = 0.5))
       graft.operators.Incremental.curateBatch(batch, state)
         .orderBy("doc_id")
     },
@@ -450,8 +449,7 @@ object TextVector8 {
       val fixture = emb.select(col("vec_id"), (col("vec_id") % 4).as("aid"))
         .join(broadcast(anchors), "aid")
         .select(col("vec_id"), col("avec").as("embedding"))
-      val cb = Similarity.pqTrain(fixture, "embedding", dim = 64, m = 8,
-        k = 4, seed = 7L, maxIter = 8)
+      val cb = Similarity.pqTrain(fixture, "embedding", dim = 64, m = 8, k = 4)
       import scala.math.Ordering.Implicits.seqOrdering
       val flat = for {
         (subCb, si) <- cb.zipWithIndex.toSeq

@@ -96,7 +96,7 @@ object TextVector9 {
         .groupBy("source").agg(sum("n_toks").as("unique_tokens"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       val budget = perSource.map(_._2).sum * 2L + 3L
-      graft.operators.Mixture.unimaxAllocation(perSource, budget, 4)
+      graft.operators.Mixture.unimaxAllocation(perSource, budget)
         .toDF("source", "unique_tokens", "cap_tokens", "capped",
           "alloc_tokens", "budget_left")
         .withColumn("budget", lit(budget))

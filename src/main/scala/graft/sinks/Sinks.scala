@@ -12,9 +12,9 @@ import graft.operators.Validation
   */
 object Sinks {
 
-  /** K1: zstd parquet, optionally partitioned. */
+  /** K1: zstd parquet, partitioned by `partitionBy` (none when empty). */
   def writeParquet(df: DataFrame, path: String,
-                   partitionBy: Seq[String] = Nil): Unit = {
+                   partitionBy: Seq[String]): Unit = {
     val w = df.write.mode(SaveMode.Overwrite).option("compression", "zstd")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
@@ -26,7 +26,7 @@ object Sinks {
                      previousHash: Option[String]): (Boolean, String) = {
     val h = contentHash(df)
     if (previousHash.contains(h)) (false, h)
-    else { writeParquet(df, path); (true, h) }
+    else { writeParquet(df, path, Nil); (true, h) }
   }
 
   /** Order-independent content hash: the wrapping 64-bit sum of per-row

@@ -101,6 +101,9 @@ object EventStreams {
     events.withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
 
+  /** The inactivity gap that closes a session: 30 minutes. */
+  private val SessionGapMs = 30 * 60L * 1000L
+
   /** Open-session state for [[closedSessions]]. */
   final case class SessionAgg(start: java.sql.Timestamp,
                               last: java.sql.Timestamp, n: Long)
@@ -114,10 +117,8 @@ object EventStreams {
     * and an open session is flushed when the WATERMARK passes its
     * gap-deadline (no processing-time flakiness). State per key is one
     * small struct; timeout eviction bounds it. */
-  def closedSessions(events: Dataset[EventIn],
-                     gapMinutes: Int = 30): Dataset[SessionOut] = {
+  def closedSessions(events: Dataset[EventIn]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60L * 1000L
     events.withWatermark("ts", "10 minutes")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionAgg, SessionOut](
@@ -133,7 +134,7 @@ object EventStreams {
             val closed = Seq.newBuilder[SessionOut]
             incoming.foreach { e =>
               open match {
-                case Some(s) if e.ts.getTime - s.last.getTime > gapMs =>
+                case Some(s) if e.ts.getTime - s.last.getTime > SessionGapMs =>
                   closed += SessionOut(uid, s.start, s.last, s.n)
                   open = Some(SessionAgg(e.ts, e.ts, 1L))
                 case Some(s) =>
@@ -148,7 +149,7 @@ object EventStreams {
             }
             open.foreach { s =>
               state.update(s)
-              state.setTimeoutTimestamp(s.last.getTime + gapMs)
+              state.setTimeoutTimestamp(s.last.getTime + SessionGapMs)
             }
             closed.result().iterator
           }

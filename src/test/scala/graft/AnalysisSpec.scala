@@ -24,7 +24,7 @@ class AnalysisSpec extends SparkSpec {
     val df = (1 to 200).map { i =>
       (i % 10 * 1.0, i % 3 * 1.0, (i % 10) * 5.0 + 2.0)
     }.toDF("x1", "x2", "y")
-    val out = Analysis.rfImportance(df, Seq("x1", "x2"), "y", numTrees = 5)
+    val out = Analysis.rfImportance(df, Seq("x1", "x2"), "y")
       .orderBy("feature").as[(String, Double, Double)].collect()
     assert(out.map(_._1).toSeq == Seq("x1", "x2"))
     assert(math.abs(out.map(_._2).sum - 1.0) < 1e-6)
@@ -42,5 +42,13 @@ class AnalysisSpec extends SparkSpec {
     assert(r.contains("== Valuation (from ratios) =="))
     assert(r.contains("== Sector Encoding (from profile) =="))
     assert(!r.contains("status")) // ungrouped columns excluded
+  }
+
+  test("q41 builds its long form without a temp view in the session catalog") {
+    val session = spark.newSession()
+    val rows = graft.queries.Relational2.q41.fn(session,
+      s"${sys.props("user.home")}/testdata/sf0.001").collect()
+    assert(rows.length == 6, "one row per column pair")
+    assert(!session.catalog.tableExists("__w"), "q41 left the temp view __w behind")
   }
 }

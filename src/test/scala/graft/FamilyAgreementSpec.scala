@@ -152,8 +152,7 @@ class FamilyAgreementSpec extends SparkSpec {
     "(jvm >= 60%, md5 >= 40% at hamming<=3 — a recall-limited contract, " +
     "documented) and their pair sets overlap >= 60% of the smaller set") {
     val core = exactPairs(0.9)
-    val jvm = pairSet(Dedup.simHashNearDuplicates(docs, "doc_id", "text",
-      maxHamming = 3))
+    val jvm = pairSet(Dedup.simHashNearDuplicates(docs, "doc_id", "text"))
     val md5f = simhashMd5Pairs(3)
     val jvmRecall = core.intersect(jvm).size.toDouble / core.size
     val md5Recall = core.intersect(md5f).size.toDouble / core.size

@@ -84,7 +84,7 @@ class MlFitDegenerateSpec extends SparkSpec {
     // constant target: no variance to explain → importances well-defined
     val const = Seq((1.0, 2.0, 5.0), (2.0, 1.0, 5.0), (3.0, 3.0, 5.0))
       .toDF("f1", "f2", "y")
-    val r1 = Analysis.rfImportance(const, Seq("f1", "f2"), "y", numTrees = 3)
+    val r1 = Analysis.rfImportance(const, Seq("f1", "f2"), "y")
       .collect()
     assert(r1.length == 2 && r1.forall(r => !r.getDouble(1).isNaN))
     // all rows carry a NULL feature: handleInvalid("skip") empties the fit
@@ -92,14 +92,14 @@ class MlFitDegenerateSpec extends SparkSpec {
     val allNull = Seq((Option.empty[Double], 2.0, 1.0),
         (Option.empty[Double], 1.0, 2.0))
       .toDF("f1", "f2", "y")
-    val r2 = Analysis.rfImportance(allNull, Seq("f1", "f2"), "y", numTrees = 3)
+    val r2 = Analysis.rfImportance(allNull, Seq("f1", "f2"), "y")
       .collect()
     assert(r2.length == 2 && r2.forall(r => r.getDouble(1) == 0.0),
       "empty post-skip fit input → zero importances")
     assert(r2.forall(r => r.getDouble(2).isNaN), "empty fit input → NaN r2")
     // single row: degenerate but fittable
     val one = Seq((1.0, 2.0, 3.0)).toDF("f1", "f2", "y")
-    val r3 = Analysis.rfImportance(one, Seq("f1", "f2"), "y", numTrees = 3)
+    val r3 = Analysis.rfImportance(one, Seq("f1", "f2"), "y")
       .collect()
     assert(r3.length == 2)
   }
@@ -110,13 +110,11 @@ class MlFitDegenerateSpec extends SparkSpec {
     val scored = Scoring.score(twoClass
       .withColumn("cut_prob", lit(0.99)))
       .withColumn("sector", lit(null).cast("string"))
-    val empty = Scoring.constructPortfolio(scored, n = 2,
-      groupCols = Seq("sector"), maxPerGroup = 0.5, maxCutProb = 0.25)
+    val empty = Scoring.constructPortfolio(scored, n = 2, maxCutProb = 0.25)
     assert(empty.count() == 0, "nothing eligible → empty portfolio, no crash")
     val scored2 = Scoring.score(twoClass.withColumn("cut_prob", lit(0.1)))
       .withColumn("sector", lit(null).cast("string")) // one NULL group
-    val picked = Scoring.constructPortfolio(scored2, n = 2,
-      groupCols = Seq("sector"), maxPerGroup = 1.0, maxCutProb = 0.9)
+    val picked = Scoring.constructPortfolio(scored2, n = 2, maxCutProb = 0.9)
     val ws = picked.select("weight").as[Double].collect()
     assert(ws.nonEmpty && math.abs(ws.sum - 1.0) < 1e-12,
       "NULL sector rows form one group; selected weights sum to 1")

@@ -39,7 +39,11 @@ class PipelineSpec extends SparkSpec {
       ("AAA", d("2022-12-31"), 100.0, 400.0),
       ("BBB", d("2022-12-31"), 150.0, 300.0))
       .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt")
-    TickerFeatures.Inputs(prices, dividends, splits, ratios, income, balance)
+    // one statement table: AAA's 2023-03-31 ratio row carries no income
+    // or balance columns
+    val statements = ratios.join(income, Seq("ticker", "date"), "full")
+      .join(balance, Seq("ticker", "date"), "full")
+    TickerFeatures.Inputs(prices, dividends, splits, statements)
   }
 
   /** Both tickers track one market ETF, a daily series over the price days. */
@@ -180,7 +184,7 @@ class PipelineSpec extends SparkSpec {
       val in = graft.queries.Pipeline.inputsForProbe(s, dir)
       val features = graft.queries.Pipeline.p1Validated(s, dir)
         .select("ticker", "as_of", "volatility", "violations")
-      (in.statements.get.orderBy("ticker", "date").collect().toSeq,
+      (in.statements.orderBy("ticker", "date").collect().toSeq,
         features.orderBy("ticker", "as_of").collect().toSeq)
     }
     val (broadcast, broadcastFeatures) = build("spark.sql.shuffle.partitions" -> "3")

@@ -104,7 +104,8 @@ class PropertiesSpec extends SparkSpec {
       val bal = Seq(("T", java.sql.Date.valueOf("2023-12-31"), 0.0, 0.0))
         .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt")
       val grid = Seq(("T", java.sql.Date.valueOf("2024-01-01"))).toDF("ticker", "as_of")
-      val stored = graft.features.TickerFeatures.fundamentalsBlock(grid, inc, bal)
+      val stored = graft.features.TickerFeatures.fundamentalsBlock(grid,
+          inc.join(bal, Seq("ticker", "date")))
         .select("ebit_interest_cover").collect()(0).getDouble(0)
       val raw = ebit / interest
       assert(stored == raw || stored.isPosInfinity)

@@ -312,7 +312,7 @@ class ScaleOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val t = (s: String) => java.sql.Timestamp.valueOf(s)
     val stream = MemoryStream[EventStreams.EventIn]
-    val q = EventStreams.closedSessions(stream.toDS(), gapMinutes = 30)
+    val q = EventStreams.closedSessions(stream.toDS())
       .writeStream.format("memory").queryName("sessions_test")
       .outputMode(OutputMode.Append).start()
     try {
@@ -353,7 +353,7 @@ class ScaleOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val t = (s: String) => java.sql.Timestamp.valueOf(s)
     val stream = MemoryStream[EventStreams.EventIn]
-    val q = EventStreams.closedSessions(stream.toDS(), gapMinutes = 30)
+    val q = EventStreams.closedSessions(stream.toDS())
       .writeStream.format("memory").queryName("sessions_ooo_test")
       .outputMode(OutputMode.Append).start()
     try {

@@ -63,8 +63,7 @@ class ScoringSpec extends SparkSpec {
         1.0 - i * 0.01,                       // descending scores
         if (i == 0) 0.9 else 0.1)             // best scorer is ineligible
     }.toDF("ticker", "sector", "final_score", "cut_prob")
-    val port = Scoring.constructPortfolio(scored, n = 10,
-      groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.25)
+    val port = Scoring.constructPortfolio(scored, n = 10, maxCutProb = 0.25)
     val rows = port.select("ticker", "sector", "weight")
       .as[(String, String, Double)].collect()
     assert(rows.length == 10)
@@ -81,8 +80,7 @@ class ScoringSpec extends SparkSpec {
       ("C", "Tech", 0.7, 0.9)) // ineligible
       .toDF("ticker", "sector", "final_score", "cut_prob")
     // n=10 requested, cap 2/sector, only 2 eligible -> 2 selected at w=0.5
-    val port = Scoring.constructPortfolio(scored, n = 10,
-      groupCols = Seq("sector"), maxPerGroup = 0.2, maxCutProb = 0.25)
+    val port = Scoring.constructPortfolio(scored, n = 10, maxCutProb = 0.25)
     val ws = port.select("weight").as[Double].collect()
     assert(ws.length == 2)
     assert(math.abs(ws.sum - 1.0) < 1e-12)

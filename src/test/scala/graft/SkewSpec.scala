@@ -16,28 +16,6 @@ class SkewSpec extends SparkSpec {
     assert(salted == plain)
   }
 
-  test("saltedJoin left outer keeps unmatched big-side rows") {
-    val big = Seq((1, "x"), (9, "unmatched")).toDF("k", "v")
-    val small = Seq((1, "a")).toDF("k", "name")
-    val out = Skew.saltedJoin(big, small, Seq("k"), 3, "left")
-      .orderBy("k").collect()
-    assert(out.length == 2)
-    assert(out(1).isNullAt(2))
-  }
-
-  test("saltedJoin rejects join types that emit unmatched small-side rows") {
-    val big = Seq((1, "x")).toDF("k", "v")
-    val small = Seq((1, "a"), (2, "never-matched")).toDF("k", "name")
-    intercept[IllegalArgumentException] {
-      Skew.saltedJoin(big, small, Seq("k"), 3, "right_outer")
-    }
-    intercept[IllegalArgumentException] {
-      Skew.saltedJoin(big, small, Seq("k"), 3, "full_outer")
-    }
-    // semi/anti stay legal
-    assert(Skew.saltedJoin(big, small, Seq("k"), 3, "left_semi").count() == 1)
-  }
-
   test("twoPhaseAgg collect_list matches single-phase up to ordering") {
     val df = (1 to 50).map(i => (i % 2, i)).toDF("k", "v")
     val out = Skew.twoPhaseAgg(df, Seq("k"), factor = 4,

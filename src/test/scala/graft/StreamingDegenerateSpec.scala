@@ -40,7 +40,7 @@ class StreamingDegenerateSpec extends SparkSpec {
     val noDataPrev = spark.conf.get(noDataKey)
     spark.conf.set(noDataKey, "false")
     val stream = MemoryStream[EventIn]
-    val q = EventStreams.closedSessions(stream.toDS(), gapMinutes = 30)
+    val q = EventStreams.closedSessions(stream.toDS())
       .writeStream.format("memory").queryName("degen_sessions")
       .outputMode(OutputMode.Append).start()
     try {

@@ -90,8 +90,6 @@ class StreamingMacroSpec extends SparkSpec {
         "Exports (% GDP)")
     val grid = Seq(("ITA", 2024)).toDF("country", "as_of_year")
     assert(MacroPipeline.features(grid, raw, todayYear = 2026).count() == 0)
-    val kept = MacroPipeline.features(grid, raw, todayYear = 2026, keepInvalid = true)
-    assert(kept.filter(col("__invalid")).count() == 1)
   }
 
   test("date normalization: clean casts pass, messy strings salvage via regex") {

@@ -165,7 +165,7 @@ class TextVector5Spec extends SparkSpec {
       (3L, "tiny doc under twenty tokens"),  // no windows -> untouched
       (4L, shared)                           // exact window, later -> emptied
     ).toDF("doc_id", "text")
-    val out = Dedup.exactSubstringRemoval(docs, "doc_id", "text", 20)
+    val out = Dedup.exactSubstringRemoval(docs, "doc_id", "text")
       .select("id", "n_tokens", "n_removed", "cleaned_text")
       .as[(Long, Long, Long, String)].collect()
       .map(r => r._1 -> r).toMap
@@ -184,7 +184,7 @@ class TextVector5Spec extends SparkSpec {
       (1L, s"$run x1 x2"),
       (2L, s"pre1 $run post1")
     ).toDF("doc_id", "text")
-    val out = Dedup.exactSubstringRemoval(docs, "doc_id", "text", 20)
+    val out = Dedup.exactSubstringRemoval(docs, "doc_id", "text")
       .select("id", "n_removed", "cleaned_text")
       .as[(Long, Long, String)].collect().map(r => r._1 -> r).toMap
     assert(out(1L)._2 == 0)
@@ -201,8 +201,7 @@ class TextVector5Spec extends SparkSpec {
       (4L, "xx yy zz xx yy zz xx yy", false),
       (5L, "yy zz xx yy zz xx yy zz", false)
     ).toDF("doc_id", "text", "is_t")
-    val w = Mixture.dsirLogWeights(docs, "doc_id", "text", col("is_t"),
-        numBuckets = 64)
+    val w = Mixture.dsirLogWeights(docs, "doc_id", "text", col("is_t"))
       .select("id", "log_weight").as[(Long, Double)].collect().toMap
     // the unlabeled target-like doc outranks the off-target ones — the
     // whole point of importance weighting
@@ -218,7 +217,7 @@ class TextVector5Spec extends SparkSpec {
       (2L, "a", true),        // no bigrams -> excluded
       (3L, " x  y ", false)   // whitespace-robust: 1 bigram
     ).toDF("doc_id", "text", "is_t")
-    val out = Mixture.dsirLogWeights(docs, "doc_id", "text", col("is_t"), 64)
+    val out = Mixture.dsirLogWeights(docs, "doc_id", "text", col("is_t"))
       .select("id", "n_bigrams").as[(Long, Long)].collect().toMap
     assert(out == Map(1L -> 3L, 3L -> 1L))
   }

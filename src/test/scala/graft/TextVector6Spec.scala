@@ -30,12 +30,12 @@ class TextVector6Spec extends SparkSpec {
     "and is deterministic") {
     val budgets = Seq(("web", 500L), ("wiki", 500L), ("code", 500L)).toDF("g", "b")
     def run() = Mixture.tokenBudgetSelect(mixDocs, "domain", "doc_id",
-      "n_tokens", budgets, numBuckets = 100)
+      "n_tokens", budgets)
     val kept = run()
     val mass = kept.groupBy("domain").agg(sum("n_tokens").as("m"))
       .as[(String, Long)].collect().toMap
     // every group has SOME fill, reaches the budget, and overshoots by at
-    // most one bucket's mass (≤ a handful of docs at 100 buckets)
+    // most one bucket's mass (≤ a handful of docs at 1000 buckets)
     mass.values.foreach { m => assert(m >= 500 && m <= 500 + 100) }
     assert(run().select("doc_id").as[Long].collect().sorted
       .sameElements(kept.select("doc_id").as[Long].collect().sorted))
@@ -55,8 +55,7 @@ class TextVector6Spec extends SparkSpec {
     val b1 = Seq(("web", 500L), ("wiki", 500L), ("code", 500L)).toDF("g", "b")
     val b2 = Seq(("web", 500L), ("wiki", 99999L), ("code", 1L)).toDF("g", "b")
     def webIds(b: org.apache.spark.sql.DataFrame) =
-      Mixture.tokenBudgetSelect(mixDocs, "domain", "doc_id", "n_tokens", b,
-        numBuckets = 100)
+      Mixture.tokenBudgetSelect(mixDocs, "domain", "doc_id", "n_tokens", b)
         .filter(col("domain") === "web").select("doc_id").as[Long].collect().sorted
     assert(webIds(b1).sameElements(webIds(b2)))
   }
@@ -257,8 +256,7 @@ class TextVector6Spec extends SparkSpec {
       val a = (i % 2).toFloat; val b = (i % 4).toFloat
       (i.toLong, Seq(a, a, b, b))
     }.toDF("id", "vec")
-    val cb = Similarity.pqTrain(corpus, "vec", dim = 4, m = 2, k = 4,
-      maxIter = 5)
+    val cb = Similarity.pqTrain(corpus, "vec", dim = 4, m = 2, k = 4)
     assert(cb(0).length == 2 && cb(1).length == 4)
   }
 
@@ -268,8 +266,7 @@ class TextVector6Spec extends SparkSpec {
       val base = (i % 4).toFloat * 10f
       (i.toLong, Seq(base, base + 1f, -base, -base - 1f))
     }.toDF("id", "vec")
-    val cb = Similarity.pqTrain(corpus, "vec", dim = 4, m = 2, k = 4,
-      maxIter = 10)
+    val cb = Similarity.pqTrain(corpus, "vec", dim = 4, m = 2, k = 4)
     assert(cb.length == 2 && cb.forall(_.length == 4) &&
       cb.forall(_.forall(_.length == 2)))
     val used = Similarity.pqEncode(corpus, "id", "vec", cb)

@@ -13,26 +13,20 @@ class TextVector9Spec extends SparkSpec {
   test("leakageSafeSplit: the split is a pure function of the group key " +
     "(no group ever straddles splits) and carves 100 buckets exactly") {
     val df = (0 until 400).map(i => (i.toLong, s"g${i % 37}")).toDF("id", "g")
-    val out = graft.operators.Splits.leakageSafeSplit(df, col("g"), 70, 20)
+    val out = graft.operators.Splits.leakageSafeSplit(df, col("g"))
     // group-atomicity: one distinct (bucket, split) pair per group
     val perGroup = out.groupBy("g")
       .agg(countDistinct("split_bucket").as("nb"), countDistinct("split").as("ns"))
       .agg(max("nb"), max("ns")).head()
     assert(perGroup.getLong(0) == 1L && perGroup.getLong(1) == 1L,
       "every member of a group must receive the identical split")
-    // carving: bucket < 70 -> train, < 90 -> val, else test — no other combo
+    // carving: bucket < 80 -> train, < 90 -> val, else test — no other combo
     val bad = out.filter(
-      (col("split_bucket") < 70 && col("split") =!= "train") ||
-        (col("split_bucket") >= 70 && col("split_bucket") < 90 && col("split") =!= "val") ||
+      (col("split_bucket") < 80 && col("split") =!= "train") ||
+        (col("split_bucket") >= 80 && col("split_bucket") < 90 && col("split") =!= "val") ||
         (col("split_bucket") >= 90 && col("split") =!= "test")).count()
     assert(bad == 0L, "bucket carving must follow the documented ranges")
     assert(out.filter(col("split_bucket") < 0 || col("split_bucket") > 99).count() == 0L)
-    // degenerate carves: train+val = 100 leaves no test range
-    val noTest = graft.operators.Splits.leakageSafeSplit(df, col("g"), 90, 10)
-    assert(noTest.filter(col("split") === "test").count() == 0L)
-    intercept[IllegalArgumentException] {
-      graft.operators.Splits.leakageSafeSplit(df, col("g"), 95, 10)
-    }
   }
 
   test("d60: injected twins share their original's cluster AND split; " +
@@ -105,22 +99,22 @@ class TextVector9Spec extends SparkSpec {
   test("unimaxAllocation: water-filling invariants + d63 polarity span") {
     import graft.operators.Mixture.unimaxAllocation
     // hand case: caps (4,8,40) budget 30 -> 4 capped, 8 capped, last gets 18
-    val hand = unimaxAllocation(Seq(("a", 1L), ("b", 2L), ("c", 10L)), 30L, 4)
+    val hand = unimaxAllocation(Seq(("a", 1L), ("b", 2L), ("c", 10L)), 30L)
     assert(hand == Seq(("a", 1L, 4L, true, 4L, 0L), ("b", 2L, 8L, true, 8L, 0L),
       ("c", 10L, 40L, false, 18L, 0L)))
     // remainder rule: budget 31 over two equal uncapped groups after one cap
-    val rem = unimaxAllocation(Seq(("a", 1L), ("b", 10L), ("c", 10L)), 31L, 4)
+    val rem = unimaxAllocation(Seq(("a", 1L), ("b", 10L), ("c", 10L)), 31L)
     assert(rem.map(_._5) == Seq(4L, 14L, 13L),
       "first uncapped in (cap, key) order takes the extra token")
     // all-capped: surplus reported, never silently dropped
-    val allCap = unimaxAllocation(Seq(("a", 1L), ("b", 2L)), 100L, 4)
+    val allCap = unimaxAllocation(Seq(("a", 1L), ("b", 2L)), 100L)
     assert(allCap.forall(_._4) && allCap.forall(_._6 == 100L - 12L))
     // invariants on randomized masses: alloc sums to budget (or caps+left),
     // uncapped alloc < own cap, capped set is a prefix of the cap order
     val masses = Seq(("g0", 3L), ("g1", 17L), ("g2", 5L), ("g3", 200L),
       ("g4", 41L), ("g5", 0L))
     for (b <- Seq(0L, 1L, 57L, 300L, 1063L, 5000L)) {
-      val out = unimaxAllocation(masses, b, 4)
+      val out = unimaxAllocation(masses, b)
       assert(out.map(_._5).sum + out.head._6 == b,
         s"budget $b must be fully accounted (alloc total + surplus)")
       // q < cap for every uncapped group; the remainder +1 can close the

@@ -45,8 +45,8 @@ class TextVectorSpec extends SparkSpec {
     val nearDup = (1 to 39).map(i => s"tok$i").mkString(" ") + " tokX"
     val other = (100 to 140).map(i => s"w$i").mkString(" ")
     val df = Seq((1L, base), (2L, nearDup), (3L, other)).toDF("doc_id", "text")
-    val pairs = Dedup.minHashNearDuplicates(df, "doc_id", "text",
-      jaccardThreshold = 0.5).select("id_a", "id_b").as[(Long, Long)].collect()
+    val pairs = Dedup.minHashNearDuplicates(df, "doc_id", "text")
+      .select("id_a", "id_b").as[(Long, Long)].collect()
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
@@ -229,8 +229,7 @@ class TextVectorSpec extends SparkSpec {
     val native = graft.operators.Similarity
       .pqEncode(vecs, "vec_id", "embedding", cb)
       .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
-    val column = graft.operators.Similarity
-      .pqEncodeColumnForm(vecs, "vec_id", "embedding", cb)
+    val column = PqColumnForms.pqEncode(vecs, "vec_id", "embedding", cb)
       .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
     assert(native == column, s"codes diverge: $native vs $column")
     // the tie row really exercises the first-index rule
@@ -241,8 +240,7 @@ class TextVectorSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[Any]](1)
         .map(_.toList).toList).toMap
     val nLut = lutRows(graft.functions.VectorExprs.pqLut(col("embedding"), cb))
-    val cLut = lutRows(graft.operators.Similarity
-      .pqLutColumnForm(col("embedding"), cb))
+    val cLut = lutRows(PqColumnForms.pqLut(col("embedding"), cb))
     assert(nLut.keySet == cLut.keySet)
     for (k <- nLut.keySet) {
       val (a, b) = (nLut(k), cLut(k))
@@ -383,7 +381,7 @@ class TextVectorSpec extends SparkSpec {
     val far = Array.tabulate(8)(i => (8 - i).toFloat)
     val vecs = Seq((0L, base), (1L, near), (2L, far)).toDF("vec_id", "embedding")
     val pairs = graft.operators.Dedup.embeddingNearDuplicates(
-      vecs, "vec_id", "embedding", dim = 8, bits = 6, cosineThreshold = 0.99)
+      vecs, "vec_id", "embedding", dim = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect()
     assert(pairs.contains((0L, 1L)))
   }
@@ -488,25 +486,13 @@ class TextVectorSpec extends SparkSpec {
       (4L, "tiny"),                                             // fails min tokens
       (5L, (100 to 140).map(i => s"w$i").mkString(" ")))        // clean survivor
       .toDF("doc_id", "text")
-    val (clean, stats) = CorpusPipeline.cleanCorpus(docs,
-      jaccardThreshold = 0.5, minTokens = 5)
+    val (clean, stats) = CorpusPipeline.cleanCorpus(docs)
     val kept = clean.select("doc_id").as[Long].collect().sorted.toSeq
     assert(kept == Seq(1L, 5L))
     assert(stats.input == 5 && stats.afterExact == 4 &&
       stats.afterNearDup == 3 && stats.afterQuality == 2)
     // original text column survives untouched
     assert(clean.filter(col("doc_id") === 1).select("text").as[String].head() == base)
-    // exact connected-component clustering wires through and agrees with
-    // the greedy pass on this (chain-shaped) corpus; the star-shaped
-    // difference is pinned at the Dedup level in ScaleOpsSpec
-    val (cleanCC, statsCC) = CorpusPipeline.cleanCorpus(docs,
-      jaccardThreshold = 0.5, minTokens = 5, exactClusters = true)
-    assert(cleanCC.select("doc_id").as[Long].collect().sorted.toSeq == kept)
-    // field-wise: Stats is not a case class (afterQuality is lazy, so a
-    // caller that never reads it pays no extra scan)
-    assert((statsCC.input, statsCC.afterExact, statsCC.afterNearDup,
-      statsCC.afterQuality) ==
-      (stats.input, stats.afterExact, stats.afterNearDup, stats.afterQuality))
   }
 
   test("langId picks the language with the most stopword hits") {
@@ -525,10 +511,8 @@ class TextVectorSpec extends SparkSpec {
     val distinct = (0 until 20).map(i =>
       (100L + i, (1 to 30).map(j => s"only${i}_$j").mkString(" ")))
     val docs = (cluster ++ distinct).toDF("doc_id", "text")
-    val pairs = Dedup.minHashNearDuplicates(docs, "doc_id", "text",
-      jaccardThreshold = 0.7).collect()
-    val star = Dedup.minHashNearDuplicatesMd5Star(docs, "doc_id", "text",
-      jaccardThreshold = 0.7).collect()
+    val pairs = Dedup.minHashNearDuplicates(docs, "doc_id", "text").collect()
+    val star = Dedup.minHashNearDuplicatesMd5Star(docs, "doc_id", "text").collect()
     // pair contract is quadratic in the cluster (40*39/2 = 780 pairs);
     // star is linear (39 edges per shared bucket, deduped across bands)
     assert(pairs.length >= 700, s"expected a quadratic pair set, got ${pairs.length}")

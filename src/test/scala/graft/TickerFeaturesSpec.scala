@@ -39,10 +39,18 @@ class TickerFeaturesSpec extends SparkSpec {
     prices = p,
     dividends = Seq.empty[(String, java.sql.Date, Double)].toDF("ticker", "date", "dividend"),
     splits = Seq.empty[(String, java.sql.Date, Double)].toDF("ticker", "date", "split_ratio"),
-    ratios = ratios(),
-    income = Seq.empty[(String, java.sql.Date, Double, Double)]
-      .toDF("ticker", "date", "eps", "incomeBeforeTax"),
-    balance = Seq.empty[(String, java.sql.Date, Double)].toDF("ticker", "date", "totalDebt"))
+    statements = Seq.empty[(String, java.sql.Date, Double, Double)]
+      .toDF("ticker", "date", "eps", "incomeBeforeTax"))
+
+  /** One statement row of T at `date`: income (eps 2, incomeBeforeTax
+    * 100, interest 10, D&A 5), balance (cash 0, debt 100) and ratios
+    * (P/E 10, P/FCF 10, payout 0.3, yield 0.02, FCF/share 1). */
+  private def statementAt(date: String): DataFrame =
+    Seq(("T", d(date), 2.0, 100.0, 10.0, 5.0, 0.0, 100.0, 10.0, 10.0, 0.3, 0.02, 1.0))
+      .toDF("ticker", "date", "eps", "incomeBeforeTax", "interestExpense",
+        "depreciationAndAmortization", "cashAndShortTermInvestments", "totalDebt",
+        "priceEarningsRatio", "priceToFreeCashFlowsRatio", "payoutRatio",
+        "dividendYield", "freeCashFlowPerShare")
 
   test("6m return: 100 -> 120 = 0.2 (test_compute_6m_return)") {
     val p = prices("2024-01-01" -> 100.0, "2024-07-01" -> 120.0)
@@ -196,7 +204,8 @@ class TickerFeaturesSpec extends SparkSpec {
     val bal = Seq(("T", d("2023-12-31"), 200.0, 1000.0),
       ("T", d("2022-12-31"), 300.0, 1200.0))
       .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt")
-    val out = TickerFeatures.fundamentalsBlock(gridAt("2024-01-01"), inc, bal)
+    val out = TickerFeatures.fundamentalsBlock(gridAt("2024-01-01"),
+      inc.join(bal, Seq("ticker", "date")))
       .select("net_debt_to_ebitda").as[Double].head()
     assert(out ~= ((1000.0 - 200.0) / 480.0, 1e-9))
   }
@@ -208,7 +217,8 @@ class TickerFeaturesSpec extends SparkSpec {
         "depreciationAndAmortization")
     val bal = Seq(("T", d("2023-12-31"), 0.0, 0.0), ("T", d("2022-12-31"), 0.0, 0.0))
       .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt")
-    val out = TickerFeatures.fundamentalsBlock(gridAt("2024-01-01"), inc, bal)
+    val out = TickerFeatures.fundamentalsBlock(gridAt("2024-01-01"),
+      inc.join(bal, Seq("ticker", "date")))
     val row = out.select("ebit_interest_cover", "ebit_interest_cover_capped").collect()(0)
     assert(row.getDouble(0) ~= 5.0)
     assert(!row.getBoolean(1))
@@ -220,7 +230,8 @@ class TickerFeaturesSpec extends SparkSpec {
         "depreciationAndAmortization")
     val bal = Seq(("T", d("2023-12-31"), 0.0, 0.0))
       .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt")
-    val row = TickerFeatures.fundamentalsBlock(gridAt("2024-01-01"), inc, bal)
+    val row = TickerFeatures.fundamentalsBlock(gridAt("2024-01-01"),
+      inc.join(bal, Seq("ticker", "date")))
       .select("ebit_interest_cover", "ebit_interest_cover_capped").collect()(0)
     assert(row.getDouble(0).isPosInfinity)
     assert(row.getBoolean(1))
@@ -342,12 +353,7 @@ class TickerFeaturesSpec extends SparkSpec {
       prices = prices("2023-01-01" -> 100.0, "2023-06-01" -> 110.0),
       dividends = Seq(("T", d("2023-01-01"), 1.0)).toDF("ticker", "date", "dividend"),
       splits = Seq.empty[(String, java.sql.Date, Double)].toDF("ticker", "date", "split_ratio"),
-      ratios = ratios(("2023-06-01", 10.0, 10.0, 0.3, 0.02, 1.0)),
-      income = Seq(("T", d("2023-06-01"), 2.0, 100.0, 10.0, 5.0))
-        .toDF("ticker", "date", "eps", "incomeBeforeTax", "interestExpense",
-          "depreciationAndAmortization"),
-      balance = Seq(("T", d("2023-06-01"), 0.0, 100.0))
-        .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt"))
+      statements = statementAt("2023-06-01"))
     val expected = Set("ticker", "as_of", "6m_return", "12m_return",
       "volatility", "max_drawdown_1y", "sector_relative_6m", "sma_50_200_delta",
       "net_debt_to_ebitda", "ebit_interest_cover", "ebit_interest_cover_capped",
@@ -368,7 +374,8 @@ class TickerFeaturesSpec extends SparkSpec {
         "depreciationAndAmortization")
     val bal = Seq(("T", d("2023-06-01"), 0.0, 100.0))
       .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt")
-    val f = TickerFeatures.fundamentalsBlock(grid, inc, bal)
+    val f = TickerFeatures.fundamentalsBlock(grid,
+      inc.join(bal, Seq("ticker", "date")))
       .select("net_debt_to_ebitda", "ebit_interest_cover", "ebit_interest_cover_capped")
       .collect()
     assert(f.length == 1)
@@ -409,12 +416,7 @@ class TickerFeaturesSpec extends SparkSpec {
       }: _*),
       dividends = Seq(("T", d("2023-01-01"), 1.0)).toDF("ticker", "date", "dividend"),
       splits = Seq.empty[(String, java.sql.Date, Double)].toDF("ticker", "date", "split_ratio"),
-      ratios = ratios(("2023-06-01", 10.0, 10.0, 0.3, 0.02, 1.0)),
-      income = Seq(("T", d("2023-06-01"), 2.0, 100.0, 10.0, 5.0))
-        .toDF("ticker", "date", "eps", "incomeBeforeTax", "interestExpense",
-          "depreciationAndAmortization"),
-      balance = Seq(("T", d("2023-06-01"), 0.0, 100.0))
-        .toDF("ticker", "date", "cashAndShortTermInvestments", "totalDebt"))
+      statements = statementAt("2023-06-01"))
     val row = features(grid, in, etfX("2023-01-01" -> 100.0, "2024-01-01" -> 110.0))
       .select("has_eps_cagr_3y", "has_dividend_yield", "has_dividend_cagr_3y")
       .collect()(0)
@@ -454,16 +456,9 @@ class TickerFeaturesSpec extends SparkSpec {
       .toDF("ticker", "date", "close")
     val dv = (for (t <- tickers; y <- years) yield (t, d(s"$y-03-31"), 0.5 + (y - 2018) * 0.1))
       .toDF("ticker", "date", "dividend")
-    def inputs(statements: Option[DataFrame]) = TickerFeatures.Inputs(
-      prices = px, dividends = dv,
+    val in = TickerFeatures.Inputs(prices = px, dividends = dv,
       splits = Seq.empty[(String, java.sql.Date, Double)].toDF("ticker", "date", "split_ratio"),
-      ratios = st.select("ticker", "date", "priceEarningsRatio",
-        "priceToFreeCashFlowsRatio", "payoutRatio", "dividendYield",
-        "freeCashFlowPerShare"),
-      income = st.select("ticker", "date", "eps", "incomeBeforeTax",
-        "interestExpense", "depreciationAndAmortization"),
-      balance = st.select("ticker", "date", "cashAndShortTermInvestments", "totalDebt"),
-      statements = statements)
+      statements = st)
     // sector side: A and B track two ETFs with different index cadences;
     // C's ETF has no index rows (NaN sector_relative_6m). The 2024 as_of
     // has fewer than 2 stock rows in its 365 days (0.0).
@@ -473,29 +468,26 @@ class TickerFeaturesSpec extends SparkSpec {
       (0 until 26).map(k =>
         ("XB", d(java.time.LocalDate.of(2018, 2, 1).plusMonths(3L * k).toString), 80.0 - k * 0.7)))
       .toDF("etf", "date", "close")
-    def frame(in: TickerFeatures.Inputs, seriesPriceBlock: Boolean): DataFrame =
+    def frame(seriesPriceBlock: Boolean): DataFrame =
       TickerFeatures.dynamicFeaturesSharedIndex(grid, in, tickerEtf, etfIndex,
         minPriceRows = 0, seriesPriceBlock = seriesPriceBlock)
     def rows(df: DataFrame): Seq[org.apache.spark.sql.Row] =
       df.orderBy("ticker", "as_of").collect().toSeq
-    val separate = rows(frame(inputs(None), seriesPriceBlock = false))
-    val fused = rows(frame(inputs(Some(st)), seriesPriceBlock = false))
+    val fused = rows(frame(seriesPriceBlock = false))
     // the series price form assembles from the separate statement blocks
-    // even when `statements` is set
-    val series = rows(frame(inputs(Some(st)), seriesPriceBlock = true))
-    assert(separate.nonEmpty && separate.size == fused.size && separate.size == series.size)
-    val cols = frame(inputs(None), seriesPriceBlock = false).columns
+    val separate = rows(frame(seriesPriceBlock = true))
+    assert(separate.nonEmpty && separate.size == fused.size)
+    val cols = frame(seriesPriceBlock = false).columns
     // the sector feature takes every branch: a value, the <2-rows 0.0 and NaN
     val sr = separate.map(_.getDouble(cols.indexOf("sector_relative_6m")))
     assert(sr.exists(_.isNaN) && sr.contains(0.0) && sr.exists(v => !v.isNaN && v != 0.0))
     // volatility and the SMA delta accumulate in DIFFERENT orders between
-    // the forms (shuffle-arrival avg/stddev vs the fused path's date-order
-    // fold or the series form's running window) — last-ulp differences by
-    // design, absorbed by the pipeline's round(6); every other column is
-    // exact picks/counts/IEEE arithmetic on identical inputs and must match
-    // bit-for-bit.
+    // the forms (the fused path's date-order fold vs the series form's
+    // running window) — last-ulp differences by design, absorbed by the
+    // pipeline's round(6); every other column is exact picks/counts/IEEE
+    // arithmetic on identical inputs and must match bit-for-bit.
     val ulpCols = Set("volatility", "sma_50_200_delta")
-    (separate.zip(fused) ++ separate.zip(series)).foreach { case (a, b) =>
+    separate.zip(fused).foreach { case (a, b) =>
       cols.zipWithIndex.foreach { case (c, i) =>
         if (ulpCols(c)) {
           val (x, y) = (a.get(i), b.get(i))
